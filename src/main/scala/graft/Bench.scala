@@ -170,6 +170,7 @@ object Bench {
       .config("spark.hadoop.fs.file.impl",
         sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS",
           "graft.sources.NoForkLocalFileSystem"))
+      // single-writer assumption: no two live queries share a checkpoint dir
       .config("spark.sql.streaming.checkpointFileManagerClass",
         sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
           "org.apache.spark.sql.execution.streaming.checkpointing." +

@@ -525,7 +525,8 @@ object DedupOps {
         .groupBy(col("u"), col("v"))
         .agg(max(col("nn")).as("nn"), max(col("oo")).as("oo"))
         .agg(count(lit(1)).as("union_n"),
-          sum(col("nn")).as("next_n"), sum(col("oo")).as("edges_n"))
+          coalesce(sum(col("nn")), lit(0L)).as("next_n"),
+          coalesce(sum(col("oo")), lit(0L)).as("edges_n"))
         .collect().head
       val n = row.getAs[Long]("next_n")
       if (bound < 0L) bound = n + 2L

@@ -333,8 +333,11 @@ object ManifestMeta {
     /** Merge per-file boundary lists into B global equi-height
       * boundaries: each file contributes a piecewise-uniform mass of
       * `weight` (its non-null count) spread 1/B per bin; global
-      * boundaries are quantiles of the mixture CDF (binary search —
-      * driver-side, O(files · B · 40) flops per merged column).
+      * boundaries are quantiles of the mixture CDF, found by 40 rounds
+      * of bisection per boundary. Each file's boundaries are copied to
+      * an array once, so one CDF evaluation is O(files · B) and the
+      * whole merge O(files · B² · 40) flops per column, whatever `Seq`
+      * the boundaries arrive in (parsed stats lines give `List`s).
       */
     def merge(parts: Seq[(Long, Seq[Double])]): Option[Seq[Double]] = {
       val ps = parts.filter { case (w, h) => w > 0L && h.size >= 2 }
@@ -342,19 +345,28 @@ object ManifestMeta {
       val totalW = ps.map(_._1.toDouble).sum
       val lo = ps.map(_._2.head).min
       val hi = ps.map(_._2.last).max
-      def cdf(x: Double): Double = ps.iterator.map { case (w, bounds) =>
-        val nb = bounds.size - 1
-        val per = w.toDouble / nb
-        var acc = 0.0
-        var i = 0
-        while (i < nb) {
-          val l = bounds(i); val h = bounds(i + 1)
-          if (x >= h) acc += per
-          else if (x > l && h > l) acc += per * (x - l) / (h - l)
-          i += 1
+      val weights = ps.map(_._1.toDouble).toArray
+      val boundsOf = ps.map(_._2.toArray).toArray
+      def cdf(x: Double): Double = {
+        var total = 0.0
+        var f = 0
+        while (f < boundsOf.length) {
+          val bounds = boundsOf(f)
+          val nb = bounds.length - 1
+          val per = weights(f) / nb
+          var acc = 0.0
+          var i = 0
+          while (i < nb) {
+            val l = bounds(i); val h = bounds(i + 1)
+            if (x >= h) acc += per
+            else if (x > l && h > l) acc += per * (x - l) / (h - l)
+            i += 1
+          }
+          total += acc
+          f += 1
         }
-        acc
-      }.sum
+        total
+      }
       Some((0 to B).map { k =>
         if (k == 0) lo
         else if (k == B) hi
@@ -586,11 +598,14 @@ object ManifestMeta {
     *   - blooms and sort claims do NOT fold (per-file only).
     * min/max/sum exactness is what lets metadata aggregates fold whole
     * ENVELOPES as units — O(segments), not O(files).
+    * `keep` limits the fold to the named columns; a scan folds only the
+    * columns it reads.
     */
-  def envelope(files: Seq[FileStats]): FileStats = {
+  def envelope(files: Seq[FileStats],
+      keep: String => Boolean = _ => true): FileStats = {
     val rows = files.map(_.rows).sum
     val bytes = files.map(_.bytes).sum
-    val colNames = files.iterator.flatMap(_.cols.keys).toSet
+    val colNames = files.iterator.flatMap(_.cols.keys).filter(keep).toSet
     val cols = colNames.iterator.flatMap { c =>
       val perFile = files.map(f => (f.cols.get(c), f.rows))
       if (perFile.forall(_._1.isEmpty)) None // predates the column everywhere

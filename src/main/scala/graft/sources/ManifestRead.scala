@@ -733,25 +733,34 @@ class ManifestScan(path: String,
     }
   }
 
-  /** MEMOIZED claims, keyed on the current file-list reference: one
-    * (keys, bins) computation — with its Files.exists/size sweep — per
-    * runtime-filter version of the plan, instead of one per
-    * outputPartitioning/outputOrdering/planInputPartitions call
-    * (code-review r15: a 100k-file scan was paying 4-5 stat sweeps per
-    * plan).
+  /** A value derived from the current file list, built once per list
+    * and keyed on its reference: runtime filtering replaces `files`,
+    * which rebuilds it, and every other call reuses it. The memo lives
+    * and dies with this scan.
     */
-  @volatile private var claimCache:
-      (AnyRef, Option[Seq[InternalRow]], Seq[Seq[String]]) = null
-  private def claims: (Option[Seq[InternalRow]], Seq[Seq[String]]) = {
-    val f = files
-    val c = claimCache
-    if (c != null && (c._1 eq f)) return (c._2, c._3)
-    val keys = computeFileKeys(f)
-    val bins = if (keys.isDefined) Seq.empty else computeBins(f)
-    claimCache = (f, keys, bins)
-    (keys, bins)
+  private final class PerFileSet[T](
+      build: Seq[(String, Option[ManifestMeta.FileStats])] => T) {
+    @volatile private var memo: (AnyRef, T) = null
+    def apply(): T = {
+      val f = files
+      val m = memo
+      if (m != null && (m._1 eq f)) m._2
+      else { val v = build(f); memo = (f, v); v }
+    }
   }
-  private def fileKeys: Option[Seq[InternalRow]] = claims._1
+
+  /** MEMOIZED claims: one (keys, bins) computation — with its
+    * Files.exists/size sweep — per runtime-filter version of the plan,
+    * instead of one per outputPartitioning/outputOrdering/
+    * planInputPartitions call (code-review r15: a 100k-file scan was
+    * paying 4-5 stat sweeps per plan).
+    */
+  private val claimsMemo = new PerFileSet({ f =>
+    val keys = computeFileKeys(f)
+    (keys, if (keys.isDefined) Seq.empty[Seq[String]] else computeBins(f))
+  })
+  private def claims: (Option[Seq[InternalRow]], Seq[Seq[String]]) =
+    claimsMemo()
 
   /** The partition-key CELL for spec `t` over a source of type `dt`,
     * typed to match the reported transform expression's result type —
@@ -898,7 +907,14 @@ class ManifestScan(path: String,
       dataFilters, posDeletes, aliases)
   }
 
-  override def estimateStatistics(): Statistics = new Statistics {
+  /** PLANNING STATISTICS, once per file set: Catalyst asks for `.stats`
+    * many times while it optimizes and plans one query.
+    */
+  private val statsMemo = new PerFileSet[Statistics](new ScanStatistics(_))
+  override def estimateStatistics(): Statistics = statsMemo()
+
+  private final class ScanStatistics(
+      files: Seq[(String, Option[ManifestMeta.FileStats])]) extends Statistics {
     private val bytes = files.map { case (n, st) => sizeOf(n, st) }.sum
     // exact when every kept file carries stats (post-skip, pre-residual)
     // and no MoR tombstone or position delete applies (deleted rows
@@ -916,9 +932,15 @@ class ManifestScan(path: String,
     // by Spark's transformV2Stats into logical column stats, so
     // CostBasedJoinReorder can order two-lake-table joins by estimated
     // cardinality instead of defaults. Served only when EVERY kept file
-    // sketches the column (a gap would silently undercount); O(kept
-    // files × K) driver work per required column, no data touched.
+    // sketches the column (a gap would silently undercount). Only the
+    // required columns fold, once per file set: per column, O(kept
+    // files × K) for the sketches and O(kept files × B² × 40) for the
+    // histogram merge, no data touched.
     override def columnStats():
+        util.Map[org.apache.spark.sql.connector.expressions.NamedReference,
+          org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = cols
+    private lazy val cols = util.Collections.unmodifiableMap(foldColumns())
+    private def foldColumns():
         util.Map[org.apache.spark.sql.connector.expressions.NamedReference,
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
       val out = new util.HashMap[
@@ -929,7 +951,8 @@ class ManifestScan(path: String,
       // the SAME conservative cross-file fold the segment envelopes use:
       // exact nulls, union bounds (absent unless every value-holding
       // file has them), merged KMV (absent unless every file sketches)
-      val env = ManifestMeta.envelope(files.map(_._2.get))
+      val env = ManifestMeta.envelope(files.map(_._2.get),
+        required.fieldNames.toSet)
       required.fields.foreach { f =>
         env.cols.get(f.name).filter(_.kmv.isDefined).foreach { c =>
           val ndv = ManifestMeta.Kmv.estimate(c.kmv.get)

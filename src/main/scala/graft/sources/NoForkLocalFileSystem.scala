@@ -21,7 +21,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * task_run. `Files.setPosixFilePermissions` sets the identical 9-bit
   * mode with one syscall. Semantics are unchanged (same bits on disk);
   * special bits (sticky/setuid/setgid), which java.nio cannot express,
-  * fall back to Hadoop's own path — no caller here uses them.
+  * and file stores without POSIX attributes fall back to Hadoop's own
+  * path.
   *
   * Wired into the harness sessions via `spark.hadoop.fs.file.impl`
   * (env-overridable). A production cluster with the native library never
@@ -43,7 +44,8 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
       if ((bits & 0x004) != 0) set.add(PosixFilePermission.OTHERS_READ)
       if ((bits & 0x002) != 0) set.add(PosixFilePermission.OTHERS_WRITE)
       if ((bits & 0x001) != 0) set.add(PosixFilePermission.OTHERS_EXECUTE)
-      java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath, set)
+      try java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath, set)
+      catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
       ()
     }
   }

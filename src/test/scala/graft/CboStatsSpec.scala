@@ -144,6 +144,92 @@ class CboStatsSpec extends AnyFunSuite {
     assert(merged.head == 0.0 && merged.last == 1000.0)
     val p14 = merged(14) // 87.5% quantile: inside X's mass
     assert(p14 > 80.0 && p14 <= 100.0, s"87.5% boundary off: $p14")
+    // pinned mixture of three unequal-weight files (one with repeated
+    // boundaries): the merged boundaries are fixed to the bit, whatever
+    // Seq the per-file boundaries arrive in — parsed stats lines give
+    // Lists
+    val B = EquiHeight.B
+    val fa = List.tabulate(B + 1)(i => i * i * 0.37)
+    val fb = List.tabulate(B + 1)(i => 40.0 + i * 3.1)
+    val fc = List.tabulate(B + 1)(i =>
+      if (i < 8) 500.0 else 500.0 + (i - 8) * 12.5)
+    val pinned = Seq(
+      0x0000000000000000L, 0x3feb101767f38000L, 0x4008869536176000L,
+      0x401b7c57c578f000L, 0x40285075074ff800L, 0x4032ec405da02c00L,
+      0x403b463796abac00L, 0x4042800000005e00L, 0x40462313d38e4200L,
+      0x404931c6bad7f200L, 0x404c5506ded65a00L, 0x404f8a62a6000200L,
+      0x40516dd5a5999900L, 0x40531e9941d04100L, 0x4054d576f108c300L,
+      0x4056dc57c57c3700L, 0x4082c00000000000L)
+    def bits(parts: Seq[(Long, Seq[Double])]): Seq[Long] =
+      EquiHeight.merge(parts).get.map(java.lang.Double.doubleToRawLongBits)
+    val weights = Seq(700L, 250L, 50L)
+    val lists = Seq(fa, fb, fc)
+    assert(bits(weights.zip(lists)) == pinned)
+    assert(bits(weights.zip(lists.map(_.toVector))) == pinned)
+    assert(bits(weights.zip(lists.map(l =>
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(l.toArray)))) == pinned)
+  }
+
+  test("scan statistics are built once per file set and follow runtime " +
+      "filtering") {
+    import spark.implicits._
+    import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
+    import org.apache.spark.sql.sources.{Filter, In}
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    import graft.sources.ManifestScan
+    val root = freshRoot("memo")
+    // four files, one `part` value each, with different value mass,
+    // null counts and distinct counts per file
+    (0 until 4).foreach { m =>
+      (0 until 200 * (m + 1)).map { k =>
+        (m.toLong, (k.toLong * k) % (50L * (m + 1)) + 1000L * m,
+          if (k % (m + 2) == 0) None else Some(k.toLong % (7L * (m + 1))),
+          s"g${k % (3 + m)}")
+      }.toDF("part", "x", "y", "grp")
+        .coalesce(1).write.format("graft.sources.ManifestSink")
+        .mode(if (m == 0) "overwrite" else "append")
+        .option("path", root).option("format", "parquet").save()
+    }
+    val schema = StructType(Seq(StructField("part", LongType),
+      StructField("x", LongType), StructField("y", LongType),
+      StructField("grp", StringType)))
+    val all = ManifestSink.fileStats(root).toSeq.sortBy(_._1)
+      .map { case (n, st) => (n, Option(st)) }
+    assert(all.size == 4)
+    def scanOf(fs: Seq[(String, Option[ManifestMeta.FileStats])]) =
+      new ManifestScan(root, fs, schema, schema)
+    // every served figure, as plain values
+    def served(s: ManifestScan) = {
+      val st = s.estimateStatistics()
+      def opt(o: java.util.Optional[Object]) =
+        if (o.isPresent) Some(o.get.toString) else None
+      def col(c: ColumnStatistics) = (c.distinctCount.getAsLong,
+        c.nullCount.getAsLong, opt(c.min), opt(c.max),
+        if (!c.histogram.isPresent) None else {
+          val h = c.histogram.get
+          Some((h.height, h.bins.toSeq.map(b => (b.lo, b.hi, b.ndv))))
+        })
+      (st.numRows.getAsLong, st.columnStats.asScala.map {
+        case (r, c) => r.describe -> col(c) }.toMap)
+    }
+    val scan = scanOf(all)
+    val before = served(scan)
+    assert(before._2.keySet == Set("part", "x", "y", "grp"))
+    assert(before._2("x")._5.isDefined, "histogram missing")
+    assert(served(scan) == before)
+    assert(scan.estimateStatistics() eq scan.estimateStatistics())
+    // runtime filtering drops parts 0 and 2: the statistics must be
+    // those of a scan built over the kept files alone
+    scan.filter(Array[Filter](In("part", Array[Any](1L, 3L))))
+    val kept = all.filter { case (_, st) =>
+      Set(1L, 3L).contains(st.get.cols("part").min.get.asInstanceOf[Long]) }
+    assert(kept.size == 2)
+    val after = served(scan)
+    assert(after == served(scanOf(kept)))
+    assert(after._1 == 200L * 2 + 200L * 4)
+    assert(after != before)
+    assert(served(scan) == after)
   }
 
   test("a skewed range filter's estimate tightens under the histogram " +
