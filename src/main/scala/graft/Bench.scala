@@ -2,8 +2,8 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{functions, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
+import org.apache.spark.sql.functions
+import org.apache.spark.sql.functions.col
 
 /** Benchmark main: times every SparkEntry query at the given scale factor
   * and prints ONE JSON line (also written to BENCH.json).
@@ -109,97 +109,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val parallelismFirst = sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // parallelismFirst=false lets AQE shrink tiny exchanges to the
-      // advisory size instead of pinning them at defaultParallelism — the
-      // setting Spark's own docs recommend. At bench SF most exchanges
-      // are KBs, so interior stages collapse from 32 tasks of launch
-      // overhead to 1 (measured: an 11-query hot subset 37.4s -> 28.4s,
-      // iterative/multi-stage queries ~2x, zero regressions — a plain
-      // shuffle.partitions=8 pin won the same queries but cost
-      // q_stream_ingest/q_star_join 2x, so coalescing must stay adaptive).
-      // At 100 TB the same setting keeps full parallelism: exchanges are
-      // GBs, and advisory-size coalescing only merges genuinely tiny
-      // partitions.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", parallelismFirst)
-      // The iterative operators (dedup clusters, Lloyd's k-means) hang
-      // their loops off .cache()d frames, and Spark pins cached-plan
-      // output partitioning by default — so without this flag their
-      // KB-sized exchanges stay at 32 partitions and every loop round
-      // pays 32 task launches per stage. Purely physical: row results
-      // are partition-count independent.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4.1 turned on per-file checkpoint checksums and foreachBatch
-      // commit validation; both are durability/misuse guards that cost
-      // fixed per-micro-batch work. The stream queries here run
-      // AvailableNow against throwaway tmp checkpoints consumed within
-      // this same process, so the guards buy nothing — turn them off for
-      // the harness session (a production deployment with durable
-      // checkpoints should leave them on).
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_GUARDS", "false"))
-      .config("spark.sql.streaming.stateStore.commitValidation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_GUARDS", "false"))
-      // Each stream query here is a run-once AvailableNow job with its own
-      // checkpoint, so every one loads FRESH state-store providers that
-      // stay resident after the query stops — across a 30-stream-query
-      // run the loaded-provider population (queries x partitions) grows
-      // unbounded and the 60s maintenance pass + their in-memory maps
-      // progressively tax later queries. Unload on commit: state dies
-      // with the batch that owns it.
-      .config("spark.sql.streaming.stateStore.unloadOnCommit",
-        sys.env.getOrElse("SPARK_GRAFT_STATE_UNLOAD", "true"))
-      // This container has no libhadoop.so, so Hadoop's local FS falls
-      // back to FORKED SHELL PROCESSES for permission ops (a `chmod` per
-      // created file) and the FileContext-based checkpoint manager forks
-      // a `readlink` per atomic rename — thread dumps showed stateful
-      // streaming tasks spending ~half their task_run inside
-      // ProcessImpl.forkAndExec. Fix the runtime, not the algorithm:
-      // a LocalFileSystem whose setPermission is a java.nio syscall
-      // (identical bits on disk), and the FileSystem-based checkpoint
-      // manager (rename via File.renameTo — atomic on POSIX local fs;
-      // cluster checkpoints live on HDFS/S3 where the default manager
-      // never shell-forks, so production behavior is untouched).
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS",
-          "graft.sources.NoForkLocalFileSystem"))
-      // single-writer assumption: no two live queries share a checkpoint dir
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
-          "org.apache.spark.sql.execution.streaming.checkpointing." +
-            "FileSystemBasedCheckpointFileManager"))
-      // events.ts nanos handling lives in Tables.events (schema-adaptive;
-      // it sets the legacy conf itself where a runtime still honors it)
-      // Plan-DESCRIPTION rendering guard: iterative operators can nest
-      // cached plans, and AQE re-renders the description string per
-      // stage — unbounded (the default), a deep chain turns pure UI
-      // text into the dominant driver cost. Purely diagnostic output;
-      // truncation cannot affect results.
-      .config("spark.sql.maxPlanStringLength", "65536")
-      // static conf (first-session only): the codegen class cache must
-      // hold a full registry sweep so a stacked Verify+Bench JVM reuses
-      // already-JIT'd classes instead of re-compiling all 213 queries
-      // (see build.sbt — the -D covers sbt-forked runs; this covers a
-      // driver that launches Bench some other way)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // XOR-fold the row hashes: associative, commutative, and cannot
-    // overflow (sum over int64 hashes trips Spark 4's ANSI overflow
-    // check once enough rows land — killed q_window_rank in round 2).
-    def materialize(df: DataFrame): Unit = {
-      df.select(xxhash64(df.columns.toIndexedSeq.map(col): _*).as("h")).agg(bit_xor(col("h"))).collect()
-      ()
-    }
+    val spark = Harness.session()
 
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
@@ -370,8 +280,8 @@ object Bench {
     // queries in alphabetical order absorb the whole warmup tax.
     Seq("q_projection_filter", "q_star_join", "q_text_quality",
         "q_emb_lsh_buckets").foreach { w =>
-      try materialize(SparkEntry.queries(w)(spark, sfDir))
-      catch { case _: Throwable => () }
+      try Harness.rowHash(SparkEntry.queries(w)(spark, sfDir))
+      catch { case _: Throwable => 0L }
     }
     // Machinery shapes the corpus warmups above don't reach, compiled
     // against a synthetic range so no timed query's data is pre-touched:
@@ -469,7 +379,7 @@ object Bench {
           e.printStackTrace()
           false
       }
-    spark.catalog.clearCache()
+    Harness.afterQuery(spark)
 
     // Dev aid: SPARK_GRAFT_ONLY=q_a,q_b times a subset.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -547,7 +457,7 @@ object Bench {
       val (t0, c0, g0) = (System.nanoTime(), cpuNanos(), gcMillis())
       val (tk0, tr0, tc0, tg0, ts0) = taskAgg.snapshot()
       val ok =
-        try { materialize(fn(spark, sfDir)); true }
+        try { Harness.rowHash(fn(spark, sfDir)); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           false
@@ -561,24 +471,10 @@ object Bench {
       val (tk1, tr1, tc1, tg1, ts1) = {
         Thread.sleep(50); taskAgg.snapshot()
       }
-      // Queries own their caches only for their own lifetime; drop any
-      // persisted blocks so later queries don't pay eviction + GC for
-      // dead cached data (q_topk_parts regressed 9x in round 2 from this).
-      spark.catalog.clearCache()
-      // catalog.clearCache only clears SQL-cache entries; localCheckpoint
-      // frames (the flat-lineage barriers in the iterative operators)
-      // persist at the RDD level and otherwise linger until the
-      // GC-driven ContextCleaner notices — observed surviving 50+
-      // queries in an 8g heap with no GC pressure. Drop them explicitly:
-      // nothing re-references a prior query's frame (and a truncated
-      // lineage could not recompute anyway), so between-queries is the
-      // one safe place to unpersist a local checkpoint.
-      val survivors = spark.sparkContext.getPersistentRDDs
-      if (survivors.nonEmpty) {
-        survivors.values.foreach(_.unpersist(false))
-        System.err.println(s"[bench] dropped ${survivors.size} RDD-level " +
+      val survivors = Harness.afterQuery(spark)
+      if (survivors > 0)
+        System.err.println(s"[bench] dropped $survivors RDD-level " +
           s"persisted blocks (localCheckpoint barriers) after $name")
-      }
       val heapMb = memBean.getHeapMemoryUsage.getUsed / (1024 * 1024)
       Res(name, wall, cpu, gc, heapMb, ok, tk1 - tk0, (tr1 - tr0) / 1e3,
         (tc1 - tc0) / 1e9, (tg1 - tg0) / 1e3, (ts1 - ts0) / 1e3,
@@ -617,15 +513,14 @@ object Bench {
       val (_, _, tc0, _, _) = taskAgg.snapshot()
       val t0 = System.nanoTime()
       val ok =
-        try { materialize(fn(spark, sfDir)); true }
+        try { Harness.rowHash(fn(spark, sfDir)); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] ${r.name} rerun failed: ${e.getMessage}")
           false
         }
       val wall = (System.nanoTime() - t0) / 1e9
       val (_, _, tc1, _, _) = { Thread.sleep(50); taskAgg.snapshot() }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Harness.afterQuery(spark)
       Rerun(r.name, wall, (tc1 - tc0) / 1e9, ok, t0, System.nanoTime())
     }
 
@@ -727,7 +622,7 @@ object Bench {
       s""""code_cache_used_mb":${codeCacheUsedMb()},""" +
       s""""code_cache_max_mb":${codeCacheMaxMb()},""" +
       s""""jit_total_s":${fmt(jitMillis() / 1e3)},""" +
-      s""""cpus":"$cpus","sf":"$sfDir"}"""
+      s""""cpus":"${Harness.cpus}","sf":"$sfDir"}"""
     // The FULL record (per-query walls + cpu/gc/heap telemetry) goes to
     // BENCH.json and an early stdout line. The LAST stdout line must fit
     // WHOLE inside the driver's 2000-char tail capture or its parser sees

@@ -28,27 +28,30 @@ object SparkEntry {
     *
     * CACHE CONTRACT: some queries `.cache()` a shared sub-plan (the dedup
     * signature pipelines, the ingest wire fixture, the generator accounts
-    * view) because the returned plan consumes it from several branches.
-    * The returned DataFrame is lazy, so the query function cannot know
-    * when the consuming action finishes — cache lifecycle is CALLER-owned.
-    * Run `spark.catalog.clearCache()` after each query's action completes
-    * (Bench and Verify both do); a caller that skips this accumulates one
-    * cached materialization per query call and unrelated queries may
-    * silently reuse them via logical-plan matching.
+    * view) because the returned plan consumes it from several branches,
+    * and some return a frame that reads a scratch directory (every
+    * stream row, every lake row that builds its own table). The returned
+    * DataFrame is lazy, so the query function cannot know when the
+    * consuming action finishes: cache and scratch lifetimes are
+    * CALLER-owned. Run `Harness.afterQuery(spark)` after each query's
+    * action completes (Bench and Verify both do). It clears the caches,
+    * which unrelated queries could otherwise silently reuse through
+    * logical-plan matching, and deletes every directory under
+    * `RunOnce.root`; the root itself is deleted at JVM exit.
+    * Content-keyed fixtures (`StreamQueries.fixtureDir`,
+    * `GraftCatalog.ensureLakeRtfFixture`) stay, and are reused by content.
     *
-    * SESSION-CONF CONTRACT: the stateful streaming queries
-    * (q_stream_window, q_stream_join, q_stream_left_join, q_stream_full_join, q_stream_dedup, q_stream_asof,
-    * q_stream_dedup_ttl, q_stream_heavy, q_stream_upsert, q_stream_session,
-    * q_stream_topk,
-    * q_stream_tws) temporarily lower
-    * spark.sql.shuffle.partitions for their own execution (state-store
-    * instances = shuffle partitions) and restore it in a finally. Run
-    * queries sequentially per session — a query PLANNED concurrently on
-    * the same session while one of these is running would pick up the
-    * lowered value. q_stream_tws additionally pins
-    * spark.sql.streaming.stateStore.providerClass to RocksDB for its own
-    * execution (transformWithState requires it) and restores it the same
-    * way — the same sequential-execution caveat applies.
+    * SESSION-CONF CONTRACT: `RunOnce` is the one place a query pins
+    * session conf. A stream row passes its pins (`RunOnce.Stateful`
+    * lowers spark.sql.shuffle.partitions, since state-store instances =
+    * shuffle partitions; q_stream_tws adds the RocksDB
+    * spark.sql.streaming.stateStore.providerClass that transformWithState
+    * requires), and RunOnce sets them while its stream starts and runs
+    * and restores the previous values in a finally. Run queries
+    * sequentially per session: a query PLANNED concurrently on the same
+    * session while a pinned stream runs would pick up the pinned values.
+    * The catalog rows register `graft_cat` (`RunOnce.withCatalog`), which
+    * is idempotent and never unset.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Analytics.queries ++ AsofJoin.queries ++ AuditOps.queries ++ Governance.queries ++ LayoutOps.queries ++ MiningOps.queries ++ SampleOps.queries ++ SequenceOps.queries ++ StringSimOps.queries ++ TextOps.queries ++ DedupOps.queries ++

@@ -49,18 +49,17 @@ object GraftCatalog {
       "openCostBytes")
   val LayoutProps: Set[String] = ColListProps ++ NumericProps + "deleteMode"
 
-  /** Both rows register the catalog at runtime (a plain session conf —
-    * catalogs instantiate lazily) and then speak ONLY SQL: identifier
-    * resolution, DDL, DML and scan planning all flow through the
-    * catalog, nothing through DataFrame reader options.
+  /** Every row runs with `graft_cat` registered ([[graft.RunOnce.withCatalog]]:
+    * a plain session conf, since catalogs instantiate lazily); the SQL
+    * rows then reach identifier resolution, DDL, DML and scan planning
+    * through the catalog, nothing through DataFrame reader options.
     */
   def queries: Map[String, (org.apache.spark.sql.SparkSession, String) =>
-      org.apache.spark.sql.DataFrame] = Map(
+      org.apache.spark.sql.DataFrame] = graft.RunOnce.withCatalog(Map(
     // the VIRTUAL synth table by name: the full pushdown surface (the
     // id-range filter reaches the generator) behind a bare SQL
     // identifier
     "q_catalog_table" -> ((s, _) => {
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
       s.sql(
         """SELECT channel, CAST(count(*) AS BIGINT) AS n,
           | CAST(sum(amount_cents) AS BIGINT) AS cents
@@ -74,9 +73,7 @@ object GraftCatalog {
     // through the two-phase manifest protocol), SELECT back through the
     // connector read scan — the reassembled dim must equal the source
     "q_catalog_insert" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_catalog_lake_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("catalog_lake_")
       graft.Tables.nation(s, dir).createOrReplaceTempView("nation_src_cat")
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.nations")
       s.sql(
@@ -104,9 +101,7 @@ object GraftCatalog {
     // rows and fails the hash.
     "q_sink_delete" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_delete_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_delete_")
       graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -133,9 +128,7 @@ object GraftCatalog {
     // CASE-map of the update.
     "q_sink_update_sql" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_updsql_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_updsql_")
       graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -163,9 +156,7 @@ object GraftCatalog {
     // twin: two materializations, one truth.
     "q_sink_update_sql_mor" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_updmor_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_updmor_")
       graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -191,9 +182,7 @@ object GraftCatalog {
     // same algebraic oracle as all its twins.
     "q_sink_merge_sql_mor" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_mrgmor_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_mrgmor_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -237,9 +226,7 @@ object GraftCatalog {
     // inspection table (zero data files opened for the metadata side).
     "q_lake_meta_files" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_metaf_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_metaf_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -270,9 +257,7 @@ object GraftCatalog {
     // idiom). The oracle is the source relation itself, algebraically.
     "q_sink_merge_nbs" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_nbs_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_nbs_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -311,9 +296,7 @@ object GraftCatalog {
     // helpers as the Scala surface).
     "q_lake_call_compact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_call_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_call_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -344,9 +327,7 @@ object GraftCatalog {
     // envelope pruning, and the oracle pins content unchanged.
     "q_lake_rewrite_sorted" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_rwsort_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_rwsort_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -376,9 +357,7 @@ object GraftCatalog {
     // which no single-key sort can.
     "q_lake_rewrite_zorder" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_rwz_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_rwz_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -409,12 +388,9 @@ object GraftCatalog {
     // pins that the reordered plan still answers exactly.
     "q_lake_cbo_join" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
       def mk(name: String, df: org.apache.spark.sql.DataFrame,
           ddl: String): Unit = {
-        val tmp = java.nio.file.Files
-          .createTempDirectory(s"graft_lake_cbo_${name}_")
-          .toFile.getAbsolutePath
+        val tmp = graft.RunOnce.dir(s"lake_cbo_${name}_")
         df.coalesce(1).write.format("graft.sources.ManifestSink")
           .mode("overwrite").option("path", tmp)
           .option("format", "parquet").save()
@@ -467,9 +443,7 @@ object GraftCatalog {
     // the whole cycle.
     "q_lake_part_days" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_pdays_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_pdays_")
       val day = PartitionTransforms.DayMillis
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
@@ -506,9 +480,7 @@ object GraftCatalog {
     // PartitionTransformSpec).
     "q_lake_part_hours" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_phours_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_phours_")
       val day = PartitionTransforms.DayMillis
       val hour = PartitionTransforms.HourMillis
       def base = graft.Tables.customer(s, dir)
@@ -544,9 +516,7 @@ object GraftCatalog {
     // breaks the oracle.
     "q_lake_tag" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_tag_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_tag_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -588,9 +558,7 @@ object GraftCatalog {
     // breaks the oracle.
     "q_lake_branch" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_branch_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_branch_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -639,9 +607,7 @@ object GraftCatalog {
     // commit guard are spec-pinned in TagsSpec.
     "q_lake_rollback" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_rollback_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_rollback_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -684,9 +650,7 @@ object GraftCatalog {
     // pins content unchanged through the whole cycle.
     "q_lake_rewrite_partial" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_rwpart_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_rwpart_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           (col("c_custkey").cast("long") % 4L).as("band"),
@@ -721,12 +685,9 @@ object GraftCatalog {
     // exactly.
     "q_lake_hist_cbo" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
       def mk(name: String, df: org.apache.spark.sql.DataFrame,
           ddl: String): Unit = {
-        val tmp = java.nio.file.Files
-          .createTempDirectory(s"graft_lake_hist_${name}_")
-          .toFile.getAbsolutePath
+        val tmp = graft.RunOnce.dir(s"lake_hist_${name}_")
         df.coalesce(1).write.format("graft.sources.ManifestSink")
           .mode("overwrite").option("path", tmp)
           .option("format", "parquet").save()
@@ -774,9 +735,7 @@ object GraftCatalog {
     // identical throughout, which is exactly what the oracle pins.
     "q_lake_partition_evolve" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_psevo_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_psevo_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -808,9 +767,7 @@ object GraftCatalog {
     // filter on the renamed column.
     "q_lake_rename_col" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_rename_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_rename_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -844,9 +801,7 @@ object GraftCatalog {
     // it, and post-drop appends omit it entirely.
     "q_lake_drop_col" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_dropcol_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_dropcol_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -883,9 +838,7 @@ object GraftCatalog {
     // stream. The oracle pins exactly the second slice as inserts.
     "q_lake_cdf_from_ts" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_cdfts_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_cdfts_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -902,26 +855,15 @@ object GraftCatalog {
         .write.format("graft.sources.ManifestSink")
         .mode("append").option("path", tmp)
         .option("format", "parquet").save()
-      val q = s.readStream.format("graft.sources.GraftChanges")
-        .option("path", tmp).option("startingTimestamp", t1.toString).load()
-        .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$tmp/changes_out")
-        }
-        .option("checkpointLocation", s"$tmp/_cdfts_checkpoint")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/changes_out")
+      graft.RunOnce(s.readStream.format("graft.sources.GraftChanges")
+          .option("path", tmp).option("startingTimestamp", t1.toString).load())
         .select(col("c_custkey"), col("c_mktsegment"), col("bal_cents"),
           col("_change_type"))
     }),
 
     "q_lake_cdf_stream" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_cdfs_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_cdfs_")
       graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -942,17 +884,8 @@ object GraftCatalog {
       s.sql("DELETE FROM graft_cat.lake.cust_cdfs " +
         "WHERE c_mktsegment = 'BUILDING'")
       ManifestSink.compact(s, tmp)
-      val q = s.readStream.format("graft.sources.GraftChanges")
-        .option("path", tmp).load()
-        .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$tmp/changes_out")
-        }
-        .option("checkpointLocation", s"$tmp/_cdf_checkpoint")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/changes_out")
+      graft.RunOnce(s.readStream.format("graft.sources.GraftChanges")
+          .option("path", tmp).load())
         .groupBy(col("c_custkey"), col("c_mktsegment"), col("bal_cents"))
         .agg(sum(when(col("_change_type") === "insert", 1L)
           .otherwise(-1L)).as("net"))
@@ -962,9 +895,7 @@ object GraftCatalog {
 
     "q_lake_cdf" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_cdf_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_cdf_")
       graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -1000,9 +931,7 @@ object GraftCatalog {
     // by Spark's RewriteMergeIntoTable over the row-level operation.
     "q_sink_merge_sql" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_mrgsql_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_mrgsql_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -1042,9 +971,7 @@ object GraftCatalog {
     // semantically identical.
     "q_sink_delete_mor" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_delmor_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_delmor_")
       graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -1068,9 +995,7 @@ object GraftCatalog {
     // (by-name resolution), files after carry it; no rewrite anywhere.
     "q_sink_evolution" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_evo_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_evo_")
       graft.Tables.nation(s, dir).createOrReplaceTempView("nation_src_evo")
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.evo")
       s.sql(s"CREATE TABLE graft_cat.lake.evo (k BIGINT, v STRING) " +
@@ -1089,8 +1014,7 @@ object GraftCatalog {
     // the algebraic merge over the source
     "q_sink_upsert" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_merge_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_merge_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -1114,8 +1038,7 @@ object GraftCatalog {
     // merge materializations agree row-for-row.
     "q_sink_upsert_mor" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_mergemor_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_mergemor_")
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -1138,9 +1061,7 @@ object GraftCatalog {
     // pinned in CatalogTableSpec via the skip ledger; this row proves
     // the skip is LOSSLESS — the rollup must equal the full-scan oracle)
     "q_sink_skipping" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_skip_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_skip_")
       graft.Tables.orders(s, dir).createOrReplaceTempView("orders_src_skip")
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.ord_skip")
       s.sql(
@@ -1173,9 +1094,7 @@ object GraftCatalog {
     // oracle proves bloom skipping is lossless: false positives cost
     // reads, never rows, and a missing key never drops a present one.
     "q_lake_bloom_skip" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_bloom_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_bloom_")
       graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_bloom")
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_bloom")
       s.sql(
@@ -1199,9 +1118,7 @@ object GraftCatalog {
     // partition-pure file holding that value — the zone-map special
     // case every partitioned lake read leans on
     "q_lake_part_prune" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_prune_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_prune_")
       graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_prune")
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_part")
       s.sql(
@@ -1231,13 +1148,10 @@ object GraftCatalog {
     // extended from the virtual table to STORED data.
     "q_lake_spj" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
       SynthDataSource.withBucketingConfs(s, pushPartValues = true,
           disableBroadcast = true) {
-        val t1 = java.nio.file.Files
-          .createTempDirectory("graft_lake_spj_o_").toFile.getAbsolutePath
-        val t2 = java.nio.file.Files
-          .createTempDirectory("graft_lake_spj_c_").toFile.getAbsolutePath
+        val t1 = graft.RunOnce.dir("lake_spj_o_")
+        val t2 = graft.RunOnce.dir("lake_spj_c_")
         graft.Tables.orders(s, dir).createOrReplaceTempView("orders_src_spj")
         graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_spj")
         s.sql("DROP TABLE IF EXISTS graft_cat.lake.spj_orders")
@@ -1281,9 +1195,7 @@ object GraftCatalog {
     // touch never-committed residue.
     "q_lake_orphans" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_orph_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_orph_")
       graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_mktsegment"),
@@ -1323,13 +1235,10 @@ object GraftCatalog {
     // the task writer's recorded pv claims; a file that can't prove its
     // bucket demotes the whole claim rather than risking co-location.
     "q_lake_spj_bucket" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
       SynthDataSource.withBucketingConfs(s, pushPartValues = true,
           disableBroadcast = true) {
-        val t1 = java.nio.file.Files
-          .createTempDirectory("graft_lake_spjb_o_").toFile.getAbsolutePath
-        val t2 = java.nio.file.Files
-          .createTempDirectory("graft_lake_spjb_c_").toFile.getAbsolutePath
+        val t1 = graft.RunOnce.dir("lake_spjb_o_")
+        val t2 = graft.RunOnce.dir("lake_spjb_c_")
         graft.Tables.orders(s, dir).createOrReplaceTempView("orders_src_spjb")
         graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_spjb")
         s.sql("DROP TABLE IF EXISTS graft_cat.lake.spjb_orders")
@@ -1370,9 +1279,7 @@ object GraftCatalog {
     // a manifest read, not a table scan; the oracle proves the
     // stats-fold is exact, not an estimate.
     "q_lake_meta_agg" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_meta_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_meta_")
       graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_meta")
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_meta")
       s.sql(
@@ -1408,9 +1315,7 @@ object GraftCatalog {
     // (plan pinned in LakeTableSpec). The oracle proves the
     // filtered fold is exact, not an estimate.
     "q_lake_agg_covering" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_cov_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_cov_")
       graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_cov")
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_cov")
       s.sql(
@@ -1465,7 +1370,6 @@ object GraftCatalog {
     // harness runs), and a retention-2 vacuum bounds that accumulation.
     "q_sink_snapshot_sql" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
       val root = graft.streaming.StreamQueries.fixtureDir("sinksnapsql", dir, "nation")
       def dim = graft.Tables.nation(s, dir)
         .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
@@ -1499,9 +1403,7 @@ object GraftCatalog {
     // delivers every committed row exactly once.
     "q_lake_packed_scan" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_pack_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_pack_")
       graft.Tables.orders(s, dir)
         .select(col("o_orderkey").cast("long").as("o_orderkey"),
           col("o_orderpriority"),
@@ -1529,7 +1431,6 @@ object GraftCatalog {
     // instant must see exactly gen1 even though gen2 has replaced it.
     "q_sink_snapshot_ts" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
       val root = graft.streaming.StreamQueries.fixtureDir("sinksnapts", dir, "nation")
       def dim = graft.Tables.nation(s, dir)
         .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
@@ -1567,9 +1468,7 @@ object GraftCatalog {
     // LakeTableSpec); Spark's own limit stays on top so the row COUNT —
     // the deterministic face of a LIMIT — is exact.
     "q_lake_limit" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_limit_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_limit_")
       graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_limit")
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_limit")
       s.sql(
@@ -1593,10 +1492,8 @@ object GraftCatalog {
     // Exchange (pinned in CatalogTableSpec); the oracle proves the
     // layout shortcut returns exactly the sorted-window answer.
     "q_lake_order_window" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
       SynthDataSource.withBucketingConfs(s) {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_lake_ow_").toFile.getAbsolutePath
+        val tmp = graft.RunOnce.dir("lake_ow_")
         graft.Tables.part(s, dir).createOrReplaceTempView("part_src_ow")
         s.sql("DROP TABLE IF EXISTS graft_cat.lake.part_win")
         s.sql(
@@ -1627,20 +1524,18 @@ object GraftCatalog {
     // attribution.
     "q_sink_lineage" -> ((s, _) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_lineage_").toFile.getAbsolutePath
-      val q = s.readStream.format("graft.sources.SynthDataSource")
-        .option("rows", "60000").option("slices", "8")
-        .option("rowsPerBatch", "20000").load()
-        .select(col("id"), col("channel"), col("amount_cents"))
-        .writeStream.format("graft.sources.ManifestSink")
-        .option("path", tmp)
-        .option("checkpointLocation", s"$tmp/_checkpoint")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val tmp = graft.RunOnce.await(s) { d =>
+        s.readStream.format("graft.sources.SynthDataSource")
+          .option("rows", "60000").option("slices", "8")
+          .option("rowsPerBatch", "20000").load()
+          .select(col("id"), col("channel"), col("amount_cents"))
+          .writeStream.format("graft.sources.ManifestSink")
+          .option("path", d)
+          .option("checkpointLocation", s"$d/_checkpoint")
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+      }
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.lineage")
       s.sql(
         s"""CREATE TABLE graft_cat.lake.lineage
@@ -1651,7 +1546,7 @@ object GraftCatalog {
           | CAST(sum(amount_cents) AS BIGINT) AS cents
           |FROM graft_cat.lake.lineage GROUP BY _epoch""".stripMargin)
     })
-  )
+  ))
 
   /** The 1M-row partitioned lake fixture q_lake_runtime_filter joins
     * against — a build-once artifact (deterministic synth content,

@@ -893,8 +893,6 @@ class ManifestScan(path: String,
     // one tombstoned or JSON file among many parquet files must demote
     // the WHOLE scan to rows, not just its own partition
     val columnarOk =
-      java.lang.Boolean.parseBoolean(
-        System.getProperty("graft.lake.columnar", "true")) &&
       files.nonEmpty && files.forall(_._1.endsWith(".parquet")) &&
       deletes.isEmpty && posDeletes.isEmpty &&
       // a live rename demotes to the row path (its per-file phys-name

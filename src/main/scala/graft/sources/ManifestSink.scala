@@ -2264,9 +2264,7 @@ object ManifestSink {
     // now a full read/write/stream table.
     "q_stream_lake_feed" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lake_feed_").toFile.getAbsolutePath
+      val tmp = graft.RunOnce.dir("lake_feed_")
       def dim = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("c_custkey"),
           col("c_nationkey").cast("long").as("c_nationkey"),
@@ -2277,20 +2275,10 @@ object ManifestSink {
           dim.filter(slice).write.format("graft.sources.ManifestSink")
             .mode("append").option("path", tmp).save()
         }
-      val q = s.readStream.format("graft.sources.ManifestSink")
+      graft.RunOnce(s.readStream.format("graft.sources.ManifestSink")
         .option("path", tmp).load()
         .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"), sum(col("bal_cents")).as("cents"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .option("checkpointLocation", s"$tmp/_checkpoint")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.schema("c_nationkey LONG, n LONG, cents LONG").parquet(s"$tmp/out")
+        .agg(count(lit(1)).as("n"), sum(col("bal_cents")).as("cents")), "complete")
     }),
 
     // SNAPSHOT TIME TRAVEL: two committed generations (a filtered dim,
@@ -2394,19 +2382,18 @@ object ManifestSink {
     // any epoch lost, doubled, or partially published breaks the match.
     "q_stream_dsv2_sink" -> ((s, _) => {
       import org.apache.spark.sql.functions._
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_dsv2_ssink_").toFile.getAbsolutePath
-      val q = s.readStream.format("graft.sources.SynthDataSource")
-        .option("rows", "60000").option("slices", "8")
-        .option("rowsPerBatch", "20000").load()
-        .select(col("id"), col("channel"), col("amount_cents"))
-        .writeStream.format("graft.sources.ManifestSink")
-        .option("path", root)
-        .option("checkpointLocation", s"$root/_checkpoint")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val root = graft.RunOnce.await(s) { d =>
+        s.readStream.format("graft.sources.SynthDataSource")
+          .option("rows", "60000").option("slices", "8")
+          .option("rowsPerBatch", "20000").load()
+          .select(col("id"), col("channel"), col("amount_cents"))
+          .writeStream.format("graft.sources.ManifestSink")
+          .option("path", d)
+          .option("checkpointLocation", s"$d/_checkpoint")
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+      }
       readCommitted(s, root)
         .groupBy(col("channel"))
         .agg(count(lit(1)).as("n"), sum(col("amount_cents")).as("cents"))

@@ -336,29 +336,11 @@ object SynthDataSource {
     // multi-batch state through a CUSTOM connector, not a file source
     "q_stream_dsv2" -> ((s, _) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      // unique per-invocation sink (the tempSink discipline): a shared
-      // hardcoded path let two concurrent harness runs interleave the
-      // overwrite and the read-back (ADVICE r12)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_dsv2_stream_")
-        .toFile.getAbsolutePath
-      val q = s.readStream.format("graft.sources.SynthDataSource")
+      graft.RunOnce(s.readStream.format("graft.sources.SynthDataSource")
         .option("rows", "60000").option("slices", "8")
         .option("rowsPerBatch", "20000").load()
         .groupBy(col("channel"))
-        .agg(count(lit(1)).as("n"), sum(col("amount_cents")).as("cents"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.schema(org.apache.spark.sql.types.StructType(Seq(
-          StructField("channel", StringType), StructField("n", LongType),
-          StructField("cents", LongType))))
-        .parquet(s"$tmp/out")
+        .agg(count(lit(1)).as("n"), sum(col("amount_cents")).as("cents")), "complete")
     })
   )
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{RunOnce, Tables}
 
 /** Streaming as-of join — the running-state twin of
   * [[graft.operators.AsofJoin]] (named there as the streaming
@@ -97,26 +97,11 @@ object StreamAsof {
     val landing = StreamQueries.ensureJsonishFixture(
       StreamQueries.fixtureDir("asof", dir, "events"),
       fixtureDf(s, dir))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_")
-      .toFile.getAbsolutePath
-    // stateful query: state-store instances = shuffle partitions, sized
-    // like the other stateful stream queries (see StreamQueries)
-    StreamQueries.withShufflePartitions(s, StreamQueries.StatefulShufflePartitions) {
-      val q = s.readStream.schema(wireSchema).json(landing)
+    RunOnce(s.readStream.schema(wireSchema).json(landing)
         .as[AsofEvent]
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.NoTimeout())(step)
-        .writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/out")
+          GroupStateTimeout.NoTimeout())(step), pins = RunOnce.Stateful)
       .select("user_id", "t_ms", "event_id", "value",
         "click_event_id", "click_value")
   }

@@ -27,46 +27,18 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamDims {
 
-  /** S9: schema-validated pass-through stream into an exactly-once
-    * parquet file sink (no transform).
-    */
-  def passThrough(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String,
-      availableNow: Boolean = false): StreamingQuery = {
-    val w = spark.readStream.schema(schema).json(landingDir)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+  /** S9: schema-validated pass-through stream (no transform). */
+  def passThroughFrame(spark: SparkSession, landingDir: String,
+      schema: StructType): DataFrame =
+    spark.readStream.schema(schema).json(landingDir)
 
   /** ST3: emit each key's FIRST record only, across the life of the
     * stream (checkpoint-backed state) — the new-customer discovery
     * anti-join loop as a streaming operator.
     */
-  def startDiscovery(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      keyCols: Seq[String],
-      outDir: String,
-      checkpointDir: String,
-      availableNow: Boolean = false): StreamingQuery = {
-    val w = spark.readStream.schema(schema).json(landingDir)
-      .dropDuplicates(keyCols)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+  def discoveryFrame(spark: SparkSession, landingDir: String,
+      schema: StructType, keyCols: Seq[String]): DataFrame =
+    spark.readStream.schema(schema).json(landingDir).dropDuplicates(keyCols)
 
   /** ST3: stream-static enrich where the static dimension is re-read
     * every micro-batch (the generators' periodic dim-refresh loop). The

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -149,10 +147,10 @@ object StreamIngest {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_stream_ingest" -> ((s, dir) => {
       val landing = ensureWireFixture(s, dir)
-      val tmp = Files.createTempDirectory("graft_stream_").toFile.getAbsolutePath
-      val q = start(s, landing, s"$tmp/fact", s"$tmp/errors", s"$tmp/ckpt",
-        IngestQueries.testKey, availableNow = true)
-      q.awaitTermination()
+      val tmp = graft.RunOnce.await(s) { d =>
+        start(s, landing, s"$d/fact", s"$d/errors", s"$d/ckpt",
+          IngestQueries.testKey, availableNow = true)
+      }
       readSink(s, s"$tmp/fact").drop("card_token")
     })
   )

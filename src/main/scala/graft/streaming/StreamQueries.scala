@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{RunOnce, Tables}
 
 /** Incoming event for the streaming funnel (see streamFunnel). */
 case class FunnelEvent(user_id: Long, event_id: Long, event_type: String, us: Long)
@@ -248,9 +248,6 @@ object StreamQueries {
     StructField("event_type", StringType),
     StructField("amount", DoubleType)))
 
-  private def tempSink(): String =
-    Files.createTempDirectory("graft_stream_").toFile.getAbsolutePath
-
   private val bitmapSchema = StructType(Seq(
     StructField("ms", LongType),
     StructField("user_id", LongType),
@@ -274,47 +271,18 @@ object StreamQueries {
       Tables.events(s, dir)
         .select(unix_millis(col("ts")).as("ms"), col("user_id"), col("event_type"))
         .repartition(1).sortWithinPartitions(col("ms")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(bitmapSchema).json(landing)
+    RunOnce(s.readStream.schema(bitmapSchema).json(landing)
         .select(col("event_type"),
           expr("ms DIV 86400000").as("day"),
           expr("user_id DIV 32").as("block"),
           expr(graft.operators.ShuffleOps.bitmapLane(duck = false)).as("w"))
         .groupBy(col("event_type"), col("day"), col("block"))
-        .agg(expr("bit_or(w)").as("word"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.schema(StructType(Seq(
-        StructField("event_type", StringType), StructField("day", LongType),
-        StructField("block", LongType), StructField("word", LongType))))
-      .parquet(s"$tmp/out")
+        .agg(expr("bit_or(w)").as("word")),
+      "complete", RunOnce.Stateful)
       .groupBy(col("event_type"), col("day"))
       .agg(sum(expr("bit_count(word)")).as("n_users"),
         count(lit(1)).as("n_blocks"))
   }
-
-  /** Run `body` with the session's shuffle partitions pinned to `n` —
-    * the stateful stream queries size their state-store instance count
-    * this way (instances = shuffle partitions). One definition so a
-    * future change (configurable count, unset-conf handling) cannot
-    * silently miss a copy. See SparkEntry's session-conf contract.
-    */
-  private[streaming] def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** State-store instance count for the stateful stream queries. */
-  private[streaming] val StatefulShufflePartitions = 8
 
   // ---------------------------------------------------------------------
   // S9: pass-through dim stream (no transform — the reference's
@@ -338,11 +306,7 @@ object StreamQueries {
   def streamPassThrough(s: SparkSession, dir: String): DataFrame = {
     val landing = ensureJsonFixture(fixtureDir("pass", dir, "supplier"),
       passThroughDf(s, dir))
-    val tmp = tempSink()
-    val q = StreamDims.passThrough(s, landing, passSchema,
-      s"$tmp/out", s"$tmp/ckpt", availableNow = true)
-    q.awaitTermination()
-    s.read.schema(passSchema).parquet(s"$tmp/out")
+    RunOnce(StreamDims.passThroughFrame(s, landing, passSchema))
   }
 
   // ---------------------------------------------------------------------
@@ -356,14 +320,8 @@ object StreamQueries {
   def streamDedup(s: SparkSession, dir: String): DataFrame = {
     val landing = ensureJsonFixture(fixtureDir("dedup", dir, "events"),
       Tables.events(s, dir).select(col("user_id"), col("event_type")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = StreamDims.startDiscovery(s, landing, dedupSchema,
-        Seq("user_id", "event_type"), s"$tmp/out", s"$tmp/ckpt",
-        availableNow = true)
-      q.awaitTermination()
-    }
-    s.read.schema(dedupSchema).parquet(s"$tmp/out")
+    RunOnce(StreamDims.discoveryFrame(s, landing, dedupSchema,
+      Seq("user_id", "event_type")), pins = RunOnce.Stateful)
   }
 
   // ---------------------------------------------------------------------
@@ -393,23 +351,11 @@ object StreamQueries {
   def streamDedupTtl(s: SparkSession, dir: String): DataFrame = {
     val landing = ensureJsonFixture(fixtureDir("dedupttl", dir, "events"),
       ttlDedupFixtureDf(s, dir))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(ttlDedupSchema).json(landing)
-        .withColumn("ts", timestamp_millis(col("ms")))
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark("event_id")
-        .select(col("event_id"), col("user_id"), col("ms"))
-        .writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.schema(ttlDedupSchema).parquet(s"$tmp/out")
+    RunOnce(s.readStream.schema(ttlDedupSchema).json(landing)
+      .withColumn("ts", timestamp_millis(col("ms")))
+      .withWatermark("ts", "10 minutes")
+      .dropDuplicatesWithinWatermark("event_id")
+      .select(col("event_id"), col("user_id"), col("ms")), pins = RunOnce.Stateful)
   }
 
   private def ttlDedupFixtureDf(s: SparkSession, dir: String): DataFrame = {
@@ -458,38 +404,18 @@ object StreamQueries {
       windowSpec: DataFrame => org.apache.spark.sql.Column): DataFrame = {
     val landing = ensureJsonFixture(fixtureDir("window", dir, "events", version = 2),
       windowFixtureDf(s, dir))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val src = s.readStream.schema(windowSchema).json(landing)
-        .withColumn("ts", timestamp_millis(col("ms")))
-        .withWatermark("ts", "10 minutes")
-      val agg = src
-        .groupBy(windowSpec(src).as("w"))
-        .agg(
-          count(lit(1)).as("n_txns"),
-          sum(col("amount").cast(DecimalType(18, 2))).as("vol_dec"))
-        .select(
-          unix_millis(col("w.start")).as("window_start_ms"),
-          col("n_txns"),
-          col("vol_dec").cast(DoubleType).as("volume"))
-      val q = agg.writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // Explicit readback schema (the runAppendStream discipline): a run
-    // that emits zero rows — e.g. no window cleared the watermark on a
-    // tiny dataset — leaves no part files, where schema inference throws
-    // instead of returning the empty frame the batch oracle produces.
-    s.read.schema(StructType(Seq(
-        StructField("window_start_ms", LongType),
-        StructField("n_txns", LongType),
-        StructField("volume", DoubleType))))
-      .parquet(s"$tmp/out")
+    val src = s.readStream.schema(windowSchema).json(landing)
+      .withColumn("ts", timestamp_millis(col("ms")))
+      .withWatermark("ts", "10 minutes")
+    RunOnce(src
+      .groupBy(windowSpec(src).as("w"))
+      .agg(
+        count(lit(1)).as("n_txns"),
+        sum(col("amount").cast(DecimalType(18, 2))).as("vol_dec"))
+      .select(
+        unix_millis(col("w.start")).as("window_start_ms"),
+        col("n_txns"),
+        col("vol_dec").cast(DoubleType).as("volume")), pins = RunOnce.Stateful)
   }
 
   // ---------------------------------------------------------------------
@@ -524,33 +450,21 @@ object StreamQueries {
       sjFixtureDf(s, dir, "purchase"))
     val rLanding = ensureJsonFixture(fixtureDir("sjoin_r", dir, "events"),
       sjFixtureDf(s, dir, "click"))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val l = s.readStream.schema(sjSchema).json(lLanding)
-        .select(col("user_id"), timestamp_millis(col("ms")).as("p_ts"),
-          col("event_id").as("purchase_event_id"))
-        .withWatermark("p_ts", "10 minutes")
-      val r = s.readStream.schema(sjSchema).json(rLanding)
-        .select(col("user_id").as("r_user_id"), timestamp_millis(col("ms")).as("c_ts"),
-          col("event_id").as("click_event_id"))
-        .withWatermark("c_ts", "10 minutes")
-      val joined = l.join(r,
+    val l = s.readStream.schema(sjSchema).json(lLanding)
+      .select(col("user_id"), timestamp_millis(col("ms")).as("p_ts"),
+        col("event_id").as("purchase_event_id"))
+      .withWatermark("p_ts", "10 minutes")
+    val r = s.readStream.schema(sjSchema).json(rLanding)
+      .select(col("user_id").as("r_user_id"), timestamp_millis(col("ms")).as("c_ts"),
+        col("event_id").as("click_event_id"))
+      .withWatermark("c_ts", "10 minutes")
+    RunOnce(l.join(r,
         col("user_id") === col("r_user_id") &&
           col("c_ts") <= col("p_ts") &&
           col("c_ts") >= col("p_ts") - expr("INTERVAL 5 MINUTES"))
-        .select(col("user_id"), unix_millis(col("p_ts")).as("p_ms"),
-          col("purchase_event_id"), unix_millis(col("c_ts")).as("c_ms"),
-          col("click_event_id"))
-      val q = joined.writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/out")
+      .select(col("user_id"), unix_millis(col("p_ts")).as("p_ms"),
+        col("purchase_event_id"), unix_millis(col("c_ts")).as("c_ms"),
+        col("click_event_id")), pins = RunOnce.Stateful)
   }
 
   /** A two-batch landing: the data as ONE part file, plus a single
@@ -619,43 +533,25 @@ object StreamQueries {
       sjFixtureDf(s, dir, "purchase"), sentinel(-1L))
     val rLanding = ensureSentinelFixture("sloj_r", dir,
       sjFixtureDf(s, dir, "click"), sentinel(-2L))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val l = s.readStream.schema(sjSchema)
-        .option("maxFilesPerTrigger", "1").json(lLanding)
-        .select(col("user_id"), timestamp_millis(col("ms")).as("p_ts"),
-          col("event_id").as("purchase_event_id"))
-        .withWatermark("p_ts", "10 minutes")
-      val r = s.readStream.schema(sjSchema)
-        .option("maxFilesPerTrigger", "1").json(rLanding)
-        .select(col("user_id").as("r_user_id"), timestamp_millis(col("ms")).as("c_ts"),
-          col("event_id").as("click_event_id"))
-        .withWatermark("c_ts", "10 minutes")
-      val joined = l.join(r,
+    val l = s.readStream.schema(sjSchema)
+      .option("maxFilesPerTrigger", "1").json(lLanding)
+      .select(col("user_id"), timestamp_millis(col("ms")).as("p_ts"),
+        col("event_id").as("purchase_event_id"))
+      .withWatermark("p_ts", "10 minutes")
+    val r = s.readStream.schema(sjSchema)
+      .option("maxFilesPerTrigger", "1").json(rLanding)
+      .select(col("user_id").as("r_user_id"), timestamp_millis(col("ms")).as("c_ts"),
+        col("event_id").as("click_event_id"))
+      .withWatermark("c_ts", "10 minutes")
+    RunOnce(l.join(r,
         col("user_id") === col("r_user_id") &&
           col("c_ts") <= col("p_ts") &&
           col("c_ts") >= col("p_ts") - expr("INTERVAL 5 MINUTES"),
         joinType)
-        .select(coalesce(col("user_id"), col("r_user_id")).as("user_id"),
-          unix_millis(col("p_ts")).as("p_ms"),
-          col("purchase_event_id"), unix_millis(col("c_ts")).as("c_ms"),
-          col("click_event_id"))
-      val q = joined.writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.schema(StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("p_ms", LongType),
-        StructField("purchase_event_id", LongType),
-        StructField("c_ms", LongType),
-        StructField("click_event_id", LongType))))
-      .parquet(s"$tmp/out")
+      .select(coalesce(col("user_id"), col("r_user_id")).as("user_id"),
+        unix_millis(col("p_ts")).as("p_ms"),
+        col("purchase_event_id"), unix_millis(col("c_ts")).as("c_ms"),
+        col("click_event_id")), pins = RunOnce.Stateful)
       .filter(col("user_id") >= 0) // drop the sentinel rows themselves
   }
 
@@ -675,14 +571,11 @@ object StreamQueries {
   def streamOhlc(s: SparkSession, dir: String): DataFrame = {
     val landing = ensureSentinelFixture("ohlc", dir, ohlcFixtureDf(s, dir),
       s"""{"ms":$SentinelMs,"event_id":-1,"event_type":"zz","amount":0.0}""")
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val src = s.readStream.schema(ohlcSchema)
+    RunOnce(s.readStream.schema(ohlcSchema)
         .option("maxFilesPerTrigger", "1").json(landing)
         .withColumn("ts", timestamp_millis(col("ms")))
         .withColumn("cents", expr("CAST(round(amount * 100) AS BIGINT)"))
         .withWatermark("ts", "10 minutes")
-      val agg = src
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(
           min_by(col("cents"), struct(col("ms"), col("event_id"))).as("open_cents"),
@@ -693,26 +586,8 @@ object StreamQueries {
           count(lit(1)).as("n_trades"))
         .select(col("event_type"), unix_millis(col("w.start")).as("window_start_ms"),
           col("open_cents"), col("high_cents"), col("low_cents"),
-          col("close_cents"), col("volume_cents"), col("n_trades"))
-      val q = agg.writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.schema(StructType(Seq(
-        StructField("event_type", StringType),
-        StructField("window_start_ms", LongType),
-        StructField("open_cents", LongType),
-        StructField("high_cents", LongType),
-        StructField("low_cents", LongType),
-        StructField("close_cents", LongType),
-        StructField("volume_cents", LongType),
-        StructField("n_trades", LongType)))
-      ).parquet(s"$tmp/out")
+          col("close_cents"), col("volume_cents"), col("n_trades")),
+      pins = RunOnce.Stateful)
       .filter(col("event_type") =!= "zz")
   }
 
@@ -726,26 +601,13 @@ object StreamQueries {
   def streamBenford(s: SparkSession, dir: String): DataFrame = {
     val landing = ensureJsonFixture(fixtureDir("window", dir, "events", version = 2),
       windowFixtureDf(s, dir))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(windowSchema).json(landing)
-        .select(expr("CAST(round(amount * 100) AS BIGINT)").as("cents"))
-        .filter(col("cents") >= 1)
-        .select(expr("CAST(substr(CAST(cents AS STRING), 1, 1) AS BIGINT)").as("digit"))
-        .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.operators.FinanceOps.benfordFromCounts(
-      s.read.schema(StructType(Seq(
-          StructField("digit", LongType), StructField("n", LongType))))
-        .parquet(s"$tmp/out"))
+    val out = RunOnce(s.readStream.schema(windowSchema).json(landing)
+      .select(expr("CAST(round(amount * 100) AS BIGINT)").as("cents"))
+      .filter(col("cents") >= 1)
+      .select(expr("CAST(substr(CAST(cents AS STRING), 1, 1) AS BIGINT)").as("digit"))
+      .groupBy(col("digit")).agg(count(lit(1)).as("n")),
+      "complete", RunOnce.Stateful)
+    graft.operators.FinanceOps.benfordFromCounts(out)
   }
 
   /** Streaming twin of q_media_deadletter — the media family's arrival
@@ -761,26 +623,13 @@ object StreamQueries {
     import s.implicits._
     val landing = ensureJsonFixture(fixtureDir("mediaaudit", dir, "documents"),
       Tables.documents(s, dir).select(col("doc_id")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType)))).json(landing)
-        .select(col("doc_id")).as[Long]
-        .map(id => (id, graft.operators.Audio.decodeStatus(id)))
-        .toDF("doc_id", "status")
-        .groupBy(col("status")).agg(count(lit(1)).as("n"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.schema(StructType(Seq(
-        StructField("status", StringType), StructField("n", LongType))))
-      .parquet(s"$tmp/out")
+    RunOnce(s.readStream
+      .schema(StructType(Seq(StructField("doc_id", LongType)))).json(landing)
+      .select(col("doc_id")).as[Long]
+      .map(id => (id, graft.operators.Audio.decodeStatus(id)))
+      .toDF("doc_id", "status")
+      .groupBy(col("status")).agg(count(lit(1)).as("n")),
+      "complete", RunOnce.Stateful)
   }
 
   private val driftSchema = StructType(Seq(
@@ -810,32 +659,17 @@ object StreamQueries {
     val landing = ensureJsonFixture(fixtureDir("drift", dir, "events"),
       driftFixtureDf(s, dir))
     val stats = graft.operators.AuditOps.driftRefStats(Tables.events(s, dir))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(driftSchema).json(landing)
-        .select(col("us"), expr("CAST(round(amount * 100) AS BIGINT)").as("cents"))
-        .crossJoin(broadcast(stats))
-        .withColumn("is_ref", col("us") <= col("tmid"))
-        .withColumn("bucket",
-          expr("least(greatest(((cents - mn) * 10) DIV (mx - mn + 1), 0), 9)"))
-        .groupBy(col("bucket"))
-        .agg(sum(when(col("is_ref"), 1L).otherwise(0L)).as("n_ref"),
-          sum(when(col("is_ref"), 0L).otherwise(1L)).as("n_live"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.operators.AuditOps.driftScores(
-      s.read.schema(StructType(Seq(
-          StructField("bucket", LongType),
-          StructField("n_ref", LongType),
-          StructField("n_live", LongType))))
-        .parquet(s"$tmp/out"))
+    val out = RunOnce(s.readStream.schema(driftSchema).json(landing)
+      .select(col("us"), expr("CAST(round(amount * 100) AS BIGINT)").as("cents"))
+      .crossJoin(broadcast(stats))
+      .withColumn("is_ref", col("us") <= col("tmid"))
+      .withColumn("bucket",
+        expr("least(greatest(((cents - mn) * 10) DIV (mx - mn + 1), 0), 9)"))
+      .groupBy(col("bucket"))
+      .agg(sum(when(col("is_ref"), 1L).otherwise(0L)).as("n_ref"),
+        sum(when(col("is_ref"), 0L).otherwise(1L)).as("n_live")),
+      "complete", RunOnce.Stateful)
+    graft.operators.AuditOps.driftScores(out)
   }
 
   private val dsirSchema = StructType(Seq(
@@ -867,26 +701,13 @@ object StreamQueries {
     val landing = ensureJsonFixture(fixtureDir("dsir", dir, "documents"),
       dsirFixtureDf(s, dir))
     val lrb = CorpusOps.dsirLogRatios(Tables.documents(s, dir))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(dsirSchema).json(landing)
-        .select(explode(
-          graft.functions.TrigramHashesExpression.trigramHashesAll(col("text")))
-          .as("sh"))
-        .select((col("sh") % CorpusOps.DsirBuckets).as("bucket"))
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n_live"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.schema(StructType(Seq(
-        StructField("bucket", LongType), StructField("n_live", LongType))))
-      .parquet(s"$tmp/out")
+    RunOnce(s.readStream.schema(dsirSchema).json(landing)
+      .select(explode(
+        graft.functions.TrigramHashesExpression.trigramHashesAll(col("text")))
+        .as("sh"))
+      .select((col("sh") % CorpusOps.DsirBuckets).as("bucket"))
+      .groupBy(col("bucket")).agg(count(lit(1)).as("n_live")),
+      "complete", RunOnce.Stateful)
       .join(broadcast(lrb), Seq("bucket"))
       .select(col("bucket"), col("n_live"), col("lrb"),
         (col("n_live") * col("lrb")).as("w_bits"))
@@ -909,27 +730,15 @@ object StreamQueries {
     import graft.operators.TextOps
     val landing = ensureJsonFixture(fixtureDir("winnow", dir, "documents"),
       Tables.documents(s, dir).select(col("doc_id"), col("text")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = TextOps.withPrints(
-          s.readStream.schema(winnowSchema).json(landing))
-        .select(explode(col("prints")).as("p"))
-        .groupBy(col("p")).agg(count(lit(1)).as("dfp"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val out = RunOnce(TextOps.withPrints(
+        s.readStream.schema(winnowSchema).json(landing))
+      .select(explode(col("prints")).as("p"))
+      .groupBy(col("p")).agg(count(lit(1)).as("dfp")),
+      "complete", RunOnce.Stateful)
     val d = TextOps.withPrints(
       Tables.documents(s, dir).select(col("doc_id"), col("text"))).cache()
     TextOps.statsFromPrints(d,
-      s.read.schema(StructType(Seq(
-          StructField("p", LongType), StructField("dfp", LongType))))
-        .parquet(s"$tmp/out"))
+      out)
   }
 
   /** Streaming twin of q_dedup_incr — the daily-ingest dedup loop as a
@@ -955,30 +764,16 @@ object StreamQueries {
     val g = DedupOps.withShingleHashes(
       Tables.documents(s, dir).select(col("doc_id"), col("text"))).cache()
     val bands = DedupOps.bandFrame(g)
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val sbands = DedupOps.bandFrame(DedupOps.withShingleHashes(
-        s.readStream.schema(winnowSchema).json(landing)))
-      val cand = sbands.as("b").join(broadcast(bands.as("a")),
-          col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("d1"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("d2"))
-        .dropDuplicates("d1", "d2")
-      val q = cand.writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$tmp/out")
-        }
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    DedupOps.verifyJaccard(g,
-      s.read.schema(StructType(Seq(
-          StructField("d1", LongType), StructField("d2", LongType))))
-        .parquet(s"$tmp/out").distinct())
+    val sbands = DedupOps.bandFrame(DedupOps.withShingleHashes(
+      s.readStream.schema(winnowSchema).json(landing)))
+    val cand = RunOnce(sbands.as("b").join(broadcast(bands.as("a")),
+        col("a.band_idx") === col("b.band_idx") &&
+        col("a.band_val") === col("b.band_val") &&
+        col("a.doc_id") =!= col("b.doc_id"))
+      .select(least(col("a.doc_id"), col("b.doc_id")).as("d1"),
+        greatest(col("a.doc_id"), col("b.doc_id")).as("d2"))
+      .dropDuplicates("d1", "d2"), pins = RunOnce.Stateful)
+    DedupOps.verifyJaccard(g, cand.distinct())
   }
 
   /** Streaming twin of q_entity_resolve_incr's PAIR stage — entity
@@ -999,32 +794,18 @@ object StreamQueries {
     val vocab = StringSimOps.vocabulary(Tables.part(s, dir))
       .select(col("name").as("n1"), substring(col("name"), 1, 1).as("b1"),
         length(col("name")).as("len1"))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val arriving = s.readStream
-        .schema(StructType(Seq(StructField("name", StringType)))).json(landing)
-        .select(col("name").as("n2"), substring(col("name"), 1, 1).as("b2"),
-          length(col("name")).as("len2"))
-      val cand = arriving.join(broadcast(vocab),
-          col("b1") === col("b2") && col("n1") =!= col("n2") &&
-          abs(col("len1") - col("len2")) <= StringSimOps.LevMax)
-        .select(least(col("n1"), col("n2")).as("a"),
-          greatest(col("n1"), col("n2")).as("b"))
-        .dropDuplicates("a", "b")
-      val q = cand.writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$tmp/out")
-        }
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val arriving = s.readStream
+      .schema(StructType(Seq(StructField("name", StringType)))).json(landing)
+      .select(col("name").as("n2"), substring(col("name"), 1, 1).as("b2"),
+        length(col("name")).as("len2"))
+    val cand = RunOnce(arriving.join(broadcast(vocab),
+        col("b1") === col("b2") && col("n1") =!= col("n2") &&
+        abs(col("len1") - col("len2")) <= StringSimOps.LevMax)
+      .select(least(col("n1"), col("n2")).as("a"),
+        greatest(col("n1"), col("n2")).as("b"))
+      .dropDuplicates("a", "b"), pins = RunOnce.Stateful)
     StringSimOps.scoreJwPairs(
-      s.read.schema(StructType(Seq(
-          StructField("a", StringType), StructField("b", StringType))))
-        .parquet(s"$tmp/out").distinct()
-        .select(col("a").as("n1"), col("b").as("n2")))
+      cand.distinct().select(col("a").as("n1"), col("b").as("n2")))
   }
 
   /** Streaming twin of q_er_fs_score — Fellegi-Sunter linkage's arrival
@@ -1048,37 +829,24 @@ object StreamQueries {
       part.filter(arrivedPred).selectExpr(fields: _*))
     val standing = part.select(col("p_partkey").as("k1"),
       col("p_brand").as("brand"), col("p_size").as("s1"))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val arriving = s.readStream.schema(StructType(Seq(
-          StructField("p_partkey", LongType), StructField("p_name", StringType),
-          StructField("p_brand", StringType), StructField("p_type", StringType),
-          StructField("p_size", IntegerType)))).json(landing)
-        .select(col("p_partkey").as("k2"), col("p_brand").as("brand"),
-          col("p_size").as("s2"))
-      val q = arriving.join(broadcast(standing), Seq("brand"))
-        .filter(col("k1") =!= col("k2") &&
-          abs(col("s1") - col("s2")) <= StringSimOps.FsSizeBand)
-        .select(least(col("k1"), col("k2")).as("a"),
-          greatest(col("k1"), col("k2")).as("b"))
-        .dropDuplicates("a", "b")
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$tmp/out")
-        }
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val arriving = s.readStream.schema(StructType(Seq(
+        StructField("p_partkey", LongType), StructField("p_name", StringType),
+        StructField("p_brand", StringType), StructField("p_type", StringType),
+        StructField("p_size", IntegerType)))).json(landing)
+      .select(col("p_partkey").as("k2"), col("p_brand").as("brand"),
+        col("p_size").as("s2"))
+    val cand = RunOnce(arriving.join(broadcast(standing), Seq("brand"))
+      .filter(col("k1") =!= col("k2") &&
+        abs(col("s1") - col("s2")) <= StringSimOps.FsSizeBand)
+      .select(least(col("k1"), col("k2")).as("a"),
+        greatest(col("k1"), col("k2")).as("b"))
+      .dropDuplicates("a", "b"), pins = RunOnce.Stateful)
     val pa = part.select(col("p_partkey").as("k1"), col("p_name").as("n1"),
       col("p_type").as("t1"), col("p_size").as("s1"))
     val pb = part.select(col("p_partkey").as("k2"), col("p_name").as("n2"),
       col("p_type").as("t2"), col("p_size").as("s2"))
     StringSimOps.fsScore(
-      s.read.schema(StructType(Seq(
-          StructField("a", LongType), StructField("b", LongType))))
-        .parquet(s"$tmp/out").distinct()
+      cand.distinct()
         .select(col("a").as("k1"), col("b").as("k2"))
         .join(pa, "k1").join(pb, "k2"))
   }
@@ -1111,26 +879,11 @@ object StreamQueries {
     val landing = ensureJsonFixture(fixtureDir("topics", dir, "embeddings"),
       topicsFixtureDf(s, dir))
     val cents = VectorOps.frozenCentroidArray(Tables.embeddings(s, dir))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = VectorOps.topicAssignRowwise(
-          s.readStream.schema(topicsSchema).json(landing), cents)
-        .groupBy(col("source"), col("topic")).agg(count(lit(1)).as("n"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    VectorOps.topicRollup(
-      s.read.schema(StructType(Seq(
-          StructField("source", StringType),
-          StructField("topic", LongType),
-          StructField("n", LongType))))
-        .parquet(s"$tmp/out"))
+    val out = RunOnce(VectorOps.topicAssignRowwise(
+        s.readStream.schema(topicsSchema).json(landing), cents)
+      .groupBy(col("source"), col("topic")).agg(count(lit(1)).as("n")),
+      "complete", RunOnce.Stateful)
+    VectorOps.topicRollup(out)
   }
 
   /** STREAMING bucketed interval join — the q_interval_join technique on
@@ -1153,28 +906,15 @@ object StreamQueries {
       .select(col("event_id").as("win_id"),
         expr("unix_millis(ts) DIV 86400000").as("d0"))
     val wb = w.withColumn("bucket", explode(expr("sequence(d0 DIV 2, (d0 + 1) DIV 2)")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val pts = s.readStream.schema(ohlcSchema).json(landing)
-        .filter(col("event_id") >= 0) // tolerate a sentinel row if present
-        .select(expr("ms DIV 86400000").as("d"))
-        .withColumn("bucket", expr("d DIV 2"))
-      val q = pts.join(broadcast(wb), Seq("bucket"))
-        .filter(col("d") >= col("d0") && col("d") <= col("d0") + 1)
-        .groupBy(col("win_id")).agg(count(lit(1)).as("n"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val counts = s.read.schema(StructType(Seq(
-        StructField("win_id", LongType), StructField("n", LongType))))
-      .parquet(s"$tmp/out")
-    w.join(counts, Seq("win_id"), "left")
+    val pts = s.readStream.schema(ohlcSchema).json(landing)
+      .filter(col("event_id") >= 0) // tolerate a sentinel row if present
+      .select(expr("ms DIV 86400000").as("d"))
+      .withColumn("bucket", expr("d DIV 2"))
+    val out = RunOnce(pts.join(broadcast(wb), Seq("bucket"))
+      .filter(col("d") >= col("d0") && col("d") <= col("d0") + 1)
+      .groupBy(col("win_id")).agg(count(lit(1)).as("n")),
+      "complete", RunOnce.Stateful)
+    w.join(out, Seq("win_id"), "left")
       .select(col("win_id"), coalesce(col("n"), lit(0L)).as("n_events"))
   }
 
@@ -1191,14 +931,14 @@ object StreamQueries {
     val landing = ensureJsonFixture(fixtureDir("enrich", dir, "orders"),
       Tables.orders(s, dir).select(
         col("o_orderkey"), col("o_custkey"), col("o_totalprice")))
-    val tmp = tempSink()
-    val q = StreamDims.startEnriched(s, landing, enrichSchema,
-      dimPath = s"$dir/customer.parquet", joinKey = "o_custkey",
-      keyInDim = "c_custkey",
-      dimCols = Seq("c_name", "c_mktsegment"),
-      outDir = s"$tmp/out", checkpointDir = s"$tmp/ckpt",
-      availableNow = true)
-    q.awaitTermination()
+    val tmp = RunOnce.await(s) { d =>
+      StreamDims.startEnriched(s, landing, enrichSchema,
+        dimPath = s"$dir/customer.parquet", joinKey = "o_custkey",
+        keyInDim = "c_custkey",
+        dimCols = Seq("c_name", "c_mktsegment"),
+        outDir = s"$d/out", checkpointDir = s"$d/ckpt",
+        availableNow = true)
+    }
     s.read.parquet(s"$tmp/out").drop("batch_id")
       .select("o_orderkey", "o_custkey", "c_name", "c_mktsegment", "o_totalprice")
   }
@@ -1223,24 +963,14 @@ object StreamQueries {
   def streamHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     val landing = ensureJsonFixture(fixtureDir("heavy", dir, "orders"),
       graft.operators.ShuffleOps.skewedKeys(s, dir))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(heavySchema).json(landing)
-        .agg(graft.functions.MisraGriesAggregate
-            .mgSketch(col("k"), graft.operators.ShuffleOps.MgCapacity).as("mg"),
-          count(lit(1)).as("n_rows"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val out = RunOnce(s.readStream.schema(heavySchema).json(landing)
+      .agg(graft.functions.MisraGriesAggregate
+          .mgSketch(col("k"), graft.operators.ShuffleOps.MgCapacity).as("mg"),
+        count(lit(1)).as("n_rows")),
+      "complete", RunOnce.Stateful)
     graft.operators.ShuffleOps.mgInvariantRow(
       graft.operators.ShuffleOps.skewedKeys(s, dir),
-      s.read.parquet(s"$tmp/out"))
+      out)
   }
 
   /** Streaming twin of q_heavy_per_source: one Misra–Gries buffer PER
@@ -1261,28 +991,18 @@ object StreamQueries {
       graft.operators.ShuffleOps.sourceWordKeys(s, dir)
         .select(concat_ws(" ", col("source"), col("k")).as("value")),
       text = true)
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.text(landing)
-        .select(split(col("value"), " ").as("p"))
-        .select(col("p").getItem(0).as("source"),
-          col("p").getItem(1).cast("long").as("k"))
-        .groupBy(col("source"))
-        .agg(graft.functions.MisraGriesAggregate
-            .mgSketch(col("k"), graft.operators.ShuffleOps.MgCapacity).as("mg"),
-          count(lit(1)).as("n_rows"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val out = RunOnce(s.readStream.text(landing)
+      .select(split(col("value"), " ").as("p"))
+      .select(col("p").getItem(0).as("source"),
+        col("p").getItem(1).cast("long").as("k"))
+      .groupBy(col("source"))
+      .agg(graft.functions.MisraGriesAggregate
+          .mgSketch(col("k"), graft.operators.ShuffleOps.MgCapacity).as("mg"),
+        count(lit(1)).as("n_rows")),
+      "complete", RunOnce.Stateful)
     graft.operators.ShuffleOps.mgInvariantPerGroup(
       graft.operators.ShuffleOps.sourceWordKeys(s, dir),
-      s.read.parquet(s"$tmp/out"))
+      out)
   }
 
   // ---------------------------------------------------------------------
@@ -1306,27 +1026,15 @@ object StreamQueries {
   def streamSession(s: SparkSession, dir: String): DataFrame = {
     val landing = ensureJsonFixture(fixtureDir("session", dir, "events"),
       sessionFixtureDf(s, dir))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val agg = s.readStream.schema(sessSchema).json(landing)
-        .withColumn("ts", timestamp_millis(col("ms")))
-        .withWatermark("ts", "10 minutes")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          unix_millis(col("w.start")).as("start_ms"),
-          unix_millis(col("w.end")).as("end_ms"),
-          col("n_events"))
-      val q = agg.writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/out")
+    RunOnce(s.readStream.schema(sessSchema).json(landing)
+      .withColumn("ts", timestamp_millis(col("ms")))
+      .withWatermark("ts", "10 minutes")
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"),
+        unix_millis(col("w.start")).as("start_ms"),
+        unix_millis(col("w.end")).as("end_ms"),
+        col("n_events")), pins = RunOnce.Stateful)
   }
 
   private def sessionFixtureDf(s: SparkSession, dir: String): DataFrame =
@@ -1355,25 +1063,14 @@ object StreamQueries {
     val landing = ensureJsonFixture(fixtureDir("topk", dir, "customer"),
       Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey").cast("long"), col("c_acctbal")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(topkSchema).json(landing)
-        .join(broadcast(Tables.nation(s, dir)),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(graft.functions.TopKAggregate.topKRows(
-          struct(col("c_acctbal").as("value"), col("c_custkey").as("id")), 3)
-          .as("top"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/out")
+    RunOnce(s.readStream.schema(topkSchema).json(landing)
+      .join(broadcast(Tables.nation(s, dir)),
+        col("c_nationkey") === col("n_nationkey"))
+      .groupBy(col("n_name"))
+      .agg(graft.functions.TopKAggregate.topKRows(
+        struct(col("c_acctbal").as("value"), col("c_custkey").as("id")), 3)
+        .as("top")),
+      "complete", RunOnce.Stateful)
       .select(col("n_name"), posexplode(col("top")))
       .select(col("n_name"), col("col.id").as("c_custkey"),
         col("col.value").as("c_acctbal"), (col("pos") + 1).cast("long").as("rnk"))
@@ -1403,54 +1100,22 @@ object StreamQueries {
   def streamPartitionedSink(s: SparkSession, dir: String): DataFrame = {
     val landing = ensureJsonFixture(fixtureDir("window", dir, "events", version = 2),
       windowFixtureDf(s, dir))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(windowSchema).json(landing)
-        .withColumn("day", expr("ms DIV 86400000"))
-        .writeStream.format("parquet")
-        .partitionBy("day")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // Explicit readback schema incl. the partition column (the
-    // runAppendStream discipline): an empty sink has no partition dirs
-    // and schema inference throws instead of returning the empty frame.
-    val sink = s.read.schema(StructType(Seq(
-        StructField("ms", LongType),
-        StructField("amount", DoubleType),
-        StructField("day", LongType))))
-      .parquet(s"$tmp/out")
+    val sink = RunOnce(s.readStream.schema(windowSchema).json(landing)
+      .withColumn("day", expr("ms DIV 86400000")),
+      pins = RunOnce.Stateful, partitionBy = Seq("day"))
     val probeDay = sink.agg((min(col("day")) + 14L).as("probe_day"))
     sink.join(broadcast(probeDay), col("day") === col("probe_day"))
       .agg(count(lit(1)).as("n_rows"),
         sum(expr("CAST(round(amount * 100) AS BIGINT)")).as("cents"))
   }
 
-  /** The shared keyed-append-stream scaffold: fixture in, transform,
-    * parquet sink, blocking AvailableNow run, FIXED-SCHEMA readback —
-    * explicit schema because a run that emits zero rows leaves the sink
-    * with no part files, where schema inference throws instead of
-    * returning the empty frame the batch oracle produces.
+  /** The shared keyed-append-stream scaffold: a JSON landing in, a
+    * stateful transform, run once.
     */
   private def runAppendStream(s: SparkSession, landing: String,
-      inSchema: StructType, outSchema: StructType)(
-      xform: DataFrame => org.apache.spark.sql.Dataset[_]): DataFrame = {
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = xform(s.readStream.schema(inSchema).json(landing))
-        .writeStream.format("parquet").option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.schema(outSchema).parquet(s"$tmp/out")
-  }
+      inSchema: StructType)(
+      xform: DataFrame => org.apache.spark.sql.Dataset[_]): DataFrame =
+    RunOnce(xform(s.readStream.schema(inSchema).json(landing)), pins = RunOnce.Stateful)
 
   /** Streaming twin of q_velocity_flags — the deployment shape of the
     * fraud rule: per-user keyed state holds only the last N-1 = 2 event
@@ -1468,8 +1133,7 @@ object StreamQueries {
     val keep = graft.operators.SequenceOps.VelocityN - 1
     val landing = ensureJsonFixture(fixtureDir("funnel", dir, "events"),
       funnelFixtureDf(s, dir))
-    runAppendStream(s, landing, funnelSchema,
-      org.apache.spark.sql.Encoders.product[VelHit].schema) { src =>
+    runAppendStream(s, landing, funnelSchema) { src =>
       src.as[FunnelEvent]
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -1510,8 +1174,7 @@ object StreamQueries {
     val inSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_id", LongType),
       StructField("value", DoubleType)))
-    runAppendStream(s, landing, inSchema,
-      org.apache.spark.sql.Encoders.product[EwmaSnap].schema) { src =>
+    runAppendStream(s, landing, inSchema) { src =>
       src.as[EwmaEvt]
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -1555,8 +1218,7 @@ object StreamQueries {
     val inSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_id", LongType),
       StructField("value", DoubleType)))
-    runAppendStream(s, landing, inSchema,
-      org.apache.spark.sql.Encoders.product[CusumSnap].schema) { src =>
+    runAppendStream(s, landing, inSchema) { src =>
       src.as[CusumEvt]
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -1601,28 +1263,14 @@ object StreamQueries {
         .select(unix_millis(col("ts")).as("ms"), col("user_id"),
           col("event_type"), col("value").as("amount"))
         .repartition(1).sortWithinPartitions(col("ms")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(dqSchema).json(landing)
-        .agg(
-          sum(when(expr("CAST(round(amount * 100) AS BIGINT)") < 1, 1L)
-            .otherwise(0L)).as("v_nonpos"),
-          sum(when(!col("event_type").isin("view", "click", "purchase", "signup"), 1L)
-            .otherwise(0L)).as("t_bad"),
-          sum(when(col("user_id").isNull, 1L).otherwise(0L)).as("u_null"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.schema(StructType(Seq(
-        StructField("v_nonpos", LongType), StructField("t_bad", LongType),
-        StructField("u_null", LongType))))
-      .parquet(s"$tmp/out")
+    RunOnce(s.readStream.schema(dqSchema).json(landing)
+      .agg(
+        sum(when(expr("CAST(round(amount * 100) AS BIGINT)") < 1, 1L)
+          .otherwise(0L)).as("v_nonpos"),
+        sum(when(!col("event_type").isin("view", "click", "purchase", "signup"), 1L)
+          .otherwise(0L)).as("t_bad"),
+        sum(when(col("user_id").isNull, 1L).otherwise(0L)).as("u_null")),
+      "complete", RunOnce.Stateful)
       .selectExpr(
         """stack(3,
           | 'value_positive', v_nonpos,
@@ -1642,29 +1290,15 @@ object StreamQueries {
     import graft.operators.TextOps
     val landing = ensureJsonFixture(fixtureDir("zipf", dir, "documents"),
       Tables.documents(s, dir).select(col("doc_id"), col("source"), col("text")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("source", StringType),
-          StructField("text", StringType)))).json(landing)
-        .select(col("source"),
-          explode(expr(graft.functions.PortableSql.tokens("text", duck = false))).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy(col("source"), col("w")).agg(count(lit(1)).as("freq"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    TextOps.zipfFromCounts(
-      s.read.schema(StructType(Seq(
-          StructField("source", StringType), StructField("w", StringType),
-          StructField("freq", LongType))))
-        .parquet(s"$tmp/out"))
+    val out = RunOnce(s.readStream.schema(StructType(Seq(
+        StructField("doc_id", LongType), StructField("source", StringType),
+        StructField("text", StringType)))).json(landing)
+      .select(col("source"),
+        explode(expr(graft.functions.PortableSql.tokens("text", duck = false))).as("w"))
+      .filter(length(col("w")) > 0)
+      .groupBy(col("source"), col("w")).agg(count(lit(1)).as("freq")),
+      "complete", RunOnce.Stateful)
+    TextOps.zipfFromCounts(out)
   }
 
   /** STREAMING twin of q_mix_waterfill — the mixture family's
@@ -1681,27 +1315,14 @@ object StreamQueries {
     import graft.functions.PortableSql.{alen, tokens}
     val landing = ensureJsonFixture(fixtureDir("zipf", dir, "documents"),
       Tables.documents(s, dir).select(col("doc_id"), col("source"), col("text")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("source", StringType),
-          StructField("text", StringType)))).json(landing)
-        .select(col("source"),
-          expr(alen(tokens("text", duck = false), duck = false)).cast("long").as("n_toks"))
-        .groupBy(col("source")).agg(sum(col("n_toks")).as("toks"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.operators.MixOps.waterfillFromCounts(
-      s.read.schema(StructType(Seq(
-          StructField("source", StringType), StructField("toks", LongType))))
-        .parquet(s"$tmp/out"))
+    val out = RunOnce(s.readStream.schema(StructType(Seq(
+        StructField("doc_id", LongType), StructField("source", StringType),
+        StructField("text", StringType)))).json(landing)
+      .select(col("source"),
+        expr(alen(tokens("text", duck = false), duck = false)).cast("long").as("n_toks"))
+      .groupBy(col("source")).agg(sum(col("n_toks")).as("toks")),
+      "complete", RunOnce.Stateful)
+    graft.operators.MixOps.waterfillFromCounts(out)
   }
 
   /** STREAMING twin of q_eval_auc — the classifier-eval family's
@@ -1719,29 +1340,15 @@ object StreamQueries {
     val landing = ensureJsonFixture(fixtureDir("evalsc", dir, "documents"),
       Tables.documents(s, dir).select(col("doc_id"), col("text"), col("n_chars"),
         (col("lang") === "en").cast("long").as("y")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val src = s.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("n_chars", LongType), StructField("y", LongType)))).json(landing)
-      val q = graft.operators.TextOps.qualityScore(src, keep = Seq("y"))
-        .select(expr("CAST(round(quality * 1000000) AS BIGINT)").as("s"), col("y"))
-        .groupBy(col("s"))
-        .agg(count(lit(1)).as("cnt"), sum(col("y")).as("pos"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.operators.EvalOps.aucFromCells(
-      s.read.schema(StructType(Seq(
-          StructField("s", LongType), StructField("cnt", LongType),
-          StructField("pos", LongType))))
-        .parquet(s"$tmp/out"))
+    val src = s.readStream.schema(StructType(Seq(
+        StructField("doc_id", LongType), StructField("text", StringType),
+        StructField("n_chars", LongType), StructField("y", LongType)))).json(landing)
+    val out = RunOnce(graft.operators.TextOps.qualityScore(src, keep = Seq("y"))
+      .select(expr("CAST(round(quality * 1000000) AS BIGINT)").as("s"), col("y"))
+      .groupBy(col("s"))
+      .agg(count(lit(1)).as("cnt"), sum(col("y")).as("pos")),
+      "complete", RunOnce.Stateful)
+    graft.operators.EvalOps.aucFromCells(out)
   }
 
   /** STREAMING twin of q_eval_calibration — the reliability table
@@ -1755,30 +1362,16 @@ object StreamQueries {
     val landing = ensureJsonFixture(fixtureDir("evalsc", dir, "documents"),
       Tables.documents(s, dir).select(col("doc_id"), col("text"), col("n_chars"),
         (col("lang") === "en").cast("long").as("y")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val src = s.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("n_chars", LongType), StructField("y", LongType)))).json(landing)
-      val q = graft.operators.TextOps.qualityScore(src, keep = Seq("y"))
-        .select(expr("CAST(round(quality * 1000000) AS BIGINT)").as("s"), col("y"))
-        .groupBy(least(expr("s DIV 100000"), lit(9L)).as("bucket"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
-          sum(col("s")).as("s_sum"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.operators.EvalOps.calibrationFromBuckets(
-      s.read.schema(StructType(Seq(
-          StructField("bucket", LongType), StructField("n", LongType),
-          StructField("n_pos", LongType), StructField("s_sum", LongType))))
-        .parquet(s"$tmp/out"))
+    val src = s.readStream.schema(StructType(Seq(
+        StructField("doc_id", LongType), StructField("text", StringType),
+        StructField("n_chars", LongType), StructField("y", LongType)))).json(landing)
+    val out = RunOnce(graft.operators.TextOps.qualityScore(src, keep = Seq("y"))
+      .select(expr("CAST(round(quality * 1000000) AS BIGINT)").as("s"), col("y"))
+      .groupBy(least(expr("s DIV 100000"), lit(9L)).as("bucket"))
+      .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
+        sum(col("s")).as("s_sum")),
+      "complete", RunOnce.Stateful)
+    graft.operators.EvalOps.calibrationFromBuckets(out)
   }
 
   /** STREAMING twin of q_k_anonymity — the governance family's
@@ -1794,29 +1387,14 @@ object StreamQueries {
     val landing = ensureJsonFixture(fixtureDir("kanon", dir, "customer"),
       Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(StructType(Seq(
-          StructField("c_custkey", LongType),
-          StructField("c_nationkey", org.apache.spark.sql.types.IntegerType),
-          StructField("c_mktsegment", StringType)))).json(landing)
-        .groupBy(col("c_nationkey"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("gn"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.operators.Governance.kAnonymityFromGroups(
-      s.read.schema(StructType(Seq(
-          StructField("c_nationkey", org.apache.spark.sql.types.IntegerType),
-          StructField("c_mktsegment", StringType),
-          StructField("gn", LongType))))
-        .parquet(s"$tmp/out"))
+    val out = RunOnce(s.readStream.schema(StructType(Seq(
+        StructField("c_custkey", LongType),
+        StructField("c_nationkey", org.apache.spark.sql.types.IntegerType),
+        StructField("c_mktsegment", StringType)))).json(landing)
+      .groupBy(col("c_nationkey"), col("c_mktsegment"))
+      .agg(count(lit(1)).as("gn")),
+      "complete", RunOnce.Stateful)
+    graft.operators.Governance.kAnonymityFromGroups(out)
   }
 
   /** STREAMING twin of q_l_diversity — the homogeneity-attack gate
@@ -1835,30 +1413,14 @@ object StreamQueries {
             col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))),
           col("o_custkey") === col("c_custkey"))
         .select(col("c_nationkey"), col("c_mktsegment"), col("sens")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(StructType(Seq(
-          StructField("c_nationkey", org.apache.spark.sql.types.IntegerType),
-          StructField("c_mktsegment", StringType),
-          StructField("sens", StringType)))).json(landing)
-        .groupBy(col("c_nationkey"), col("c_mktsegment"), col("sens"))
-        .agg(count(lit(1)).as("gn"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.operators.Governance.lDiversityFromSensCells(
-      s.read.schema(StructType(Seq(
-          StructField("c_nationkey", org.apache.spark.sql.types.IntegerType),
-          StructField("c_mktsegment", StringType),
-          StructField("sens", StringType),
-          StructField("gn", LongType))))
-        .parquet(s"$tmp/out"))
+    val out = RunOnce(s.readStream.schema(StructType(Seq(
+        StructField("c_nationkey", org.apache.spark.sql.types.IntegerType),
+        StructField("c_mktsegment", StringType),
+        StructField("sens", StringType)))).json(landing)
+      .groupBy(col("c_nationkey"), col("c_mktsegment"), col("sens"))
+      .agg(count(lit(1)).as("gn")),
+      "complete", RunOnce.Stateful)
+    graft.operators.Governance.lDiversityFromSensCells(out)
   }
 
   /** STREAMING twin of q_feat_hash's occurrence face — the hashing-trick
@@ -1874,29 +1436,15 @@ object StreamQueries {
   def streamFeatHash(s: SparkSession, dir: String): DataFrame = {
     val landing = ensureJsonFixture(fixtureDir("phrase", dir, "documents"),
       Tables.documents(s, dir).select(col("doc_id"), col("text")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("text", StringType)))).json(landing)
-        .select(explode(split(col("text"), " ")).as("w"))
-        .select(expr(s"${graft.functions.PortableSql.strHash("w")} % " +
-          s"${graft.operators.FeatureOps.HashBuckets}").as("bucket"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_tokens"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.schema(StructType(Seq(
-        StructField("bucket", LongType),
-        StructField("n_tokens", LongType))))
-      .parquet(s"$tmp/out")
+    RunOnce(s.readStream.schema(StructType(Seq(
+        StructField("doc_id", LongType),
+        StructField("text", StringType)))).json(landing)
+      .select(explode(split(col("text"), " ")).as("w"))
+      .select(expr(s"${graft.functions.PortableSql.strHash("w")} % " +
+        s"${graft.operators.FeatureOps.HashBuckets}").as("bucket"))
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).as("n_tokens")),
+      "complete", RunOnce.Stateful)
   }
 
   /** STREAMING twin of q_target_encode — the feature-encoder kept fresh
@@ -1913,28 +1461,13 @@ object StreamQueries {
       Tables.orders(s, dir)
         .select(col("o_orderpriority").as("category"),
           (col("o_orderstatus") === "F").cast("long").as("t")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(StructType(Seq(
-          StructField("category", StringType),
-          StructField("t", LongType)))).json(landing)
-        .groupBy(col("category"))
-        .agg(count(lit(1)).as("n"), sum(col("t")).as("sum_t"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.operators.FeatureOps.targetEncodeFromCells(
-      s.read.schema(StructType(Seq(
-          StructField("category", StringType),
-          StructField("n", LongType),
-          StructField("sum_t", LongType))))
-        .parquet(s"$tmp/out"))
+    val out = RunOnce(s.readStream.schema(StructType(Seq(
+        StructField("category", StringType),
+        StructField("t", LongType)))).json(landing)
+      .groupBy(col("category"))
+      .agg(count(lit(1)).as("n"), sum(col("t")).as("sum_t")),
+      "complete", RunOnce.Stateful)
+    graft.operators.FeatureOps.targetEncodeFromCells(out)
   }
 
   /** STREAMING twin of q_phrase_search — the positional matcher as a
@@ -1948,23 +1481,10 @@ object StreamQueries {
   def streamPhraseSearch(s: SparkSession, dir: String): DataFrame = {
     val landing = ensureJsonFixture(fixtureDir("phrase", dir, "documents"),
       Tables.documents(s, dir).select(col("doc_id"), col("text")))
-    val tmp = tempSink()
-    val q = graft.operators.TextOps.phraseSearch(
-        s.readStream.schema(StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("text", StringType)))).json(landing))
-      .writeStream
-      .format("parquet").option("path", s"$tmp/out")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.schema(StructType(Seq(
+    RunOnce(graft.operators.TextOps.phraseSearch(
+      s.readStream.schema(StructType(Seq(
         StructField("doc_id", LongType),
-        StructField("n_hits", LongType),
-        StructField("first_pos", LongType))))
-      .parquet(s"$tmp/out")
+        StructField("text", StringType)))).json(landing)))
   }
 
   /** STREAMING twin of q_markov_stationary: the transition PAIRS are
@@ -1987,8 +1507,7 @@ object StreamQueries {
     val inSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_id", LongType),
       StructField("us", LongType), StructField("event_type", StringType)))
-    val pairs = runAppendStream(s, landing, inSchema,
-      org.apache.spark.sql.Encoders.product[MarkovPair].schema) { src =>
+    val pairs = runAppendStream(s, landing, inSchema) { src =>
       src.as[MarkovEvt]
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -2019,26 +1538,12 @@ object StreamQueries {
         .select(unix_millis(col("ts")).as("ms"), col("user_id"),
           col("event_type"), col("value").as("amount"))
         .repartition(1).sortWithinPartitions(col("ms")))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(dqSchema).json(landing)
-        .select(expr("ms DIV 86400000").as("day"),
-          when(col("event_type") === "error", 1L).otherwise(0L).as("err"))
-        .groupBy(col("day"))
-        .agg(count(lit(1)).as("n"), sum(col("err")).as("n_err"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val d = s.read.schema(StructType(Seq(
-        StructField("day", LongType), StructField("n", LongType),
-        StructField("n_err", LongType))))
-      .parquet(s"$tmp/out")
+    val d = RunOnce(s.readStream.schema(dqSchema).json(landing)
+      .select(expr("ms DIV 86400000").as("day"),
+        when(col("event_type") === "error", 1L).otherwise(0L).as("err"))
+      .groupBy(col("day"))
+      .agg(count(lit(1)).as("n"), sum(col("err")).as("n_err")),
+      "complete", RunOnce.Stateful)
     val budget = graft.operators.AuditOps.ErrorBudgetPpm
     d.as("a").join(d.as("b"), col("b.day") <= col("a.day"))
       .groupBy(col("a.day").as("day"))
@@ -2085,8 +1590,7 @@ object StreamQueries {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val landing = ensureJsonFixture(fixtureDir("scd2", dir, "events"),
       scd2FixtureDf(s, dir))
-    runAppendStream(s, landing, scd2Schema,
-      org.apache.spark.sql.Encoders.product[Scd2Row].schema) { src =>
+    runAppendStream(s, landing, scd2Schema) { src =>
       src.as[Scd2Event]
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -2147,24 +1651,13 @@ object StreamQueries {
     def keys = kmvKeys(s, dir)
     val landing = ensureJsonFixture(fixtureDir("kmv", dir, "lineitem"),
       kmvFixtureDf(s, dir))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(kmvSchema).json(landing)
-        .groupBy("flag")
-        .agg(graft.functions.TopKAggregate.topKRows(
-            struct((-col("h")).cast("double").as("value"), col("h").as("id")), K)
-            .as("top"),
-          count(lit(1)).as("n_h"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val est = s.read.parquet(s"$tmp/out")
+    val est = RunOnce(s.readStream.schema(kmvSchema).json(landing)
+      .groupBy("flag")
+      .agg(graft.functions.TopKAggregate.topKRows(
+          struct((-col("h")).cast("double").as("value"), col("h").as("id")), K)
+          .as("top"),
+        count(lit(1)).as("n_h")),
+      "complete", RunOnce.Stateful)
       .select(col("flag"),
         when(col("n_h") < K, col("n_h"))
           .otherwise(expr(s"${K - 1}L * ${M}L DIV element_at(top, $K).id"))
@@ -2197,25 +1690,14 @@ object StreamQueries {
     def keys = graft.operators.ShuffleOps.overlapKeys(s, dir)
     val landing = ensureJsonFixture(fixtureDir("overlap", dir, "events"),
       overlapFixtureDf(s, dir))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(StructType(Seq(
-          StructField("t", StringType), StructField("h", LongType))))
-        .json(landing)
-        .groupBy("t")
-        .agg(graft.functions.TopKAggregate.topKRows(
-          struct((-col("h")).cast("double").as("value"), col("h").as("id")), K)
-          .as("top"))
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$tmp/out")
-        }
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val sk = s.read.parquet(s"$tmp/out")
+    val sk = RunOnce(s.readStream.schema(StructType(Seq(
+        StructField("t", StringType), StructField("h", LongType))))
+      .json(landing)
+      .groupBy("t")
+      .agg(graft.functions.TopKAggregate.topKRows(
+        struct((-col("h")).cast("double").as("value"), col("h").as("id")), K)
+        .as("top")),
+      "complete", RunOnce.Stateful)
       .select(col("t"), expr("transform(top, x -> x.id)").as("hs"))
     graft.operators.ShuffleOps.kmvOverlapFromSketches(sk, keys)
   }
@@ -2259,12 +1741,7 @@ object StreamQueries {
     * end-to-end — the batch oracle compares qualification with `>=` on
     * the same integers, so no truncation tie can diverge.
     */
-  /** Restartable funnel stream head (the StreamState.startCustomerState
-    * pattern): the spec drives it across two runs against one
-    * checkpoint to prove the stage state survives restart.
-    */
-  def startFunnel(s: SparkSession, landing: String, out: String,
-      ckpt: String): org.apache.spark.sql.streaming.StreamingQuery = {
+  def funnelFrame(s: SparkSession, landing: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     s.readStream.schema(funnelSchema).json(landing).as[FunnelEvent]
@@ -2302,24 +1779,14 @@ object StreamQueries {
             maxPurchase = maxOf("purchase", st.maxPurchase))
           state.update(st)
           Iterator(FunnelProgress(uid, st.t1, st.t2, st.t3))
-      }
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      }.toDF()
   }
 
   def streamFunnel(s: SparkSession, dir: String): DataFrame = {
     val landing = ensureJsonFixture(fixtureDir("funnel", dir, "events"),
       funnelFixtureDf(s, dir))
-    val tmp = tempSink()
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = startFunnel(s, landing, s"$tmp/out", s"$tmp/ckpt")
-      q.awaitTermination()
-    }
     // stage times are set once and never change, so latest == max
-    val fin = s.read.parquet(s"$tmp/out").groupBy("user_id")
+    val fin = RunOnce(funnelFrame(s, landing), pins = RunOnce.Stateful).groupBy("user_id")
       .agg(max("t1").as("t1"), max("t2").as("t2"), max("t3").as("t3"))
     def stage(c: org.apache.spark.sql.Column, name: String) =
       fin.filter(c >= 0).agg(count(lit(1)).as("users"))
@@ -2342,8 +1809,7 @@ object StreamQueries {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val landing = ensureJsonFixture(fixtureDir("funnel", dir, "events"),
       funnelFixtureDf(s, dir))
-    runAppendStream(s, landing, funnelSchema,
-      org.apache.spark.sql.Encoders.product[Attributed].schema) { src =>
+    runAppendStream(s, landing, funnelSchema) { src =>
       src.as[FunnelEvent]
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -2404,31 +1870,28 @@ object StreamQueries {
   def streamUpsert(s: SparkSession, dir: String): DataFrame = {
     val landing = ensureJsonFixture(fixtureDir("upsert", dir, "customer"),
       upsertFixtureDf(s, dir))
-    val tmp = tempSink()
-    val statePrefix = s"$tmp/state_v"
     val lastBid = new java.util.concurrent.atomic.AtomicLong(-1L)
-    withShufflePartitions(s, StatefulShufflePartitions) {
-      val q = s.readStream.schema(upsertSchema).json(landing)
+    val tmp = RunOnce.await(s, RunOnce.Stateful) { d =>
+      s.readStream.schema(upsertSchema).json(landing)
         .writeStream
         .foreachBatch { (df: DataFrame, bid: Long) =>
           val ss = df.sparkSession
           val prev =
             if (bid == 0) df.limit(0)
-            else ss.read.schema(upsertSchema).parquet(s"$statePrefix${bid - 1}")
+            else ss.read.schema(upsertSchema).parquet(s"$d/state_v${bid - 1}")
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("c_custkey")).orderBy(col("seq").desc)
           prev.unionByName(df)
             .withColumn("rn", row_number().over(w))
             .filter(col("rn") === 1).drop("rn")
-            .write.mode("overwrite").parquet(s"$statePrefix$bid")
+            .write.mode("overwrite").parquet(s"$d/state_v$bid")
           lastBid.set(math.max(lastBid.get, bid))
         }
-        .option("checkpointLocation", s"$tmp/ckpt")
+        .option("checkpointLocation", s"$d/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
     }
-    s.read.schema(upsertSchema).parquet(s"$statePrefix${lastBid.get}")
+    s.read.schema(upsertSchema).parquet(s"$tmp/state_v${lastBid.get}")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

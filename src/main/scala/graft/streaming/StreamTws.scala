@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{RunOnce, Tables}
 
 final case class TwsIn(user_id: Long, event_id: Long, ms: Long, vmicro: Long)
 final case class TwsOut(user_id: Long, event_id: Long, seen_before: Long,
@@ -80,36 +80,12 @@ object StreamTws {
     import s.implicits._
     val landing = StreamQueries.ensureJsonFixture(
       StreamQueries.fixtureDir("tws", dir, "events"), twsFixtureDf(s, dir))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tws_")
-      .toFile.getAbsolutePath
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      StreamQueries.withShufflePartitions(s, StreamQueries.StatefulShufflePartitions) {
-        val q = s.readStream.schema(twsSchema).json(landing).as[TwsIn]
-          .groupByKey(_.user_id)
-          .transformWithState(new RunningTotalsProcessor,
-            TimeMode.None(), OutputMode.Append())
-          .toDF()
-          .writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally prevProvider match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
-    }
-    s.read.schema(StructType(Seq(
-      StructField("user_id", LongType), StructField("event_id", LongType),
-      StructField("seen_before", LongType), StructField("sum_before_micro", LongType)
-    ))).parquet(s"$tmp/out")
+    RunOnce(s.readStream.schema(twsSchema).json(landing).as[TwsIn]
+      .groupByKey(_.user_id)
+      .transformWithState(new RunningTotalsProcessor,
+        TimeMode.None(), OutputMode.Append()),
+      pins = RunOnce.Stateful + ("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -25,10 +25,7 @@ object ExplainDump {
         println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
       } catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
-      finally {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
+      finally graft.Harness.afterQuery(spark)
     }
     spark.stop()
   }

@@ -6,31 +6,43 @@ import org.apache.spark.sql.SparkSession
   * (VERDICT r15 Next #3 "done" receipt): builds a widened parquet lake
   * table once, then times the same projected aggregate through the
   * VECTORIZED ColumnarBatch reader vs the row-by-row parquet-mr path
-  * (`-Dgraft.lake.columnar=false`). Prints one JSON line per
-  * configuration; run each mode in its own JVM so JIT state can't leak
-  * between arms:
+  * (the `row` arm reads copies that carry a no-op row-level delete).
+  * Prints one JSON line per configuration; run each mode in its own JVM
+  * so JIT state can't leak between arms:
   *
   *   sbt 'runMain graft.tools.LakeScanBench columnar'
-  *   sbt -Dgraft.lake.columnar=false 'runMain graft.tools.LakeScanBench row'
+  *   sbt 'runMain graft.tools.LakeScanBench row'
   */
 object LakeScanBench {
   def main(args: Array[String]): Unit = {
     val label = args.headOption.getOrElse("columnar")
-    // the mode arg drives the knob directly — sbt's -D forwarding into
-    // the forked run JVM is not reliable
-    if (label == "row") System.setProperty("graft.lake.columnar", "false")
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[${graft.Harness.cpus}]")
       .appName("graft-lake-scan-bench")
-      .config("spark.sql.shuffle.partitions", 32)
+      .config("spark.sql.shuffle.partitions", graft.Harness.cpus)
       .config("spark.ui.enabled", false)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.sources.{GreaterThan, LessThan}
+    import graft.sources.ManifestSink
 
-    val root = "/tmp/graft_lake_scanbench"
-    if (graft.sources.ManifestSink
-        .readManifest(java.nio.file.Paths.get(root)).isEmpty) {
+    // The row arm reads its own copy of each table, which carries a
+    // merge-on-read tombstone `10 < a < 11` that no row matches: a
+    // row-level delete demotes the scan to the row path and leaves its
+    // pushdown on (its times include the per-row delete check).
+    val rowArm = label == "row"
+    def fixture(path: String)(write: String => Unit): String = {
+      val p = if (rowArm) s"${path}_row" else path
+      if (ManifestSink.readManifest(java.nio.file.Paths.get(p)).isEmpty) {
+        write(p)
+        if (rowArm)
+          ManifestSink.deleteWhereMoR(p, Array(GreaterThan("a", 10L), LessThan("a", 11L)))
+      }
+      p
+    }
+
+    val root = fixture("/tmp/graft_lake_scanbench") { root =>
       // 4M rows x 8 columns, 32 files — wide enough that decode rate,
       // not job overhead, dominates
       spark.range(0, 4000000, 1, 32)
@@ -66,9 +78,7 @@ object LakeScanBench {
     // range predicate over a SORTED single-file variant of the same
     // data — footer min/max skips the non-matching row groups, so the
     // filtered scan should run far under the full-scan decode time.
-    val rootF = "/tmp/graft_lake_scanbench_sorted"
-    if (graft.sources.ManifestSink
-        .readManifest(java.nio.file.Paths.get(rootF)).isEmpty) {
+    val rootF = fixture("/tmp/graft_lake_scanbench_sorted") { rootF =>
       // ONE globally-sorted file, many 4 MB row groups — the shape
       // where footer min/max skipping inside the file is the whole win
       spark.range(0, 4000000, 1, 32)

@@ -39,8 +39,8 @@ object ScaleAllFixture {
   def main(args: Array[String]): Unit = {
     val Array(src, out, copiesStr) = args.take(3)
     val copies = copiesStr.toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkSession.builder().master(s"local[${graft.Harness.cpus}]")
+      .config("spark.sql.shuffle.partitions", graft.Harness.cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

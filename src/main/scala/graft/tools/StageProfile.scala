@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main (not part of the library surface): runs one
   * SparkEntry query (env SPARK_GRAFT_Q) with a per-stage listener so
@@ -16,36 +15,11 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val q = sys.env.getOrElse("SPARK_GRAFT_Q", "q_gen_constraints")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Bench's streaming knobs — profiling with the 4.1 durability
-      // guards ON shows checksum-manager waits Bench never pays
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_GUARDS", "false"))
-      .config("spark.sql.streaming.stateStore.commitValidation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_GUARDS", "false"))
-      .config("spark.sql.streaming.stateStore.unloadOnCommit",
-        sys.env.getOrElse("SPARK_GRAFT_STATE_UNLOAD", "true"))
-      // match Bench: fork-free local FS + FS-based checkpoint manager
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS",
-          "graft.sources.NoForkLocalFileSystem"))
-      // single-writer assumption: no two live queries share a checkpoint dir
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
-          "org.apache.spark.sql.execution.streaming.checkpointing." +
-            "FileSystemBasedCheckpointFileManager"))
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.ui.enabled", "false")
     // ad-hoc A/B dial: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
     val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
       .map(_.split(";").filter(_.contains("=")))
       .getOrElse(Array.empty)
-      .foldLeft(builder) { (b, kv) =>
+      .foldLeft(graft.Harness.builder()) { (b, kv) =>
         val Array(k, v) = kv.split("=", 2); b.config(k, v)
       }
       .getOrCreate()
@@ -92,8 +66,7 @@ object StageProfile {
     val t0 = System.nanoTime()
     val df = graft.SparkEntry.queries(q)(spark, sfDir)
     if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) df.explain("formatted")
-    import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
-    df.select(xxhash64(df.columns.toIndexedSeq.map(col): _*).as("h")).agg(bit_xor(col("h"))).collect()
+    graft.Harness.rowHash(df)
     val wall = (System.nanoTime() - t0) / 1e9
     Thread.sleep(300)
     println(f"QUERY $q wall=$wall%.2f s")

@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.Paths
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.{GreaterThan, LessThan}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{ManifestRead, ManifestSink}
@@ -42,6 +45,30 @@ class RowGroupSkipSpec extends AnyFunSuite {
   private def scan(root: String) = spark.read.schema("k LONG, v STRING")
     .format("graft.sources.ManifestSink").option("path", root).load()
 
+  /** Demotes the table's scans to the row path and leaves their rows and
+    * their pushdown alone: a merge-on-read tombstone `10 < k < 11`
+    * overlaps every file's key range, so every file carries a row-level
+    * delete (only the row reader applies those) that no integer key
+    * matches.
+    */
+  private def demoteToRows(root: String): Unit =
+    assert(ManifestSink.deleteWhereMoR(root, Array(
+      GreaterThan("k", 10L), LessThan("k", 11L))), "the tombstone must land")
+
+  /** Runs a filtered scan that must plan the row path; returns its keys
+    * and the rows the scan handed to Spark (after parquet-mr's record
+    * filter, before Spark's residual filter).
+    */
+  private def onRows(df: DataFrame): (Seq[Long], Long) = {
+    assert(!df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+      "a tombstoned scan must plan the row path")
+    val keys = df.collect().map(_.getLong(0)).toSeq
+    val scanned = SparkTestBase.collectInPlan(df.queryExecution.executedPlan) {
+      case b: BatchScanExec => b.metrics("numOutputRows").value
+    }.sum
+    (keys, scanned)
+  }
+
   test("a selective predicate on a sorted file decodes only matching row groups") {
     val root = freshRoot("vectorized")
     bigSortedTable(root)
@@ -59,17 +86,12 @@ class RowGroupSkipSpec extends AnyFunSuite {
   test("the row path (columnar disabled) gets the same filtered answer") {
     val root = freshRoot("rowpath")
     bigSortedTable(root)
-    val prev = System.getProperty("graft.lake.columnar")
-    System.setProperty("graft.lake.columnar", "false")
-    try {
-      val out = scan(root)
-        .filter(col("k") >= 10000L && col("k") < 10050L).collect()
-      assert(out.length == 50)
-      assert(out.map(_.getLong(0)).sorted.toSeq == (10000L until 10050L))
-    } finally {
-      if (prev == null) System.clearProperty("graft.lake.columnar")
-      else System.setProperty("graft.lake.columnar", prev)
-    }
+    demoteToRows(root)
+    val (keys, scanned) = onRows(scan(root)
+      .filter(col("k") >= 10000L && col("k") < 10050L))
+    assert(keys.sorted == (10000L until 10050L))
+    // parquet-mr dropped the rest: row groups by footer, records by value
+    assert(scanned == 50L, s"the row path must push the predicate: scanned $scanned")
   }
 
   test("null-bearing data answers In/IsNull/Not filters identically with pushdown") {
@@ -82,7 +104,6 @@ class RowGroupSkipSpec extends AnyFunSuite {
       .mode("overwrite").option("path", root)
       .option("format", "parquet").option("orderBy", "k")
       .option("rowGroupBytes", "16384").save()
-    val df = scan(root)
     // each predicate vs the same computed truth, on BOTH reader paths
     val cases: Seq[(org.apache.spark.sql.Column, Long => Boolean)] = Seq(
       (col("v").isNull, k => k % 7L == 0L),
@@ -92,18 +113,21 @@ class RowGroupSkipSpec extends AnyFunSuite {
       (!(col("v") === "s2"), k => k % 7L != 0L && k % 5L != 2L),
       (col("v") === "s0" || col("k") < 3L, k =>
         (k % 7L != 0L && k % 5L == 0L) || k < 3L))
-    Seq("true", "false").foreach { columnar =>
-      val prev = System.getProperty("graft.lake.columnar")
-      System.setProperty("graft.lake.columnar", columnar)
-      try cases.foreach { case (pred, truth) =>
-        val got = df.filter(pred).collect().map(_.getLong(0)).toSet
+    def check(path: String)(
+        keysOf: (org.apache.spark.sql.Column, DataFrame) => Seq[Long]): Unit =
+      cases.foreach { case (pred, truth) =>
+        val got = keysOf(pred, scan(root).filter(pred)).toSet
         val want = (0L until 2000L).filter(truth).toSet
         assert(got == want,
-          s"columnar=$columnar pred=$pred: ${got.size} vs ${want.size}")
-      } finally {
-        if (prev == null) System.clearProperty("graft.lake.columnar")
-        else System.setProperty("graft.lake.columnar", prev)
+          s"$path path pred=$pred: ${got.size} vs ${want.size}")
       }
+    check("columnar")((_, df) => df.collect().map(_.getLong(0)).toSeq)
+    demoteToRows(root)
+    check("row") { (pred, df) =>
+      val (keys, scanned) = onRows(df)
+      assert(scanned < 2000L,
+        s"pred=$pred: the predicate must reach parquet-mr, scanned $scanned")
+      keys
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
 /** One shared local session for the whole test run (sessions are ~10s to
   * start; suites must not each build their own).
@@ -35,4 +36,13 @@ object SparkTestBase {
         collectInPlan(q.plan)(pf)
       case n if pf.isDefinedAt(n) => Seq(pf(n))
     }.flatten
+
+  /** Run a streaming frame once into a parquet file sink against a
+    * checkpoint the spec owns, so a second call restarts it on the same
+    * state.
+    */
+  def runToFiles(df: DataFrame, out: String, ckpt: String): Unit =
+    df.writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", ckpt).outputMode("append")
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
 }

@@ -31,9 +31,9 @@ class StreamDimsSpec extends AnyFunSuite {
   test("S9 pass-through dim stream lands schema-validated rows") {
     val tmp = Files.createTempDirectory("graft_dimpass_").toFile.getAbsolutePath
     writeFile(s"$tmp/landing", "c1.json", Seq(cust(1, "Retail"), cust(2, "Premium")))
-    val q = StreamDims.passThrough(spark, s"$tmp/landing", custSchema,
-      s"$tmp/out", s"$tmp/ckpt", availableNow = true)
-    q.awaitTermination()
+    SparkTestBase.runToFiles(
+      StreamDims.passThroughFrame(spark, s"$tmp/landing", custSchema),
+      s"$tmp/out", s"$tmp/ckpt")
     val rows = spark.read.parquet(s"$tmp/out").collect()
     assert(rows.map(_.getAs[Long]("customer_id")).sorted.toSeq == Seq(1L, 2L))
     assert(rows.forall(_.schema.fieldNames.sameElements(custSchema.fieldNames)))
@@ -43,17 +43,15 @@ class StreamDimsSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft_discover_").toFile.getAbsolutePath
     writeFile(s"$tmp/landing", "b1.json",
       Seq(cust(1, "Retail"), cust(2, "Premium"), cust(2, "Premium-dup")))
-    val q1 = StreamDims.startDiscovery(spark, s"$tmp/landing", custSchema,
-      Seq("customer_id"), s"$tmp/out", s"$tmp/ckpt", availableNow = true)
-    q1.awaitTermination()
+    SparkTestBase.runToFiles(StreamDims.discoveryFrame(spark, s"$tmp/landing",
+      custSchema, Seq("customer_id")), s"$tmp/out", s"$tmp/ckpt")
     assert(spark.read.parquet(s"$tmp/out")
       .collect().map(_.getAs[Long]("customer_id")).sorted.toSeq == Seq(1L, 2L))
 
     // restart: key 2 was seen before the restart and must stay suppressed
     writeFile(s"$tmp/landing", "b2.json", Seq(cust(2, "Premium-again"), cust(3, "Biz")))
-    val q2 = StreamDims.startDiscovery(spark, s"$tmp/landing", custSchema,
-      Seq("customer_id"), s"$tmp/out", s"$tmp/ckpt", availableNow = true)
-    q2.awaitTermination()
+    SparkTestBase.runToFiles(StreamDims.discoveryFrame(spark, s"$tmp/landing",
+      custSchema, Seq("customer_id")), s"$tmp/out", s"$tmp/ckpt")
     assert(spark.read.parquet(s"$tmp/out")
       .collect().map(_.getAs[Long]("customer_id")).sorted.toSeq == Seq(1L, 2L, 3L))
   }

@@ -31,16 +31,16 @@ class StreamFunnelSpec extends AnyFunSuite {
       ev(1, 10, "view", 1000),
       ev(2, 20, "purchase", 100), ev(2, 21, "click", 200), ev(2, 22, "view", 300),
       ev(3, 30, "click", 50), ev(3, 31, "view", 100)))
-    val q1 = StreamQueries.startFunnel(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt")
-    q1.awaitTermination()
+    SparkTestBase.runToFiles(StreamQueries.funnelFrame(spark, s"$tmp/landing"),
+      s"$tmp/out", s"$tmp/ckpt")
 
     // run 2 (restart): u1 completes using the checkpointed t1; u3's new
     // click at 150 >= view 100 qualifies, then purchase at 160
     writeFile(s"$tmp/landing", "b2.json", Seq(
       ev(1, 11, "click", 2000), ev(1, 12, "purchase", 3000),
       ev(3, 32, "click", 150), ev(3, 33, "purchase", 160)))
-    val q2 = StreamQueries.startFunnel(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt")
-    q2.awaitTermination()
+    SparkTestBase.runToFiles(StreamQueries.funnelFrame(spark, s"$tmp/landing"),
+      s"$tmp/out", s"$tmp/ckpt")
 
     val fin = spark.read.parquet(s"$tmp/out")
       .groupBy("user_id")
@@ -68,14 +68,14 @@ class StreamFunnelSpec extends AnyFunSuite {
       ev(7, 70, "click", 1000), ev(7, 71, "purchase", 1000),
       // u8 control: strictly-earlier click must NOT retro-qualify
       ev(8, 80, "click", 999)))
-    val q1 = StreamQueries.startFunnel(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt")
-    q1.awaitTermination()
+    SparkTestBase.runToFiles(StreamQueries.funnelFrame(spark, s"$tmp/landing"),
+      s"$tmp/out", s"$tmp/ckpt")
     // batch 2: the views arrive at the same microsecond
     writeFile(s"$tmp/landing", "b2.json", Seq(
       ev(7, 72, "view", 1000),
       ev(8, 81, "view", 1000)))
-    val q2 = StreamQueries.startFunnel(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt")
-    q2.awaitTermination()
+    SparkTestBase.runToFiles(StreamQueries.funnelFrame(spark, s"$tmp/landing"),
+      s"$tmp/out", s"$tmp/ckpt")
 
     val fin = spark.read.parquet(s"$tmp/out")
       .groupBy("user_id")
