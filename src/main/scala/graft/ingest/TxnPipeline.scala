@@ -4,18 +4,22 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.FpeFunctions
+import graft.functions.{FpeFunctions, WireDecode}
 
 /** The streaming-ingest transform chain — the engine's re-expression of the
   * reference's Beam DoFn (dataflow_pipeline/pipeline.py:51-131) as a pure
   * `DataFrame => (valid, errors)` function, usable identically in batch and
   * inside `foreachBatch` streaming:
   *
-  *   parse (S3, one from_json per row; variant fallback on corrupt rows
-  *   only) → union-unwrap (U1) → PAN validate (U3) → mask (U5) → FPE tokenize (U6) →
-  *   drop PII (U8) → project (U9), with the invalid branch built as
-  *   dead-letter records (U4/U10) and unparseable payloads dead-lettered
-  *   as 'Malformed JSON'.
+  *   parse (S3: the `wire_decode` fast path, `from_json` where it
+  *   declines; variant fallback on corrupt rows only) → union-unwrap (U1)
+  *   → PAN validate (U3) → mask (U5) → FPE tokenize (U6) → drop PII (U8)
+  *   → project (U9), with the invalid branch built as dead-letter records
+  *   (U4/U10) and unparseable payloads dead-lettered as 'Malformed JSON'.
+  *
+  * `valid` and `errors` are two frames over the same parse: each branch
+  * parses a row once, so a caller that writes both runs the parse once
+  * per write unless it caches the parsed frame itself.
   *
   * The whole chain is narrow — no shuffle, fully pipelined per input split,
   * so ingest throughput scales linearly with executors at any data size.
@@ -49,14 +53,18 @@ object TxnPipeline {
     * shape deviates from the schema) lands its raw text here with every
     * schema field null.
     */
-  private val parseSchema: StructType =
+  private[graft] val parseSchema: StructType =
     wireSchema.add(StructField("__graft_corrupt_record", StringType))
+
+  /** Options of the parse; the fast path and `from_json` read the same map. */
+  private[graft] val parseOptions: Map[String, String] = Map(
+    "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "__graft_corrupt_record")
 
   /** U1 unwrap fallback for the RARE row whose union field arrived as a
     * plain scalar instead of the Avro-JSON `{"string": v}` / `{"int": v}`
     * wrapping (the reference's unwrap_primitives passes plain values
     * through, pipeline.py:57-69). Wrapped fields are already extracted by
-    * the single from_json struct parse; this variant probe sits inside a
+    * the single struct parse; this variant probe sits inside a
     * `when(corrupt, …)` arm, so codegen evaluates it ONLY on rows the
     * struct parse rejected — the hot path never touches the per-row
     * Jackson-parser churn of the variant builder (measured: the variant
@@ -91,9 +99,16 @@ object TxnPipeline {
     // would box every row across the closure boundary.
     val fpeTokenize = (pan: Column) => FpeFunctions.fpeEncrypt(pan, key)
 
-    // S3: ONE JSON parse per row — from_json against the full wire
+    // S3: one JSON parse per row and branch against the full wire
     // schema, every field (including the union-wrapped structs) off the
-    // single parsed struct. PERMISSIVE mode + the corrupt-record column
+    // single parsed struct. `wire_decode` is one Jackson streaming pass
+    // over the row's UTF-8 bytes; it returns exactly the struct from_json
+    // would, or null where it cannot prove that (see WireKernel), and only
+    // then does from_json run. The parse is the one element of a
+    // one-element `explode`: a Generate keeps each branch's filter above
+    // the parse, where a Project would have the optimizer inline the parse
+    // into the pushed-down filter and run it a second time per row.
+    // PERMISSIVE mode + the corrupt-record column
     // make malformed input a data value instead of an error: corrupt
     // rows surface with null fields and their raw text in the
     // corrupt-record column (named collision-resistantly: a well-formed
@@ -102,9 +117,9 @@ object TxnPipeline {
     // parseable shape (a union field sent as a bare scalar) gets a
     // second chance through the variant fallback, evaluated lazily only
     // on corrupt rows.
-    val parsed = raw.select(col("raw"), from_json(col("raw"), parseSchema,
-      java.util.Map.of("mode", "PERMISSIVE",
-        "columnNameOfCorruptRecord", "__graft_corrupt_record")).as("r"))
+    val parsed = raw.select(col("raw"), explode(array(coalesce(
+      WireDecode.wireDecode(col("raw"), parseSchema, parseOptions),
+      from_json(col("raw"), parseSchema, parseOptions)))).as("r"))
     val corrupt = col("r").isNull || col("r.__graft_corrupt_record").isNotNull
     // PERMISSIVE corrupt-marking is ROW-granular (one bad field nulls the
     // whole struct), so every field of a corrupt row re-derives through

@@ -40,16 +40,40 @@ object ManifestMeta {
   // closed JSON subset: encode
   // ---------------------------------------------------------------
 
-  def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
+  private def needsEsc(c: Char): Boolean = c == '"' || c == '\\' || c < ' '
+
+  /** `s` with `"`, `\` and control chars escaped; `s` itself when none occurs. */
+  def esc(s: String): String = {
+    var i = 0
+    while (i < s.length && !needsEsc(s.charAt(i))) i += 1
+    if (i == s.length) s
+    else escInto(new java.lang.StringBuilder(s.length + 16), s).toString
+  }
+
+  /** Appends [[esc]] of `s` to `sb` in one pass, copying clean runs whole. */
+  def escInto(sb: java.lang.StringBuilder, s: String): java.lang.StringBuilder = {
+    var run = 0
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (needsEsc(c)) {
+        sb.append(s, run, i)
+        c match {
+          case '"' => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' => sb.append("\\t")
+          case _ =>
+            sb.append("\\u00").append(Character.forDigit(c >> 4, 16))
+              .append(Character.forDigit(c & 0xf, 16))
+        }
+        run = i + 1
+      }
+      i += 1
     }
+    sb.append(s, run, s.length)
+  }
 
   def quote(s: String): String = "\"" + esc(s) + "\""
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapabi
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** A custom DSv2 SINK with a real two-phase COMMIT PROTOCOL — the write
@@ -3178,30 +3178,43 @@ private[sources] trait RowFileWriter {
   def approxBytes: Long
 }
 
-/** JSON-lines payload (the original inspectable format). */
+/** JSON-lines payload (the original inspectable format). Each line is
+  * built in one reused builder and copied to the writer through one
+  * reused char buffer.
+  */
 private[sources] final class JsonRowFileWriter(file: Path, schema: StructType)
     extends RowFileWriter {
   private val out = Files.newBufferedWriter(file, StandardCharsets.UTF_8)
   private var written = 0L
+  private val keys: Array[String] = schema.fields.map("\"" + _.name + "\":")
+  private val types: Array[DataType] = schema.fields.map(_.dataType)
+  private val line = new java.lang.StringBuilder(256)
+  private var chars = new Array[Char](256)
   override def approxBytes: Long = written
   override def write(row: InternalRow): Unit = {
-    val cells = schema.fields.zipWithIndex.map { case (f, i) =>
-      val v =
-        if (row.isNullAt(i)) "null"
-        else f.dataType match {
-          case LongType => row.getLong(i).toString
-          case IntegerType => row.getInt(i).toString
-          case DoubleType => row.getDouble(i).toString
-          case StringType => ManifestMeta.quote(row.getUTF8String(i).toString)
-          case other =>
-            throw new IllegalArgumentException(s"unsupported sink type $other")
-        }
-      "\"" + f.name + "\":" + v
+    line.setLength(0)
+    line.append('{')
+    var i = 0
+    while (i < keys.length) {
+      if (i > 0) line.append(',')
+      line.append(keys(i))
+      if (row.isNullAt(i)) line.append("null")
+      else types(i) match {
+        case LongType => line.append(row.getLong(i))
+        case IntegerType => line.append(row.getInt(i))
+        case DoubleType => line.append(java.lang.Double.toString(row.getDouble(i)))
+        case StringType =>
+          ManifestMeta.escInto(line.append('"'), row.getUTF8String(i).toString).append('"')
+        case other =>
+          throw new IllegalArgumentException(s"unsupported sink type $other")
+      }
+      i += 1
     }
-    val line = cells.mkString("{", ",", "}")
-    written += utf8Length(line) + 1L
-    out.write(line)
-    out.write("\n")
+    line.append('}').append('\n')
+    written += utf8Length(line)
+    if (chars.length < line.length) chars = new Array[Char](line.length * 2)
+    line.getChars(0, line.length, chars, 0)
+    out.write(chars, 0, line.length)
   }
   override def close(): Unit = out.close()
 
@@ -3212,7 +3225,7 @@ private[sources] final class JsonRowFileWriter(file: Path, schema: StructType)
     * 4 bytes); an unpaired surrogate actually encodes as 1 byte ('?'),
     * so this over-counts that pathological case — the roll is a bound.
     */
-  private def utf8Length(s: String): Long = {
+  private def utf8Length(s: CharSequence): Long = {
     var n = 0L
     var i = 0
     while (i < s.length) {

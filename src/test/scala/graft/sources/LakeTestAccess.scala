@@ -2,6 +2,9 @@ package graft.sources
 
 import java.nio.file.Path
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
+
 /** Test-side bridge into `private[sources]` lake internals — keeps the
   * production access modifiers tight while letting specs pin internal
   * invariants (segment immutability, ref resolution).
@@ -20,4 +23,10 @@ object LakeTestAccess {
     ManifestSink.liveAliases(root)
   def ledgerLines(root: Path): Seq[String] =
     ManifestSink.ledgerLines(root)
+  /** Writes `rows` through the JSON payload writer; returns its byte count. */
+  def writeJsonRows(file: Path, schema: StructType, rows: Seq[InternalRow]): Long = {
+    val w = new JsonRowFileWriter(file, schema)
+    try rows.foreach(w.write) finally w.close()
+    w.approxBytes
+  }
 }
