@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
 
 /** The session, row hash and between-query cleanup shared by the
-  * harness mains (Bench, Verify, tools.StageProfile) and the tool mains'
-  * core count.
+  * harness mains (Bench, Verify) and the tool mains (tools.StageProfile,
+  * tools.ExplainDump, tools.ScaleAllFixture), and the tool mains' core
+  * count.
   */
 object Harness {
 

@@ -60,25 +60,6 @@ object TxnPipeline {
   private[graft] val parseOptions: Map[String, String] = Map(
     "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "__graft_corrupt_record")
 
-  /** U1 unwrap fallback for the RARE row whose union field arrived as a
-    * plain scalar instead of the Avro-JSON `{"string": v}` / `{"int": v}`
-    * wrapping (the reference's unwrap_primitives passes plain values
-    * through, pipeline.py:57-69). Wrapped fields are already extracted by
-    * the single struct parse; this variant probe sits inside a
-    * `when(corrupt, …)` arm, so codegen evaluates it ONLY on rows the
-    * struct parse rejected — the hot path never touches the per-row
-    * Jackson-parser churn of the variant builder (measured: the variant
-    * chain intermittently degraded 10-20x inside
-    * JsonRecyclerPools.ThreadLocalPool on long multi-query JVMs under
-    * Spark 4.1; from_json never did). `try_` because a mismatched shape
-    * must dead-letter, never throw (ST5).
-    */
-  private def unwrapFallback(raw: Column, field: String, member: String,
-      typ: String): Column =
-    coalesce(
-      try_variant_get(try_parse_json(raw), s"$$.$field.$member", typ),
-      try_variant_get(try_parse_json(raw), s"$$.$field", typ))
-
   /** U5: first 6 + fixed six asterisks + last 4 (pipeline.py:89-90 — six
     * asterisks regardless of PAN length).
     */
@@ -113,42 +94,50 @@ object TxnPipeline {
     // rows surface with null fields and their raw text in the
     // corrupt-record column (named collision-resistantly: a well-formed
     // payload with a top-level "_corrupt" key must not mark the row
-    // corrupt — ADVICE r10), routed to the dead-letter branch below. The rare corrupt-but-
-    // parseable shape (a union field sent as a bare scalar) gets a
-    // second chance through the variant fallback, evaluated lazily only
-    // on corrupt rows.
+    // corrupt — ADVICE r10), routed to the dead-letter branch below.
     val parsed = raw.select(col("raw"), explode(array(coalesce(
       WireDecode.wireDecode(col("raw"), parseSchema, parseOptions),
       from_json(col("raw"), parseSchema, parseOptions)))).as("r"))
     val corrupt = col("r").isNull || col("r.__graft_corrupt_record").isNotNull
     // PERMISSIVE corrupt-marking is ROW-granular (one bad field nulls the
-    // whole struct), so every field of a corrupt row re-derives through
-    // the lazy variant arm — a clean row (the entire hot path) reads its
-    // already-parsed struct member and never executes the variant parse.
+    // whole struct), so every field of a corrupt row re-derives from a
+    // variant parse of the raw text: the rare parseable-but-off-schema
+    // row (a union field sent as a bare scalar instead of the Avro-JSON
+    // `{"string": v}` / `{"int": v}` wrapping; the reference's
+    // unwrap_primitives passes plain values through, pipeline.py:57-69)
+    // recovers its fields, and a malformed one reads null everywhere.
+    // `try_` because a mismatched shape must dead-letter, never throw
+    // (ST5). The variant is bound once per row, as the element of a second
+    // one-element `explode` (a Project would be inlined into each field
+    // and into the pushed-down filter), and it is only computed for
+    // corrupt rows: a clean row (the entire hot path) reads its parsed
+    // struct and never runs the variant builder.
+    val bound = parsed.select(col("raw"), col("r"),
+      explode(array(when(corrupt, try_parse_json(col("raw"))))).as("v"))
+    def fallback(path: String, typ: String): Column =
+      try_variant_get(col("v"), s"$$.$path", typ)
     def f(field: String, typ: String): Column =
-      coalesce(col(s"r.$field"), when(corrupt,
-        try_variant_get(try_parse_json(col("raw")), s"$$.$field", typ)))
-        .as(field)
-    val rec = parsed.select(
+      coalesce(col(s"r.$field"), fallback(field, typ)).as(field)
+    // U1: a union field reads its wrapped member, else the bare scalar
+    def unwrap(field: String, member: String, typ: String): Column =
+      coalesce(col(s"r.$field.$member"), fallback(s"$field.$member", typ),
+        fallback(field, typ)).as(field)
+    val rec = bound.select(
       col("raw"),
       // carried marker: did the payload parse at all? Distinguishes a
       // malformed payload from a parseable one missing its id (U4 —
       // the dead-letter label must say which; a 'Malformed JSON' label
       // on well-formed JSON breaks the audit trail). A row the struct
-      // parse rejected still counts as parsed if the (lazy) variant
-      // parse accepts it — shape deviation is not malformed JSON.
-      (!corrupt || try_parse_json(col("raw")).isNotNull).as("parse_ok"),
+      // parse rejected still counts as parsed if the variant parse
+      // accepts it — shape deviation is not malformed JSON.
+      (!corrupt || col("v").isNotNull).as("parse_ok"),
       f("transaction_id", "string"), f("customer_id", "bigint"),
       f("amount", "double"), f("tax_amount", "double"),
       f("discount_amount", "double"), f("total_amount", "double"),
       f("transaction_channel", "string"), f("is_recurring", "boolean"),
       f("transaction_datetime", "string"),
-      coalesce(col("r.card_number.string"),
-        when(corrupt, unwrapFallback(col("raw"), "card_number", "string", "string")))
-        .as("card_number"),
-      coalesce(col("r.payment_gateway_id.int"),
-        when(corrupt, unwrapFallback(col("raw"), "payment_gateway_id", "int", "bigint")))
-        .as("payment_gateway_id"),
+      unwrap("card_number", "string", "string"),
+      unwrap("payment_gateway_id", "int", "bigint"),
       f("risk_score", "double"))
 
     // Rows whose raw JSON failed to parse dead-letter as 'Malformed

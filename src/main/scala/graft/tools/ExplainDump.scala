@@ -1,22 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: print `.explain("formatted")` for a comma-separated
-  * SPARK_GRAFT_ONLY list of SparkEntry queries — the plan-audit loop the
-  * build prompt asks for, runnable without executing the queries.
+  * SPARK_GRAFT_ONLY list of SparkEntry queries, without executing them.
+  * The session is [[graft.Harness.session]], so a printed plan is the plan
+  * Verify and Bench run.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = sys.env.getOrElse("SPARK_GRAFT_ONLY", "q_star_join")
       .split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"===== $n =====")

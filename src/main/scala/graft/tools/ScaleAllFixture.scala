@@ -2,49 +2,83 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Build a FULL-registry scale fixture — every table grown `copies`-fold
-  * with foreign keys kept consistent — so the complete Verify gate can
-  * run against DuckDB at sf1 = 10x the usual sf0.1 ceiling (VERDICT r12
-  * Next #4). The both-SF discipline tops out at sf0.1 and the iterative
-  * 10x probes cover subsets; this fixture closes the gap with one
-  * 100x-of-driver-gate corpus the ENTIRE registry is provable on.
+/** Build a full-registry scale fixture: every table grown `copies`-fold
+  * with foreign keys kept consistent, so the whole Verify gate runs
+  * against DuckDB at a larger SF (copies=10 over sf0.1 gives sf1).
   *
-  * Replication recipe (structure-preserving, shared with
-  * [[ScaleIterFixture]] where the tables overlap):
-  *   - documents / embeddings: the iterative-probe builders verbatim
-  *     (shingle-bijective word prefixes; per-replica cosine-preserving
-  *     dim rotations).
-  *   - TPC-H star: every key column offsets by a per-table power-of-2
-  *     stride derived from its own max — and the SAME stride applies on
+  * Replication recipe (structure-preserving):
+  *   - documents: replica i prefixes every word with "r<i>x", a bijection
+  *     on shingles per replica, so intra-replica Jaccard (and the dedup
+  *     pair/cluster structure) is exactly preserved while cross-replica
+  *     shingle sets are disjoint. doc_id offsets keep ids unique and far
+  *     under the hash ladders' 2^31 bound.
+  *   - embeddings: replica i cyclically shifts the 64 dims by i, a fixed
+  *     permutation applied to both sides that preserves every
+  *     intra-replica cosine (the LSH pair volume scales linearly), while
+  *     shifted-vs-unshifted dot products decorrelate across replicas.
+  *   - TPC-H star: every key column offsets by a per-domain power-of-2
+  *     stride derived from its own max, and the same stride applies on
   *     both sides of each FK (l_orderkey/o_orderkey, o_custkey/c_custkey,
   *     l_partkey/p_partkey, l_suppkey/s_suppkey), so replica i is a
   *     self-contained copy of the star: join fan-outs, group
-  *     cardinalities per key, and date distributions are exactly the
+  *     cardinalities per key and date distributions are exactly the
   *     base's. Replica counts at copies=10 land on real TPC-H sf1
   *     proportions (150k customer / 1.5M orders / 6M lineitem / 200k
   *     part / 10k supplier).
-  *   - events: event_id and user_id offset (10x users, each with the
-  *     base's exact per-user timeline — sessionization/funnel/cohort
-  *     structure preserved per replica).
-  *   - nation / region: copied UNCHANGED — they are bounded dimensions
-  *     at every TPC-H scale factor (25/5 rows at sf1 too), and
-  *     replicating them would break the fixed nationkey domain.
+  *   - events: event_id and user_id offset (each user keeps the base's
+  *     exact timeline, so sessionization/funnel/cohort structure holds
+  *     per replica).
+  *   - nation / region: copied unchanged; they are bounded dimensions at
+  *     every TPC-H scale factor (25/5 rows at sf1 too), and replicating
+  *     them would break the fixed nationkey domain.
   *
   * Usage: runMain graft.tools.ScaleAllFixture <srcSfDir> <outDir> <copies>
   */
 object ScaleAllFixture {
+
+  /** Power-of-2 replica stride comfortably past the key domain. */
+  def stride(maxKey: Long): Long = java.lang.Long.highestOneBit(maxKey) * 4
+
+  /** Shingle-bijective document replicas (see object doc). */
+  def docsReplicas(docs: DataFrame, copies: Int): DataFrame = {
+    val maxDoc = docs.agg(max(col("doc_id"))).head.getLong(0)
+    val docStride = stride(maxDoc)
+    (0 until copies).map { i =>
+      if (i == 0) docs.select(col("doc_id"), col("text"), col("lang"),
+        col("source"), col("n_chars"))
+      else docs.select(
+        (col("doc_id") + lit(i * docStride)).as("doc_id"),
+        expr(s"concat_ws(' ', transform(split(text, ' '), w -> concat('r${i}x', w)))")
+          .as("text"),
+        col("lang"), col("source"), col("n_chars"))
+    }.reduce(_ unionAll _)
+      // n_chars must stay consistent with the transformed text (the dedup
+      // retention aggregates read it)
+      .withColumn("n_chars", length(col("text")).cast("long"))
+  }
+
+  /** Cosine-preserving (per replica) dim-rotated embedding replicas. */
+  def embReplicas(emb: DataFrame, copies: Int): DataFrame = {
+    val maxVec = emb.agg(max(col("vec_id"))).head.getLong(0)
+    val vecStride = stride(maxVec)
+    (0 until copies).map { i =>
+      val shift = i % 64
+      val rotated =
+        if (shift == 0) col("embedding")
+        else concat(slice(col("embedding"), shift + 1, 64 - shift),
+          slice(col("embedding"), 1, shift))
+      emb.select((col("vec_id") + lit(i * vecStride)).as("vec_id"),
+        rotated.as("embedding"), col("label"))
+    }.reduce(_ unionAll _)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(src, out, copiesStr) = args.take(3)
     val copies = copiesStr.toInt
-    val spark = SparkSession.builder().master(s"local[${graft.Harness.cpus}]")
-      .config("spark.sql.shuffle.partitions", graft.Harness.cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     Files.createDirectories(Paths.get(out))
 
     def table(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
@@ -70,14 +104,10 @@ object ScaleAllFixture {
 
     // one stride per key DOMAIN, derived from the max across every table
     // that carries the key — both FK sides must shift identically
-    val custS = ScaleIterFixture.stride(
-      math.max(maxOf(customer, "c_custkey"), maxOf(orders, "o_custkey")))
-    val ordS = ScaleIterFixture.stride(
-      math.max(maxOf(orders, "o_orderkey"), maxOf(lineitem, "l_orderkey")))
-    val partS = ScaleIterFixture.stride(
-      math.max(maxOf(part, "p_partkey"), maxOf(lineitem, "l_partkey")))
-    val suppS = ScaleIterFixture.stride(
-      math.max(maxOf(supplier, "s_suppkey"), maxOf(lineitem, "l_suppkey")))
+    val custS = stride(math.max(maxOf(customer, "c_custkey"), maxOf(orders, "o_custkey")))
+    val ordS = stride(math.max(maxOf(orders, "o_orderkey"), maxOf(lineitem, "l_orderkey")))
+    val partS = stride(math.max(maxOf(part, "p_partkey"), maxOf(lineitem, "l_partkey")))
+    val suppS = stride(math.max(maxOf(supplier, "s_suppkey"), maxOf(lineitem, "l_suppkey")))
 
     write(replicate(customer, Map("c_custkey" -> custS)), "customer")
     write(replicate(orders, Map("o_orderkey" -> ordS, "o_custkey" -> custS)),
@@ -87,13 +117,13 @@ object ScaleAllFixture {
     write(replicate(part, Map("p_partkey" -> partS)), "part")
     write(replicate(supplier, Map("s_suppkey" -> suppS)), "supplier")
 
-    val evS = ScaleIterFixture.stride(maxOf(events, "event_id"))
-    val userS = ScaleIterFixture.stride(maxOf(events, "user_id"))
+    val evS = stride(maxOf(events, "event_id"))
+    val userS = stride(maxOf(events, "user_id"))
     write(replicate(events, Map("event_id" -> evS, "user_id" -> userS)),
       "events")
 
-    write(ScaleIterFixture.docsReplicas(table("documents"), copies), "documents")
-    write(ScaleIterFixture.embReplicas(table("embeddings"), copies), "embeddings")
+    write(docsReplicas(table("documents"), copies), "documents")
+    write(embReplicas(table("embeddings"), copies), "embeddings")
 
     // bounded dims: copied unchanged (fixed key domains at every SF)
     Seq("nation", "region").foreach(t => write(table(t), t))

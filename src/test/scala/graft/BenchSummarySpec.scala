@@ -2,10 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The round-19 driver-parse fix: Bench's FINAL stdout line must always fit
-  * the driver's ~2000-char tail capture as one complete JSON object, no
-  * matter how large the registry grows (r13–r18 archived "parsed": null
-  * because the qw compact line outgrew the window).
+/** Bench's last stdout line must fit a 2000-char tail capture as one
+  * complete JSON object, however large the registry grows.
   */
 class BenchSummarySpec extends AnyFunSuite {
 
@@ -13,7 +11,7 @@ class BenchSummarySpec extends AnyFunSuite {
     (0 until n).map(i => (f"q_some_operator_name_$i%03d", 0.5 + (i % 17) * 0.31))
 
   test("summary line stays under the cap for a 408-query registry") {
-    val line = Bench.boundedSummaryLine(walls(408), Nil, 393.0, 393.0, 174L,
+    val line = Bench.boundedSummaryLine(walls(408), Nil, 393.0, 174L,
       408, "/root/testdata/sf0.1")
     assert(line.length <= 1700, s"line is ${line.length} chars")
     assert(line.startsWith("""{"metric":"total","value":393.00"""))
@@ -21,7 +19,7 @@ class BenchSummarySpec extends AnyFunSuite {
   }
 
   test("summary line stays under the cap at a 1000-query registry") {
-    val line = Bench.boundedSummaryLine(walls(1000), Nil, 900.0, 912.0, 500L,
+    val line = Bench.boundedSummaryLine(walls(1000), Nil, 900.0, 500L,
       1000, "/root/testdata/sf0.1")
     assert(line.length <= 1700, s"line is ${line.length} chars")
     assert(line.endsWith(""""sf":"/root/testdata/sf0.1"}"""))
@@ -31,14 +29,14 @@ class BenchSummarySpec extends AnyFunSuite {
   }
 
   test("summary line stays bounded even at a 5000-query registry") {
-    val line = Bench.boundedSummaryLine(walls(5000), Nil, 4100.0, 4150.0, 999L,
+    val line = Bench.boundedSummaryLine(walls(5000), Nil, 4100.0, 999L,
       5000, "/root/testdata/sf0.1")
     assert(line.length <= 1700, s"line is ${line.length} chars")
   }
 
   test("queries object carries the slowest entries first and parses as JSON") {
     val ws = Seq(("q_fast", 0.1), ("q_slowest", 9.9), ("q_mid", 3.0))
-    val line = Bench.boundedSummaryLine(ws, Nil, 13.0, 13.0, 1L, 3, "sf")
+    val line = Bench.boundedSummaryLine(ws, Nil, 13.0, 1L, 3, "sf")
     val qPos = line.indexOf("\"queries\":{")
     assert(qPos > 0)
     assert(line.indexOf("q_slowest", qPos) < line.indexOf("q_mid", qPos))
@@ -53,7 +51,7 @@ class BenchSummarySpec extends AnyFunSuite {
 
   test("a long failed list is truncated but counted in full") {
     val failed = (0 until 60).map(i => s"q_broken_$i")
-    val line = Bench.boundedSummaryLine(walls(300), failed, 1.0, 1.0, 0L, 360, "sf")
+    val line = Bench.boundedSummaryLine(walls(300), failed, 1.0, 0L, 360, "sf")
     assert(line.length <= 1700, s"line is ${line.length} chars")
     assert(line.contains(""""failed_n":60"""))
     assert(line.contains("q_broken_9"))

@@ -4,7 +4,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, InterpretedUnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.expressions.variant.ParseJson
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenFallback, GenerateUnsafeProjection}
 import org.apache.spark.sql.functions.{col, from_json}
 import org.apache.spark.sql.types.StringType
@@ -258,8 +260,15 @@ class WireDecodeSpec extends AnyFunSuite {
       val row = InternalRow(UTF8String.fromBytes(b))
       assert(generated(row).copy() == interpreted(row).copy(), n)
     }
-    // the parse runs in one plan node per branch: a filter pushed below it
-    // would evaluate it a second time per row
+    // each parse runs in one plan node per branch: a filter pushed below
+    // it would evaluate it a second time per row. The corrupt-row variant
+    // parse of `raw` is one expression in the whole plan, read by every
+    // field, both union fallbacks and the parse_ok marker.
+    def isVariantParse(e: Expression): Boolean = e match {
+      case _: ParseJson => true
+      case s: StaticInvoke => s.functionName == "parseJson"
+      case _ => false
+    }
     import spark.implicits._
     val key = "0123456789abcdef0123456789abcdef".getBytes("UTF-8")
     val raw = spark.sparkContext.parallelize(Kinds.map(k => record(r, k)), 2).toDF("raw")
@@ -271,6 +280,12 @@ class WireDecodeSpec extends AnyFunSuite {
         case p if p.expressions.exists(_.find(_.isInstanceOf[WireDecode]).isDefined) => p
       }
       assert(decoding.length == 1, plan.treeString)
+      val variantParses = SparkTestBase.collectInPlan(plan) {
+        case p => p.expressions.flatMap(_.collect {
+          case e if isVariantParse(e) && e.references.exists(_.name == "raw") => e
+        })
+      }.flatten
+      assert(variantParses.length == 1, plan.treeString)
     }
   }
 }
