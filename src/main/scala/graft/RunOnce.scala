@@ -7,8 +7,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StructField, StructType}
 
-/** The one place the registry runs a stream once, keeps its scratch
-  * directories and registers its catalog.
+/** The one place the registry runs a stream once, pins session conf,
+  * materializes shared sub-plans, keeps its scratch directories and
+  * registers its catalog.
   *
   * STREAMS. A registry stream row replays a bounded landing: [[apply]]
   * runs the stream with `Trigger.AvailableNow` into a scratch directory
@@ -20,10 +21,14 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * produces. [[await]] is the same run for writers the helper does not
   * own: the library `start*` entry points and custom sinks.
   *
-  * CONF PINS. `pins` are set on the session while the query starts and
-  * runs, and restored (or unset) in a finally. Stateful rows pass
+  * CONF PINS. [[withConf]] sets `pins` on the session for the length of
+  * a body and restores (or unsets) each key in a finally; a stream run
+  * holds its pins while it starts and runs. Stateful rows pass
   * [[Stateful]] (state-store instances = shuffle partitions);
   * q_stream_tws also pins the RocksDB provider.
+  *
+  * CACHES. [[materialize]] caches and counts a frame that several
+  * branches of one plan consume.
   *
   * SCRATCH. Every scratch directory lives under one root per JVM. A
   * returned frame reads its directory lazily, so the caller deletes them
@@ -68,15 +73,40 @@ object RunOnce {
   def await(s: SparkSession, pins: Map[String, String] = Map.empty)(
       start: String => StreamingQuery): String = {
     val d = dir("stream_")
+    withConf(s, pins)(start(d).awaitTermination())
+    d
+  }
+
+  /** Run `body` with `pins` set on the session. In a finally, each pinned
+    * key gets back the value it was explicitly set to before, or is
+    * unset if it had none, so a key left at its default stays at its
+    * default rather than becoming an explicit session value.
+    */
+  def withConf[T](s: SparkSession, pins: Map[String, String])(body: => T): T = {
     val set = s.conf.getAll
     val prev = pins.keys.map(k => k -> set.get(k)).toMap
     pins.foreach { case (k, v) => s.conf.set(k, v) }
-    try start(d).awaitTermination()
+    try body
     finally prev.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
     }
-    d
+  }
+
+  /** Cache `ds`, run one `count()` to fill the cache, and return the
+    * cached frame. Use it where one plan consumes a sub-plan from several
+    * branches (a self-join, a union of per-threshold aggregates, a loop
+    * over rounds): filled first, the branches read the cached blocks
+    * instead of each recomputing the sub-plan or racing to write the same
+    * cache blocks under Spark's block write locks. The count is one Spark
+    * job. The cache lives until `Harness.afterQuery` clears it after the
+    * query's action; the returned plan is lazy, so the query function
+    * cannot unpersist it itself.
+    */
+  def materialize[T](ds: Dataset[T]): Dataset[T] = {
+    val c = ds.cache()
+    c.count()
+    c
   }
 
   /** The per-JVM root every scratch directory lives under. */
@@ -100,7 +130,8 @@ object RunOnce {
     try children.forEach(delete(_)) finally children.close()
   }
 
-  private def delete(p: Path): Unit =
+  /** Delete `p` and everything under it, best-effort. */
+  private[graft] def delete(p: Path): Unit =
     try if (Files.exists(p)) {
       val all = Files.walk(p)
       try all.sorted(Comparator.reverseOrder[Path]()).forEach(Files.deleteIfExists(_))

@@ -26,14 +26,15 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2.
     *
-    * CACHE CONTRACT: some queries `.cache()` a shared sub-plan (the dedup
-    * signature pipelines, the ingest wire fixture, the generator accounts
-    * view) because the returned plan consumes it from several branches,
-    * and some return a frame that reads a scratch directory (every
-    * stream row, every lake row that builds its own table). The returned
-    * DataFrame is lazy, so the query function cannot know when the
-    * consuming action finishes: cache and scratch lifetimes are
-    * CALLER-owned. Run `Harness.afterQuery(spark)` after each query's
+    * CACHE CONTRACT: a query whose plan consumes a shared sub-plan from
+    * several branches fills it first with `RunOnce.materialize` (cache
+    * plus one count; its scaladoc is the policy); a few leave a
+    * `.cache()` lazy for the first branch to fill (the ingest wire
+    * fixture). Some queries return a frame that reads a scratch
+    * directory (every stream row, every lake row that builds its own
+    * table). The returned DataFrame is lazy, so the query function cannot
+    * know when the consuming action finishes: cache and scratch lifetimes
+    * are CALLER-owned. Run `Harness.afterQuery(spark)` after each query's
     * action completes (Bench and Verify both do). It clears the caches,
     * which unrelated queries could otherwise silently reuse through
     * logical-plan matching, and deletes every directory under
@@ -41,17 +42,23 @@ object SparkEntry {
     * Content-keyed fixtures (`StreamQueries.fixtureDir`,
     * `GraftCatalog.ensureLakeRtfFixture`) stay, and are reused by content.
     *
-    * SESSION-CONF CONTRACT: `RunOnce` is the one place a query pins
-    * session conf. A stream row passes its pins (`RunOnce.Stateful`
-    * lowers spark.sql.shuffle.partitions, since state-store instances =
-    * shuffle partitions; q_stream_tws adds the RocksDB
+    * SESSION-CONF CONTRACT: a query pins session conf only through
+    * `RunOnce.withConf`, which sets the pins for the length of a body and
+    * in a finally restores each key's previous value, or unsets it if it
+    * had none. A stream row passes its pins to `RunOnce`, which holds them
+    * while the stream starts and runs (`RunOnce.Stateful` lowers
+    * spark.sql.shuffle.partitions, since state-store instances = shuffle
+    * partitions; q_stream_tws adds the RocksDB
     * spark.sql.streaming.stateStore.providerClass that transformWithState
-    * requires), and RunOnce sets them while its stream starts and runs
-    * and restores the previous values in a finally. Run queries
-    * sequentially per session: a query PLANNED concurrently on the same
-    * session while a pinned stream runs would pick up the pinned values.
-    * The catalog rows register `graft_cat` (`RunOnce.withCatalog`), which
-    * is idempotent and never unset.
+    * requires). A batch row that needs a plan-shape conf (q_bucket_prune,
+    * q_skew_aqe, the q_lake_*cbo* rows, the `withBucketingConfs` rows)
+    * plans, and where the plan must run under the conf materializes,
+    * inside the body. Run queries sequentially per session: a query
+    * PLANNED concurrently on the same session while pins hold would pick
+    * them up. The persistent sets are not pins: `graft_cat`
+    * (`RunOnce.withCatalog`), `graft_fns`, the events table's
+    * nanosAsLong and the bucketed tables' marker key are idempotent and
+    * never unset.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Analytics.queries ++ AsofJoin.queries ++ AuditOps.queries ++ Governance.queries ++ LayoutOps.queries ++ MiningOps.queries ++ SampleOps.queries ++ SequenceOps.queries ++ StringSimOps.queries ++ TextOps.queries ++ DedupOps.queries ++

@@ -2,6 +2,7 @@ package graft.gen
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.RunOnce.materialize
 import graft.Tables
 
 /** Deterministic columnar data generators — the engine's re-expression of
@@ -504,21 +505,8 @@ object Generators {
     "q_gen_constraints" -> ((s, dir) => {
       // One materialization of the accounts generator serves both the
       // accounts audit and the join inside the fact generator (Spark's
-      // cache manager matches the identical logical sub-plan). Lifecycle
-      // caller-owned: Bench/Verify clearCache() per query.
-      //
-      // The cache MUST be materialized by its own action BEFORE the
-      // cross-joined audit launches: the audit's two aggregate subtrees
-      // (accounts audit + the fact generator's join on the same view)
-      // otherwise race to compute the identical cached partitions, and
-      // concurrent computers of one RDD block serialize on the block's
-      // write lock — the r6 driver run spent 343 task-run-seconds against
-      // ~26 CPU-seconds on exactly that (19.7s wall, all lock wait). One
-      // count() fills every InMemoryRelation batch (caching stores full
-      // rows regardless of downstream pruning), so the audit job reads
-      // warm blocks lock-free.
-      val acct = accounts(s, dir).cache()
-      acct.count()
+      // cache manager matches the identical logical sub-plan).
+      val acct = materialize(accounts(s, dir))
       acct.createOrReplaceTempView("gen_accounts_v")
       factTransactions(s, dir).createOrReplaceTempView("gen_fact_v")
       s.sql(s"""SELECT * FROM (${acctAuditSql("gen_accounts_v")}) a

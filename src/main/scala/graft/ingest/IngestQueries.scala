@@ -109,10 +109,8 @@ object IngestQueries {
     * cache manager dedupes by logical plan, so the valid and errors
     * queries share one materialization per (session, dir).
     *
-    * Cache lifecycle is CALLER-owned: the returned plan is lazy, so this
-    * method cannot know when the consuming action finishes. Bench/Verify
-    * run `spark.catalog.clearCache()` after each query (round 2's
-    * q_topk_parts regression was dead cached blocks from earlier queries).
+    * The cache is lazy (filled by the first branch that runs) and lives
+    * until `Harness.afterQuery` clears it after the query's action.
     */
   private def wire(s: SparkSession, dir: String): DataFrame =
     wireFromOrders(src(s, dir)).cache()

@@ -25,7 +25,9 @@ import graft.schema.SchemaLoader
   *
   * Dimensions are small by definition (the star schema's fact carries the
   * volume), so a single-task overwrite per upload is the right plan shape
-  * at any scale; readers see the swap atomically via the catalog.
+  * at any scale. The reload is NOT atomic for readers: [[loadDim]] drops
+  * the table and then writes it, so a query that reads the table while a
+  * reload runs can fail (ROADMAP item 3, atomic dimension refresh).
   */
 object DimLoader {
 
@@ -54,7 +56,12 @@ object DimLoader {
     * WRITE_TRUNCATE means "replace whatever exists": the catalog entry is
     * dropped AND a leftover warehouse location from an earlier session is
     * removed (a fresh in-memory catalog does not know about it, so
-    * saveAsTable alone would fail with LOCATION_ALREADY_EXISTS).
+    * saveAsTable alone would fail with LOCATION_ALREADY_EXISTS), and only
+    * then is the new table written. Between the drop and the end of the
+    * write the table is missing or partly written: a query that starts
+    * planning in that window fails at analysis, and one already reading
+    * the old files fails with FILE_NOT_EXIST. The reference's load swaps
+    * atomically for its readers; doing the same here is ROADMAP item 3.
     */
   def loadDim(spark: SparkSession, csvPath: String, schemaJson: String): String = {
     val table = tableFor(csvPath).getOrElse(
@@ -74,14 +81,7 @@ object DimLoader {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir"))
     val loc = new File(if (wh.getScheme == "file") wh.getPath else wh.toString, table)
-    if (loc.exists()) deleteRecursively(loc)
-    ()
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-    ()
+    graft.RunOnce.delete(loc.toPath)
   }
 
   /** S8: the event-dispatch loop body — load every `.csv` in a landing

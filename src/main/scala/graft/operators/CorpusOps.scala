@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.RunOnce.materialize
 import graft.Tables
 
 /** Corpus-level governance audits a training-data pipeline publishes with
@@ -133,8 +134,8 @@ object CorpusOps {
     *
     * Shape at 100 TB: ONE fused trigram-hash pass (occurrence-level
     * kernel — the q_boilerplate lesson) aggregated immediately to the
-    * per-(doc, bucket) count frame, which is cached and materialized
-    * once before the two-branch fanout (the q_gen_constraints lesson).
+    * per-(doc, bucket) count frame, which is materialized once before
+    * the two-branch fanout ([[graft.RunOnce.materialize]]).
     * Bucket statistics are B<=1024 rows — broadcast everywhere — so
     * scoring is a broadcast join + one doc-keyed aggregate; nothing
     * after the first shuffle touches corpus-scale gram volume again.
@@ -169,17 +170,14 @@ object CorpusOps {
   }
 
   def dsirWeights(docs: DataFrame): DataFrame = {
-    val db = docs
+    // bucket stats and scoring both read this frame
+    val db = materialize(docs
       .select(col("doc_id"), col("source"),
         explode(graft.functions.TrigramHashesExpression.trigramHashesAll(col("text")))
           .as("sh"))
       .select(col("doc_id"), col("source"), (col("sh") % DsirBuckets).as("bucket"))
       .groupBy(col("doc_id"), col("source"), col("bucket"))
-      .agg(count(lit(1)).as("k"))
-      .cache()
-    // materialize before the fanout: bucket stats and scoring both read
-    // this frame, and racing branches would compute the kernel twice
-    db.count()
+      .agg(count(lit(1)).as("k")))
     val bs = db.groupBy(col("bucket"))
       .agg(sum(col("k")).as("cs"),
         sum(when(col("source") === DsirTarget, col("k")).otherwise(0L)).as("ct"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.RunOnce.materialize
 import graft.Tables
 import graft.functions.PortableSql._
 
@@ -102,14 +103,9 @@ object DedupOps {
 
   def minhashDupPairs(docs: DataFrame): DataFrame = {
     // The fused shingle-hash pass feeds the signature build AND both
-    // sides of the verify join; cache it once — doc_id + hs is narrow,
-    // and this is the same materialization Spark ML's LSH does on fit.
-    // Lifecycle is caller-owned (the plan is lazy); Bench/Verify
-    // clearCache() after each query.
-    val g = withShingleHashes(docs).cache()
-    // materialize before the fan-out (bands + both verify arms consume g
-    // in one action; racing branches serialize on block write locks — r19)
-    g.count()
+    // sides of the verify join; doc_id + hs is narrow, and this is the
+    // same materialization Spark ML's LSH does on fit.
+    val g = materialize(withShingleHashes(docs))
     verifyJaccard(g, minhashCandidates(g))
   }
 
@@ -145,8 +141,7 @@ object DedupOps {
   val SweepThresholds: Seq[Double] = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
 
   def dedupThresholdSweep(docs: DataFrame): DataFrame = {
-    val pairs = ngramJaccardPairs(docs).select(col("jaccard")).cache()
-    pairs.count() // materialize before the per-threshold fan-out (r20 sweep)
+    val pairs = materialize(ngramJaccardPairs(docs).select(col("jaccard")))
     SweepThresholds.map { t =>
       pairs.filter(col("jaccard") >= t)
         .agg(count(lit(1)).as("n_pairs"))
@@ -165,21 +160,16 @@ object DedupOps {
     * much the verify join has to discard) in exact ppm. One row.
     */
   def minhashEval(docs: DataFrame): DataFrame = {
-    val g = withShingleHashes(docs).cache()
-    g.count() // pre-materialize before fan-out (r19, see minhashDupPairs)
+    val g = materialize(withShingleHashes(docs))
     val srcs = docs.select(col("doc_id"), col("source"))
-    val candWs = minhashCandidates(g)
+    val candWs = materialize(minhashCandidates(g)
       .join(srcs.select(col("doc_id").as("d1"), col("source").as("s1")), "d1")
       .join(srcs.select(col("doc_id").as("d2"), col("source").as("s2")), "d2")
       .filter(col("s1") === col("s2"))
-      .select(col("d1"), col("d2"))
-      .cache()
-    candWs.count() // materialize before the hit-join + n_cand fan-out (r20)
-    val truth = ngramJaccardPairs(docs)
+      .select(col("d1"), col("d2")))
+    val truth = materialize(ngramJaccardPairs(docs)
       .filter(col("jaccard") >= MinhashThreshold)
-      .select(col("d1"), col("d2"))
-      .cache()
-    truth.count() // materialize before the hit-join + n_truth fan-out (r20)
+      .select(col("d1"), col("d2")))
     val hit = truth.join(candWs, Seq("d1", "d2"), "left_semi")
     truth.agg(count(lit(1)).as("n_truth"))
       .crossJoin(broadcast(candWs.agg(count(lit(1)).as("n_cand"))))
@@ -220,9 +210,7 @@ object DedupOps {
     * lossless plan swap).
     */
   def incrementalDupPairs(docs: DataFrame): DataFrame = {
-    val g = withShingleHashes(docs).cache()
-    g.count() // pre-materialize before fan-out (r19, see minhashDupPairs)
-    incrementalDupPairsFrom(g)
+    incrementalDupPairsFrom(materialize(withShingleHashes(docs)))
   }
 
   /** [[incrementalDupPairs]] over an ALREADY-built (and caller-cached)
@@ -284,8 +272,7 @@ object DedupOps {
   def incrementalDupPairsPersisted(s: SparkSession, dir: String): DataFrame = {
     val index = s.read.parquet(standingBandIndexRoot(s, dir))
       .select(col("doc_id"), col("band_idx"), col("band_val"))
-    val g = withShingleHashes(Tables.documents(s, dir)).cache()
-    g.count() // pre-materialize before fan-out (r19, see minhashDupPairs)
+    val g = materialize(withShingleHashes(Tables.documents(s, dir)))
     val batchBands = bandFrame(g.filter(col("doc_id") % IncrMod === IncrRem))
     val candStanding = index.as("a").join(batchBands.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
@@ -317,14 +304,9 @@ object DedupOps {
     * popcount of the XOR.
     */
   def simhashDupPairs(docs: DataFrame): DataFrame = {
-    // Same barrier as minhashDupPairs: the interpreted shingle+hash chain
-    // feeds BOTH sides of the block self-join, so cache the (narrow)
-    // signature projection once. Round 2's bench hid the double compute —
-    // Spark's cache manager matched the identical sub-plan minhash had
-    // left cached; per-query clearCache() exposed it (1.45s → 10.45s).
-    // Lifecycle is caller-owned, as for every cache in this package.
-    val sig = simhashSignatures(docs).cache()
-    sig.count() // pre-materialize before fan-out (r19, see minhashDupPairs)
+    // the interpreted shingle+hash chain feeds BOTH sides of the block
+    // self-join, so the (narrow) signature projection is computed once
+    val sig = materialize(simhashSignatures(docs))
     val blocks = sig.select(col("doc_id"), col("simhash"), explode(array(
       (0 until 4).map(j => struct(lit(j).as("block_idx"), col(s"block_$j").as("block_val"))): _*
     )).as("b")).select(col("doc_id"), col("simhash"), col("b.block_idx"), col("b.block_val"))
@@ -374,19 +356,14 @@ object DedupOps {
     // set-intersect on longs is far cheaper than hashing UTF8 strings
     // per probe, and the shingle universe is the same modulo ~1e-9 hash
     // collisions — which the oracle reproduces exactly anyway. Sorted so
-    // the prefix is a total-order prefix. Cached: the explode and both
-    // verify-join sides read one narrow materialization (lifecycle
-    // caller-owned; Bench/Verify clearCache() per query).
-    val g = docs
+    // the prefix is a total-order prefix. The explode and both
+    // verify-join sides read one narrow materialization.
+    val g = materialize(docs
       .select(col("doc_id"), col("source"),
         graft.functions.TrigramHashesExpression.trigramHashes(col("text")).as("hs0"))
       .withColumn("hs", array_sort(array_distinct(col("hs0")))).drop("hs0")
       .withColumn("n", size(col("hs")))
-      .filter(col("n") >= 1)
-      .cache()
-    // materialize before the fan-out (the prefix explode's self-join arms
-    // + both verify-join sides consume g in one action — r20 sweep)
-    g.count()
+      .filter(col("n") >= 1))
     // prefix length floor(n/2)+1 (t = 0.5); slice is 1-based
     val pref = g.select(col("doc_id"), col("source"), col("n"),
       explode(slice(col("hs"), lit(1), (col("n") / 2 + 1).cast("int"))).as("tok"))
@@ -426,14 +403,12 @@ object DedupOps {
     * arrays (Jaccard is order-independent).
     */
   def ngramJaccardPairsRareFirst(docs: DataFrame): DataFrame = {
-    val g = docs
+    val g = materialize(docs
       .select(col("doc_id"), col("source"),
         graft.functions.TrigramHashesExpression.trigramHashes(col("text")).as("hs0"))
       .withColumn("hs", array_sort(array_distinct(col("hs0")))).drop("hs0")
       .withColumn("n", size(col("hs")))
-      .filter(col("n") >= 1)
-      .cache()
-    g.count() // materialize before the fan-out (same as ngramJaccardPairs)
+      .filter(col("n") >= 1))
     val tok = g.select(col("doc_id"), col("source"), col("n"),
       explode(col("hs")).as("tok"))
     val freq = tok.groupBy(col("source"), col("tok"))
@@ -584,16 +559,12 @@ object DedupOps {
   def clustersFromPairs(nodes: DataFrame, pairs: DataFrame): DataFrame = {
     // pairs is cached FIRST: the undirected union references it twice,
     // and without the barrier the (expensive) pair-mining plan executes
-    // once per union branch. Lifecycle caller-owned, as throughout.
+    // once per union branch.
     val p = pairs.cache()
-    // Dup-free corpus: no edges means every label is already final —
-    // skip the propagation machinery entirely (VERDICT r4 #3). FULL
-    // count, not limit(1) (r20): the undirected union right below
-    // consumes p on two branches inside one AQE action, and a partially
-    // materialized cache leaves the remaining partitions to be computed
-    // by both branches concurrently — serialized on the block write
-    // locks (the repo's measured cache-race signature). One complete
-    // pass here makes the fan-out read-only.
+    // Dup-free corpus: no edges means every label is already final, so
+    // the propagation machinery is skipped. A FULL count, not limit(1):
+    // it also fills the whole cache before the union's two branches
+    // read it (see RunOnce.materialize).
     if (p.count() == 0L)
       return nodes.select(col("doc_id"), col("doc_id").as("cluster_id"))
     // Undirected edges, hash-partitioned ON the per-round aggregation key
@@ -705,27 +676,19 @@ object DedupOps {
     * q_incr_agg proof pattern: different plan, identical answer.
     */
   def incrementalClusters(docs: DataFrame): DataFrame = {
-    // ONE shingle-hash kernel pass over the corpus (r19): the standing
-    // label rebuild and the batch pair generator previously each built
-    // their own kernel frame, running the trigram hash — the family's
-    // dominant task CPU — twice over ~2x the corpus. Both now slice one
-    // cached frame; the standing/batch node lists project off it too,
-    // so the documents table is scanned exactly once.
+    // ONE shingle-hash kernel pass over the corpus: the standing label
+    // rebuild, the batch pair generator and the standing/batch node
+    // lists all slice one cached frame, so the trigram hash (the
+    // family's dominant task CPU) runs once and the documents table is
+    // scanned once.
     val g = withShingleHashes(docs).cache()
-    // ONE banded-signature pass (r20): the standing rebuild's candidate
-    // self-join and the batch generator's pruned join previously each
-    // built their own minhash/band frame off g — the same per-row values
-    // computed twice. Both now filter one cached frame; the batch side
-    // is still pruned BEFORE its shuffle, so the incremental join shape
-    // (|batch| x collision rate, never |corpus|^2) is unchanged.
-    val bands = bandFrame(g).cache()
-    // ONE materialization job covers BOTH caches before their fan-outs
-    // (bands' plan reads g exactly once, so counting bands computes and
-    // caches g too): bands feeds 3 join arms, g feeds both verify arms
-    // and the standing/batch node lists — all inside later actions that
-    // would otherwise race the block write locks (the q_gen_constraints
-    // lesson).
-    bands.count()
+    // ONE banded-signature pass: the standing rebuild's candidate
+    // self-join and the batch generator's pruned join filter one cached
+    // frame; the batch side is still pruned BEFORE its shuffle, so the
+    // incremental join shape (|batch| x collision rate, never
+    // |corpus|^2) is unchanged. bands' plan reads g exactly once, so
+    // materializing bands fills g's cache in the same job.
+    val bands = materialize(bandFrame(g))
     val gStand = g.filter(col("doc_id") % IncrMod =!= IncrRem)
     val standBands = bands.filter(col("doc_id") % IncrMod =!= IncrRem)
     // "Yesterday's index": in production this frame is read back from the
@@ -752,16 +715,10 @@ object DedupOps {
       newPairs0: DataFrame, batchNodes: DataFrame): DataFrame = {
     val oldLabels = oldLabels0.cache()
     val newPairs = newPairs0.cache()
-    // Materialize BEFORE the fan-out (r20; the r19 block-write-lock
-    // lesson applied to THIS path, which predated it): oldLabels feeds
-    // touched + touchedMembers + the final anti-join, and newPairs feeds
-    // both endpoint branches + the relabel union — all consumed inside
-    // the relabel pipeline's first action, where racing AQE stage
-    // futures serialize on the cache block write locks. For the
-    // incremental cluster rows oldLabels is the full standing-label
-    // rebuild, so the race doubled the most expensive frame here. The
-    // two caches are disjoint, so ONE union job materializes both
-    // without racing itself.
+    // RunOnce.materialize's policy for two frames at once: oldLabels
+    // feeds touched, touchedMembers and the final anti-join, newPairs
+    // both endpoint branches and the relabel union. The two caches are
+    // disjoint, so ONE union job fills both.
     oldLabels.select(lit(1)).unionAll(newPairs.select(lit(1))).count()
     val endpoints = newPairs.select(col("d1").as("doc_id"))
       .unionAll(newPairs.select(col("d2").as("doc_id"))).distinct()
@@ -770,11 +727,9 @@ object DedupOps {
     // merge day degrades gracefully to a shuffle join instead of an OOM.
     val touched = oldLabels.join(endpoints, "doc_id")
       .select(col("cluster_id")).distinct()
-    val touchedMembers = oldLabels.join(touched, "cluster_id")
-      .select(col("doc_id"), col("cluster_id")).cache()
-    // same reason: nodes (via the union-distinct) and starEdges both
-    // consume touchedMembers inside the relabel pipeline's first action
-    touchedMembers.count()
+    // nodes (via the union-distinct) and starEdges both consume it
+    val touchedMembers = materialize(oldLabels.join(touched, "cluster_id")
+      .select(col("doc_id"), col("cluster_id")))
     val nodes = batchNodes.unionAll(touchedMembers.select(col("doc_id"))).distinct()
     val starEdges = touchedMembers.filter(col("cluster_id") =!= col("doc_id"))
       .select(col("cluster_id").as("d1"), col("doc_id").as("d2"))
@@ -782,8 +737,8 @@ object DedupOps {
     // The maintained label frame is materialized HERE (localCheckpoint —
     // the same executor-block tier the propagation rounds use) so the
     // three intermediate caches can be dropped before returning instead
-    // of squatting in executor memory until the harness's clearCache
-    // (ADVICE r10): the returned plan is a flat LogicalRDD with no
+    // of squatting in executor memory until Harness.afterQuery: the
+    // returned plan is a flat LogicalRDD with no
     // lineage into oldLabels/newPairs/touchedMembers. The frame is one
     // (doc_id, cluster_id) row per doc — the exact product a label store
     // persists — so its footprint is the output's, not the pipeline's.
@@ -939,11 +894,8 @@ object DedupOps {
     * scale with shared-gram volume, bounded by the cap.
     */
   def decontaminate(docs: DataFrame): DataFrame = {
-    // one kernel pass, cached; both sides explode from it (lifecycle
-    // caller-owned, as throughout); pre-materialized before the fan-out
-    // (r19, see minhashDupPairs)
-    val g0 = withShingleHashes(docs).cache()
-    g0.count()
+    // one kernel pass; both sides explode from it
+    val g0 = materialize(withShingleHashes(docs))
     val sh = g0.select(col("doc_id"), explode(col("hs")).as("g"))
     val eval = sh.filter(col("doc_id") % EvalMod === EvalRem)
       .select(col("doc_id").as("eval_doc"), col("g"))
@@ -987,8 +939,7 @@ object DedupOps {
     * the fused shingle kernel on doc_id.
     */
   def containmentPairs(docs: DataFrame): DataFrame = {
-    val g = withShingleHashes(docs).cache()
-    g.count() // pre-materialize before fan-out (r19, see minhashDupPairs)
+    val g = materialize(withShingleHashes(docs))
     val sh = g.select(col("doc_id"), explode(array_distinct(col("hs"))).as("gm"))
     val rare = sh.groupBy(col("gm")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= ContainDfCap)

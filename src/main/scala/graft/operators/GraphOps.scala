@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.RunOnce.materialize
 import graft.Tables
 
 /** Graph analytics over warehouse-derived graphs. DedupOps owns connected
@@ -47,13 +48,9 @@ object GraphOps {
   def pageRank(spark: SparkSession, dir: String,
       iters: Int = Iterations): DataFrame = {
     val S = RankScale
-    // edges/degrees are static across iterations: cache once (lifecycle
-    // caller-owned, as throughout), so the loop re-reads K rows, not the
-    // lineitem join chain five times
-    val edges = brandEdges(spark, dir).cache()
-    // materialize before the iteration DAG launches (deg + 5 iterations
-    // all consume it inside one action — see orientedEdges' note)
-    edges.count()
+    // edges/degrees are static across iterations: materialized once, so
+    // the loop re-reads K rows, not the lineitem join chain five times
+    val edges = materialize(brandEdges(spark, dir))
     // r19: the loop previously accumulated ONE lazy 5-iteration plan —
     // each round a deeper join chain (distinct codegen classes per
     // round, ~4600-line formatted plan) re-embedding the node frame's
@@ -140,10 +137,7 @@ object GraphOps {
     * match bit-for-bit.
     */
   def triangleCounts(spark: SparkSession, dir: String): DataFrame = {
-    val e = degreeOrientedEdges(spark, dir).cache()
-    // materialize before the three-branch self-join launches (the
-    // q_gen_constraints cache-race lesson, same as orientedEdges' note)
-    e.count()
+    val e = materialize(degreeOrientedEdges(spark, dir))
     val tri = e.as("e1")
       .join(e.as("e2"), col("e1.b2") === col("e2.b1"))
       .join(e.as("e3"),

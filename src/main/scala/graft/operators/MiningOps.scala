@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.RunOnce.materialize
 import graft.Tables
 
 /** Behavioral mining over the warehouse — the segmentation and
@@ -180,12 +181,8 @@ object MiningOps {
     */
   def assocRules(spark: SparkSession, dir: String): DataFrame = {
     // one basket-array frame feeds all three faces (pairs, per-brand
-    // supports, order total) — cache it: one row per order, tiny arrays
-    // (r19: replaces the cached incidence + self-join; see basketPairs)
-    val sets = orderBrandSets(spark, dir).cache()
-    // materialize before the fan-out: pair expansion + single-brand agg
-    // + total all consume it (the q_gen_constraints cache-race lesson)
-    sets.count()
+    // supports, order total): one row per order, tiny arrays
+    val sets = materialize(orderBrandSets(spark, dir))
     val pair = basketPairs(sets)
       .groupBy(col("b1"), col("b2"))
       .agg(count(lit(1)).as("n_ab"))
@@ -243,15 +240,9 @@ object MiningOps {
     * a single map-side-combined aggregate.
     */
   def supplierPareto(lineitem: DataFrame): DataFrame = {
-    // cached: `rev` feeds both the scalar total and the ranked scan —
-    // without it the lineitem scan + per-supplier aggregate runs twice
-    // (lifecycle caller-owned, as in assocRules)
-    val rev = lineitem.groupBy(col("l_suppkey").as("sk"))
-      .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("cents"))
-      .cache()
-    // materialize before the fan-out (tot + the ranked window both
-    // consume rev in one action — the block-write-lock race, r20 sweep)
-    rev.count()
+    // `rev` feeds both the scalar total and the ranked scan
+    val rev = materialize(lineitem.groupBy(col("l_suppkey").as("sk"))
+      .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("cents")))
     val tot = rev.agg(count(lit(1)).as("n"), sum(col("cents")).as("tot"))
     rev
       .withColumn("rn", row_number().over(

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.RunOnce.materialize
 import graft.Tables
 import graft.functions.PortableSql._
 
@@ -88,10 +89,9 @@ object MixOps {
     val tagged = docs.select(col("doc_id"), col("source"),
       explode(expr(tokens("text", duck = false))).as("w"),
       (col("doc_id") % 10 < LmTrainMod).as("is_train"))
-    val train = tagged.filter(col("is_train"))
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .cache()
-    train.count() // feeds totals, vocab, and the held-out join
+    // feeds totals, vocab, and the held-out join
+    val train = materialize(tagged.filter(col("is_train"))
+      .groupBy(col("w")).agg(count(lit(1)).as("cnt")))
     val tot = train.agg(sum(col("cnt")).as("t"),
       count(lit(1)).as("v"))
     val held = tagged.filter(!col("is_train"))
@@ -164,14 +164,12 @@ object MixOps {
     * broadcast. |S|^2 output rows.
     */
   def sourceCrossEntropy(docs: DataFrame): DataFrame = {
-    val occ = docs.select(col("source").as("src_a"),
+    // feeds the A side, the B-side frequency table, the totals, and the
+    // vocab scalar
+    val occ = materialize(docs.select(col("source").as("src_a"),
         explode(expr(tokens("text", duck = false))).as("w"))
       .groupBy(col("src_a"), col("w"))
-      .agg(count(lit(1)).as("cnt_a"))
-      .cache()
-    // materialize before the fanout: the frame feeds the A side, the
-    // B-side frequency table, the totals, and the vocab scalar
-    occ.count()
+      .agg(count(lit(1)).as("cnt_a")))
     val freqB = occ.select(col("src_a").as("src_b"), col("w"),
       col("cnt_a").as("cnt_b"))
     val tots = freqB.groupBy(col("src_b")).agg(sum(col("cnt_b")).as("tot_b"))
@@ -227,7 +225,7 @@ object MixOps {
       .withColumn("budget", expr(s"tt * $WfBudgetPct DIV 100"))
       .withColumn("q", expr(s"toks * $WfScale DIV w"))
     val ord = org.apache.spark.sql.expressions.Window.orderBy(col("q"), col("source"))
-    val ranked = base
+    val ranked = materialize(base
       .withColumn("rn", row_number().over(ord))
       .withColumn("ptoks", sum(col("toks")).over(
         ord.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)))
@@ -235,11 +233,7 @@ object MixOps {
         ord.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)))
       .withColumn("qprev", lag(col("q"), 1).over(ord))
       .withColumn("ptoks", coalesce(col("ptoks"), lit(0L)))
-      .withColumn("pw", coalesce(col("pw"), lit(0L)))
-      .cache()
-    // materialize before the fan-out (the lam aggregate and the final
-    // crossJoin scan both consume ranked in one action — r20 sweep)
-    ranked.count()
+      .withColumn("pw", coalesce(col("pw"), lit(0L))))
     // candidate water level with rows < rn capped; valid when this row
     // stays UNCAPPED at its level and the previous row capped
     val lam = ranked

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.RunOnce.materialize
 import graft.Tables
 import graft.functions.PortableSql.seedLadderSql
 
@@ -100,10 +101,7 @@ object Phash {
     * complete pair set.
     */
   private def bandedPairs(spark: SparkSession, docs: DataFrame): DataFrame = {
-    val hashes = phashes(spark, docs).cache()
-    // materialize before the fan-out: the band self-join's two arms each
-    // derive from this cache inside one action (r20 sweep)
-    hashes.count()
+    val hashes = materialize(phashes(spark, docs))
     val bands = hashes.select(col("doc_id"), col("phash"), explode(array(
         (0 until Bands).map(b =>
           struct(lit(b).as("b"),
@@ -127,8 +125,7 @@ object Phash {
     * computation, one grouped count per cutoff off the cached frame.
     */
   def phashHammingSweep(spark: SparkSession, docs: DataFrame): DataFrame = {
-    val p = bandedPairs(spark, docs).cache()
-    p.count() // materialize before the per-cutoff fan-out (r20 sweep)
+    val p = materialize(bandedPairs(spark, docs))
     (0 to HammingMax).map { t =>
       p.filter(col("hamming") <= t)
         .agg(count(lit(1)).as("n_pairs"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.RunOnce.materialize
 import graft.Tables
 
 /** Ordered event-sequence analytics over the `events` stream — the
@@ -506,10 +507,9 @@ object SequenceOps {
     * window partitions BY TYPE — groups parallelize, nothing global.
     */
   def theilSenTrend(events: DataFrame): DataFrame = {
-    val wk = events.groupBy(col("event_type"),
+    val wk = materialize(events.groupBy(col("event_type"),
         expr("unix_millis(ts) DIV 604800000").as("wk"))
-      .agg(count(lit(1)).as("y")).cache()
-    wk.count() // materialize before the self-join's two arms (r20 sweep)
+      .agg(count(lit(1)).as("y")))
     val pairs = wk.as("a").join(wk.as("b"),
         col("a.event_type") === col("b.event_type") && col("a.wk") < col("b.wk"))
       .select(col("a.event_type").as("event_type"),
@@ -617,7 +617,7 @@ object SequenceOps {
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("tms").asc, col("event_id").asc)
     val running = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sessions = events
+    val sessions = materialize(events
       .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("tms"))
       .withColumn("prev", lag(col("tms"), 1).over(byUser))
       .withColumn("is_new",
@@ -625,11 +625,7 @@ object SequenceOps {
           .otherwise(0))
       .withColumn("session_id", sum(col("is_new")).over(running))
       .groupBy(col("user_id"), col("session_id"))
-      .agg(min(col("tms")).as("s"), max(col("tms")).as("e"))
-      .cache()
-    // materialize before the fan-out (both union branches + the
-    // n_sessions probe consume sessions in one action — r20 sweep)
-    sessions.count()
+      .agg(min(col("tms")).as("s"), max(col("tms")).as("e")))
     val net = sessions.select(col("s").as("t"), lit(1L).as("d"))
       .unionAll(sessions.select((col("e") + 1L).as("t"), lit(-1L).as("d")))
       .groupBy(col("t")).agg(sum(col("d")).as("net"))
@@ -642,12 +638,9 @@ object SequenceOps {
     val off = net.groupBy(col("bk")).agg(sum(col("net")).as("bsum"))
       .withColumn("off", coalesce(sum(col("bsum")).over(offW), lit(0L)))
       .select(col("bk"), col("off"))
-    // conc feeds its own max (the scalar crossJoin) AND the peak filter;
-    // cached so the sweep derivation runs once (lifecycle caller-owned)
-    val conc = local.join(broadcast(off), "bk")
-      .select(col("t"), (col("run") + col("off")).as("conc"))
-      .cache()
-    conc.count() // materialize before the peak probe + filter fan-out (r20)
+    // conc feeds its own max (the scalar crossJoin) AND the peak filter
+    val conc = materialize(local.join(broadcast(off), "bk")
+      .select(col("t"), (col("run") + col("off")).as("conc")))
     conc
       .crossJoin(broadcast(conc.agg(max(col("conc")).as("peak"))))
       .filter(col("conc") === col("peak"))

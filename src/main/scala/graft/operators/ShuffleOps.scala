@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.RunOnce.materialize
+import graft.{RunOnce, Tables}
 import graft.load.DimLoader
 
 /** Shuffle-management operators — the partitioning techniques a 100 TB
@@ -159,27 +160,15 @@ object ShuffleOps {
     * while the confs hold, then every conf is restored — the returned
     * frame is plain data, so downstream harness writes replan nothing.
     */
-  def aqeSkewJoin(spark: SparkSession, dir: String): DataFrame = {
-    val c = spark.conf
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .map(k => k -> c.getOption(k)).toMap
-    try {
-      c.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      c.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      c.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4KB")
-      c.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      c.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4KB")
+  def aqeSkewJoin(spark: SparkSession, dir: String): DataFrame =
+    RunOnce.withConf(spark, Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4KB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4KB")) {
       aqeSkewJoinPlan(spark, dir).localCheckpoint()
-    } finally saved.foreach {
-      case (k, Some(v)) => c.set(k, v)
-      case (k, None) => c.unset(k)
     }
-  }
 
   /** Bloom capacity for the pruning filter — sized generously above the
     * dim-subset cardinality at every test SF (false-positive rate only
@@ -325,10 +314,8 @@ object ShuffleOps {
     * within n/(K+1)), which hold for ANY merge order.
     */
   def heavyPerSource(spark: SparkSession, dir: String): DataFrame = {
-    // cached: feeds both the sketch build and the exact-count audit
-    // (lifecycle caller-owned, as throughout)
-    val keyed = sourceWordKeys(spark, dir).cache()
-    keyed.count() // materialize before the sketch+audit fan-out (r20 sweep)
+    // feeds both the sketch build and the exact-count audit
+    val keyed = materialize(sourceWordKeys(spark, dir))
     val sketches = keyed.groupBy(col("source")).agg(
       graft.functions.MisraGriesAggregate.mgSketch(col("k"), MgCapacity).as("mg"),
       count(lit(1)).as("n_rows"))
@@ -720,12 +707,9 @@ object ShuffleOps {
     // autoBucketedScan drops the bucketed read when no operator needs
     // the distribution — which also forfeits bucket PRUNING, the whole
     // point here. Pin it off just for PLANNING (forcing executedPlan
-    // freezes the scan node; AQE never revisits scan bucketing), then
-    // restore — the session-conf-with-restore contract.
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try {
+    // freezes the scan node; AQE never revisits scan bucketing).
+    RunOnce.withConf(spark,
+        Map("spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")) {
       val df = spark.table("orders_bkt")
         .filter(col("o_custkey") === BucketProbeKey)
         .agg(count(lit(1)).as("n_orders"),
@@ -734,7 +718,7 @@ object ShuffleOps {
           coalesce(col("total_cents"), lit(0L)).as("total_cents"))
       df.queryExecution.executedPlan // freeze the pruned scan
       df
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

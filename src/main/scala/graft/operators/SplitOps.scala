@@ -82,8 +82,7 @@ object SplitOps {
   def splitLeakage(docs: DataFrame): DataFrame = {
     val pairs = DedupOps.minhashDupPairs(docs).select(col("d1"), col("d2"))
     // clustersFromPairs caches the pair plan; this second reference to the
-    // identical logical plan hits the same cache entry (lifecycle
-    // caller-owned, per the SparkEntry cache contract).
+    // identical logical plan hits the same cache entry.
     val clusters = DedupOps.clustersFromPairs(docs.select(col("doc_id")), pairs)
       .select(col("doc_id"), expr(splitSql("cluster_id")).as("cl_split"))
     pairs

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.RunOnce.materialize
 import graft.Tables
 import graft.functions.JaroWinklerExpression.jaroWinkler
 
@@ -133,10 +134,7 @@ object StringSimOps {
     * verbatim).
     */
   def entityClustersIncremental(part: DataFrame): DataFrame = {
-    val n = names(part).cache()
-    // pre-materialize before the fan-out (standing/batch slices and both
-    // blocked-join sides consume n in one action — r19)
-    n.count()
+    val n = materialize(names(part))
     val standing = n.filter(!arrivedPred)
     val batch = n.filter(arrivedPred)
     // yesterday's labels: recomputed from the standing vocabulary (same
@@ -303,8 +301,7 @@ object StringSimOps {
     * draw the line) priced before a clerical-review budget is set.
     */
   def fsThresholdSweep(part: DataFrame): DataFrame = {
-    val scored = fsLinkage(part).select(col("score")).cache()
-    scored.count() // materialize before the per-threshold fan-out (r20 sweep)
+    val scored = materialize(fsLinkage(part).select(col("score")))
     FsSweepMilli.map { t =>
       scored.filter(col("score") >= t)
         .agg(count(lit(1)).as("n_pairs"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.RunOnce.materialize
 import graft.Tables
 import graft.functions.PortableSql._
 
@@ -598,8 +599,7 @@ object TextOps {
   }
 
   def winnowStats(docs: DataFrame): DataFrame = {
-    val d = withPrints(docs).cache()
-    d.count() // materialize before the two-consumer fan-out (r20 sweep)
+    val d = materialize(withPrints(docs))
     statsFromPrints(d,
       d.select(explode(col("prints")).as("p"))
         .groupBy("p").agg(count(lit(1)).as("dfp")))
@@ -618,9 +618,8 @@ object TextOps {
     * native-kernel projection + a single-row aggregate.
     */
   def bpeMergeSweep(docs: DataFrame): DataFrame = {
-    val base = docs.select(col("text"),
-      length(col("text")).cast("long").as("n_chars")).cache()
-    base.count() // materialize before the sweep-branch fan-out (r20 sweep)
+    val base = materialize(docs.select(col("text"),
+      length(col("text")).cast("long").as("n_chars")))
     BpeSweepMerges.map { k =>
       base.select(col("n_chars"),
           graft.functions.BpeFunctions.bpeTokenCountN(col("text"), k).as("toks"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.RunOnce.materialize
 import graft.Tables
 import graft.functions.DotProductExpression.{dot => dotCol}
 import graft.functions.PortableSql._
@@ -127,13 +128,10 @@ object VectorOps {
     * cosine >= threshold via a single dot of the pre-normalized vectors.
     */
   def annPairs(emb: DataFrame, bits: Int = BitsPerTable): DataFrame = {
-    // cached: one narrow (vec_id, vn, buckets) materialization feeds the
-    // explode and both self-join sides; lifecycle is caller-owned
-    // (Bench/Verify clearCache() after each query)
-    val withBuckets = withAllBuckets(normalized(emb, withLabel = false), bits).cache()
-    // pre-materialize before the fan-out: both band arms and both vector
-    // broadcasts consume this in one action (r19, the pqCodes lesson)
-    withBuckets.count()
+    // one narrow (vec_id, vn, buckets) materialization feeds the explode,
+    // both band arms and both vector broadcasts
+    val withBuckets = materialize(
+      withAllBuckets(normalized(emb, withLabel = false), bits))
     // The band self-join runs over BARE ids and candidates are deduped
     // BEFORE vectors are fetched: clustered corpora collide in many
     // tables at once, so the raw band join emits each hot pair up to
@@ -185,11 +183,8 @@ object VectorOps {
     * occ_full/occ_half in [0.5, 2] while the cell count doubles.
     */
   def lshOccupancyScaling(emb: DataFrame): DataFrame = {
-    val bkt = withAllBuckets(normalized(emb, withLabel = false), BitsPerTable)
-      .select(col("vec_id"), col("bucket_0")).cache()
-    // materialize before the fan-out (full/half occupancy stats + the
-    // max-id probe all consume bkt in one action — r20 sweep)
-    bkt.count()
+    val bkt = materialize(withAllBuckets(normalized(emb, withLabel = false), BitsPerTable)
+      .select(col("vec_id"), col("bucket_0")))
     val half = bkt.crossJoin(bkt.agg(max(col("vec_id")).as("mxid")))
       .filter(expr("vec_id <= mxid DIV 2"))
       .select(col("vec_id"), col("bucket_0"))
@@ -320,9 +315,8 @@ object VectorOps {
 
   def ivfAssign(emb: DataFrame): DataFrame = {
     // one narrow materialization feeds seeds, both Lloyd's iterations and
-    // the final assignment pass (lifecycle caller-owned, as throughout)
-    val vecs = normalized(emb, withLabel = false).cache()
-    vecs.count() // pre-materialize before fan-out (r19, the pqCodes lesson)
+    // the final assignment pass
+    val vecs = materialize(normalized(emb, withLabel = false))
     assignTo(vecs, lloydCentroids(vecs))
   }
 
@@ -335,8 +329,7 @@ object VectorOps {
     * scan cells that are not actually the query's nearest.
     */
   def ivfTopK(emb: DataFrame, queryId: Long = 0L, k: Int = 10): DataFrame = {
-    val vecs = normalized(emb, withLabel = false).cache()
-    vecs.count() // pre-materialize before fan-out (r19, the pqCodes lesson)
+    val vecs = materialize(normalized(emb, withLabel = false))
     val cents = lloydCentroids(vecs)
     val assign = assignTo(vecs, cents)
     val q = vecs.filter(col("vec_id") === queryId).select(col("vn").as("qv"))
@@ -379,18 +372,15 @@ object VectorOps {
   def ivfProbeSweep(emb: DataFrame, k: Int = 10,
       probes: Seq[Int] = IvfSweepProbes): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val vecs = normalized(emb, withLabel = false).cache()
-    vecs.count() // pre-materialize before fan-out (r19, the pqCodes lesson)
+    val vecs = materialize(normalized(emb, withLabel = false))
     val cents = lloydCentroids(vecs)
-    val assign = assignTo(vecs, cents).cache()
-    assign.count() // pre-materialize: every probe branch consumes it (r19)
+    val assign = materialize(assignTo(vecs, cents))
     val q = vecs.filter(col("vec_id") === 0L).select(col("vn").as("qv"))
     val crank = cents.crossJoin(broadcast(q))
       .select(col("centroid_id"), dotCol(col("cv"), col("qv")).as("qcos"))
       .withColumn("crnk",
         row_number().over(Window.orderBy(col("qcos").desc, col("centroid_id").asc)))
-    val exact = cosineTopK(emb, k = k).select(col("vec_id")).cache()
-    exact.count() // pre-materialize: every probe branch consumes it (r19)
+    val exact = materialize(cosineTopK(emb, k = k).select(col("vec_id")))
     probes.map { p =>
       val probed = crank.filter(col("crnk") <= p).select(col("centroid_id"))
       val approx = vecs.join(assign, "vec_id")
@@ -517,8 +507,7 @@ object VectorOps {
     * scorer broadcasts (see the streaming twin q_stream_topics).
     */
   private[graft] def frozenCentroidArray(emb: DataFrame): DataFrame = {
-    val vecs = normalized(emb, withLabel = false).cache()
-    vecs.count() // pre-materialize before fan-out (r19, the pqCodes lesson)
+    val vecs = materialize(normalized(emb, withLabel = false))
     lloydCentroids(vecs)
       .agg(collect_list(struct(col("centroid_id"), col("cv"))).as("cl"))
   }
@@ -556,8 +545,7 @@ object VectorOps {
     * c0/c1/c2 from the same CTEs) reproduces it bit-for-bit.
     */
   def centroidDrift(emb: DataFrame): DataFrame = {
-    val vecs = normalized(emb, withLabel = false).cache()
-    vecs.count() // pre-materialize before fan-out (r19, the pqCodes lesson)
+    val vecs = materialize(normalized(emb, withLabel = false))
     val c0 = vecs.filter(col("vec_id") < IvfCells)
       .select(col("vec_id").as("centroid_id"), col("vn").as("cv"))
     // same flat-lineage barrier as lloydCentroids: c2 must hang off c1's
@@ -607,8 +595,7 @@ object VectorOps {
       .agg(count(lit(1)).as("n_vecs"), sum(col("chk")).as("sum_chk"))
 
   def ivfIncrementalStats(emb: DataFrame): DataFrame = {
-    val all = normalized(emb, withLabel = false).cache()
-    all.count() // pre-materialize before fan-out (r19, the pqCodes lesson)
+    val all = materialize(normalized(emb, withLabel = false))
     val standing = all.filter(col("vec_id") % DedupOps.IncrMod =!= DedupOps.IncrRem)
     val batch = all.filter(col("vec_id") % DedupOps.IncrMod === DedupOps.IncrRem)
     val cents = lloydCentroids(standing)
@@ -623,8 +610,7 @@ object VectorOps {
     * this same shape independently).
     */
   private[graft] def ivfFullRestartStats(emb: DataFrame): DataFrame = {
-    val all = normalized(emb, withLabel = false).cache()
-    all.count() // pre-materialize before fan-out (r19, the pqCodes lesson)
+    val all = materialize(normalized(emb, withLabel = false))
     val standing = all.filter(col("vec_id") % DedupOps.IncrMod =!= DedupOps.IncrRem)
     cellStats(all, lloydCentroids(standing))
   }
@@ -654,8 +640,7 @@ object VectorOps {
     */
   def ivfIncrementalStatsPersisted(s: SparkSession, dir: String): DataFrame = {
     val cents = s.read.parquet(ivfCentroidIndexRoot(s, dir))
-    val all = normalized(Tables.embeddings(s, dir), withLabel = false).cache()
-    all.count() // pre-materialize before fan-out (r19, the pqCodes lesson)
+    val all = materialize(normalized(Tables.embeddings(s, dir), withLabel = false))
     val standing = all.filter(col("vec_id") % DedupOps.IncrMod =!= DedupOps.IncrRem)
     val batch = all.filter(col("vec_id") % DedupOps.IncrMod === DedupOps.IncrRem)
     cellStats(standing, cents).unionAll(cellStats(batch, cents))
@@ -714,10 +699,8 @@ object VectorOps {
 
   def semDedupDrops(emb: DataFrame,
       hotCellCap: Int = SemDedupHotCellCap): DataFrame = {
-    val vecs = normalized(emb, withLabel = false).cache()
-    // pre-materialize before the fan-out (Lloyd + assignment + member
-    // join all consume vecs in one action — r19, the pqCodes lesson)
-    vecs.count()
+    // Lloyd, the assignment and the member join all consume vecs
+    val vecs = materialize(normalized(emb, withLabel = false))
     val member = assignTo(vecs, lloydCentroids(vecs))
       .select(col("vec_id"), col("centroid_id"))
       .join(vecs, "vec_id")
@@ -727,7 +710,8 @@ object VectorOps {
     // hot cells mask just enough SRP bits to get expected sub-cells
     // under the cap.
     val sizes = member.groupBy("centroid_id").agg(count(lit(1)).as("cell_n"))
-    val keyed = member.join(broadcast(sizes), "centroid_id")
+    // the within-cell self-join below consumes keyed on BOTH arms
+    val keyed = materialize(member.join(broadcast(sizes), "centroid_id")
       // ceil(log2(cell_n / cap)) in PURE INTEGER form — bitLen(ceil(n/cap)
       // - 1) — because the r13 sf1 gate proved the cap ENGAGES at scale
       // (200k vectors push cells past 1024) and an oracle-compared value
@@ -743,12 +727,7 @@ object VectorOps {
         col("vn"), 1, SemDedupMaxSubBits, Dim))
       .withColumn("sub_key",
         expr("element_at(srp, 1) & (shiftleft(CAST(1 AS BIGINT), sub_bits) - 1)"))
-      .select(col("centroid_id"), col("sub_key"), col("vec_id"), col("vn"))
-      // cached + materialized (r19): the within-cell self-join below
-      // consumes keyed on BOTH arms — uncached, the whole assignment +
-      // SRP-bucket pipeline executed twice, once per arm
-      .cache()
-    keyed.count()
+      .select(col("centroid_id"), col("sub_key"), col("vec_id"), col("vn")))
     keyed.as("a").join(keyed.as("b"),
         col("a.centroid_id") === col("b.centroid_id") &&
           col("a.sub_key") === col("b.sub_key") &&
@@ -923,16 +902,11 @@ object VectorOps {
     * exact squared quantization error (micro²).
     */
   def pqCodes(emb: DataFrame): DataFrame = {
-    // materialize each cache BEFORE its fan-out (r19): the coarse
-    // quantizer and the residual slicer both consume vm, and the
-    // codebook build + assignment + cell projection all consume subs —
-    // racing branches otherwise serialize on the block write locks (the
-    // q_gen_constraints lesson; measured here as task_run 28s on 6.5s
-    // of task CPU with an idle probe)
-    val vm = microVecs(emb).cache()
-    vm.count()
-    val subs = pqResidualSubs(vm, pqCoarse(vm)).cache()
-    subs.count()
+    // the coarse quantizer and the residual slicer both consume vm; the
+    // codebook build, the assignment and the cell projection all consume
+    // subs
+    val vm = materialize(microVecs(emb))
+    val subs = materialize(pqResidualSubs(vm, pqCoarse(vm)))
     val enc = pqAssign(subs, pqCodebookOver(subs, PqSubDim, PqK, PqIters))
       .join(subs.select(col("vec_id"), col("cell")).distinct(), "vec_id")
     val codeCols = (0 until PqM).map(m =>
@@ -950,12 +924,9 @@ object VectorOps {
     * the same audit shape as q_emb_ivf_recall.
     */
   def pqRecall(emb: DataFrame, queryId: Long = 0L, k: Int = 10): DataFrame = {
-    // pre-materialized caches before fan-out, as in pqCodes (r19)
-    val vm = microVecs(emb).cache()
-    vm.count()
+    val vm = materialize(microVecs(emb))
     val coarseCb = pqCoarse(vm)
-    val subs = pqResidualSubs(vm, coarseCb).cache()
-    subs.count()
+    val subs = materialize(pqResidualSubs(vm, coarseCb))
     val cb = pqCodebookOver(subs, PqSubDim, PqK, PqIters)
     val enc = pqAssign(subs, cb)
       .join(subs.select(col("vec_id"), col("cell")).distinct(), "vec_id")
@@ -1053,10 +1024,8 @@ object VectorOps {
     * max |component| (`growth`, the eigenvalue-scale witness).
     */
   def powerIteration(emb: DataFrame): DataFrame = {
-    val g = gramMatrix(emb)
-      .select(col("i"), col("j"), expr("gram_micro2 DIV 1000000").as("g"))
-      .cache()
-    g.count() // materialize before the iteration DAG fans out over it
+    val g = materialize(gramMatrix(emb)
+      .select(col("i"), col("j"), expr("gram_micro2 DIV 1000000").as("g")))
     var v = g.select(col("j")).distinct()
       .select(col("j").as("vj"), lit(1000L).as("v"), lit(0L).as("growth"))
     for (_ <- 1 to PowerIters) {
@@ -1112,18 +1081,17 @@ object VectorOps {
     * index cost: exactly the curve that prices a recall target.
     */
   def lshTableSweep(emb: DataFrame): DataFrame = {
-    val wb = withAllBuckets(normalized(emb, withLabel = false), BitsPerTable).cache()
-    // materialize before the fan-out (bands + vecs + the sample slice all
-    // consume wb; exact's crossJoin reads sample twice — r20 sweep)
-    wb.count()
+    // bands, vecs and the sample slice all consume wb; exact's crossJoin
+    // reads sample twice
+    val wb = materialize(
+      withAllBuckets(normalized(emb, withLabel = false), BitsPerTable))
     val sample = wb.filter(col("vec_id") % LshRecallMod === 0)
       .select(col("vec_id"), col("vn")).cache()
-    val exact = sample.select(col("vec_id").as("v1"), col("vn").as("vn1"))
+    val exact = materialize(sample.select(col("vec_id").as("v1"), col("vn").as("vn1"))
       .crossJoin(broadcast(sample.select(col("vec_id").as("v2"), col("vn").as("vn2"))))
       .filter(col("v1") < col("v2"))
       .filter(round(dotCol(col("vn1"), col("vn2")), 6) >= AnnMinCosine)
-      .select(col("v1"), col("v2")).cache()
-    exact.count() // materialize before the per-sweep-point fan-out (r20)
+      .select(col("v1"), col("v2")))
     val bands = wb.select(col("vec_id"), explode(array(
         (0 until NTables).map(t =>
           struct(lit(t).as("t"), col(s"bucket_$t").as("bk"))): _*)).as("b"))
@@ -1349,20 +1317,14 @@ object VectorOps {
 
   /** The DBSCAN core, generic in the eps-neighbourhood pair source. */
   private def dbscanFromPairs(emb: DataFrame, pairs0: DataFrame): DataFrame = {
-    val pairs = pairs0.cache()
-    // materialize BEFORE the fan-out (r20; the r19 block-write-lock
-    // lesson): the undirected union's two branches, corePairs' probe
-    // side, and the propagation's pair cache all consume `pairs` inside
-    // one action — racing AQE stage futures otherwise serialize on the
-    // cache block write locks (this row's measured task_run was 2.4x its
-    // task CPU with an idle probe).
-    pairs.count()
+    // the undirected union's two branches, corePairs' probe side and the
+    // propagation's pair cache all consume `pairs`
+    val pairs = materialize(pairs0)
     val und = pairs.unionAll(pairs.select(col("v2").as("v1"), col("v1").as("v2")))
-    val core = und.groupBy(col("v1").as("vec_id")).agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= DbscanMinPts).select(col("vec_id")).cache()
-    // same reason: corePairs consumes core on both join arms, and the
-    // propagation's node list is a third consumer
-    core.count()
+    // corePairs consumes core on both join arms, the propagation's node
+    // list is a third consumer
+    val core = materialize(und.groupBy(col("v1").as("vec_id")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= DbscanMinPts).select(col("vec_id")))
     val corePairs = pairs
       .join(core.select(col("vec_id").as("v1")), "v1")
       .join(core.select(col("vec_id").as("v2")), "v2")
@@ -1453,8 +1415,7 @@ object VectorOps {
     // SQL form); ONE cached projection feeds both join sides
     val yCols = (0 until RpDim).map(j =>
       dotCol(col("vn"), typedLit(rpPlaneConst(RpPlaneOffset + j))))
-    val proj = e.select(col("vec_id"), col("vn"), array(yCols: _*).as("y")).cache()
-    proj.count() // materialize before the two join arms fan out (r20 sweep)
+    val proj = materialize(e.select(col("vec_id"), col("vn"), array(yCols: _*).as("y")))
     val a = proj.select(col("vec_id").as("v1"), col("vn").as("vn1"), col("y").as("y1"))
     val b = proj.select((col("vec_id") - 1).as("v1"), col("vec_id").as("v2"),
       col("vn").as("vn2"), col("y").as("y2"))

@@ -49,6 +49,10 @@ object GraftCatalog {
       "openCostBytes")
   val LayoutProps: Set[String] = ColListProps ++ NumericProps + "deleteMode"
 
+  /** Cost-based join reorder, pinned while the q_lake_*cbo* rows plan. */
+  private val CboPins = Map("spark.sql.cbo.enabled" -> "true",
+    "spark.sql.cbo.joinReorder.enabled" -> "true")
+
   /** Every row runs with `graft_cat` registered ([[graft.RunOnce.withCatalog]]:
     * a plain session conf, since catalogs instantiate lazily); the SQL
     * rows then reach identifier resolution, DDL, DML and scan planning
@@ -416,10 +420,7 @@ object GraftCatalog {
       mk("cbo_dimb", base.filter(col("ck") % 97L === 0L)
         .select(col("ck").as("bb"), col("cents").as("bpay")),
         "bb BIGINT, bpay BIGINT")
-      val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-      val saved = keys.map(k => k -> s.conf.getOption(k)).toMap
-      keys.foreach(s.conf.set(_, "true"))
-      try {
+      graft.RunOnce.withConf(s, CboPins) {
         val df = s.sql(
           """SELECT f.fa, f.fb, a.apay, b.bpay
             |FROM graft_cat.lake.cbo_fact f
@@ -427,9 +428,6 @@ object GraftCatalog {
             |JOIN graft_cat.lake.cbo_dimb b ON f.fb = b.bb""".stripMargin)
         df.queryExecution.executedPlan // freeze the reordered plan
         df
-      } finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }),
 
@@ -710,10 +708,7 @@ object GraftCatalog {
         expr("CAST(CASE WHEN ck % 100 = 0 THEN 10000000 + ck " +
           "ELSE ck % 10 END AS BIGINT)").as("bx")),
         "bb STRING, bx BIGINT")
-      val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-      val saved = keys.map(k => k -> s.conf.getOption(k)).toMap
-      keys.foreach(s.conf.set(_, "true"))
-      try {
+      graft.RunOnce.withConf(s, CboPins) {
         val df = s.sql(
           """SELECT f.fa, f.fb, f.payload, b.bx
             |FROM graft_cat.lake.hist_fact f
@@ -722,9 +717,6 @@ object GraftCatalog {
             |WHERE b.bx > 100""".stripMargin)
         df.queryExecution.executedPlan // freeze the histogram-costed plan
         df
-      } finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }),
 

@@ -230,7 +230,7 @@ class ManifestDeltaBatchWrite(path: String, rowSchema: StructType,
     baseGen: Long, bloomFor: Seq[String], targetFileBytes: Long,
     rowGroupBytes: Long)
     extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-  import java.nio.file.{Files, Paths, StandardCopyOption}
+  import java.nio.file.Paths
   import org.apache.spark.sql.connector.write.{DataWriter, DeltaWriter, DeltaWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
 
   private val jobToken = java.util.UUID.randomUUID().toString.take(8)
@@ -255,16 +255,10 @@ class ManifestDeltaBatchWrite(path: String, rowSchema: StructType,
         s"concurrent commit on $path: this row-level delta was planned " +
           s"against generation $baseGen but the table is now at $liveGen — " +
           "re-run the operation against the current snapshot")
-      val data = root.resolve("data")
-      Files.createDirectories(data)
-      val staging = root.resolve("_staging")
       val inserts = deltas.iterator.flatMap(_.inserts).toSeq.sortBy(_.name)
       val delFiles = deltas.iterator.flatMap(d =>
         d.delFile.map(f => (f, d.affected))).toSeq.sortBy(_._1)
-      (inserts.map(_.name) ++ delFiles.map(_._1)).foreach { n =>
-        Files.move(staging.resolve(n), data.resolve(n),
-          StandardCopyOption.REPLACE_EXISTING)
-      }
+      ManifestSink.moveStaged(root, inserts.map(_.name) ++ delFiles.map(_._1))
       val rawPrior = ManifestSink.rawListLines(root)
       // scope each #pd: line to PRE-commit files only (this job's own
       // inserts are never affected — same rule as predicate tombstones)
@@ -283,16 +277,12 @@ class ManifestDeltaBatchWrite(path: String, rowSchema: StructType,
         root, rawPrior ++ posLines ++ segRef, s"$jobToken-m"))
     }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val staging = java.nio.file.Paths.get(path).resolve("_staging")
-    messages.filter(_ != null).foreach { m =>
-      val d = m.asInstanceOf[StagedDeltaSet]
-      d.delFile.foreach(f =>
-        java.nio.file.Files.deleteIfExists(staging.resolve(f)))
-      d.inserts.foreach(e =>
-        java.nio.file.Files.deleteIfExists(staging.resolve(e.name)))
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    ManifestSink.deleteStaged(Paths.get(path),
+      messages.iterator.filter(_ != null).flatMap { m =>
+        val d = m.asInstanceOf[StagedDeltaSet]
+        d.delFile.toSeq ++ d.inserts.map(_.name)
+      }.toSeq)
 }
 
 /** Serializable task-side factory (the anonymous form would capture the

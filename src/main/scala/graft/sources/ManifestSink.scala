@@ -196,6 +196,34 @@ object ManifestSink {
       } finally ch.close()
     }
 
+  /** Move a commit's staged files, in the given order, from `_staging`
+    * into `data/` (created if absent), replacing same-named files. Every
+    * commit face calls it under [[withCommitLock]], before it publishes.
+    */
+  private[sources] def moveStaged(root: Path, names: Seq[String]): Unit = {
+    val staging = root.resolve("_staging")
+    val data = root.resolve("data")
+    Files.createDirectories(data)
+    names.foreach(n =>
+      Files.move(staging.resolve(n), data.resolve(n), StandardCopyOption.REPLACE_EXISTING))
+  }
+
+  /** Delete staged files that will never publish (an aborted job, a
+    * replayed epoch), in the given order; already-gone files are fine.
+    */
+  private[sources] def deleteStaged(root: Path, names: Seq[String]): Unit = {
+    val staging = root.resolve("_staging")
+    names.foreach(n => Files.deleteIfExists(staging.resolve(n)))
+  }
+
+  /** The staged file names of a batch or streaming job's commit
+    * messages, in message order (null messages are tasks that never
+    * reported).
+    */
+  private[sources] def stagedNames(messages: Array[WriterCommitMessage]): Seq[String] =
+    messages.iterator.filter(_ != null)
+      .flatMap(_.asInstanceOf[StagedFileSet].files.map(_.name)).toSeq
+
   /** Bounded re-plan-and-retry for REPLACE-SHAPED operations that lose
     * the optimistic-concurrency CAS to an interleaved commit (VERDICT
     * r16 Next #7): the thunk must RE-PLAN on every invocation — every
@@ -2913,14 +2941,9 @@ class ManifestBatchWrite(path: String, schema: StructType,
     // vacuum could reclaim
     require(tombstoneFilter.isEmpty || !replace,
       "tombstoneFilter composes with append commits only")
-    val data = root.resolve("data")
-    Files.createDirectories(data)
     val staged = messages.iterator
       .flatMap(_.asInstanceOf[StagedFileSet].files).toSeq.sortBy(_.name)
-    staged.foreach { e =>
-      Files.move(root.resolve("_staging").resolve(e.name), data.resolve(e.name),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    ManifestSink.moveStaged(root, staged.map(_.name))
     // append keeps the prior list (refs carry unresolved); replace
     // starts fresh — either way ONE atomic snapshot publish. A branch
     // commit's prior state is its branch HEAD's archived snapshot.
@@ -3031,16 +3054,10 @@ class ManifestBatchWrite(path: String, schema: StructType,
     ()
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    // (also reached when commit loses the CAS: Spark aborts after a
-    // failed commit, deleting the staged files the loser left behind)
-    val staging = Paths.get(path).resolve("_staging")
-    messages.filter(_ != null).foreach { m =>
-      m.asInstanceOf[StagedFileSet].files.foreach { e =>
-        Files.deleteIfExists(staging.resolve(e.name))
-      }
-    }
-  }
+  // (also reached when commit loses the CAS: Spark aborts after a
+  // failed commit, deleting the staged files the loser left behind)
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    ManifestSink.deleteStaged(Paths.get(path), ManifestSink.stagedNames(messages))
 }
 
 class ManifestWriterFactory(path: String, schema: StructType,
@@ -3105,21 +3122,15 @@ class ManifestStreamingWrite(path: String, schema: StructType,
       messages: Array[WriterCommitMessage]): Unit =
       ManifestSink.withCommitLock(Paths.get(path)) {
     val root = Paths.get(path)
-    val staging = root.resolve("_staging")
     val staged = messages.iterator
       .flatMap(_.asInstanceOf[StagedFileSet].files).toSeq.sortBy(_.name)
     if (ManifestSink.committedEpochs(path).contains(epochId)) {
       // epoch replay after recovery: already published — the staged
       // re-run output must vanish, not double-publish
-      staged.foreach(e => Files.deleteIfExists(staging.resolve(e.name)))
+      ManifestSink.deleteStaged(root, staged.map(_.name))
       return
     }
-    val data = root.resolve("data")
-    Files.createDirectories(data)
-    staged.foreach { e =>
-      Files.move(staging.resolve(e.name), data.resolve(e.name),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    ManifestSink.moveStaged(root, staged.map(_.name))
     // the epoch's files + stats land in ONE new segment; every prior
     // list line (segment refs, inline names from pre-segment manifests,
     // `#e:`/`#s:` ledger lines) carries UNRESOLVED — a streaming epoch
@@ -3139,14 +3150,8 @@ class ManifestStreamingWrite(path: String, schema: StructType,
   }
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val staging = Paths.get(path).resolve("_staging")
-    messages.filter(_ != null).foreach { m =>
-      m.asInstanceOf[StagedFileSet].files.foreach { e =>
-        Files.deleteIfExists(staging.resolve(e.name))
-      }
-    }
-  }
+      messages: Array[WriterCommitMessage]): Unit =
+    ManifestSink.deleteStaged(Paths.get(path), ManifestSink.stagedNames(messages))
 }
 
 class ManifestStreamingWriterFactory(path: String, schema: StructType,

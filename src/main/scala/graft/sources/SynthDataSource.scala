@@ -97,38 +97,26 @@ object SynthDataSource {
     */
   val lastPlannedPartitions = new java.util.concurrent.atomic.AtomicInteger(-1)
 
-  /** Storage-partitioned-scan planner confs with the aqeSkewJoin
-    * save/restore discipline (ADVICE r14): the body plans and EAGERLY
-    * materializes (localCheckpoint) while the confs hold, then every
-    * conf restores — the returned frame is plain data, so no plan-shape
-    * state leaks into later harness queries. The confs are plan-shape
-    * only (results identical either way); the restore is hygiene, not
-    * correctness.
+  /** Storage-partitioned-scan planner confs: the body plans and EAGERLY
+    * materializes (localCheckpoint) under [[graft.RunOnce.withConf]], so
+    * the returned frame is plain data and no plan-shape state leaks into
+    * later harness queries. The confs are plan-shape only (results
+    * identical either way).
     */
   def withBucketingConfs(s: org.apache.spark.sql.SparkSession,
       pushPartValues: Boolean = false, disableBroadcast: Boolean = false)(
       body: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val c = s.conf
-    val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.requireAllClusterKeysForCoPartition",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> c.getOption(k)).toMap
-    try {
-      c.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      if (pushPartValues) {
-        c.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        // join keys strictly containing the partition key still co-locate
-        c.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      }
-      // a storage-partitioned-join demo row must not dissolve into a
-      // broadcast at test SF — the registry constant pins the CO-
-      // PARTITIONED plan the 100 TB deployment would take
-      if (disableBroadcast) c.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val pushed = if (!pushPartValues) Map.empty[String, String] else Map(
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+      // join keys strictly containing the partition key still co-locate
+      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
+    // a storage-partitioned-join demo row must not dissolve into a
+    // broadcast at test SF: the pin keeps the co-partitioned plan
+    val noBroadcast = if (!disableBroadcast) Map.empty[String, String]
+      else Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    graft.RunOnce.withConf(s,
+        Map("spark.sql.sources.v2.bucketing.enabled" -> "true") ++ pushed ++ noBroadcast) {
       body.localCheckpoint()
-    } finally saved.foreach {
-      case (k, Some(v)) => c.set(k, v)
-      case (k, None) => c.unset(k)
     }
   }
 
