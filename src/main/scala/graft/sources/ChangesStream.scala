@@ -259,17 +259,14 @@ class ManifestChangesStream(path: String, dataSchema: StructType,
   private val startingGen: Long =
     GraftChanges.resolveStartingGen(path, start, strict = false)
 
-  /** Resolved manifest lines of snapshot `gen`, schema header dropped
-    * (empty for gen 0 = before the first commit). LOUD on expiry.
+  /** Snapshot `gen` (the empty state for gen 0 = before the first
+    * commit). LOUD on expiry.
     */
-  private def linesAt(gen: Long): Seq[String] =
-    if (gen == 0L) Seq.empty
-    else ManifestSink.resolvedManifestLines(rootP,
-      rootP.resolve("_snapshots").resolve(s"manifest-$gen.json"))
-      .getOrElse(throw new IllegalStateException(
-        s"snapshot $gen of $path expired while a change-feed consumer " +
-          "still needed it — retain more generations in vacuum()"))
-      .tail
+  private def stateAt(gen: Long): ManifestState =
+    if (gen == 0L) ManifestState.empty(rootP, dataSchema.toDDL)
+    else ManifestState.at(rootP, gen).getOrElse(throw new IllegalStateException(
+      s"snapshot $gen of $path expired while a change-feed consumer " +
+        "still needed it — retain more generations in vacuum()"))
 
   // EVOLUTION LEDGER at stream-construction time (r17 code-review):
   // accumulated across the retained snapshots the feed can actually
@@ -285,7 +282,7 @@ class ManifestChangesStream(path: String, dataSchema: StructType,
   // O(consumable retained snapshots) driver reads, paid once per start.
   private val accumulatedEvo: Seq[String] =
     ManifestChanges.evolutionOver(
-      gens.filter(_ >= startingGen).map(linesAt),
+      gens.filter(_ >= startingGen).map(stateAt(_).rawTail),
       dataSchema.fieldNames.toSet)
   private val p2c: Map[String, String] =
     ManifestEvolution.priorToCurrent(accumulatedEvo)
@@ -356,23 +353,23 @@ class ManifestChangesStream(path: String, dataSchema: StructType,
 
     val parts = Seq.newBuilder[InputPartition]
     var prev = s
-    // each window's curTail becomes the next window's prevTail — one
-    // manifest resolution per generation, not two (code-review r17)
-    var prevTail = linesAt(prev)
+    // each window's cur state becomes the next window's prev: one
+    // manifest read per generation
+    var prevState = stateAt(prev).under(accumulatedEvo)
     windows.foreach { g =>
-      val curTail = linesAt(g)
+      val cur = stateAt(g).under(accumulatedEvo)
       // schema evolution mid-feed: this query's schema and alias map
       // were fixed at start — refuse loudly, restart re-resolves (the
       // same contract as the snapshot feed)
-      val newEvo = curTail.filter(ManifestEvolution.isLine).toSet --
-        prevTail.filter(ManifestEvolution.isLine) -- knownEvo
+      val newEvo = cur.rawTail.filter(ManifestEvolution.isLine).toSet --
+        prevState.rawTail.filter(ManifestEvolution.isLine) -- knownEvo
       if (newEvo.nonEmpty) throw new IllegalStateException(
         s"schema evolution in consumed range ($prev, $g] of $path: a " +
           "column rename/drop was published mid-feed — restart the " +
           "streaming query so it re-resolves the live schema")
       // the SAME window-diff the batch feed plans with — the two feeds
       // agree change-for-change by construction
-      val w = ManifestChanges.window(rootP, g, prevTail, curTail, p2c,
+      val w = ManifestChanges.window(g, prevState, cur,
         dataSchema.fieldNames.toSet)
 
       w.added.foreach { n =>
@@ -400,7 +397,7 @@ class ManifestChangesStream(path: String, dataSchema: StructType,
           w.curPos.getOrElse(n, Seq.empty), droppedPreds, droppedPos)
       }
       prev = g
-      prevTail = curTail
+      prevState = cur
     }
     parts.result().toArray
   }

@@ -53,6 +53,20 @@ object GraftCatalog {
   private val CboPins = Map("spark.sql.cbo.enabled" -> "true",
     "spark.sql.cbo.joinReorder.enabled" -> "true")
 
+  /** The registry's customer fixture: `c_custkey` as BIGINT, the `mid`
+    * columns, and the balance in whole cents as `bal_cents`.
+    */
+  private[sources] def custCents(s: org.apache.spark.sql.SparkSession,
+      dir: String,
+      mid: Seq[org.apache.spark.sql.Column] = Seq(
+        org.apache.spark.sql.functions.col("c_mktsegment"))):
+      org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    graft.Tables.customer(s, dir).select(
+      (col("c_custkey").cast("long").as("c_custkey") +: mid :+
+        expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents")): _*)
+  }
+
   /** Every row runs with `graft_cat` registered ([[graft.RunOnce.withCatalog]]:
     * a plain session conf, since catalogs instantiate lazily); the SQL
     * rows then reach identifier resolution, DDL, DML and scan planning
@@ -106,10 +120,7 @@ object GraftCatalog {
     "q_sink_delete" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_delete_")
-      graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      custCents(s, dir)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp).save()
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_del")
@@ -133,10 +144,7 @@ object GraftCatalog {
     "q_sink_update_sql" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_updsql_")
-      graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      custCents(s, dir)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
         .option("format", "parquet").save()
@@ -161,10 +169,7 @@ object GraftCatalog {
     "q_sink_update_sql_mor" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_updmor_")
-      graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      custCents(s, dir)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
         .option("format", "parquet").save()
@@ -187,10 +192,7 @@ object GraftCatalog {
     "q_sink_merge_sql_mor" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_mrgmor_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       base.write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
         .option("format", "parquet").save()
@@ -231,10 +233,7 @@ object GraftCatalog {
     "q_lake_meta_files" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_metaf_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       Seq(0L, 1L, 2L).foreach { m =>
         // one file per slice, so the $files cardinality is part of the
         // oracle contract too
@@ -262,10 +261,7 @@ object GraftCatalog {
     "q_sink_merge_nbs" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_nbs_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       base.write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
         .option("format", "parquet").save()
@@ -301,10 +297,7 @@ object GraftCatalog {
     "q_lake_call_compact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_call_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       Seq(0L, 1L, 2L).foreach { m =>
         base.filter(col("c_custkey") % 3 === m)
           .write.format("graft.sources.ManifestSink")
@@ -332,10 +325,7 @@ object GraftCatalog {
     "q_lake_rewrite_sorted" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_rwsort_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       Seq(0L, 1L, 2L).foreach { m =>
         base.filter(col("c_custkey") % 3 === m).coalesce(1)
           .write.format("graft.sources.ManifestSink")
@@ -362,10 +352,7 @@ object GraftCatalog {
     "q_lake_rewrite_zorder" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_rwz_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       Seq(0L, 1L, 2L).foreach { m =>
         base.filter(col("c_custkey") % 3 === m).coalesce(1)
           .write.format("graft.sources.ManifestSink")
@@ -443,12 +430,9 @@ object GraftCatalog {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_pdays_")
       val day = PartitionTransforms.DayMillis
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          expr(s"CAST((c_custkey % 5) * ${day}L + " +
-            s"(CAST(c_custkey AS BIGINT) * 997) % ${day}L AS BIGINT)")
-            .as("ts"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir, Seq(
+        expr(s"CAST((c_custkey % 5) * ${day}L + " +
+          s"(CAST(c_custkey AS BIGINT) * 997) % ${day}L AS BIGINT)").as("ts")))
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_pdays")
       s.sql(
         s"""CREATE TABLE graft_cat.lake.cust_pdays
@@ -481,12 +465,9 @@ object GraftCatalog {
       val tmp = graft.RunOnce.dir("lake_phours_")
       val day = PartitionTransforms.DayMillis
       val hour = PartitionTransforms.HourMillis
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          expr(s"CAST((c_custkey % 5) * ${31L * day}L + " +
-            s"(CAST(c_custkey AS BIGINT) * 997) % ${6L * hour}L AS BIGINT)")
-            .as("ts"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir, Seq(
+        expr(s"CAST((c_custkey % 5) * ${31L * day}L + " +
+          s"(CAST(c_custkey AS BIGINT) * 997) % ${6L * hour}L AS BIGINT)").as("ts")))
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_phours")
       s.sql(
         s"""CREATE TABLE graft_cat.lake.cust_phours
@@ -515,10 +496,7 @@ object GraftCatalog {
     "q_lake_tag" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_tag_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       base.filter(col("c_custkey") % 2 === 0L)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
@@ -557,10 +535,7 @@ object GraftCatalog {
     "q_lake_branch" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_branch_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       base.filter(col("c_custkey") % 2 === 0L)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
@@ -606,10 +581,7 @@ object GraftCatalog {
     "q_lake_rollback" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_rollback_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       base.filter(col("c_custkey") % 2 === 0L)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
@@ -649,10 +621,7 @@ object GraftCatalog {
     "q_lake_rewrite_partial" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_rwpart_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          (col("c_custkey").cast("long") % 4L).as("band"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir, Seq((col("c_custkey").cast("long") % 4L).as("band")))
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_rwpart")
       s.sql(
         s"""CREATE TABLE graft_cat.lake.cust_rwpart
@@ -728,11 +697,8 @@ object GraftCatalog {
     "q_lake_partition_evolve" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_psevo_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          (col("c_custkey").cast("long") % 10L).as("band"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir, Seq(col("c_mktsegment"),
+        (col("c_custkey").cast("long") % 10L).as("band")))
       s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_psevo")
       s.sql(
         s"""CREATE TABLE graft_cat.lake.cust_psevo
@@ -760,10 +726,7 @@ object GraftCatalog {
     "q_lake_rename_col" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_rename_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       // slice A committed first: the tombstone scopes to ITS files only
       base.filter(col("c_custkey") % 2 === 0L)
         .write.format("graft.sources.ManifestSink")
@@ -794,10 +757,7 @@ object GraftCatalog {
     "q_lake_drop_col" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_dropcol_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       base.filter(col("c_custkey") % 2 === 0L)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
@@ -831,10 +791,7 @@ object GraftCatalog {
     "q_lake_cdf_from_ts" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_cdfts_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       base.filter(col("c_custkey") % 2 === 0L)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
@@ -856,10 +813,7 @@ object GraftCatalog {
     "q_lake_cdf_stream" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_cdfs_")
-      graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      custCents(s, dir)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
         .option("format", "parquet").save()
@@ -888,10 +842,7 @@ object GraftCatalog {
     "q_lake_cdf" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_cdf_")
-      graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      custCents(s, dir)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
         .option("format", "parquet").save()
@@ -924,10 +875,7 @@ object GraftCatalog {
     "q_sink_merge_sql" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_mrgsql_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       base.write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp).save()
       base.filter(col("c_custkey") % 10 === 0L)
@@ -964,10 +912,7 @@ object GraftCatalog {
     "q_sink_delete_mor" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_delmor_")
-      graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      custCents(s, dir)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
         .option("format", "parquet").save()
@@ -1007,10 +952,7 @@ object GraftCatalog {
     "q_sink_upsert" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_merge_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       base.write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp).save()
       val updates = base.filter(col("c_custkey") % 10 === 0L)
@@ -1031,10 +973,7 @@ object GraftCatalog {
     "q_sink_upsert_mor" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_mergemor_")
-      def base = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def base = custCents(s, dir)
       base.write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
         .option("format", "parquet").save()
@@ -1188,10 +1127,7 @@ object GraftCatalog {
     "q_lake_orphans" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_orph_")
-      graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      custCents(s, dir)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", tmp)
         .option("format", "parquet").save()
@@ -1550,7 +1486,7 @@ object GraftCatalog {
       dir: String): String = {
     import org.apache.spark.sql.functions.col
     val root = graft.streaming.StreamQueries.fixtureDir("lakertf", dir, "orders")
-    if (ManifestSink.readManifest(java.nio.file.Paths.get(root)).isEmpty) {
+    if (ManifestState.live(root).isEmpty) {
       s.read.format("graft.sources.SynthDataSource")
         .option("rows", "1000000").option("bucketWidth", "62500").load()
         .select(col("bucket"), col("id"), col("channel"), col("amount_cents"))
@@ -2407,12 +2343,12 @@ class GraftCatalog extends TableCatalog
     // the ledger view so later changes in the same ALTER see them.
     val pending = scala.collection.mutable.ArrayBuffer
       .empty[(StructType, String)]
-    def ledger: Seq[String] = (rootP
-      .filter(r => java.nio.file.Files.exists(r.resolve("manifest.json")))
-      .map(ManifestSink.ledgerLines).getOrElse(Seq.empty)) ++
-      pending.map(_._2)
-    def hasManifest: Boolean = rootP.exists(r =>
-      java.nio.file.Files.exists(r.resolve("manifest.json")))
+    // ONE live state serves every change's validation; evolution lines
+    // live at list level, so the raw tail is the whole ledger
+    val live = rootP.flatMap(ManifestState.live)
+    def ledger: Seq[String] =
+      live.fold(Seq.empty[String])(_.rawTail) ++ pending.map(_._2)
+    def hasManifest: Boolean = live.isDefined
     /** rename a column inside the layout-option CSVs (partitionBy etc.);
       * partitionBy entries may be transform SPECS whose source column
       * must follow the rename (r19).
@@ -2487,11 +2423,8 @@ class GraftCatalog extends TableCatalog
           if (hasManifest) {
             // a live tombstone referencing the column could no longer be
             // evaluated — compact (folding the deletes), then drop
-            val led = ledger
-            val p2c = ManifestEvolution.priorToCurrent(led)
-            val tombRefs = ManifestDeletes.of(led).map(t =>
-              ManifestEvolution.remapFilter(t.filter, p2c))
-              .flatMap(_.references).toSet
+            val tombRefs = live.get.under(ledger).tombstones
+              .flatMap(_.filter.references).toSet
             require(!tombRefs.contains(colName),
               s"cannot drop $colName: a live MoR tombstone references it — " +
                 "compact the table (folding the deletes) first")

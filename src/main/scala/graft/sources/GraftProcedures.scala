@@ -184,9 +184,7 @@ object GraftProcedures {
       val (label, nCommits) =
         if (parts.nonEmpty) {
           // partition-scoped partial progress: N values per snapshot
-          val schema = ManifestSink.readManifest(java.nio.file.Paths.get(r))
-            .map(_._1).getOrElse(throw new IllegalArgumentException(
-              s"no manifest at $r — nothing to rewrite"))
+          val schema = ManifestState.need(r, "nothing to rewrite").schema
           val whereOpt =
             if (whereS.isEmpty) None
             else Some(ManifestSink.parseWhereEquality(whereS, schema))
@@ -362,9 +360,8 @@ object GraftProcedures {
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val r = root(input)
       val rows = ManifestSink.branches(r).map { b =>
-        val ts = ManifestSink.commitMillis(java.nio.file.Paths.get(r)
-            .resolve("_snapshots").resolve(s"manifest-${b.gen}.json"))
-          .map(java.lang.Long.valueOf).orNull
+        val ts = ManifestState.at(java.nio.file.Paths.get(r), b.gen)
+          .flatMap(_.millis).map(java.lang.Long.valueOf).orNull
         Seq[Any](b.name, b.gen, b.base, ts)
       }
       java.util.List.of[Scan](new ResultScan(out, rows)).iterator()

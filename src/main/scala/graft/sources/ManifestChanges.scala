@@ -1,10 +1,9 @@
 package graft.sources
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
 
 /** CHANGE-DATA FEED (VERDICT r16 Next #4, the Delta CDF shape,
   * batch-first): [[readChanges]] derives a row-level change log
@@ -81,22 +80,19 @@ object ManifestChanges {
     lines
   }
 
-  /** Diff ONE window (prev → cur). Tombstone predicates remap into the
-    * output column space via `p2c`; a predicate referencing a column
-    * OUTSIDE `schemaNames` (dropped after the tombstone was folded)
-    * REFUSES loudly — evaluating it against the output schema would
-    * silently resurrect deleted rows.
+  /** Diff ONE window (prev → cur). Both states are already read in the
+    * output column space ([[ManifestState.under]] the feed's
+    * accumulated ledger), so their tombstone predicates are remapped; a
+    * predicate referencing a column OUTSIDE `schemaNames` (dropped after
+    * the tombstone was folded) REFUSES loudly — evaluating it against
+    * the output schema would silently resurrect deleted rows.
     */
-  def window(rootP: Path, gen: Long, prevTail: Seq[String],
-      curTail: Seq[String], p2c: Map[String, String],
+  def window(gen: Long, prev: ManifestState, cur: ManifestState,
       schemaNames: Set[String]): Window = {
-    val prevNames = prevTail.filterNot(_.startsWith("#"))
-    val curNames = curTail.filterNot(_.startsWith("#"))
-    def remapped(tail: Seq[String], names: Seq[String]) =
-      ManifestDeletes.byFile(ManifestDeletes.of(tail).map(t =>
-        t.copy(filter = ManifestEvolution.remapFilter(t.filter, p2c))), names)
-    val prevDel = remapped(prevTail, prevNames)
-    val curDel = remapped(curTail, curNames)
+    val prevNames = prev.names
+    val curNames = cur.names
+    val prevDel = prev.deletes
+    val curDel = cur.deletes
     val refs = (prevDel.valuesIterator ++ curDel.valuesIterator)
       .flatten.flatMap(_.references).toSet
     val missing = refs -- schemaNames
@@ -105,8 +101,8 @@ object ManifestChanges {
         s"referencing ${missing.mkString(", ")} — dropped from the schema " +
         "after the delete was folded; replaying it against the live schema " +
         "would be unsound. Start the change read after the drop's generation")
-    val prevPos = ManifestSink.posDeletesOf(rootP, prevTail)
-    val curPos = ManifestSink.posDeletesOf(rootP, curTail)
+    val prevPos = prev.posDeletes
+    val curPos = cur.posDeletes
     val added = (curNames.toSet -- prevNames).toSeq.sorted
     val removed = (prevNames.toSet -- curNames).toSeq.sorted
     val carried = prevNames.filter(curNames.toSet)
@@ -150,34 +146,34 @@ object ManifestChanges {
         s"available: ${retained.mkString(",")}")
     val gens = retained.filter(g => g > fromGen && g <= toGen)
 
-    def linesAt(g: Long): Seq[String] =
-      if (g == 0L) Seq.empty
-      else ManifestSink.resolvedManifestLines(rootP,
-        rootP.resolve("_snapshots").resolve(s"manifest-$g.json"))
-        .getOrElse(throw new IllegalArgumentException(
-          s"snapshot $g of $root expired — retain more generations " +
-            "or start the change read from a retained one"))
+    def stateAt(g: Long): ManifestState =
+      ManifestState.at(rootP, g).getOrElse(throw new IllegalArgumentException(
+        s"snapshot $g of $root expired — retain more generations " +
+          "or start the change read from a retained one"))
 
     // toGen's schema reads every window (older files resolve by name;
     // columns they predate read null — same rule as the live scan)
     val schemaGen = gens.lastOption.getOrElse(retained.lastOption.getOrElse(0L))
     require(schemaGen > 0L, s"no retained snapshots at $root")
-    val schema = StructType.fromDDL(linesAt(schemaGen).head)
-    // one read per snapshot in range; each tail serves the evolution
-    // accumulation, the window diffs (as both cur and next prev)
+    // one read per snapshot in range; each state serves the evolution
+    // accumulation and the window diffs (as both cur and next prev)
     val rangeGens = ((fromGen +: gens) :+ schemaGen).distinct.sorted
-    val tails: Map[Long, Seq[String]] =
-      rangeGens.map(g => g ->
-        (if (g == 0L) Seq.empty[String] else linesAt(g).tail)).toMap
+    val read: Map[Long, ManifestState] =
+      rangeGens.filter(_ > 0L).map(g => g -> stateAt(g)).toMap
+    val ddl = read(schemaGen).ddl
+    val schema = read(schemaGen).schema
     // evolution accumulated ACROSS the range's snapshots (code-review
     // r17: a compaction clears the live ledger while retained snapshots
-    // still reference prior-named files — the union recovers the map)
-    val evo = evolutionOver(rangeGens.map(tails), schema.fieldNames.toSet)
-    val p2c = ManifestEvolution.priorToCurrent(evo)
-    // a rename whose target was later dropped maps to a column absent
-    // from the output schema: its cells are simply not emitted
-    val aliases = ManifestEvolution.currentToPriors(evo)
-      .view.filterKeys(schema.fieldNames.contains).toMap
+    // still reference prior-named files — the union recovers the map);
+    // every state is then read in the output column space it defines.
+    // A rename whose target was later dropped maps to a column absent
+    // from the output schema: its cells are simply not emitted.
+    val evo = evolutionOver(
+      rangeGens.map(g => read.get(g).fold(Seq.empty[String])(_.rawTail)),
+      schema.fieldNames.toSet)
+    val states: Map[Long, ManifestState] = rangeGens.map(g => g ->
+      read.getOrElse(g, ManifestState.empty(rootP, ddl)).under(evo, ddl)).toMap
+    val aliases = states(schemaGen).aliases
     val schemaNames = schema.fieldNames.toSet
 
     def dataPath(n: String): String = rootP.resolve("data").resolve(n).toString
@@ -188,16 +184,16 @@ object ManifestChanges {
     var prev = fromGen
     val parts = Seq.newBuilder[DataFrame]
     gens.foreach { g =>
-      val w = window(rootP, g, tails(prev), tails(g), p2c, schemaNames)
+      val w = window(g, states(prev), states(g), schemaNames)
 
       // INSERTS: the added files' rows as visible at g
       if (w.added.nonEmpty)
-        parts += withType(ManifestSink.readDataFiles(spark, schema,
-          w.added.map(dataPath), w.curDel, w.curPos, aliases), "insert", g)
+        parts += withType(ManifestSink.readDataFiles(spark, states(g),
+          w.added.map(dataPath)), "insert", g)
       // DELETES (a): removed files' rows as visible at the window start
       if (w.removed.nonEmpty)
-        parts += withType(ManifestSink.readDataFiles(spark, schema,
-          w.removed.map(dataPath), w.prevDel, w.prevPos, aliases), "delete", g)
+        parts += withType(ManifestSink.readDataFiles(spark, states(prev),
+          w.removed.map(dataPath)), "delete", g)
 
       // DELETES (b), PER FILE: carried files with deletes new in g emit
       // the rows those deletes killed
@@ -211,10 +207,8 @@ object ManifestChanges {
           if (newPos.isEmpty) {
             // predicate-only: killed = old-visible rows where the new
             // predicate is TRUE (SQL delete semantics)
-            val oldVis = ManifestSink.readDataFiles(spark, schema,
-              Seq(dataPath(n)),
-              w.prevDel.view.filterKeys(_ == n).toMap,
-              w.prevPos.view.filterKeys(_ == n).toMap, aliases)
+            val oldVis = ManifestSink.readDataFiles(spark, states(prev),
+              Seq(dataPath(n)))
             oldVis.filter(coalesce(predCond.get, lit(false)))
           } else {
             // positional (parquet-only payload by construction): one
@@ -277,10 +271,8 @@ object ManifestChanges {
             // dropped predicate is TRUE (they were dead for exactly
             // that reason; rows a REMAINING delete still kills are not
             // g-visible and never reach the filter)
-            val curVis = ManifestSink.readDataFiles(spark, schema,
-              Seq(dataPath(n)),
-              w.curDel.view.filterKeys(_ == n).toMap,
-              w.curPos.view.filterKeys(_ == n).toMap, aliases)
+            val curVis = ManifestSink.readDataFiles(spark, states(g),
+              Seq(dataPath(n)))
             curVis.filter(coalesce(predCond.get, lit(false)))
           } else {
             // positional: one provenance read; resurrected = dropped

@@ -16,10 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * full DSv2 TABLE (readable through the GraftCatalog with plain SQL,
   * not just via the [[ManifestSink.readCommitted]] helper):
   *
-  *   - partition planning is ONE manifest snapshot read at build time —
-  *     one file per InputPartition, so a 1000-file table fans out to
-  *     1000 independent readers and a concurrent overwrite/compaction
-  *     can never tear the file list mid-scan;
+  *   - partition planning reads ONE [[ManifestState]] (the same
+  *     one-snapshot contract as `readCommitted`) — one file per
+  *     InputPartition, so a 1000-file table fans out to 1000
+  *     independent readers and a concurrent overwrite/compaction can
+  *     never tear the file list, its tombstones or its aliases mid-scan;
   *   - COLUMN PRUNING ([[SupportsPushDownRequiredColumns]]): parquet
   *     files decode ONLY the projected column chunks; JSON files parse
   *     every line but materialize only the pruned fields;
@@ -75,7 +76,12 @@ class ManifestScanBuilder(path: String, tableSchema: StructType,
       * every filter stays residual (exactness removal assumes Spark's
       * keep-matching semantics, which a row-level plan inverts).
       */
-    rowLevelMode: Boolean = false)
+    rowLevelMode: Boolean = false,
+    /** The state a row-level operation already planned against (its CAS
+      * base and write layout come from the same read); else the scan
+      * reads the live manifest or the pinned snapshot itself.
+      */
+    planned: Option[ManifestState] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -106,37 +112,28 @@ class ManifestScanBuilder(path: String, tableSchema: StructType,
   private case class SegEnt(name: String, files: Long,
       env: Option[ManifestMeta.FileStats]) extends Ent
 
-  /** ONE raw manifest read (live or a pinned snapshot generation) —
-    * atomic-swap-consistent, segments NOT resolved.
+  /** ONE manifest read (live or a pinned snapshot generation) —
+    * atomic-swap-consistent, segments NOT resolved. Ledger lines
+    * (evolution, tombstones, position deletes) live at LIST level, so
+    * the state serves them without resolving a segment.
     */
-  private lazy val rawLines: Seq[String] = {
-    val m = snapshotGen match {
-      case Some(g) =>
-        Paths.get(path).resolve("_snapshots").resolve(s"manifest-$g.json")
-      case None => Paths.get(path).resolve("manifest.json")
-    }
-    if (!Files.exists(m)) Seq.empty
-    else Files.readAllLines(m).toArray(Array.empty[String]).toSeq
-  }
-  private lazy val rawTail: Seq[String] =
-    if (rawLines.isEmpty) Seq.empty else rawLines.tail
-
-  /** Evolution ledger (r17): prior→live name map and its inverse.
-    * Ledger lines live at LIST level (published there, carried there,
-    * never folded into segments), so evolution detection costs no
-    * segment resolution.
-    */
-  private lazy val p2c: Map[String, String] =
-    ManifestEvolution.priorToCurrent(rawTail)
+  private lazy val state: Option[ManifestState] = planned.orElse(snapshotGen match {
+    case Some(g) => ManifestState.at(Paths.get(path), g)
+    case None => ManifestState.live(Paths.get(path))
+  })
+  private lazy val rawTail: Seq[String] = state.fold(Seq.empty[String])(_.rawTail)
+  /** Stats written under prior column names, in live names (r17). */
+  private def remap(fs: ManifestMeta.FileStats): ManifestMeta.FileStats =
+    state.fold(fs)(_.remap(fs))
   private[sources] lazy val aliases: Map[String, Seq[String]] =
-    ManifestEvolution.currentToPriors(rawTail)
+    state.fold(Map.empty[String, Seq[String]])(_.aliases)
 
   private lazy val entries: Seq[Ent] = rawTail.flatMap { l =>
     if (l.startsWith(ManifestSink.SegPrefix)) {
       val sum = ManifestSink.segRefSummary(l)
       Some(SegEnt(ManifestSink.segRefName(l),
         sum.map(_._1).getOrElse(-1L),
-        sum.map(s => ManifestEvolution.remapStats(s._2, p2c))))
+        sum.map(s => remap(s._2))))
     } else if (!l.startsWith("#")) Some(FileEnt(l))
     else None
   }
@@ -144,13 +141,11 @@ class ManifestScanBuilder(path: String, tableSchema: StructType,
     * keys remapped into the live column space (r17 evolution).
     */
   private lazy val inlineStats: Map[String, ManifestMeta.FileStats] =
-    ManifestMeta.statsOf(rawTail).map { case (n, fs) =>
-      n -> ManifestEvolution.remapStats(fs, p2c) }
+    ManifestMeta.statsOf(rawTail).map { case (n, fs) => n -> remap(fs) }
   private lazy val tombstones: Seq[ManifestDeletes.Tombstone] =
-    ManifestDeletes.of(rawTail).map(t =>
-      t.copy(filter = ManifestEvolution.remapFilter(t.filter, p2c)))
+    state.fold(Seq.empty[ManifestDeletes.Tombstone])(_.tombstones)
   private lazy val posDels: Seq[ManifestPosDeletes.PosDelete] =
-    ManifestPosDeletes.of(rawTail)
+    state.fold(Seq.empty[ManifestPosDeletes.PosDelete])(_.posDeleteLines)
   /** ANY standing row-removal metadata (predicate tombstones or
     * position deletes): stats then overcount — every exactness-claiming
     * path must refuse on this, not on `tombstones` alone (r17).
@@ -165,8 +160,7 @@ class ManifestScanBuilder(path: String, tableSchema: StructType,
       case FileEnt(n) => Seq((n, inlineStats.get(n)))
       case SegEnt(n, _, _) =>
         val (names, st) = ManifestSink.segmentData(Paths.get(path), n)
-        names.map(x => (x,
-          st.get(x).map(ManifestEvolution.remapStats(_, p2c))))
+        names.map(x => (x, st.get(x).map(remap)))
     }
 
   /** FULL resolution — only the paths that genuinely need every file
@@ -293,7 +287,7 @@ class ManifestScanBuilder(path: String, tableSchema: StructType,
     // is still exact — the partition-pruned `count(*) WHERE month = X`
     // fast path
     if (residualCount > 0) return false
-    if (rawLines.isEmpty) return false // no manifest yet
+    if (state.isEmpty) return false // no manifest yet
     // MoR tombstones / position deletes: stats count rows already
     // deleted — the fold would overcount, so the metadata path refuses
     // until a compaction folds the deletes in
@@ -1075,25 +1069,18 @@ class ManifestSnapshotStream(path: String, tableSchema: StructType,
   // evolution lines visible at construction are KNOWN — `aliases`
   // covers them for every committed file; only a NEWER line is a
   // mid-feed evolution (r17)
-  private val knownEvo: Set[String] = ManifestSink
-    .ledgerLines(Paths.get(path)).filter(ManifestEvolution.isLine).toSet
+  private val knownEvo: Set[String] = ManifestState.live(Paths.get(path))
+    .fold(Set.empty[String])(_.rawTail.filter(ManifestEvolution.isLine).toSet)
 
-  /** Bare file NAMES of snapshot `gen` (empty for gen 0 = before the
-    * first commit).
+  /** Snapshot `gen` (the empty state for gen 0 = before the first
+    * commit); LOUD on expiry.
     */
-  private def linesAt(gen: Long): Seq[String] =
-    if (gen == 0L) Seq.empty
-    else {
-      val m = Paths.get(path).resolve("_snapshots").resolve(s"manifest-$gen.json")
-      ManifestSink.resolvedManifestLines(Paths.get(path), m)
-        .getOrElse(throw new IllegalStateException(
-          s"snapshot $gen of $path expired while a streaming consumer still " +
-            s"needed it — retain more generations in vacuum()"))
-        .tail
-    }
-
-  private def namesAt(gen: Long): Set[String] =
-    linesAt(gen).filterNot(_.startsWith("#")).toSet
+  private def stateAt(gen: Long): ManifestState =
+    if (gen == 0L) ManifestState.empty(Paths.get(path), tableSchema.toDDL)
+    else ManifestState.at(Paths.get(path), gen).getOrElse(
+      throw new IllegalStateException(
+        s"snapshot $gen of $path expired while a streaming consumer still " +
+          s"needed it — retain more generations in vacuum()"))
 
   override def initialOffset(): Offset = SnapshotOffset(0L)
   override def latestOffset(): Offset =
@@ -1115,10 +1102,12 @@ class ManifestSnapshotStream(path: String, tableSchema: StructType,
     val s = start.asInstanceOf[SnapshotOffset].gen
     val e = end.asInstanceOf[SnapshotOffset].gen
     if (e <= s) return Array.empty
-    val startLines = linesAt(s)
-    val endLines = linesAt(e)
-    val startNames = startLines.filterNot(_.startsWith("#")).toSet
-    val endNames = endLines.filterNot(_.startsWith("#")).toSet
+    val start0 = stateAt(s)
+    val end0 = stateAt(e)
+    val startLines = start0.rawTail
+    val endLines = end0.rawTail
+    val startNames = start0.names.toSet
+    val endNames = end0.names.toSet
     // a MoR tombstone or position delete landing mid-feed is a row
     // REMOVAL the additions-only delta cannot express — same refusal
     // as a rewrite below

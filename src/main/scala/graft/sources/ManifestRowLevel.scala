@@ -49,11 +49,11 @@ class ManifestCowOperation(path: String, tableSchema: StructType,
     */
   @volatile private var builtScan: ManifestScan = _
 
-  /** CAS base: the generation the candidate scan plans against —
-    * captured when the scan builder is created, i.e. before the scan's
-    * manifest read, so an interleaved commit can only make the check
-    * spuriously strict, never unsafe.
+  /** The ONE state this operation plans against, read when the scan
+    * builder is created: the candidate scan, the CAS base and the
+    * write's derived layout all come from it.
     */
+  @volatile private var planned: Option[ManifestState] = None
   @volatile private var baseGen: Long = -1L
 
   override def command(): Command = cmd
@@ -67,9 +67,10 @@ class ManifestCowOperation(path: String, tableSchema: StructType,
     Array(Expressions.column("_file"))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    baseGen = ManifestSink.liveGen(path)
+    planned = ManifestState.live(path)
+    baseGen = ManifestSink.liveGenOf(path, planned)
     new ManifestScanBuilder(path, tableSchema, partitionBy,
-      snapshotGen = None, splitConf, rowLevelMode = true) {
+      snapshotGen = None, splitConf, rowLevelMode = true, planned = planned) {
       override private[sources] def onBuilt(s: ManifestScan): Unit =
         builtScan = s
     }
@@ -79,17 +80,14 @@ class ManifestCowOperation(path: String, tableSchema: StructType,
     new WriteBuilder {
       override def build(): Write = {
         // layout-preserving rewrite, same derivation as deleteWhere:
-        // declared table options win, else the committed stats' claims
-        // (ONE manifest resolution for both — code-review r17)
-        val rootP = java.nio.file.Paths.get(path)
-        val (names, stats) = ManifestSink.committedState(rootP)
+        // declared table options win, else the planned state's claims
         val fmt = if (format != "json") format
-                  else ManifestSink.derivedFormat(names)
-        val (dp, dob) = ManifestSink.derivedLayout(names, stats, tableSchema)
+                  else planned.fold("json")(_.format)
+        val (dp, dob) = planned.fold((Seq.empty[String], Seq.empty[String]))(_.layout)
         val pBy = if (partitionBy.nonEmpty) partitionBy else dp
         val oBy = if (orderBy.nonEmpty) orderBy else dob
         val blm = if (bloomFor.nonEmpty) bloomFor
-                  else ManifestSink.derivedBloomCols(names, stats)
+                  else planned.fold(Seq.empty[String])(_.bloomCols)
         // the write schema must be the TABLE's schema: the publish path
         // records info.schema() as the table DDL, and a metadata column
         // leaking in would silently widen the table on commit
@@ -165,6 +163,11 @@ class ManifestMorOperation(path: String, tableSchema: StructType,
     extends RowLevelOperation
     with org.apache.spark.sql.connector.write.SupportsDelta {
 
+  /** The ONE state this operation plans against (read when the scan
+    * builder is created): the parquet check, the scan, the CAS base and
+    * the bloom derivation all come from it.
+    */
+  @volatile private var planned: Option[ManifestState] = None
   @volatile private var baseGen: Long = -1L
 
   override def command(): Command = cmd
@@ -178,20 +181,15 @@ class ManifestMorOperation(path: String, tableSchema: StructType,
   override def requiredMetadataAttributes(): Array[NamedReference] =
     Array.empty
 
-  /** ONE manifest resolution serves the parquet require and the bloom
-    * derivation (code-review r17).
-    */
-  private lazy val committed: (Seq[String], Map[String, ManifestMeta.FileStats]) =
-    ManifestSink.committedState(java.nio.file.Paths.get(path))
-
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    require(committed._1.forall(_.endsWith(".parquet")),
+    planned = ManifestState.live(path)
+    baseGen = ManifestSink.liveGenOf(path, planned)
+    require(planned.forall(_.names.forall(_.endsWith(".parquet"))),
       s"merge-on-read row-level DML requires a parquet payload " +
         s"(position deletes replay via _metadata.row_index); table at " +
         s"$path holds non-parquet files — use a copy-on-write table")
-    baseGen = ManifestSink.liveGen(path)
     new ManifestScanBuilder(path, tableSchema, partitionBy,
-      snapshotGen = None, splitConf, rowLevelMode = true)
+      snapshotGen = None, splitConf, rowLevelMode = true, planned = planned)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo):
@@ -199,12 +197,10 @@ class ManifestMorOperation(path: String, tableSchema: StructType,
     new org.apache.spark.sql.connector.write.DeltaWriteBuilder {
       override def build(): org.apache.spark.sql.connector.write.DeltaWrite =
         new ManifestDeltaWrite(path, info.schema(), baseGen,
-          derivedBloom(), targetFileBytes, rowGroupBytes)
+          if (bloomFor.nonEmpty) bloomFor
+          else planned.fold(Seq.empty[String])(_.bloomCols),
+          targetFileBytes, rowGroupBytes)
     }
-
-  private def derivedBloom(): Seq[String] =
-    if (bloomFor.nonEmpty) bloomFor
-    else ManifestSink.derivedBloomCols(committed._1, committed._2)
 }
 
 /** The delta write: insert rows append through the ordinary staged
@@ -250,7 +246,10 @@ class ManifestDeltaBatchWrite(path: String, rowSchema: StructType,
     ManifestSink.withCommitLock(Paths.get(path)) {
       val root = Paths.get(path)
       val deltas = messages.map(_.asInstanceOf[StagedDeltaSet])
-      val liveGen = ManifestSink.liveGen(path)
+      // ONE live read under the lock: CAS generation, prior list lines,
+      // the table DDL and the publish's previous instant
+      val live = ManifestState.live(root)
+      val liveGen = ManifestSink.liveGenOf(path, live)
       if (liveGen != baseGen) throw new java.util.ConcurrentModificationException(
         s"concurrent commit on $path: this row-level delta was planned " +
           s"against generation $baseGen but the table is now at $liveGen — " +
@@ -259,7 +258,6 @@ class ManifestDeltaBatchWrite(path: String, rowSchema: StructType,
       val delFiles = deltas.iterator.flatMap(d =>
         d.delFile.map(f => (f, d.affected))).toSeq.sortBy(_._1)
       ManifestSink.moveStaged(root, inserts.map(_.name) ++ delFiles.map(_._1))
-      val rawPrior = ManifestSink.rawListLines(root)
       // scope each #pd: line to PRE-commit files only (this job's own
       // inserts are never affected — same rule as predicate tombstones)
       val posLines = delFiles.map { case (f, affected) =>
@@ -271,10 +269,10 @@ class ManifestDeltaBatchWrite(path: String, rowSchema: StructType,
           inserts.map(_.name) ++ inserts.map(_.statsLine)))
       // the published DDL stays the TABLE's schema (the prior head):
       // the delta's write schema is positional for its own files only
-      val ddl = ManifestSink.rawManifest(root).map(_._1)
-        .getOrElse(rowSchema.toDDL)
-      ManifestSink.publish(root, ddl +: ManifestSink.consolidateRefs(
-        root, rawPrior ++ posLines ++ segRef, s"$jobToken-m"))
+      ManifestSink.publish(root, live,
+        live.fold(rowSchema.toDDL)(_.ddl) +: ManifestSink.consolidateRefs(
+          root, live.fold(Seq.empty[String])(_.rawTail) ++ posLines ++ segRef,
+          s"$jobToken-m"))
     }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

@@ -42,13 +42,12 @@ class ManifestSink extends TableProvider {
   //
   // CONCURRENCY CONTRACT (single writer, snapshot readers): the manifest
   // swap is atomic, so any ONE read of manifest.json observes a complete
-  // committed job — but schema inference here and a later
-  // committedFiles() call are two separate reads, and a concurrent
-  // re-run landing between them can pair the old schema with the new
-  // file list. Readers that must be re-run-safe should take ONE
-  // manifest snapshot ([[ManifestSink.readCommitted]]) instead of
-  // inferSchema + committedFiles; the registry harness is
-  // single-process single-writer, where the two-read path is safe.
+  // committed job. Schema inference here and the scan's own manifest
+  // read are two reads, so a concurrent re-run landing between them can
+  // pair the old schema with the new file list. A reader that must be
+  // re-run-safe takes ONE [[ManifestState]] ([[ManifestSink.readCommitted]]
+  // does): its schema, files, tombstones, position deletes and aliases
+  // all come from that single read.
   override def supportsExternalMetadata(): Boolean = true
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     // the schema is the manifest's FIRST line — reading it alone keeps
@@ -320,33 +319,6 @@ object ManifestSink {
       else Seq(l)
     }
 
-  /** Fully resolved lines (DDL head + expanded tail) of a manifest
-    * file, or None if absent.
-    */
-  private[sources] def resolvedManifestLines(root: Path, m: Path): Option[Seq[String]] =
-    if (!Files.exists(m)) None
-    else {
-      val raw = Files.readAllLines(m).toArray(Array.empty[String]).toSeq
-      Some(raw.head +: resolveLines(root, raw.tail))
-    }
-
-  /** The RAW (unresolved) list tail of the live manifest — what commit
-    * paths carry forward so unchanged segments republish by reference.
-    */
-  private[sources] def rawListLines(root: Path): Seq[String] =
-    rawListLinesAt(root.resolve("manifest.json"))
-
-  /** The RAW (unresolved) list tail of an arbitrary manifest file — a
-    * BRANCH commit carries forward its branch HEAD's archived snapshot,
-    * not `manifest.json` (r19). An absent file reads as the empty table
-    * (legitimate for a first write); callers for whom absence means
-    * DAMAGE (a branch head, which vacuum anchors) must check existence
-    * and refuse loudly first — an empty prior would silently truncate.
-    */
-  private[sources] def rawListLinesAt(m: Path): Seq[String] =
-    if (!Files.exists(m)) Seq.empty
-    else Files.readAllLines(m).toArray(Array.empty[String]).toSeq.drop(1)
-
   /** SEGMENT-LIST CONSOLIDATION: a long-lived streaming table commits
     * one segment per epoch, so the manifest LIST itself grows O(commits)
     * and a cold driver parse reads one small file per historical commit.
@@ -434,62 +406,14 @@ object ManifestSink {
     s"$SegPrefix$name$envSuffix"
   }
 
-  /** (committed file names, their stats) from ONE live-manifest
-    * resolution — the row-level operations' shared read (code-review
-    * r17: each op was resolving the manifest 2-3 times for the
-    * parquet-require / bloom / layout derivations).
-    */
-  private[sources] def committedState(root: Path):
-      (Seq[String], Map[String, ManifestMeta.FileStats]) =
-    resolvedManifestLines(root, root.resolve("manifest.json")) match {
-      case None => (Seq.empty, Map.empty)
-      case Some(lines) =>
-        val p2c = ManifestEvolution.priorToCurrent(lines.tail)
-        (lines.tail.filterNot(_.startsWith("#")),
-          ManifestMeta.statsOf(lines.tail).map { case (n, fs) =>
-            n -> ManifestEvolution.remapStats(fs, p2c) })
-    }
-
-  /** Raw manifest lines: (schema DDL, committed file NAMES). One read =
-    * one consistent snapshot (the manifest swap is atomic; segments are
-    * immutable, so resolution can never tear).
-    */
-  private[sources] def rawManifest(root: Path): Option[(String, Seq[String])] =
-    resolvedManifestLines(root, root.resolve("manifest.json")).map { lines =>
-      // `#`-prefixed lines are ledger annotations (carried epoch ids
-      // after a compaction, stats, commit instants), never data files
-      (lines.head, lines.tail.filterNot(_.startsWith("#")))
-    }
-
-  /** Ledger annotation lines (`#e:<epoch>`, `#s:` stats) of the live
-    * manifest, segments resolved — how a compacted manifest keeps its
-    * epoch history after the epoch-prefixed file names are rewritten.
-    */
-  private[sources] def ledgerLines(root: Path): Seq[String] =
-    resolvedManifestLines(root, root.resolve("manifest.json"))
-      .map(_.tail.filter(_.startsWith("#"))).getOrElse(Seq.empty)
-
   /** Per-file stats (`#s:` lines) of the live manifest, keyed by bare
-    * file name — the zone-map tier [[ManifestMeta]] evaluates skipping
-    * against. Files without a stats line simply aren't in the map (and
-    * are never skipped).
+    * file name and remapped into the live column space — the zone-map
+    * tier [[ManifestMeta]] evaluates skipping against. Files without a
+    * stats line simply aren't in the map (and are never skipped).
     */
-  def fileStats(root: String): Map[String, ManifestMeta.FileStats] = {
-    val ledger = ledgerLines(Paths.get(root))
-    // stats were written under then-current names: remap into the live
-    // column space so purity/bloom/layout/key-bound consumers keep
-    // working across renames (r17 evolution)
-    val p2c = ManifestEvolution.priorToCurrent(ledger)
-    ManifestMeta.statsOf(ledger).map { case (n, fs) =>
-      n -> ManifestEvolution.remapStats(fs, p2c) }
-  }
+  def fileStats(root: String): Map[String, ManifestMeta.FileStats] =
+    ManifestState.live(root).map(_.stats).getOrElse(Map.empty)
 
-  /** Read a specific committed file set (absolute paths), dispatching
-    * per file on payload format — `.parquet` files go through Spark's
-    * vectorized parquet reader, everything else through the JSON-lines
-    * reader. A manifest table may legitimately hold BOTH (a format
-    * switch mid-history rewrites nothing).
-    */
   /** RENAMED COLUMNS (r17 evolution), the shared resolution for every
     * Spark-native by-name read: a live name absent from a pre-rename
     * file would read null, so the read schema widens with PRIOR-NAMED
@@ -520,46 +444,74 @@ object ManifestSink {
     } ++ extras.map(col)): _*)
   }
 
-  private[sources] def readDataFiles(spark: org.apache.spark.sql.SparkSession,
-      schema: StructType, files: Seq[String],
-      aliases: Map[String, Seq[String]] = Map.empty): org.apache.spark.sql.DataFrame = {
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val readSchema = aliasReadSchema(schema, aliases)
-    val (pq, js) = files.partition(_.endsWith(".parquet"))
-    val parts = Seq(
-      if (pq.nonEmpty)
-        Some(aliasResolved(spark.read.schema(readSchema).parquet(pq: _*),
-          schema, aliases))
-      else None,
-      if (js.nonEmpty)
-        Some(aliasResolved(spark.read.schema(readSchema).json(js: _*),
-          schema, aliases))
-      else None
-    ).flatten
-    parts.reduce(_.unionByName(_))
-  }
-
-  /** Delete-aware + POSITION-aware read (r17): files scoped by a
-    * position delete read with `_metadata.file_name`/`row_index` and
-    * anti-join against the delete files' (f, p) rows — fully
-    * distributed, the same physical-position contract as the connector
-    * readers. Predicate tombstones on those files compose via a
-    * per-file OR condition. Requires a parquet payload for affected
-    * files (JSON has no row index — the delta operation refuses
-    * non-parquet tables before one can exist).
+  /** Read `files` (absolute paths of `state`'s data files) the way
+    * `state` sees them, in its schema — the one data-file reader behind
+    * every rewrite, snapshot read and change window:
+    *
+    *   - per file on payload format: `.parquet` through Spark's
+    *     vectorized reader, everything else through the JSON-lines
+    *     reader (a format switch mid-history rewrites nothing);
+    *   - renamed columns resolve through the alias twins above;
+    *   - predicate TOMBSTONES: files group by their applicable
+    *     predicates and each group keeps the rows where no predicate is
+    *     TRUE (SQL DELETE semantics: keep on NOT TRUE); tombstone-free
+    *     files read in one plain group, so a table without tombstones
+    *     pays nothing;
+    *   - POSITION DELETES: the files they scope read with
+    *     `_metadata.file_name`/`row_index` and anti-join the delete
+    *     files' (f, p) rows, fully distributed; tombstones on those
+    *     files compose as a per-file OR. Those files must be parquet
+    *     (JSON has no row index — the delta operation refuses
+    *     non-parquet tables before a position delete can exist).
+    *
+    * A tombstone is semantics, not an optimization: an untranslatable
+    * predicate fails the read loudly — dropping it would resurrect
+    * deleted rows.
     */
   private[sources] def readDataFiles(spark: org.apache.spark.sql.SparkSession,
-      schema: StructType, files: Seq[String],
-      deletes: Map[String, Seq[org.apache.spark.sql.sources.Filter]],
-      posDels: Map[String, Seq[String]],
-      aliases: Map[String, Seq[String]]): org.apache.spark.sql.DataFrame = {
+      state: ManifestState, files: Seq[String]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    if (posDels.isEmpty) return readDataFiles(spark, schema, files, deletes, aliases)
+    val schema = state.schema
+    val aliases = state.aliases
+    val deletes = state.deletes
+    val posDels = state.posDeletes
     def nameOf(f: String): String = Paths.get(f).getFileName.toString
+    def predicate(p: org.apache.spark.sql.sources.Filter) =
+      filterToColumn(p).getOrElse(throw new IllegalStateException(
+        s"untranslatable tombstone predicate $p — refusing to read " +
+          "(dropping it would resurrect deleted rows)"))
+    def plain(fs: Seq[String]): DataFrame =
+      if (fs.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      else {
+        val readSchema = aliasReadSchema(schema, aliases)
+        val (pq, js) = fs.partition(_.endsWith(".parquet"))
+        Seq(
+          if (pq.nonEmpty)
+            Some(aliasResolved(spark.read.schema(readSchema).parquet(pq: _*),
+              schema, aliases))
+          else None,
+          if (js.nonEmpty)
+            Some(aliasResolved(spark.read.schema(readSchema).json(js: _*),
+              schema, aliases))
+          else None
+        ).flatten.reduce(_.unionByName(_))
+      }
+    // the empty-file guard fires BEFORE grouping: an insert-only MERGE
+    // on a table with standing tombstones has zero candidate files, and
+    // reducing zero groups would throw
+    def withTombstones(fs: Seq[String]): DataFrame =
+      if (deletes.isEmpty || fs.isEmpty) plain(fs)
+      else fs.groupBy(f => deletes.getOrElse(nameOf(f), Seq.empty)).iterator
+        .map { case (preds, group) =>
+          val base = plain(group)
+          if (preds.isEmpty) base
+          else base.filter(coalesce(not(preds.map(predicate).reduce(_ || _)), lit(true)))
+        }.reduce(_.unionByName(_))
+    if (posDels.isEmpty) return withTombstones(files)
     val (aff, clean) = files.partition(f => posDels.contains(nameOf(f)))
-    val cleanDf = readDataFiles(spark, schema, clean, deletes, aliases)
+    val cleanDf = withTombstones(clean)
     if (aff.isEmpty) return cleanDf
     require(aff.forall(_.endsWith(".parquet")),
       s"position deletes require a parquet payload; offending files: " +
@@ -568,7 +520,6 @@ object ManifestSink {
     val dels = spark.read.schema(ManifestPosDeletes.DeleteSchema)
       .parquet(delPaths: _*)
       .withColumnRenamed("f", "__df").withColumnRenamed("p", "__dp")
-    // renamed-column twins resolve the same way as the plain overload;
     // the provenance columns ride alongside until the join completes
     val raw = aliasResolved(
       spark.read.schema(aliasReadSchema(schema, aliases)).parquet(aff: _*)
@@ -577,122 +528,29 @@ object ManifestSink {
       schema, aliases, extras = Seq("__f", "__p"))
     val posKept = raw.join(dels,
       raw("__f") === dels("__df") && raw("__p") === dels("__dp"), "left_anti")
-    // predicate tombstones scoped to the affected files compose here:
     // a row dies if ANY applicable (file, predicate) pair is TRUE
     val affPreds = aff.map(nameOf).flatMap(n =>
       deletes.getOrElse(n, Seq.empty).map(p => (n, p)))
     val out =
       if (affPreds.isEmpty) posKept
-      else {
-        val cond = affPreds.map { case (n, p) =>
-          col("__f") === lit(n) && filterToColumn(p).getOrElse(
-            throw new IllegalStateException(
-              s"untranslatable tombstone predicate $p — refusing to read " +
-                "(dropping it would resurrect deleted rows)"))
-        }.reduce(_ || _)
-        posKept.filter(coalesce(not(cond), lit(true)))
-      }
+      else posKept.filter(coalesce(not(affPreds.map { case (n, p) =>
+        col("__f") === lit(n) && predicate(p) }.reduce(_ || _)), lit(true)))
     val survivors = out.drop("__f", "__p")
     if (clean.isEmpty) survivors else survivors.unionByName(cleanDf)
   }
 
-  /** Delete-aware variant: files group by their applicable tombstone
-    * predicates (keyed by bare name) and each group reads with the
-    * survivor filter applied — SQL DELETE semantics, keep on NOT TRUE.
-    * Tombstone-free files read in one plain group, so a table with no
-    * tombstones pays nothing.
-    */
-  private[sources] def readDataFiles(spark: org.apache.spark.sql.SparkSession,
-      schema: StructType, files: Seq[String],
-      deletes: Map[String, Seq[org.apache.spark.sql.sources.Filter]],
-      aliases: Map[String, Seq[String]]):
-      org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    // the empty-file guard must fire BEFORE grouping: an insert-only
-    // MERGE on a table with standing tombstones reaches here with zero
-    // candidate files but a non-empty deletes map, and reducing zero
-    // groups would throw (code-review r16)
-    if (deletes.isEmpty || files.isEmpty)
-      return readDataFiles(spark, schema, files, aliases)
-    val groups = files.groupBy(f =>
-      deletes.getOrElse(Paths.get(f).getFileName.toString, Seq.empty))
-    groups.iterator.map { case (preds, fs) =>
-      val base = readDataFiles(spark, schema, fs, aliases)
-      if (preds.isEmpty) base
-      else {
-        // a tombstone is SEMANTICS, not an optimization (ADVICE r16):
-        // an untranslatable predicate must fail the read loudly, never
-        // flatMap-drop — silent dropping would RESURRECT deleted rows
-        // in compaction / CoW merge / readCommitted
-        val cond = preds.map(p => filterToColumn(p).getOrElse(
-          throw new IllegalStateException(
-            s"untranslatable tombstone predicate $p — refusing to read " +
-              "(dropping it would resurrect deleted rows)")))
-          .reduce(_ || _)
-        // survivors: rows where NO applicable predicate is TRUE
-        base.filter(coalesce(not(cond), lit(true)))
-      }
-    }.reduce(_.unionByName(_))
-  }
-
-  /** Tombstones applicable to the live manifest (empty when none) —
-    * predicate references remapped into the live column space (r17
-    * evolution: a tombstone written before a RENAME names the prior
-    * column).
-    */
-  private[sources] def liveDeletes(root: Path):
-      Map[String, Seq[org.apache.spark.sql.sources.Filter]] = {
-    val lines = resolvedManifestLines(root, root.resolve("manifest.json"))
-      .getOrElse(return Map.empty)
-    val ts = ManifestDeletes.of(lines.tail)
-    if (ts.isEmpty) Map.empty
-    else {
-      val p2c = ManifestEvolution.priorToCurrent(lines.tail)
-      ManifestDeletes.byFile(
-        ts.map(t => t.copy(filter = ManifestEvolution.remapFilter(t.filter, p2c))),
-        lines.tail.filterNot(_.startsWith("#")))
-    }
-  }
-
-  /** live column → its prior names, from the live evolution ledger. */
-  private[sources] def liveAliases(root: Path): Map[String, Seq[String]] =
-    ManifestEvolution.currentToPriors(ledgerLines(root))
-
   /** Publish a metadata-only schema-evolution commit: the new DDL, the
-    * carried list tail, and the evolution ledger line — a numbered
+    * carried list tail, and the evolution ledger lines — a numbered
     * snapshot like any other commit (time travel before it sees the old
-    * names). Caller holds no lock; this takes the commit lock itself.
-    */
-  private[sources] def publishEvolution(root: Path, newSchema: StructType,
-      line: String): Unit = publishEvolution(root, newSchema, Seq(line))
-
-  /** Multi-line variant: a multi-change ALTER publishes ALL its ledger
-    * lines in ONE atomic snapshot swap, so a failure can never commit
-    * half the statement's evolution (code-review r18).
+    * names). A multi-change ALTER publishes ALL its lines in ONE atomic
+    * swap, so a failure can never commit half the statement's
+    * evolution. Caller holds no lock; this takes the commit lock itself.
     */
   private[sources] def publishEvolution(root: Path, newSchema: StructType,
       lines: Seq[String]): Unit = withCommitLock(root) {
-    require(Files.exists(root.resolve("manifest.json")),
-      s"no manifest at $root — nothing to evolve")
-    publish(root, (newSchema.toDDL +: rawListLines(root)) ++ lines)
-  }
-
-  /** Position deletes applicable to the live manifest: data-file name →
-    * FULL delete-file paths (r17).
-    */
-  private[sources] def livePosDeletes(root: Path): Map[String, Seq[String]] = {
-    val lines = resolvedManifestLines(root, root.resolve("manifest.json"))
-      .getOrElse(return Map.empty)
-    posDeletesOf(root, lines.tail)
-  }
-
-  private[sources] def posDeletesOf(root: Path,
-      tail: Seq[String]): Map[String, Seq[String]] = {
-    val pds = ManifestPosDeletes.of(tail)
-    if (pds.isEmpty) Map.empty
-    else ManifestPosDeletes.byFile(pds, tail.filterNot(_.startsWith("#")))
-      .map { case (n, dels) =>
-        n -> dels.map(d => root.resolve("data").resolve(d).toString) }
+    val live = ManifestState.live(root)
+    require(live.isDefined, s"no manifest at $root — nothing to evolve")
+    publish(root, live, (newSchema.toDDL +: live.get.rawTail) ++ lines)
   }
 
   /** MERGE-ON-READ DELETE (VERDICT r15 Next #5): publish a predicate
@@ -709,40 +567,29 @@ object ManifestSink {
     require(filters.forall(filterToColumn(_).isDefined),
       s"unsupported MoR delete predicate: ${filters.mkString(", ")}")
     withCommitLock(rootP) {
-      val (ddl, names) = rawManifest(rootP).getOrElse(
-        throw new IllegalArgumentException(s"no manifest at $root — nothing to delete"))
-      val stats = fileStats(root)
-      val types = StructType.fromDDL(ddl).fields.map(f => f.name -> f.dataType).toMap
-      val candidates = names.filter { n =>
-        stats.get(n).forall(fs =>
-          filters.forall(ManifestMeta.mayMatch(_, fs, types)))
-      }
+      val live = ManifestState.need(root, "nothing to delete")
+      val candidates = live.candidates(filters.toSeq)
       if (candidates.isEmpty) return false
       val cond = filters.toSeq.reduceOption(
         org.apache.spark.sql.sources.And(_, _))
         .getOrElse(org.apache.spark.sql.sources.AlwaysTrue())
       val line = ManifestDeletes.line(
         ManifestDeletes.Tombstone(candidates.toSet, cond))
-      publish(rootP, (ddl +: rawListLines(rootP)) :+ line)
+      publish(rootP, Some(live), live.lines :+ line)
       true
     }
   }
-
-  /** (schema, committed file paths) from `manifest.json`, if published. */
-  def readManifest(root: Path): Option[(StructType, Seq[String])] =
-    rawManifest(root).map { case (ddl, names) =>
-      (StructType.fromDDL(ddl),
-        names.map(f => root.resolve("data").resolve(f).toString))
-    }
 
   /** PUBLISH = the one linearization point every commit path shares:
     * write the manifest lines to a temp file, ATOMIC_MOVE over
     * `manifest.json`, and archive the same content as the next
     * `_snapshots/manifest-<gen>.json` — every commit (batch overwrite,
     * compaction, streaming epoch) is a numbered SNAPSHOT, which is what
-    * makes time travel and snapshot-retention vacuum possible.
+    * makes time travel and snapshot-retention vacuum possible. `live`
+    * is the live state the caller read under the commit lock.
     */
-  private[sources] def publish(root: Path, lines: Seq[String]): Long = {
+  private[sources] def publish(root: Path, live: Option[ManifestState],
+      lines: Seq[String]): Long = {
     // COMMIT TIMESTAMP (`#t:<millis>`): every published state carries
     // its commit instant, the ledger TIMESTAMP AS OF resolves against.
     // Strictly increasing along the main lineage by construction (a
@@ -751,8 +598,8 @@ object ManifestSink {
     // `#t:`/`#g:`/`#br:` carried in via prior-ledger lines is replaced,
     // never accumulated (a fast-forward republishes a BRANCH snapshot's
     // content onto main — its branch mark must not travel with it).
-    val prevTs = commitMillis(root.resolve("manifest.json"))
-    val ts = math.max(System.currentTimeMillis(), prevTs.getOrElse(0L) + 1L)
+    val ts = math.max(System.currentTimeMillis(),
+      live.flatMap(_.millis).getOrElse(0L) + 1L)
     // the generation is stamped INTO the state (`#g:<gen>`) so the live
     // manifest knows its own main-lineage position — with branch
     // commits interleaving in the global numbering (r19 branches),
@@ -820,15 +667,6 @@ object ManifestSink {
     */
   private[sources] val BranchMark = "#br:"
 
-  /** The `#g:` main-lineage generation a manifest file recorded for
-    * itself, if stamped (pre-branch manifests lack it — resolution
-    * falls back to the newest unmarked snapshot).
-    */
-  private[sources] def commitGen(m: Path): Option[Long] =
-    if (!Files.exists(m)) None
-    else Files.readAllLines(m).toArray(Array.empty[String]).toSeq
-      .find(_.startsWith("#g:")).flatMap(_.stripPrefix("#g:").toLongOption)
-
   /** Immutable-snapshot metadata cache: (isBranch, commit instant) per
     * absolute snapshot path. Snapshot manifests never change once
     * archived (the `_gen.hw` mark makes generation numbers
@@ -881,17 +719,11 @@ object ManifestSink {
     * anchoring main CAS to it would fail main DML spuriously (or pass
     * it wrongly).
     */
-  def liveGen(root: String): Long =
-    commitGen(Paths.get(root).resolve("manifest.json"))
-      .getOrElse(mainSnapshots(root).lastOption.getOrElse(0L))
+  def liveGen(root: String): Long = liveGenOf(root, ManifestState.live(root))
 
-  /** The `#t:` commit instant of a manifest file, if recorded (absent
-    * only for pre-r15 manifests — resolution falls back to file mtime).
-    */
-  private[sources] def commitMillis(m: Path): Option[Long] =
-    if (!Files.exists(m)) None
-    else Files.readAllLines(m).toArray(Array.empty[String]).toSeq
-      .find(_.startsWith("#t:")).flatMap(_.stripPrefix("#t:").toLongOption)
+  /** [[liveGen]] of an already-read live state. */
+  private[sources] def liveGenOf(root: String, live: Option[ManifestState]): Long =
+    live.flatMap(_.gen).getOrElse(mainSnapshots(root).lastOption.getOrElse(0L))
 
   /** (generation, commit millis) of every retained MAIN-lineage
     * snapshot, ascending — the TIMESTAMP AS OF resolution ledger.
@@ -930,62 +762,38 @@ object ManifestSink {
     * consistent historical state, same isolation as the live manifest.
     */
   def readSnapshot(spark: org.apache.spark.sql.SparkSession, root: String,
-      gen: Long): org.apache.spark.sql.DataFrame = {
-    val m = Paths.get(root).resolve("_snapshots").resolve(s"manifest-$gen.json")
-    val lines = resolvedManifestLines(Paths.get(root), m)
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot $gen of $root does not exist (expired or never published); " +
-          s"available: ${snapshots(root).mkString(",")}"))
-    val schema = StructType.fromDDL(lines.head)
-    val names = lines.tail.filterNot(_.startsWith("#"))
-    val files = names.map(f => Paths.get(root).resolve("data").resolve(f).toString)
+      gen: Long): org.apache.spark.sql.DataFrame =
     // a snapshot carries the tombstones, position deletes AND evolution
     // ledger published AT its generation — an as-of read before a MoR
     // delete sees the rows, before a RENAME sees the old names
-    val p2c = ManifestEvolution.priorToCurrent(lines.tail)
-    readDataFiles(spark, schema, files,
-      ManifestDeletes.byFile(ManifestDeletes.of(lines.tail).map(t =>
-        t.copy(filter = ManifestEvolution.remapFilter(t.filter, p2c))), names),
-      posDeletesOf(Paths.get(root), lines.tail),
-      ManifestEvolution.currentToPriors(lines.tail))
-  }
+    ManifestState.at(Paths.get(root), gen).getOrElse(
+      throw new IllegalArgumentException(
+        s"snapshot $gen of $root does not exist (expired or never published); " +
+          s"available: ${snapshots(root).mkString(",")}")).read(spark)
 
   /** Epoch ids already published to the streaming manifest — parsed from
-    * the `e<epoch>-` file-name prefix the streaming writer stamps, so
-    * idempotent re-commit needs no side ledger.
+    * the `e<epoch>-` file-name prefix the streaming writer stamps, plus
+    * the `#e:` lines that carry them through a compaction, so idempotent
+    * re-commit needs no side ledger.
     */
-  def committedEpochs(root: String): Set[Long] = {
-    val fromNames = rawManifest(Paths.get(root)).map(_._2).getOrElse(Seq.empty)
-      .flatMap { n =>
-        if (n.startsWith("e")) n.drop(1).takeWhile(_ != '-').toLongOption
-        else None
-      }
-    // plus epochs carried through a compaction as `#e:` ledger lines —
-    // replay detection must survive the file names being rewritten
-    val fromLedger = ledgerLines(Paths.get(root))
-      .flatMap(l => l.stripPrefix("#e:").toLongOption)
-    (fromNames ++ fromLedger).toSet
-  }
+  def committedEpochs(root: String): Set[Long] =
+    ManifestState.live(root).map(_.epochs).getOrElse(Set.empty)
 
   /** The committed file list for `spark.read.json` — reading through the
     * manifest is what makes orphaned staging data invisible.
     */
   def committedFiles(root: String): Seq[String] =
-    readManifest(Paths.get(root)).map(_._2).getOrElse(Seq.empty)
+    ManifestState.live(root).map(_.files).getOrElse(Seq.empty)
 
-  /** Snapshot read: schema AND file list from ONE manifest read, so a
-    * concurrent re-run's atomic manifest swap can never pair an old
-    * schema with a new file list (VERDICT r12 "what's wrong" #2 —
-    * the re-run-safe reader entry point).
+  /** Snapshot read: schema, files, tombstones, position deletes and
+    * aliases from ONE manifest read, so a concurrent commit's atomic
+    * swap can never pair one state's files with another's deletes (a
+    * compaction landing mid-read folds the tombstones into new files
+    * while the old ones stay on disk until vacuum).
     */
   def readCommitted(spark: org.apache.spark.sql.SparkSession,
-      root: String): org.apache.spark.sql.DataFrame = {
-    val (schema, files) = readManifest(Paths.get(root))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no manifest at $root — write before reading"))
-    readDataFiles(spark, schema, files, liveDeletes(Paths.get(root)),
-      livePosDeletes(Paths.get(root)), liveAliases(Paths.get(root)))
-  }
+      root: String): org.apache.spark.sql.DataFrame =
+    ManifestState.need(root, "write before reading").read(spark)
 
   /** LAKE MAINTENANCE — manifest compaction (VERDICT r13 Next #4): the
     * 100 TB small-file story the sink's own commit protocol motivates.
@@ -1021,17 +829,12 @@ object ManifestSink {
   def compact(spark: org.apache.spark.sql.SparkSession, root: String,
       targetFiles: Int = 1, partitionBy: Seq[String] = Seq.empty,
       orderBy: Seq[String] = Seq.empty, targetFileBytes: Long = 0L): Unit = {
-    val rootP = Paths.get(root)
-    // CAS base: a commit landing while the compaction job rewrites
-    // (e.g. a streaming epoch) must FAIL this compaction loudly —
-    // silently publishing would drop the interleaved epoch's rows
-    val baseGen = liveGen(root)
-    val (schema, files) = readManifest(rootP)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no manifest at $root — nothing to compact"))
-    val names = rawManifest(rootP).map(_._2).getOrElse(Seq.empty)
-    val deletes = liveDeletes(rootP)
-    val posDels = livePosDeletes(rootP)
+    // ONE state: the CAS base is the generation its files were read at,
+    // so a commit landing while the job rewrites (e.g. a streaming
+    // epoch) fails this compaction loudly instead of dropping its rows
+    val st = ManifestState.need(root, "nothing to compact")
+    val baseGen = liveGenOf(root, Some(st))
+    val names = st.names
     // no-op checks (idempotent re-run after crash-and-retry converges):
     // plain tables are compact at <= targetFiles; a PARTITION-PRESERVING
     // compaction is done when every file is partition-pure and every
@@ -1041,12 +844,11 @@ object ManifestSink {
     // and so does a live EVOLUTION LEDGER (r17): materializing renamed/
     // dropped columns under live names is what clears the ledger's
     // name reservations and restores the columnar read path.
-    val evoLive = ledgerLines(rootP).exists(ManifestEvolution.isLine)
+    val folds = st.deletes.nonEmpty || st.posDeletes.nonEmpty || st.evolutionLive
     if (partitionBy.isEmpty) {
-      if (files.size <= targetFiles && deletes.isEmpty && posDels.isEmpty &&
-        !evoLive) return
-    } else if (deletes.isEmpty && posDels.isEmpty && !evoLive) {
-      val stats = fileStats(root)
+      if (names.size <= targetFiles && !folds) return
+    } else if (!folds) {
+      val stats = st.stats
       // partition entries may be transform specs (r19): purity is the
       // verified single TRANSFORM value per file, and the sort claim
       // names the SOURCE columns
@@ -1063,7 +865,6 @@ object ManifestSink {
       if (sortedOk && keys.forall(_.isDefined) &&
           keys.flatten.distinct.length == keys.length) return
     }
-    val epochs = committedEpochs(root)
     // standing tombstones AND position deletes FOLD here: the rewrite
     // reads survivors only, and the replace commit publishes a
     // delete-free manifest (the delete files orphan, vacuum reclaims)
@@ -1071,36 +872,31 @@ object ManifestSink {
     // prior-named cells into the live schema, the rewrite stores live
     // names, and the replace commit drops the evolution ledger — a
     // compaction clears every rename/drop reservation (spec-pinned)
-    val df = readDataFiles(spark, schema, files, deletes, posDels,
-      liveAliases(rootP))
-    // format-preserving: an all-parquet table compacts to parquet
-    val fmt = if (files.forall(_.endsWith(".parquet"))) "parquet" else "json"
+    val df = st.read(spark)
     // partition-preserving: the rewrite flows through the same clustered
     // write + per-value file roll as any partitioned INSERT, so the
     // compacted table keeps the purity its KeyGroupedPartitioning /
-    // reported-ordering claims stand on (plain tables just coalesce)
-    val base =
-      if (partitionBy.nonEmpty) df
-      else df.coalesce(targetFiles)
-    // a rewrite must not strip the table's point-lookup skipping: the
-    // columns every current file blooms re-opt-in (code-review r16)
-    val rawNames = rawManifest(rootP).map(_._2).getOrElse(Seq.empty)
-    val bloomCols = derivedBloomCols(rawNames, fileStats(root))
-    val w0 = base.write.format("graft.sources.ManifestSink")
-      .mode("overwrite").option("path", root).option("format", fmt)
-      .option("expectedGen", baseGen.toString)
-    val w1 = if (partitionBy.nonEmpty)
-      w0.option("partitionBy", partitionBy.mkString(","))
-        .option("orderBy", orderBy.mkString(","))
-    else w0
-    val w2 = if (bloomCols.nonEmpty)
-      w1.option("bloomFor", bloomCols.mkString(",")) else w1
-    val w3 = if (targetFileBytes > 0L)
-      w2.option("targetFileBytes", targetFileBytes.toString) else w2
-    (if (epochs.nonEmpty)
-       w3.option("carryEpochs", epochs.toSeq.sorted.mkString(","))
-     else w3).save()
+    // reported-ordering claims stand on (plain tables just coalesce).
+    // The rewrite keeps the format, the blooms every file carries and
+    // the streaming epochs.
+    (if (partitionBy.nonEmpty) df else df.coalesce(targetFiles))
+      .write.format("graft.sources.ManifestSink").mode("overwrite")
+      .options(writeOptions(
+        "path" -> root, "format" -> st.format,
+        "expectedGen" -> baseGen.toString,
+        "partitionBy" -> partitionBy.mkString(","),
+        "orderBy" -> (if (partitionBy.nonEmpty) orderBy.mkString(",") else ""),
+        "bloomFor" -> st.bloomCols.mkString(","),
+        "targetFileBytes" -> (if (targetFileBytes > 0L) targetFileBytes.toString else ""),
+        "carryEpochs" -> st.epochs.toSeq.sorted.mkString(",")))
+      .save()
   }
+
+  /** Writer options with the empty values dropped: a rewrite passes
+    * only the layout keys it keeps.
+    */
+  private[sources] def writeOptions(kv: (String, String)*): Map[String, String] =
+    kv.filter(_._2.nonEmpty).toMap
 
   /** DATA-RECLUSTERING REWRITE (VERDICT r17 Next #2): the Iceberg
     * `rewrite_data_files(sort_order => ...)` shape — change the LAYOUT
@@ -1154,24 +950,19 @@ object ManifestSink {
     require(orderBy.nonEmpty ^ zorderBy.nonEmpty,
       "rewrite wants exactly one of order_by / zorder")
     require(targetFiles >= 1, s"target_files must be >= 1 (got $targetFiles)")
-    val rootP = Paths.get(root)
-    val baseGen = liveGen(root)
-    val (schema, files) = readManifest(rootP)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no manifest at $root — nothing to rewrite"))
-    val names = rawManifest(rootP).map(_._2).getOrElse(Seq.empty)
-    val stats = fileStats(root)
-    val deletes = liveDeletes(rootP)
-    val posDels = livePosDeletes(rootP)
-    val evoLive = ledgerLines(rootP).exists(ManifestEvolution.isLine)
+    val st = ManifestState.need(root, "nothing to rewrite")
+    val baseGen = liveGenOf(root, Some(st))
+    val schema = st.schema
+    val names = st.names
+    val stats = st.stats
     (orderBy ++ zorderBy).foreach(c => require(schema.fieldNames.contains(c),
       s"unknown rewrite column $c — schema: ${schema.fieldNames.mkString(",")}"))
     // idempotent no-op (orderBy arm): every file already claims the
     // asked order, the file count is at target, and nothing needs
     // folding — a crash-and-retry converges. The z-order arm has no
     // recorded claim to check, so an explicit z-rewrite always runs.
-    if (orderBy.nonEmpty && deletes.isEmpty && posDels.isEmpty && !evoLive &&
-        files.size <= targetFiles && names.nonEmpty &&
+    if (orderBy.nonEmpty && st.deletes.isEmpty && st.posDeletes.isEmpty &&
+        !st.evolutionLive && names.size <= targetFiles && names.nonEmpty &&
         names.forall(n => stats.get(n).exists(_.sorted.startsWith(orderBy))))
       return
     // PARTITIONED-TABLE GUARD in the API itself (ADVICE r18): the CALL
@@ -1184,7 +975,7 @@ object ManifestSink {
     // handle — and it sits AFTER the no-op check, so a crash-retry on
     // an already-satisfied rewrite still converges cleanly even when
     // tiny output files happen to be single-key.
-    val derivedParts = derivedLayout(names, stats, schema)._1
+    val derivedParts = st.layout._1
     require(derivedParts.isEmpty || allowClaimDemotion,
       s"table at $root carries partition-pure files on " +
         s"${derivedParts.mkString(",")} — a global rewrite would demote " +
@@ -1192,11 +983,7 @@ object ManifestSink {
         "partition-scoped rewritePartitioned(...) instead, or pass " +
         "allowClaimDemotion=true if the purity is incidental (e.g. a " +
         "previous one-file-per-value range sort on an unpartitioned table)")
-    val df = readDataFiles(spark, schema, files, deletes, posDels,
-      liveAliases(rootP))
-    val fmt = if (files.forall(_.endsWith(".parquet"))) "parquet" else "json"
-    val bloomCols = derivedBloomCols(names, stats)
-    val epochs = committedEpochs(root)
+    val df = st.read(spark)
 
     val (arranged, claim) =
       if (orderBy.nonEmpty)
@@ -1210,15 +997,14 @@ object ManifestSink {
           .drop("__z"), Seq.empty[String])
       }
 
-    val w0 = arranged.write.format("graft.sources.ManifestSink")
-      .mode("overwrite").option("path", root).option("format", fmt)
-      .option("expectedGen", baseGen.toString)
-    val w1 = if (claim.nonEmpty) w0.option("orderBy", claim.mkString(",")) else w0
-    val w2 = if (bloomCols.nonEmpty)
-      w1.option("bloomFor", bloomCols.mkString(",")) else w1
-    (if (epochs.nonEmpty)
-       w2.option("carryEpochs", epochs.toSeq.sorted.mkString(","))
-     else w2).save()
+    arranged.write.format("graft.sources.ManifestSink").mode("overwrite")
+      .options(writeOptions(
+        "path" -> root, "format" -> st.format,
+        "expectedGen" -> baseGen.toString,
+        "orderBy" -> claim.mkString(","),
+        "bloomFor" -> st.bloomCols.mkString(","),
+        "carryEpochs" -> st.epochs.toSeq.sorted.mkString(",")))
+      .save()
   }
 
   private def anyToLong(v: Any): Long = v match {
@@ -1370,7 +1156,6 @@ object ManifestSink {
         s"rewritePartitioned cannot certify progress under ${t.render} " +
           "(hash-scattered values have no verifiable purity) — use " +
           "compact() on bucket-partitioned tables"))
-    val rootP = Paths.get(root)
     var commits = 0
     var rewrittenGroups = 0
     var groupsTotal = -1
@@ -1387,9 +1172,8 @@ object ManifestSink {
     var done = false
     while (!done) {
       withCommitRetry() {
-        val (schema, _) = readManifest(rootP).getOrElse(
-          throw new IllegalArgumentException(
-            s"no manifest at $root — nothing to rewrite"))
+        val st = ManifestState.need(root, "nothing to rewrite")
+        val schema = st.schema
         // partition entries may be transform specs (r19); data-frame
         // operations run on their SOURCE columns
         val partSpecs = partitionBy.map(PartitionTransforms.parse)
@@ -1398,13 +1182,12 @@ object ManifestSink {
           .foreach(c => require(schema.fieldNames.contains(c),
             s"unknown rewrite column $c — schema: " +
               schema.fieldNames.mkString(",")))
-        val baseGen = liveGen(root)
-        val names = rawManifest(rootP).map(_._2).getOrElse(Seq.empty)
-        val stats = fileStats(root)
+        val baseGen = liveGenOf(root, Some(st))
+        val names = st.names
+        val stats = st.stats
         val types = schema.fields.map(f => f.name -> f.dataType).toMap
-        val deletes = liveDeletes(rootP)
-        val posDels = livePosDeletes(rootP)
-        val aliases = liveAliases(rootP)
+        val deletes = st.deletes
+        val posDels = st.posDeletes
 
         def pureKey(n: String): Option[Seq[Any]] = stats.get(n).flatMap(fs =>
           PartitionTransforms.pureTuple(partSpecs, fs.cols.get))
@@ -1493,13 +1276,8 @@ object ManifestSink {
         if (pending.isEmpty) done = true
         else {
           val batchNames = pending.flatMap(_.files)
-          val batchPaths = batchNames.map(n =>
-            rootP.resolve("data").resolve(n).toString)
-          val df = readDataFiles(spark, schema, batchPaths, deletes,
-            posDels, aliases)
-          val fmt = derivedFormat(names)
-          val blm = derivedBloomCols(names, stats)
-          val w0 =
+          val df = readDataFiles(spark, st, batchNames.map(st.dataPath))
+          val arranged =
             if (orderBy.nonEmpty) {
               // pre-cluster by the TRANSFORM value, not the source: a
               // day's rows scatter across source-clustered tasks (many
@@ -1520,10 +1298,6 @@ object ManifestSink {
                 .sortWithinPartitions(
                   (pNames.map(col) ++ orderBy.map(col)): _*)
                 .drop(pNames: _*)
-                .write.format("graft.sources.ManifestSink")
-                .option("partitionBy", partitionBy.mkString(","))
-                .option("layoutProvided", "true")
-                .option("sortedClaim", orderBy.mkString(","))
             } else {
               val zk = mortonColumn(zorderBy, schema,
                 zBoundsOf(df, batchNames, stats, zorderBy))
@@ -1531,24 +1305,26 @@ object ManifestSink {
                 .repartition(partSources.map(col): _*)
                 .sortWithinPartitions((partSources.map(col) :+ col("__z")): _*)
                 .drop("__z")
-                .write.format("graft.sources.ManifestSink")
-                .option("partitionBy", partitionBy.mkString(","))
-                .option("layoutProvided", "true")
-                .option("zorderClaim", zorderBy.mkString(","))
             }
-          val w1 = w0.mode("append").option("path", root)
-            .option("format", fmt)
-            .option("expectedGen", baseGen.toString)
-            .option("replaceFiles", batchNames.mkString(","))
-          val w2 = if (blm.nonEmpty)
-            w1.option("bloomFor", blm.mkString(",")) else w1
-          (if (targetFileBytes > 0L)
-             w2.option("targetFileBytes", targetFileBytes.toString)
-           else w2).save()
+          // exactly one of orderBy / zorderBy is set: the other claim
+          // option drops out empty
+          arranged.write.format("graft.sources.ManifestSink").mode("append")
+            .options(writeOptions(
+              "path" -> root, "format" -> st.format,
+              "expectedGen" -> baseGen.toString,
+              "replaceFiles" -> batchNames.mkString(","),
+              "partitionBy" -> partitionBy.mkString(","),
+              "layoutProvided" -> "true",
+              "sortedClaim" -> orderBy.mkString(","),
+              "zorderClaim" -> zorderBy.mkString(","),
+              "bloomFor" -> st.bloomCols.mkString(","),
+              "targetFileBytes" ->
+                (if (targetFileBytes > 0L) targetFileBytes.toString else "")))
+            .save()
           // names this commit added = the batch's successors: feeds the
           // selfProduced termination backstop
-          val postNames = rawManifest(rootP).map(_._2).getOrElse(Seq.empty)
-          produced ++= postNames.filterNot(names.toSet)
+          produced ++= ManifestState.live(root).fold(Seq.empty[String])(_.names)
+            .filterNot(names.toSet)
           commits += 1
           rewrittenGroups += pending.size
           processed ++= pending.map(_.id)
@@ -1809,9 +1585,8 @@ object ManifestSink {
           s"head $expectedHead but the branch is now at ${br.gen}")
     // branch instants advance monotonically ALONG THE BRANCH (main's
     // ledger never resolves them, so cross-lineage ordering is free)
-    val prevTs = commitMillis(
-      root.resolve("_snapshots").resolve(s"manifest-${br.gen}.json"))
-    val ts = math.max(System.currentTimeMillis(), prevTs.getOrElse(0L) + 1L)
+    val ts = math.max(System.currentTimeMillis(),
+      ManifestState.at(root, br.gen).flatMap(_.millis).getOrElse(0L) + 1L)
     val gen = nextGen(root)
     val stamped = lines.filterNot(l => l.startsWith("#t:") ||
       l.startsWith("#g:") || l.startsWith(BranchMark)) :+
@@ -1847,18 +1622,19 @@ object ManifestSink {
         throw new IllegalArgumentException(
           s"no branch named $name on $root — branches: " +
             branches(root).map(b => s"${b.name}->${b.gen}").mkString(",")))
-      val mainG = liveGen(root)
+      val live = ManifestState.live(rootP)
+      val mainG = liveGenOf(root, live)
       if (br.gen == br.base) return mainG // nothing committed to the branch
       require(mainG == br.base,
         s"cannot fast-forward $root to branch $name: main is at " +
           s"generation $mainG but the branch forked from ${br.base} — " +
           "main diverged; drop_branch and re-branch from the current " +
           "state (publishing would drop main's interleaved commits)")
-      val head = rootP.resolve("_snapshots").resolve(s"manifest-${br.gen}.json")
-      val raw = Files.readAllLines(head).toArray(Array.empty[String]).toSeq
-      require(raw.nonEmpty, s"branch $name head snapshot ${br.gen} is empty")
+      val head = ManifestState.at(rootP, br.gen).getOrElse(
+        throw new IllegalStateException(
+          s"branch $name head snapshot ${br.gen} is missing or empty"))
       // publish() strips the branch mark + stamps; segments carry by ref
-      val newGen = publish(rootP, raw)
+      val newGen = publish(rootP, live, head.lines)
       // the branch's state now EQUALS main's: re-anchor head AND base to
       // the published generation, so re-running fast_forward is a no-op
       // and further branch commits build on the published snapshot
@@ -1884,7 +1660,8 @@ object ManifestSink {
   def rollback(root: String, target: Long): Long =
     withCommitLock(Paths.get(root)) {
       val rootP = Paths.get(root)
-      val cur = liveGen(root)
+      val live = ManifestState.live(rootP)
+      val cur = liveGenOf(root, live)
       if (target == cur) return cur
       val retainedMain = mainSnapshots(root)
       if (!retainedMain.contains(target)) {
@@ -1898,9 +1675,8 @@ object ManifestSink {
             s"main-lineage generations: ${retainedMain.mkString(",")}" +
             branchHint)
       }
-      val snap = rootP.resolve("_snapshots").resolve(s"manifest-$target.json")
-      val raw = Files.readAllLines(snap).toArray(Array.empty[String]).toSeq
-      require(raw.nonEmpty, s"snapshot $target of $root is empty")
+      val snap = ManifestState.at(rootP, target)
+      require(snap.isDefined, s"snapshot $target of $root is empty")
       // SCHEMA GUARD: republishing a pre-evolution snapshot would
       // un-evolve the live schema and resurrect a cleared rename/drop
       // ledger — every reader fixed at the live schema (and the CDC
@@ -1909,21 +1685,17 @@ object ManifestSink {
       // Names + types only: the recorded DDL's NULLABILITY legitimately
       // drifts between write paths (DataFrame-inferred NOT NULL vs the
       // table-declared nullable) without any user-visible evolution.
-      val live = Files.readAllLines(rootP.resolve("manifest.json"))
-        .toArray(Array.empty[String]).toSeq
-      def shape(lines: Seq[String]): Seq[(String, org.apache.spark.sql
-          .types.DataType)] =
-        lines.headOption.toSeq.flatMap(ddl => org.apache.spark.sql.types
-          .StructType.fromDDL(ddl).fields.map(f => (f.name, f.dataType)))
-      require(shape(raw) == shape(live) &&
-        raw.filter(ManifestEvolution.isLine).toSet ==
-          live.filter(ManifestEvolution.isLine).toSet,
+      def shape(st: Option[ManifestState]): Seq[(String, DataType)] =
+        st.toSeq.flatMap(_.schema.fields.map(f => (f.name, f.dataType)))
+      def evolution(st: Option[ManifestState]): Set[String] =
+        st.toSeq.flatMap(_.rawTail.filter(ManifestEvolution.isLine)).toSet
+      require(shape(snap) == shape(live) && evolution(snap) == evolution(live),
         s"cannot roll back $root to generation $target — the table's " +
           "schema or rename/drop ledger changed since that snapshot; " +
           "rollback republishes DATA state only. Recreate the prior " +
           "schema with ALTER TABLE first, or read the old state via " +
           s"VERSION AS OF $target")
-      publish(rootP, raw)
+      publish(rootP, live, snap.get.lines)
     }
 
   /** Snapshot-retention vacuum (the Iceberg `expire_snapshots` +
@@ -1953,29 +1725,24 @@ object ManifestSink {
     // branch the global takeRight window can be all branch commits, and
     // expiring main's own head snapshot would break the CDC feed and
     // default tagging while the table itself reads fine (r19 branches)
+    val live = ManifestState.live(rootP)
     val anchored = (tags(root).map(_._2) ++ branches(root).map(_.gen)).toSet +
-      liveGen(root)
+      liveGenOf(root, live)
     val retained = gens.takeRight(math.max(1, retainSnapshots)).toSet ++
       anchored.filter(gens.contains)
     val snapsDir = rootP.resolve("_snapshots")
     // retained states resolve segments: their data files stay live, and
     // so do the SEGMENT files they reference (segments expire with the
     // snapshots that reference them — the manifest-list retention rule)
-    val retainedManifests = rootP.resolve("manifest.json") +:
-      gens.filter(retained).map(g => snapsDir.resolve(s"manifest-$g.json"))
-    val live = retainedManifests.flatMap { m =>
-      resolvedManifestLines(rootP, m).map { lines =>
-        // data files named by the state, plus the position-DELETE files
-        // its `#pd:` lines reference (they live under data/ too — r17)
-        lines.tail.filterNot(_.startsWith("#")) ++
-          ManifestPosDeletes.of(lines.tail).map(_.delFile)
-      }.getOrElse(Seq.empty)
-    }.map(p => Paths.get(p).getFileName.toString).toSet
-    val liveSegs = retainedManifests.flatMap { m =>
-      if (!Files.exists(m)) Seq.empty
-      else Files.readAllLines(m).toArray(Array.empty[String]).toSeq
-        .filter(_.startsWith(SegPrefix)).map(segRefName)
-    }.toSet
+    val states = live.toSeq ++
+      gens.filter(retained).flatMap(ManifestState.at(rootP, _))
+    // data files named by a state, plus the position-DELETE files its
+    // `#pd:` lines reference (they live under data/ too — r17)
+    val liveFiles = states.flatMap(st =>
+      st.names ++ st.posDeleteLines.map(_.delFile))
+      .map(p => Paths.get(p).getFileName.toString).toSet
+    val liveSegs = states.flatMap(_.rawTail.filter(_.startsWith(SegPrefix))
+      .map(segRefName)).toSet
     // expire the non-retained snapshot manifests FIRST: a reader can
     // then never resolve a snapshot whose files this pass deletes
     gens.filterNot(retained).foreach { g =>
@@ -1996,7 +1763,7 @@ object ManifestSink {
       orphans.length
     }
     deleteOrphans(rootP.resolve("_segments"), liveSegs.contains)
-    deleteOrphans(rootP.resolve("data"), live.contains)
+    deleteOrphans(rootP.resolve("data"), liveFiles.contains)
   }
 
   /** ABANDONED-STAGING SWEEP (the Iceberg `remove_orphan_files` shape,
@@ -2057,12 +1824,10 @@ object ManifestSink {
   def merge(spark: org.apache.spark.sql.SparkSession, root: String,
       updates: org.apache.spark.sql.DataFrame, keyCols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.{broadcast, col, max, min}
-    val rootP = Paths.get(root)
-    val baseGen = liveGen(root)
-    val (schema, _) = readManifest(rootP).getOrElse(
-      throw new IllegalArgumentException(s"no manifest at $root — nothing to merge"))
-    val names = rawManifest(rootP).map(_._2).getOrElse(Seq.empty)
-    val stats = fileStats(root)
+    val st = ManifestState.need(root, "nothing to merge")
+    val baseGen = liveGenOf(root, Some(st))
+    val schema = st.schema
+    val stats = st.stats
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     // update-key envelope: one row of (min, max) per key column
     val aggs = keyCols.flatMap(k =>
@@ -2080,87 +1845,33 @@ object ManifestSink {
             fs, types)
       }
     }
-    val candidates = names.filter(mayHoldKey)
-    val candPaths = candidates.map(n =>
-      rootP.resolve("data").resolve(n).toString)
+    val candidates = st.names.filter(mayHoldKey)
     // standing MoR tombstones AND position deletes apply to the
     // candidate read — a merge must not resurrect deleted rows
-    val survivors = readDataFiles(spark, schema, candPaths, liveDeletes(rootP),
-        livePosDeletes(rootP), liveAliases(rootP))
+    val survivors = readDataFiles(spark, st, candidates.map(st.dataPath))
       .join(
         broadcast(updates.select(keyCols.map(col): _*).distinct()),
         keyCols, "left_anti")
-    // the using-columns join moves key columns first: restore the
-    // table's declared column order before republishing, or the merged
-    // manifest's DDL would silently permute the schema
-    val w0 = survivors.unionByName(updates)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      .write.format("graft.sources.ManifestSink")
-      .mode("append").option("path", root)
-      .option("expectedGen", baseGen.toString)
     // LAYOUT-PRESERVING rewrite (ADVICE r15): replacement files must
     // keep the table's payload format and partition/sort layout, or one
     // selective MERGE silently demotes a partitioned parquet table to
     // unsorted JSON and drops its KeyGroupedPartitioning claim. The
     // layout is DERIVED from the committed state itself (names + stats),
     // so the helper needs no catalog handle.
-    val fmt = derivedFormat(names)
-    val allStats = ManifestSink.fileStats(root)
-    val (pBy, oBy) = derivedLayout(names, allStats, schema)
-    val bloomCols = derivedBloomCols(names, allStats)
-    val w1 = w0.option("format", fmt)
-    val w2 = if (pBy.nonEmpty) w1.option("partitionBy", pBy.mkString(",")) else w1
-    val w3 = if (oBy.nonEmpty) w2.option("orderBy", oBy.mkString(",")) else w2
-    val w4 = if (bloomCols.nonEmpty)
-      w3.option("bloomFor", bloomCols.mkString(",")) else w3
-    (if (candidates.nonEmpty)
-       w4.option("replaceFiles", candidates.mkString(","))
-     else w4).save()
-  }
-
-  /** Payload format a rewrite should use: parquet when every committed
-    * file is parquet, else the inspectable JSON default (a mixed-format
-    * table stays readable either way — the reader dispatches per file).
-    */
-  private[sources] def derivedFormat(names: Seq[String]): String =
-    if (names.nonEmpty && names.forall(_.endsWith(".parquet"))) "parquet"
-    else "json"
-
-  /** Bloom columns a rewrite should re-opt-in: the columns every
-    * committed file recorded a bloom for — a compaction or CoW rewrite
-    * must not silently strip the table's point-lookup skipping
-    * (code-review r16: rewrites were dropping blooms with no warning).
-    */
-  private[sources] def derivedBloomCols(names: Seq[String],
-      stats: Map[String, ManifestMeta.FileStats]): Seq[String] = {
-    if (names.isEmpty || !names.forall(stats.contains)) return Seq.empty
-    val fss = names.map(stats)
-    fss.head.cols.keys.toSeq.sorted.filter(c =>
-      fss.forall(_.cols.get(c).exists(_.bloom.isDefined)))
-  }
-
-  /** (partitionBy, orderBy) a rewrite should redeclare, derived from the
-    * committed files' OWN stats claims: the common `sorted` prefix every
-    * file agrees on, split at the purity boundary — a sort column on
-    * which every file is partition-pure (null-free, min==max) was a
-    * partition/cluster key of the original write; the rest is in-file
-    * ordering. Files without stats (or with no common claim) derive an
-    * empty layout — the rewrite is then exactly as unordered as the
-    * table already was.
-    */
-  private[sources] def derivedLayout(names: Seq[String],
-      stats: Map[String, ManifestMeta.FileStats],
-      schema: StructType): (Seq[String], Seq[String]) = {
-    if (names.isEmpty || !names.forall(stats.contains)) return (Seq.empty, Seq.empty)
-    val fss = names.map(stats)
-    val common = fss.map(_.sorted).reduce { (a, b) =>
-      a.zip(b).takeWhile { case (x, y) => x == y }.map(_._1)
-    }.filter(schema.fieldNames.contains)
-    def pureEverywhere(c: String): Boolean = fss.forall(fs =>
-      fs.cols.get(c).exists(s =>
-        s.nulls == 0L && s.min.isDefined && s.min == s.max))
-    val pBy = common.takeWhile(pureEverywhere)
-    (pBy, common.drop(pBy.length))
+    val (pBy, oBy) = st.layout
+    // the using-columns join moves key columns first: restore the
+    // table's declared column order before republishing, or the merged
+    // manifest's DDL would silently permute the schema
+    survivors.unionByName(updates)
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+      .write.format("graft.sources.ManifestSink").mode("append")
+      .options(writeOptions(
+        "path" -> root, "format" -> st.format,
+        "expectedGen" -> baseGen.toString,
+        "partitionBy" -> pBy.mkString(","), "orderBy" -> oBy.mkString(","),
+        "bloomFor" -> st.bloomCols.mkString(","),
+        "replaceFiles" -> candidates.mkString(",")))
+      .save()
   }
 
   /** MERGE-ON-READ UPSERT: updates APPEND as new files and the keys
@@ -2178,15 +1889,13 @@ object ManifestSink {
       maxKeys: Int = 1024): Unit = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.sources.{And, EqualTo, Filter, In, Or}
-    val rootP = Paths.get(root)
-    // CAS base captured BEFORE planning (code-review r16): a concurrent
+    // CAS base from the planning state (code-review r16): a concurrent
     // append of the same keys between this read and the commit must
     // fail the CAS, not get silently tombstoned — the tombstone-bearing
     // commit is row-replacing and gets the same conflict detection as
     // the copy-on-write merge
-    val baseGen = liveGen(root)
-    val (schema, _) = readManifest(rootP).getOrElse(
-      throw new IllegalArgumentException(s"no manifest at $root — nothing to merge"))
+    val st = ManifestState.need(root, "nothing to merge")
+    val baseGen = liveGenOf(root, Some(st))
     val keyRows = updates.select(keyCols.map(col): _*)
       .distinct().limit(maxKeys + 1).collect()
     if (keyRows.isEmpty) return // empty updates: a clean no-op
@@ -2202,15 +1911,14 @@ object ManifestSink {
           EqualTo(c, r.get(i)): Filter }.reduce(And(_, _))
       }.reduce(Or(_, _))
     // the appended update files keep the table's bloom opt-in
-    val names = rawManifest(rootP).map(_._2).getOrElse(Seq.empty)
-    val blm = derivedBloomCols(names, fileStats(root))
-    val w0 = updates.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      .write.format("graft.sources.ManifestSink")
-      .mode("append").option("path", root)
-      .option("expectedGen", baseGen.toString)
-      .option("tombstoneFilter",
-        ManifestMeta.encodeObject(ManifestDeletes.filterToJson(pred)))
-    (if (blm.nonEmpty) w0.option("bloomFor", blm.mkString(",")) else w0).save()
+    updates.select(st.schema.fieldNames.map(col).toIndexedSeq: _*)
+      .write.format("graft.sources.ManifestSink").mode("append")
+      .options(writeOptions(
+        "path" -> root, "expectedGen" -> baseGen.toString,
+        "tombstoneFilter" ->
+          ManifestMeta.encodeObject(ManifestDeletes.filterToJson(pred)),
+        "bloomFor" -> st.bloomCols.mkString(",")))
+      .save()
   }
 
   /** v1 Filter → Column translation for [[ManifestTable.deleteWhere]] —
@@ -2257,7 +1965,7 @@ object ManifestSink {
           col("n_regionkey").cast("long").as("n_regionkey"))
       src.write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", root).save()
-      // snapshot read: schema + file list resolved from ONE manifest read
+      // snapshot read: one ManifestState serves schema and files
       readCommitted(s, root)
     }),
 
@@ -2293,10 +2001,8 @@ object ManifestSink {
     "q_stream_lake_feed" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tmp = graft.RunOnce.dir("lake_feed_")
-      def dim = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_nationkey").cast("long").as("c_nationkey"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
+      def dim = GraftCatalog.custCents(s, dir,
+        Seq(col("c_nationkey").cast("long").as("c_nationkey")))
       Seq(col("c_custkey") % 3 === 0L, col("c_custkey") % 3 === 1L,
           col("c_custkey") % 3 === 2L)
         .foreach { slice =>
@@ -2625,20 +2331,15 @@ class ManifestTable(path: String, schema: StructType,
       return
     }
     val spark = org.apache.spark.sql.SparkSession.active
-    val rootP = Paths.get(path)
-    // optimistic-concurrency base: the generation the candidate reads
-    // below run against (captured FIRST — an interleaved commit then
-    // fails the CAS rather than racing the reads)
-    val baseGen = ManifestSink.liveGen(path)
-    val names = ManifestSink.rawManifest(rootP).map(_._2).getOrElse(Seq.empty)
-    val stats = ManifestSink.fileStats(path)
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    // ONE state: the optimistic-concurrency base is the generation the
+    // candidate read below runs against, so an interleaved commit fails
+    // the CAS rather than racing the read
+    val st = ManifestState.need(path, "nothing to delete")
+    val baseGen = ManifestSink.liveGenOf(path, Some(st))
     // the DELETE matches a row iff ALL filters hold — a file with stats
     // is a rewrite candidate only if every filter may match in it
-    val candidates = names.filter { n =>
-      stats.get(n).forall(fs =>
-        filters.forall(ManifestMeta.mayMatch(_, fs, types)))
-    }
+    val candidates = st.candidates(filters.toSeq,
+      schema.fields.map(f => f.name -> f.dataType).toMap)
     if (candidates.isEmpty) return // no file can hold a match: no-op
     // mirror deleteWhereMoR (ADVICE r16): an untranslatable filter must
     // refuse LOUDLY — flatMap-dropping one would WIDEN the delete (with
@@ -2649,38 +2350,29 @@ class ManifestTable(path: String, schema: StructType,
       s"unsupported CoW delete predicate: ${filters.mkString(", ")}")
     val cond = filters.flatMap(ManifestSink.filterToColumn(_))
       .reduceOption(_ && _).getOrElse(lit(true))
-    // SQL DELETE keeps rows whose predicate is FALSE or UNKNOWN — a
-    // plain not(cond) would silently also delete every row where the
-    // predicate evaluates to NULL (ADVICE r14): keep on NOT TRUE.
-    val candPaths = candidates.map(n =>
-      rootP.resolve("data").resolve(n).toString)
     // LAYOUT-PRESERVING rewrite (ADVICE r15): replacement files keep the
     // table's declared format and partition/sort layout; a table
     // attached without declared options falls back to the layout its
     // committed stats prove (same derivation as merge) — either way a
     // selective DELETE can't demote the table's purity/ordering claims.
-    val fmt = if (format != "json") format
-              else ManifestSink.derivedFormat(names)
-    val (dp, dob) = ManifestSink.derivedLayout(names, stats, schema)
-    val pBy = if (partitionBy.nonEmpty) partitionBy else dp
-    val oBy = if (orderBy.nonEmpty) orderBy else dob
-    // blooms survive the rewrite too: declared columns win, else the
-    // columns every committed file blooms (code-review r16)
-    val blm = if (bloomFor.nonEmpty) bloomFor
-              else ManifestSink.derivedBloomCols(names, stats)
-    val w0 = ManifestSink.readDataFiles(spark, schema, candPaths,
-        ManifestSink.liveDeletes(rootP), ManifestSink.livePosDeletes(rootP),
-        ManifestSink.liveAliases(rootP))
+    // Blooms survive too: declared columns win, else the columns every
+    // committed file blooms (code-review r16).
+    val (dp, dob) = st.layout
+    ManifestSink.readDataFiles(spark, st, candidates.map(st.dataPath))
+      // SQL DELETE keeps rows whose predicate is FALSE or UNKNOWN — a
+      // plain not(cond) would silently also delete every row where the
+      // predicate evaluates to NULL (ADVICE r14): keep on NOT TRUE.
       .filter(coalesce(not(cond), lit(true)))
-      .write.format("graft.sources.ManifestSink")
-      .mode("append").option("path", path)
-      .option("format", fmt)
-      .option("expectedGen", baseGen.toString)
-      .option("replaceFiles", candidates.mkString(","))
-    val w1 = if (pBy.nonEmpty) w0.option("partitionBy", pBy.mkString(",")) else w0
-    val w2 = if (oBy.nonEmpty) w1.option("orderBy", oBy.mkString(",")) else w1
-    val w3 = if (blm.nonEmpty) w2.option("bloomFor", blm.mkString(",")) else w2
-    w3.save()
+      .write.format("graft.sources.ManifestSink").mode("append")
+      .options(ManifestSink.writeOptions(
+        "path" -> path,
+        "format" -> (if (format != "json") format else st.format),
+        "expectedGen" -> baseGen.toString,
+        "replaceFiles" -> candidates.mkString(","),
+        "partitionBy" -> (if (partitionBy.nonEmpty) partitionBy else dp).mkString(","),
+        "orderBy" -> (if (orderBy.nonEmpty) orderBy else dob).mkString(","),
+        "bloomFor" -> (if (bloomFor.nonEmpty) bloomFor else st.bloomCols).mkString(",")))
+      .save()
   }
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
@@ -2927,9 +2619,13 @@ class ManifestBatchWrite(path: String, schema: StructType,
           "run DML on main)")
       ManifestSink.branchHead(path, b)
     }
+    // the live state, read ONCE under this lock: CAS generation, prior
+    // list lines, the tombstone's candidate files and the publish's
+    // previous instant all come from it
+    lazy val live = ManifestState.live(root)
     if (baseGen >= 0L &&
         (replace || replacing.nonEmpty || tombstoneFilter.isDefined)) {
-      val liveGen = branchHeadNow.getOrElse(ManifestSink.liveGen(path))
+      val liveGen = branchHeadNow.getOrElse(ManifestSink.liveGenOf(path, live))
       if (liveGen != baseGen) throw new java.util.ConcurrentModificationException(
         s"concurrent commit on $path${branch.fold("")(b => s" (branch $b)")}: " +
           s"this ${if (replace) "overwrite" else "row-level rewrite"} was planned " +
@@ -2948,23 +2644,20 @@ class ManifestBatchWrite(path: String, schema: StructType,
     // starts fresh — either way ONE atomic snapshot publish. A branch
     // commit's prior state is its branch HEAD's archived snapshot.
     val replaced = replacing.toSet
-    val rawPrior =
-      if (replace) Seq.empty
-      else branchHeadNow match {
-        case Some(h) =>
-          val m = root.resolve("_snapshots").resolve(s"manifest-$h.json")
-          // the head is vacuum-anchored, so absence means OUT-OF-BAND
-          // damage — refuse loudly; treating it as an empty table would
-          // silently truncate the branch (and later main, via
-          // fast_forward) — code-review r19
-          if (!Files.exists(m)) throw new IllegalStateException(
-            s"branch ${branch.get} of $path points at snapshot $h but " +
-              s"$m does not exist — the head was deleted out-of-band " +
-              "(vacuum anchors branch heads); refusing to publish a " +
-              "truncated branch state")
-          ManifestSink.rawListLinesAt(m)
-        case None => ManifestSink.rawListLines(root)
-      }
+    lazy val priorState: Option[ManifestState] = branchHeadNow match {
+      case Some(h) =>
+        // the head is vacuum-anchored, so absence means OUT-OF-BAND
+        // damage — refuse loudly; treating it as an empty table would
+        // silently truncate the branch (and later main, via
+        // fast_forward) — code-review r19
+        Some(ManifestState.at(root, h).getOrElse(throw new IllegalStateException(
+          s"branch ${branch.get} of $path points at snapshot $h but " +
+            "its manifest does not exist — the head was deleted out-of-band " +
+            "(vacuum anchors branch heads); refusing to publish a " +
+            "truncated branch state")))
+      case None => live
+    }
+    val rawPrior = if (replace) Seq.empty else priorState.fold(Seq.empty[String])(_.rawTail)
     // a line of a REPLACED file (its name or its stats) must drop. A
     // DAMAGED stats line must degrade (keep it — statsOf already drops
     // unparseable lines on read), never brick the commit (ADVICE r15).
@@ -3028,17 +2721,10 @@ class ManifestBatchWrite(path: String, schema: StructType,
       case Some(json) =>
         val f = ManifestDeletes.filterFromJson(
           ManifestMeta.parse(json).asInstanceOf[Map[String, Any]])
-        // one resolution: names + stats both come from the rawPrior
-        // lines already read above (code-review r16 — the commit
-        // critical section was resolving the manifest three times)
-        val resolved = ManifestSink.resolveLines(root, rawPrior)
-        val priorNames = resolved.filterNot(_.startsWith("#"))
-        val p2cEvo = ManifestEvolution.priorToCurrent(resolved)
-        val stats = ManifestMeta.statsOf(resolved.filter(_.startsWith("#")))
-          .map { case (n, fs) => n -> ManifestEvolution.remapStats(fs, p2cEvo) }
-        val types = schema.fields.map(fd => fd.name -> fd.dataType).toMap
-        val cands = priorNames.filter(n =>
-          stats.get(n).forall(fs => ManifestMeta.mayMatch(f, fs, types)))
+        // tombstone commits are append-shaped, so the prior state is
+        // exactly the rawPrior lines carried above
+        val cands = priorState.fold(Seq.empty[String])(_.candidates(Seq(f),
+          schema.fields.map(fd => fd.name -> fd.dataType).toMap))
         if (cands.isEmpty) Seq.empty
         else Seq(ManifestDeletes.line(ManifestDeletes.Tombstone(cands.toSet, f)))
     }
@@ -3049,7 +2735,7 @@ class ManifestBatchWrite(path: String, schema: StructType,
       case Some(b) =>
         ManifestSink.publishBranch(root, b, outLines,
           expectedHead = branchHeadNow.get)
-      case None => ManifestSink.publish(root, outLines)
+      case None => ManifestSink.publish(root, live, outLines)
     }
     ()
   }
@@ -3124,7 +2810,10 @@ class ManifestStreamingWrite(path: String, schema: StructType,
     val root = Paths.get(path)
     val staged = messages.iterator
       .flatMap(_.asInstanceOf[StagedFileSet].files).toSeq.sortBy(_.name)
-    if (ManifestSink.committedEpochs(path).contains(epochId)) {
+    // the live state, read once under the lock: epoch ledger and prior
+    // list lines
+    val live = ManifestState.live(root)
+    if (live.exists(_.epochs.contains(epochId))) {
       // epoch replay after recovery: already published — the staged
       // re-run output must vanish, not double-publish
       ManifestSink.deleteStaged(root, staged.map(_.name))
@@ -3139,13 +2828,12 @@ class ManifestStreamingWrite(path: String, schema: StructType,
     // (see runToken above) so names are unique across runs; a crash
     // between segment write and manifest swap orphans at most one
     // segment per attempt, reclaimed by vacuum.
-    val rawPrior = ManifestSink.rawListLines(root)
     val segRef =
       if (staged.isEmpty) Seq.empty
       else Seq(ManifestSink.writeSegment(root, s"e$epochId-$runToken",
         staged.map(_.name) ++ staged.map(_.statsLine)))
-    ManifestSink.publish(root, schema.toDDL +:
-      ManifestSink.consolidateRefs(root, rawPrior ++ segRef,
+    ManifestSink.publish(root, live, schema.toDDL +:
+      ManifestSink.consolidateRefs(root, live.fold(Seq.empty[String])(_.rawTail) ++ segRef,
         s"e$epochId-$runToken-m"))
   }
 

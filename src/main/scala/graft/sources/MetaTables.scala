@@ -51,44 +51,37 @@ object MetaTables {
 
   def rowsOf(kind: String, root: String): Seq[Seq[Any]] = kind match {
     case "files" =>
-      val (names, stats) = ManifestSink.committedState(Paths.get(root))
-      names.map { n =>
-        val st = stats.get(n)
-        Seq[Any](n,
-          if (n.endsWith(".parquet")) "parquet" else "json",
-          st.map(s => java.lang.Long.valueOf(s.rows)).orNull,
-          st.map(_.bytes).filter(_ > 0L)
-            .map(java.lang.Long.valueOf).orNull,
-          st.map(_.sorted.mkString(",")).filter(_.nonEmpty).orNull)
+      ManifestState.live(root).toSeq.flatMap { st =>
+        st.names.map { n =>
+          val fs = st.stats.get(n)
+          Seq[Any](n,
+            if (n.endsWith(".parquet")) "parquet" else "json",
+            fs.map(s => java.lang.Long.valueOf(s.rows)).orNull,
+            fs.map(_.bytes).filter(_ > 0L)
+              .map(java.lang.Long.valueOf).orNull,
+            fs.map(_.sorted.mkString(",")).filter(_.nonEmpty).orNull)
+        }
       }
     case "snapshots" =>
-      val rootP = Paths.get(root)
       ManifestSink.snapshotTimestamps(root).map { case (g, ts) =>
-        val lines = ManifestSink.resolvedManifestLines(rootP,
-          rootP.resolve("_snapshots").resolve(s"manifest-$g.json"))
-          .getOrElse(Seq.empty)
-        val names = lines.drop(1).filterNot(_.startsWith("#"))
-        val stats = ManifestMeta.statsOf(lines.drop(1))
+        val st = ManifestState.at(Paths.get(root), g)
+        val names = st.fold(Seq.empty[String])(_.names)
+        val stats = st.fold(Map.empty[String, ManifestMeta.FileStats])(_.stats)
         Seq[Any](g, ts, names.length.toLong,
           if (names.nonEmpty && names.forall(stats.contains))
             java.lang.Long.valueOf(names.map(stats(_).rows).sum)
           else null)
       }
     case "deletes" =>
-      val rootP = Paths.get(root)
-      val tail = ManifestSink.resolvedManifestLines(rootP,
-        rootP.resolve("manifest.json")).map(_.tail).getOrElse(Seq.empty)
-      // render predicates in the LIVE column space (ADVICE r17): after a
-      // RENAME every other consumer (scans, stats, CDF, liveDeletes)
-      // remaps tombstones through the evolution ledger — the inspection
-      // surface must agree with them, not show the prior name
-      val p2c = ManifestEvolution.priorToCurrent(tail)
-      val tombs = ManifestDeletes.of(tail).map(t =>
-        Seq[Any]("tombstone", t.files.toSeq.sorted.mkString(","),
-          ManifestEvolution.remapFilter(t.filter, p2c).toString))
-      val pos = ManifestPosDeletes.of(tail).map(pd =>
-        Seq[Any]("position", pd.files.toSeq.sorted.mkString(","), pd.delFile))
-      tombs ++ pos
+      // predicates render in the LIVE column space (ADVICE r17), like
+      // every other consumer of the state's tombstones
+      ManifestState.live(root).toSeq.flatMap { st =>
+        st.tombstones.map(t =>
+          Seq[Any]("tombstone", t.files.toSeq.sorted.mkString(","),
+            t.filter.toString)) ++
+          st.posDeleteLines.map(pd =>
+            Seq[Any]("position", pd.files.toSeq.sorted.mkString(","), pd.delFile))
+      }
     case "tags" =>
       val instants = ManifestSink.snapshotTimestamps(root).toMap
       ManifestSink.tags(root).map { case (n, g) =>

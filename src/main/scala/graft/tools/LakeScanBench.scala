@@ -25,7 +25,7 @@ object LakeScanBench {
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.sources.{GreaterThan, LessThan}
-    import graft.sources.ManifestSink
+    import graft.sources.{ManifestSink, ManifestState}
 
     // The row arm reads its own copy of each table, which carries a
     // merge-on-read tombstone `10 < a < 11` that no row matches: a
@@ -34,7 +34,7 @@ object LakeScanBench {
     val rowArm = label == "row"
     def fixture(path: String)(write: String => Unit): String = {
       val p = if (rowArm) s"${path}_row" else path
-      if (ManifestSink.readManifest(java.nio.file.Paths.get(p)).isEmpty) {
+      if (ManifestState.live(p).isEmpty) {
         write(p)
         if (rowArm)
           ManifestSink.deleteWhereMoR(p, Array(GreaterThan("a", 10L), LessThan("a", 11L)))

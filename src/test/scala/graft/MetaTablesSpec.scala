@@ -90,7 +90,7 @@ class MetaTablesSpec extends AnyFunSuite {
     val detail = spark.sql(
       "SELECT detail FROM graft_cat.lake.`meta_rn$deletes` " +
         "WHERE kind = 'tombstone'").head.getString(0)
-    // every other consumer (scans, stats, CDF, liveDeletes) remaps the
+    // every other consumer (scans, stats, CDF, readCommitted) remaps the
     // predicate through the evolution ledger — the inspection surface
     // must show the live name, not the written one
     assert(detail.contains("label"), s"stale column name in: $detail")

@@ -273,7 +273,7 @@ class PartialRewriteSpec extends AnyFunSuite {
       ManifestSink.rewritePartitioned(spark, root, Seq("band"),
         orderBy = Seq("nope"))).getMessage.contains("unknown rewrite column"))
     // where parser: typed literals + unknown-column refusal
-    val schema = ManifestSink.readManifest(Paths.get(root)).get._1
+    val schema = graft.sources.ManifestState.live(root).get.schema
     assert(ManifestSink.parseWhereEquality("band = 3", schema) == ("band", 3L))
     assert(intercept[IllegalArgumentException](
       ManifestSink.parseWhereEquality("ghost = 3", schema))

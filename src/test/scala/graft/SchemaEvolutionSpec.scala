@@ -126,7 +126,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     val left = spark.sql(
       "SELECT body FROM graft_cat.lake.evo_tomb").collect().map(_.getString(0))
     assert(!left.contains("v3") && !left.contains("v5") && left.length == 18)
-    // the Scala snapshot reader agrees (liveDeletes remap)
+    // the Scala snapshot reader agrees (the ManifestState tombstone remap)
     assert(ManifestSink.readCommitted(spark, root).count() == 18L)
   }
 

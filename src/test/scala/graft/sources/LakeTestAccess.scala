@@ -17,12 +17,12 @@ object LakeTestAccess {
   def resolveLines(root: Path, lines: Seq[String]): Seq[String] =
     ManifestSink.resolveLines(root, lines)
   def rawListLines(root: Path): Seq[String] =
-    ManifestSink.rawListLines(root)
+    ManifestState.live(root).fold(Seq.empty[String])(_.rawTail)
   def segResolves: Long = ManifestSink.segResolves.get()
   def liveAliases(root: Path): Map[String, Seq[String]] =
-    ManifestSink.liveAliases(root)
+    ManifestState.live(root).fold(Map.empty[String, Seq[String]])(_.aliases)
   def ledgerLines(root: Path): Seq[String] =
-    ManifestSink.ledgerLines(root)
+    ManifestState.live(root).fold(Seq.empty[String])(_.tail.filter(_.startsWith("#")))
   /** Writes `rows` through the JSON payload writer; returns its byte count. */
   def writeJsonRows(file: Path, schema: StructType, rows: Seq[InternalRow]): Long = {
     val w = new JsonRowFileWriter(file, schema)
