@@ -419,12 +419,14 @@ class ChangesReaderFactory(dataSchema: StructType, required: StructType,
 
   private val insertUtf8 = UTF8String.fromString("insert")
   private val deleteUtf8 = UTF8String.fromString("delete")
+  /** One Hadoop conf for every parquet file this factory opens. */
+  @transient private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
 
   private def fileReader(file: String, req: StructType, deletes: Seq[Filter],
       posSet: java.util.HashSet[java.lang.Long]): PartitionReader[InternalRow] =
     if (file.endsWith(".parquet"))
       new ManifestParquetReader(file, dataSchema, req, deletes,
-        posDeletes = posSet, aliases = aliases)
+        posDeletes = posSet, aliases = aliases, hadoopConf = hadoopConf)
     else new ManifestJsonReader(file, dataSchema, req, deletes, posSet,
       aliases)
 

@@ -1,10 +1,11 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportOrdering, SupportsReportPartitioning, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
@@ -22,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     independent readers and a concurrent overwrite/compaction can
   *     never tear the file list, its tombstones or its aliases mid-scan;
   *   - COLUMN PRUNING ([[SupportsPushDownRequiredColumns]]): parquet
-  *     files decode ONLY the projected column chunks; JSON files parse
-  *     every line but materialize only the pruned fields;
+  *     files decode ONLY the projected column chunks; JSON files decode
+  *     only the pruned fields (plus tombstone columns) and skip the rest;
   *   - FILE SKIPPING ([[SupportsPushDownFilters]], VERDICT r14 Next #2):
   *     pushed predicates evaluate against each file's `#s:` min/max
   *     stats and files that cannot contain a match never become
@@ -1171,7 +1172,7 @@ class ManifestReaderFactory(tableSchema: StructType, required: StructType,
     /** live column → prior names (r17 evolution). */
     aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReaderFactory {
-  /** One Hadoop conf for every columnar file this factory opens (each
+  /** One Hadoop conf for every parquet file this factory opens (each
     * `new Configuration()` re-parses the default resources). */
   @transient private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
 
@@ -1188,7 +1189,7 @@ class ManifestReaderFactory(tableSchema: StructType, required: StructType,
   private def fileReader(file: String): PartitionReader[InternalRow] =
     if (file.endsWith(".parquet"))
       new ManifestParquetReader(file, tableSchema, required, deletesFor(file),
-        dataFilters, posFor(file), aliases)
+        dataFilters, posFor(file), aliases, hadoopConf)
     else new ManifestJsonReader(file, tableSchema, required, deletesFor(file),
       posFor(file), aliases)
 
@@ -1384,9 +1385,25 @@ private[sources] trait ManifestRowProvenance {
 }
 
 /** Streams one committed JSON-lines file as InternalRows of the pruned
-  * schema. The parser is the exact inverse of the writer's serializer:
-  * `{"name":value,...}` per line, values ∈ {null, integer/decimal
-  * literal, escaped string}.
+  * schema. The contract:
+  *   - it is the exact inverse of [[JsonRowFileWriter]]: one
+  *     `{"name":value,...}` object per `\n`-terminated line, values ∈
+  *     {null, integer/decimal literal, escaped string}, read as UTF-8
+  *     bytes through one reused buffer that grows to the longest line;
+  *   - it decodes only the required columns plus the columns a tombstone
+  *     reads. Every other value is skipped by its syntax, undecoded, and
+  *     `_file`, `_epoch` and `_pos` are per-file constants or the
+  *     physical row counter;
+  *   - keys match without hashing. The writer keeps schema order, so the
+  *     k-th key of a line is checked by one byte compare against the key
+  *     the k-th key of the previous line matched, and looked up by name
+  *     only on a miss. The lookup remaps a prior key to its live column
+  *     (`aliases`) and skips keys the table schema lacks; a schema column
+  *     the line lacks reads null;
+  *   - strings decode through [[ManifestMeta.decodeEscapedUtf8]], the byte
+  *     form of the one escape grammar of [[ManifestMeta.decodeEscaped]];
+  *     an escape-free string is the bytes of its range.
+  * Each row is a [[GenericInternalRow]] over a fresh value array.
   */
 class ManifestJsonReader(val file: String, tableSchema: StructType,
     required: StructType, deletes: Seq[Filter] = Seq.empty,
@@ -1394,33 +1411,76 @@ class ManifestJsonReader(val file: String, tableSchema: StructType,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReader[InternalRow]
     with ManifestRowProvenance {
+  import ManifestJsonReader._
 
-  private val lines = Files.newBufferedReader(
-    Paths.get(file), StandardCharsets.UTF_8)
+  private val in = Files.newInputStream(Paths.get(file))
+  private var buf = new Array[Byte](1 << 16)
+  private var filled = 0 // bytes of `buf` read from the file
+  private var next0 = 0 // first byte of the next line
+  private var eof = false
+  private var lineStart = 0
+  private var lineEnd = 0 // the line's '\n' (or end of file)
+
   private val types: Map[String, DataType] =
     tableSchema.fields.map(f => f.name -> f.dataType).toMap
-  // prior file key → live column name (r17 evolution): cells parse into
-  // the live space, so projection AND tombstone eval see live names
-  private val keyToCurrent: Map[String, String] =
-    aliases.iterator.flatMap { case (c, ps) => ps.map(_ -> c) }.toMap
+  private def isMeta(n: String) = n == "_file" || n == "_epoch" || n == "_pos"
+  /** Decoded column → its slot: an index of the output row, or `-1 - k`
+    * for the k-th column only a tombstone reads. */
+  private val slotOf: Map[String, Int] = {
+    val out = required.fields.iterator.zipWithIndex
+      .collect { case (f, i) if !isMeta(f.name) && types.contains(f.name) => f.name -> i }
+      .toMap
+    val extra = ManifestDeletes.referencedCols(deletes).toSeq
+      .filter(c => types.contains(c) && !out.contains(c)).sorted
+    out ++ extra.zipWithIndex.map { case (c, k) => c -> (-1 - k) }
+  }
+  private val extra = new Array[Any](slotOf.count(_._2 < 0))
+  private val decodes = slotOf.nonEmpty
+  private val epochBoxed: Any = epochOfFile
+  private val fileIdx = required.fieldNames.indexOf("_file")
+  private val epochIdx = required.fieldNames.indexOf("_epoch")
+  private val posIdx = required.fieldNames.indexOf("_pos")
+
+  /** Every key the file may hold: live names and the prior names of
+    * their rename chains, each resolved to its live column's slot; keys
+    * met outside this set are appended as skipped. */
+  private var keys: Array[Key] = {
+    val keyToCurrent = aliases.iterator.flatMap { case (c, ps) => ps.map(_ -> c) }.toMap
+    (tableSchema.fieldNames ++ keyToCurrent.keys).distinct.map { raw =>
+      val live = keyToCurrent.getOrElse(raw, raw)
+      new Key(raw.getBytes(UTF_8), slotOf.getOrElse(live, Skip), types.getOrElse(live, null))
+    }
+  }
+  /** Index into `keys` of the previous line's k-th key. */
+  private var guess = Array.fill(keys.length)(-1)
+  private val escaped = new java.io.ByteArrayOutputStream(64)
+
+  private var row: Array[Any] = _
   private var current: InternalRow = _
   // PHYSICAL row position within the file (the `_pos` metadata column
-  // and the position-delete key, r17): counts every stored row — rows
-  // a tombstone or position delete removes still advance it
+  // and the position-delete key): counts every stored row — rows a
+  // tombstone or position delete removes still advance it
   private var pos: Long = -1L
 
+  private val cellOf: String => Any = name => slotOf.get(name) match {
+    case Some(s) => if (s >= 0) row(s) else extra(-1 - s)
+    case None => null
+  }
+
   override def next(): Boolean = {
-    while (true) {
-      val line = lines.readLine()
-      if (line == null) return false
+    while (nextLine()) {
       pos += 1L
       if (posDeletes == null || !posDeletes.contains(pos)) {
-        val cells = parseCells(line)
-        // MoR tombstones evaluate on the FULL parsed cell map (the parser
-        // materializes every key anyway), before projection
-        if (deletes.isEmpty ||
-            ManifestDeletes.survives(deletes, cells.get(_), types)) {
-          current = project(cells)
+        if (row == null) row = new Array[Any](required.length)
+        else java.util.Arrays.fill(row.asInstanceOf[Array[AnyRef]], null)
+        if (extra.length > 0) java.util.Arrays.fill(extra.asInstanceOf[Array[AnyRef]], null)
+        if (decodes) parseLine()
+        if (deletes.isEmpty || ManifestDeletes.survives(deletes, cellOf, types)) {
+          if (fileIdx >= 0) row(fileIdx) = fileNameUtf8
+          if (epochIdx >= 0) row(epochIdx) = epochBoxed
+          if (posIdx >= 0) row(posIdx) = java.lang.Long.valueOf(pos)
+          current = new GenericInternalRow(row)
+          row = null
           return true
         }
       }
@@ -1428,63 +1488,158 @@ class ManifestJsonReader(val file: String, tableSchema: StructType,
     false
   }
   override def get(): InternalRow = current
-  override def close(): Unit = lines.close()
+  override def close(): Unit = in.close()
 
-  private def project(cells: java.util.HashMap[String, Any]): InternalRow =
-    InternalRow.fromSeq(required.fields.toIndexedSeq.map {
-      case f if f.name == "_file" => fileNameUtf8
-      case f if f.name == "_epoch" => epochOfFile
-      case f if f.name == "_pos" => java.lang.Long.valueOf(pos)
-      case f => cells.get(f.name)
-    })
-
-  private def parseCells(line: String): java.util.HashMap[String, Any] = {
-    val cells = new java.util.HashMap[String, Any]()
-    var i = 1 // past '{'
-    while (i < line.length && line.charAt(i) != '}') {
-      if (line.charAt(i) == ',') i += 1
-      // key: always a simple quoted field name (writer-controlled),
-      // remapped prior→live when the table renamed the column after
-      // this file was committed
-      val keyEnd = line.indexOf('"', i + 1)
-      val rawKey = line.substring(i + 1, keyEnd)
-      val key =
-        if (keyToCurrent.isEmpty) rawKey
-        else keyToCurrent.getOrElse(rawKey, rawKey)
-      i = keyEnd + 2 // past closing quote and ':'
-      line.charAt(i) match {
-        case '"' =>
-          // THE shared inverse of the writer's escape set — stats bounds
-          // and data values decode through one grammar (ManifestMeta)
-          val (v, next) = ManifestMeta.decodeEscaped(line, i + 1)
-          i = next
-          cells.put(key, UTF8String.fromString(v))
-        case 'n' => // null
-          i += 4
-          cells.put(key, null)
-        case _ =>
-          var j = i
-          while (j < line.length && line.charAt(j) != ',' && line.charAt(j) != '}') j += 1
-          val tok = line.substring(i, j)
-          i = j
-          // by-name resolution must tolerate BOTH directions of schema
-          // drift: a schema column absent from the file reads null (the
-          // required-loop below), and a FILE key absent from the schema
-          // is skipped (ADVICE r14 — reachable when re-attaching a table
-          // over an existing path with fewer/renamed columns declared)
-          types.get(key) match {
-            case Some(LongType) => cells.put(key, java.lang.Long.parseLong(tok))
-            case Some(IntegerType) => cells.put(key, java.lang.Integer.parseInt(tok))
-            case Some(DoubleType) => cells.put(key, java.lang.Double.parseDouble(tok))
-            case Some(StringType) => // unquoted never written; defensive
-              cells.put(key, UTF8String.fromString(tok))
-            case Some(other) => throw new IllegalArgumentException(
-              s"unsupported manifest read type $other")
-            case None => () // key not in the table schema: skip
-          }
+  /** Advances `lineStart`/`lineEnd` to the next line, reading more of the
+    * file as needed; false at end of file. */
+  private def nextLine(): Boolean = {
+    var scan = next0
+    while (true) {
+      while (scan < filled && buf(scan) != '\n') scan += 1
+      if (scan < filled || (eof && next0 < filled)) {
+        lineStart = next0
+        lineEnd = scan
+        next0 = math.min(scan + 1, filled)
+        return true
       }
+      if (eof) return false
+      // keep the partial line: move it to the front, grow when it fills the buffer
+      val keep = filled - next0
+      if (next0 == 0 && keep == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+      else System.arraycopy(buf, next0, buf, 0, keep)
+      scan -= next0
+      next0 = 0
+      filled = keep
+      val n = in.read(buf, filled, buf.length - filled)
+      if (n < 0) eof = true else filled += n
     }
-    cells
+    false
+  }
+
+  private def parseLine(): Unit = {
+    val b = buf
+    val e = lineEnd
+    var i = lineStart + 1 // past '{'
+    var k = 0
+    while (i < e && b(i) != '}') {
+      if (b(i) == ',') i += 1
+      val ks = i + 1
+      var ke = ks
+      while (ke < e && b(ke) != '"') ke += 1
+      val key = keyAt(k, ks, ke)
+      k += 1
+      i = ke + 2 // past the closing quote and ':'
+      i = if (key.slot == Skip) skipValue(i, e) else readValue(i, e, key)
+    }
+  }
+
+  /** The key in `buf(ks until ke)`, the k-th of its line. */
+  private def keyAt(k: Int, ks: Int, ke: Int): Key = {
+    if (k >= guess.length) guess = java.util.Arrays.copyOf(guess, k * 2 + 1)
+    val g = guess(k)
+    if (g >= 0 && keys(g).is(buf, ks, ke)) return keys(g)
+    var j = 0
+    while (j < keys.length && !keys(j).is(buf, ks, ke)) j += 1
+    if (j == keys.length) // a key the table schema lacks: skipped from now on
+      keys = keys :+ new Key(java.util.Arrays.copyOfRange(buf, ks, ke), Skip, null)
+    guess(k) = j
+    keys(j)
+  }
+
+  /** Index just past the value at `i`, undecoded. */
+  private def skipValue(i0: Int, e: Int): Int = {
+    val b = buf
+    var i = i0
+    b(i) match {
+      case '"' =>
+        i += 1
+        while (b(i) != '"') i += (if (b(i) == '\\') 2 else 1)
+        i + 1
+      case 'n' => i + 4
+      case _ =>
+        while (i < e && b(i) != ',' && b(i) != '}') i += 1
+        i
+    }
+  }
+
+  /** Decodes the value at `i` into `key`'s slot; returns the index past it. */
+  private def readValue(i0: Int, e: Int, key: Key): Int = {
+    val b = buf
+    var i = i0
+    val v: Any = b(i) match {
+      case '"' =>
+        var j = i + 1
+        while (b(j) != '"' && b(j) != '\\') j += 1
+        if (b(j) == '"') {
+          val s = UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, i + 1, j))
+          i = j + 1
+          s
+        } else {
+          escaped.reset()
+          i = ManifestMeta.decodeEscapedUtf8(b, i + 1, escaped)
+          UTF8String.fromBytes(escaped.toByteArray)
+        }
+      case 'n' =>
+        i += 4
+        null
+      case _ =>
+        var j = i
+        while (j < e && b(j) != ',' && b(j) != '}') j += 1
+        val s = i
+        i = j
+        key.dt match {
+          case LongType => java.lang.Long.valueOf(longAt(s, j))
+          case IntegerType => java.lang.Integer.valueOf(intAt(s, j))
+          case DoubleType => java.lang.Double.parseDouble(text(s, j))
+          case StringType => // unquoted never written; defensive
+            UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, s, j))
+          case other => throw new IllegalArgumentException(
+            s"unsupported manifest read type $other")
+        }
+    }
+    if (key.slot >= 0) row(key.slot) = v else extra(-1 - key.slot) = v
+    i
+  }
+
+  private def text(s: Int, e: Int): String = new String(buf, s, e - s, UTF_8)
+
+  /** An optional '-' and 1 to `max` digits, else `NotSimple`. */
+  private def digits(s: Int, e: Int, max: Int): Long = {
+    val b = buf
+    val neg = s < e && b(s) == '-'
+    var i = if (neg) s + 1 else s
+    if (i == e || e - i > max) return NotSimple
+    var v = 0L
+    while (i < e) {
+      val d = b(i) - '0'
+      if (d < 0 || d > 9) return NotSimple
+      v = v * 10 + d
+      i += 1
+    }
+    if (neg) -v else v
+  }
+  // anything else goes through the JDK parser, which also raises its error
+  private def longAt(s: Int, e: Int): Long = {
+    val v = digits(s, e, 18)
+    if (v != NotSimple) v else java.lang.Long.parseLong(text(s, e))
+  }
+  private def intAt(s: Int, e: Int): Int = {
+    val v = digits(s, e, 9)
+    if (v != NotSimple) v.toInt else java.lang.Integer.parseInt(text(s, e))
+  }
+}
+
+private[sources] object ManifestJsonReader {
+  /** The slot of a key no column reads. */
+  val Skip: Int = Int.MinValue
+  /** Never the value of 18 digits or fewer. */
+  val NotSimple: Long = Long.MinValue
+
+  /** A file key: its UTF-8 bytes, the slot its value decodes into (or
+    * [[Skip]]) and that slot's type. */
+  final class Key(val bytes: Array[Byte], val slot: Int, val dt: DataType) {
+    def is(b: Array[Byte], s: Int, e: Int): Boolean =
+      java.util.Arrays.equals(bytes, 0, bytes.length, b, s, e)
   }
 }
 
@@ -1501,14 +1656,15 @@ class ManifestParquetReader(val file: String, tableSchema: StructType,
     required: StructType, deletes: Seq[Filter] = Seq.empty,
     dataFilters: Seq[Filter] = Seq.empty,
     posDeletes: java.util.HashSet[java.lang.Long] = null,
-    aliases: Map[String, Seq[String]] = Map.empty)
+    aliases: Map[String, Seq[String]] = Map.empty,
+    /** the factory's shared conf: read, never set */
+    hadoopConf: org.apache.hadoop.conf.Configuration)
     extends PartitionReader[InternalRow]
     with ManifestRowProvenance {
   import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.api.ReadSupport
+  import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
   import org.apache.parquet.hadoop.example.GroupReadSupport
 
-  private val hadoopConf = new org.apache.hadoop.conf.Configuration()
   private val hadoopPath = new org.apache.hadoop.fs.Path(file)
 
   // columns this reader must decode: required minus metadata, minus
@@ -1561,9 +1717,14 @@ class ManifestParquetReader(val file: String, tableSchema: StructType,
   ManifestRead.lastParquetProjection.set(projected.map(_._1.name).toSeq)
 
   private val reader: ParquetReader[org.apache.parquet.example.data.Group] = {
-    hadoopConf.set(ReadSupport.PARQUET_READ_SCHEMA,
-      ManifestParquet.messageType(StructType(projected.map(_._1))).toString)
-    val b = ParquetReader.builder(new GroupReadSupport(), hadoopPath)
+    // the read schema rides the read support, not the shared conf
+    val projection = ManifestParquet.messageType(StructType(projected.map(_._1)))
+    val support = new GroupReadSupport {
+      override def init(context: InitContext): ReadSupport.ReadContext =
+        new ReadSupport.ReadContext(
+          ReadSupport.getSchemaForRead(context.getFileSchema, projection))
+    }
+    val b = ParquetReader.builder(support, hadoopPath)
       .withConf(hadoopConf)
     // ROW-GROUP + record-level pushdown on the row path too (r17):
     // restricted to PROJECTED columns — parquet-mr's record-level

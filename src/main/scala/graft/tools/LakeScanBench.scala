@@ -2,16 +2,18 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** A/B micro-bench for the lake connector's parquet read path
-  * (VERDICT r15 Next #3 "done" receipt): builds a widened parquet lake
-  * table once, then times the same projected aggregate through the
-  * VECTORIZED ColumnarBatch reader vs the row-by-row parquet-mr path
-  * (the `row` arm reads copies that carry a no-op row-level delete).
-  * Prints one JSON line per configuration; run each mode in its own JVM
-  * so JIT state can't leak between arms:
+/** A/B micro-bench for the lake connector's read paths: builds a
+  * widened lake table once, then times the same projected aggregate
+  * through the VECTORIZED parquet ColumnarBatch reader (`columnar`), the
+  * row-by-row parquet-mr path (`row`, which reads copies that carry a
+  * no-op row-level delete) or the JSON payload reader (`json`, the same
+  * rows written with the default payload). Prints one JSON line per
+  * configuration, with the best full scan's `ns_per_row`; run each mode
+  * in its own JVM so JIT state can't leak between arms:
   *
   *   sbt 'runMain graft.tools.LakeScanBench columnar'
   *   sbt 'runMain graft.tools.LakeScanBench row'
+  *   sbt 'runMain graft.tools.LakeScanBench json'
   */
 object LakeScanBench {
   def main(args: Array[String]): Unit = {
@@ -31,9 +33,13 @@ object LakeScanBench {
     // merge-on-read tombstone `10 < a < 11` that no row matches: a
     // row-level delete demotes the scan to the row path and leaves its
     // pushdown on (its times include the per-row delete check).
+    // `json` writes the same rows with the default payload and runs the
+    // full scan only (row-group pushdown is a parquet-only arm)
     val rowArm = label == "row"
+    val jsonArm = label == "json"
+    val rows = 4000000L
     def fixture(path: String)(write: String => Unit): String = {
-      val p = if (rowArm) s"${path}_row" else path
+      val p = if (rowArm) s"${path}_row" else if (jsonArm) s"${path}_json" else path
       if (ManifestState.live(p).isEmpty) {
         write(p)
         if (rowArm)
@@ -45,7 +51,7 @@ object LakeScanBench {
     val root = fixture("/tmp/graft_lake_scanbench") { root =>
       // 4M rows x 8 columns, 32 files — wide enough that decode rate,
       // not job overhead, dominates
-      spark.range(0, 4000000, 1, 32)
+      spark.range(0, rows, 1, 32)
         .select(col("id"),
           (col("id") % 97).as("a"), (col("id") % 1009).as("b"),
           (col("id") * 37 % 100000).as("c"),
@@ -55,7 +61,7 @@ object LakeScanBench {
           concat(lit("cat_"), col("id") % 17).as("cat"))
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", root)
-        .option("format", "parquet").save()
+        .option("format", if (jsonArm) "json" else "parquet").save()
     }
     spark.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
     spark.sql("DROP TABLE IF EXISTS graft_cat.lake.scanbench")
@@ -74,6 +80,13 @@ object LakeScanBench {
     val plan = spark.sql("SELECT id, s FROM graft_cat.lake.scanbench")
       .queryExecution.executedPlan.toString
 
+    val full = s""""bench":"lake_scan","mode":"$label","columnar_plan":${plan.contains("ColumnarToRow")},"times":[${times.map(t => f"$t%.3f").mkString(",")}],"best":${f"${times.min}%.3f"},"ns_per_row":${f"${times.min * 1e9 / rows}%.1f"}"""
+    if (jsonArm) {
+      println(s"{$full}")
+      spark.stop()
+      return
+    }
+
     // FILTERED-scan arm (r17 row-group pushdown receipt): a selective
     // range predicate over a SORTED single-file variant of the same
     // data — footer min/max skips the non-matching row groups, so the
@@ -81,7 +94,7 @@ object LakeScanBench {
     val rootF = fixture("/tmp/graft_lake_scanbench_sorted") { rootF =>
       // ONE globally-sorted file, many 4 MB row groups — the shape
       // where footer min/max skipping inside the file is the whole win
-      spark.range(0, 4000000, 1, 32)
+      spark.range(0, rows, 1, 32)
         .select(col("id"),
           (col("id") % 97).as("a"),
           (col("id") % 1000000).cast("double").as("x"),
@@ -103,7 +116,7 @@ object LakeScanBench {
     val timesF = (1 to 5).map(_ => runFiltered())
     val (rgKept, rgTotal) = graft.sources.ManifestRead.lastRowGroupLedger.get()
 
-    println(s"""{"bench":"lake_scan","mode":"$label","columnar_plan":${plan.contains("ColumnarToRow")},"times":[${times.map(t => f"$t%.3f").mkString(",")}],"best":${f"${times.min}%.3f"},"filtered_times":[${timesF.map(t => f"$t%.3f").mkString(",")}],"filtered_best":${f"${timesF.min}%.3f"},"row_groups_kept":$rgKept,"row_groups_total":$rgTotal}""")
+    println(s"""{$full,"filtered_times":[${timesF.map(t => f"$t%.3f").mkString(",")}],"filtered_best":${f"${timesF.min}%.3f"},"row_groups_kept":$rgKept,"row_groups_total":$rgTotal}""")
     spark.stop()
   }
 }

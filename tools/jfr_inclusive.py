@@ -11,8 +11,10 @@ REC is a .jfr file (read with `jfr print --events jdk.ExecutionSample
 --stack-depth 200`) or the saved text of such a print. NAME is a substring
 matched against each frame's method (default: the ingest path's layers).
 `--threads` keeps only samples whose thread name matches REGEX, e.g.
-'Executor task launch' for task threads. Stacks deeper than 200 frames are
-cut at the leaf side by `jfr print`, so a root-side NAME reads low there.
+'Executor task launch' for task threads. `--under FRAME` counts a NAME only
+where it sits leaf-side of a frame matching FRAME (what FRAME calls), still
+as a share of all kept samples. Stacks deeper than 200 frames are cut at the
+leaf side by `jfr print`, so a root-side NAME reads low there.
 """
 import argparse
 import re
@@ -47,6 +49,7 @@ def main():
     ap.add_argument("recording")
     ap.add_argument("names", nargs="*")
     ap.add_argument("--threads", default=None)
+    ap.add_argument("--under", default=None)
     a = ap.parse_intermixed_args()
     if a.recording.endswith(".jfr"):
         text = subprocess.run(
@@ -63,6 +66,10 @@ def main():
         if keep and not keep.search(thread):
             continue
         total += 1
+        if a.under:
+            # frames run leaf first: keep those above the root-most FRAME
+            at = [i for i, f in enumerate(frames) if a.under in f]
+            frames = frames[:at[-1]] if at else []
         for n in names:
             if any(n in f for f in frames):
                 hits[n] += 1
