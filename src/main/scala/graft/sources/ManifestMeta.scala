@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -82,9 +80,9 @@ object ManifestMeta {
   /** Decode an escaped string in `s` whose opening quote sits at
     * `start - 1` (i.e. `start` is the first content char); returns
     * (value, index just past the closing quote). THE one inverse of
-    * [[esc]]: the metadata parser calls it and the data-file JSON reader
-    * calls its byte form [[decodeEscapedUtf8]], so the escape grammar can
-    * never desynchronize between stats bounds and data values.
+    * [[esc]] — both the metadata parser and the data-file JSON reader
+    * call it, so the escape grammar can never desynchronize between
+    * stats bounds and data values.
     */
   def decodeEscaped(s: String, start: Int): (String, Int) = {
     val sb = new java.lang.StringBuilder
@@ -108,54 +106,6 @@ object ManifestMeta {
       }
     }
     (sb.toString, i + 1)
-  }
-
-  /** [[decodeEscaped]] over UTF-8 bytes: decodes `b` from `start` (the
-    * first content byte) up to the closing quote into `out` and returns
-    * the index just past that quote. Same grammar, same error on an
-    * unknown escape; bytes between escapes are copied as they are. A
-    * `\uXXXX` is written as the UTF-8 of its char — two escaped halves
-    * of a surrogate pair as one code point, a lone surrogate as `?` — so
-    * the bytes equal `UTF8String.fromString` of [[decodeEscaped]]'s value.
-    */
-  def decodeEscapedUtf8(b: Array[Byte], start: Int,
-      out: java.io.ByteArrayOutputStream): Int = {
-    def unit(at: Int): Int =
-      Integer.parseInt(new String(b, at, 4, UTF_8), 16)
-    var run = start
-    var i = start
-    while (b(i) != '"') {
-      if (b(i) != '\\') i += 1
-      else {
-        out.write(b, run, i - run)
-        b(i + 1) match {
-          case '"' => out.write('"'); i += 2
-          case '\\' => out.write('\\'); i += 2
-          case 'n' => out.write('\n'); i += 2
-          case 'r' => out.write('\r'); i += 2
-          case 't' => out.write('\t'); i += 2
-          case 'u' =>
-            val c = unit(i + 2).toChar
-            i += 6
-            val cp =
-              if (Character.isHighSurrogate(c) && i + 6 <= b.length &&
-                  b(i) == '\\' && b(i + 1) == 'u' &&
-                  Character.isLowSurrogate(unit(i + 2).toChar)) {
-                i += 6
-                Character.toCodePoint(c, unit(i - 4).toChar)
-              } else if (Character.isSurrogate(c)) '?'.toInt
-              else c.toInt
-            val s = new String(Character.toChars(cp))
-            out.write(s.getBytes(UTF_8))
-          case _ =>
-            throw new IllegalArgumentException(
-              s"unknown escape \\${new String(b, i + 1, 1, ISO_8859_1)}")
-        }
-        run = i
-      }
-    }
-    out.write(b, run, i - run)
-    i + 1
   }
 
   private def encodeValue(v: Any): String = v match {
@@ -818,7 +768,7 @@ object ManifestMeta {
         yield dt match {
           case LongType | IntegerType => bl.mayContain(Bloom.hashLong(asLong(v)))
           case StringType => bl.mayContain(Bloom.hashBytes(
-            v.toString.getBytes(UTF_8)))
+            v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
           case _ => true
         }).getOrElse(true)
     f match {

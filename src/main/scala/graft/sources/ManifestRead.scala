@@ -1400,9 +1400,9 @@ private[sources] trait ManifestRowProvenance {
   *     only on a miss. The lookup remaps a prior key to its live column
   *     (`aliases`) and skips keys the table schema lacks; a schema column
   *     the line lacks reads null;
-  *   - strings decode through [[ManifestMeta.decodeEscapedUtf8]], the byte
-  *     form of the one escape grammar of [[ManifestMeta.decodeEscaped]];
-  *     an escape-free string is the bytes of its range.
+  *   - an escape-free string is the bytes of its range; one with escapes
+  *     decodes through [[ManifestMeta.decodeEscaped]], the one escape
+  *     grammar of the lake's JSON.
   * Each row is a [[GenericInternalRow]] over a fresh value array.
   */
 class ManifestJsonReader(val file: String, tableSchema: StructType,
@@ -1453,7 +1453,6 @@ class ManifestJsonReader(val file: String, tableSchema: StructType,
   }
   /** Index into `keys` of the previous line's k-th key. */
   private var guess = Array.fill(keys.length)(-1)
-  private val escaped = new java.io.ByteArrayOutputStream(64)
 
   private var row: Array[Any] = _
   private var current: InternalRow = _
@@ -1551,15 +1550,20 @@ class ManifestJsonReader(val file: String, tableSchema: StructType,
     val b = buf
     var i = i0
     b(i) match {
-      case '"' =>
-        i += 1
-        while (b(i) != '"') i += (if (b(i) == '\\') 2 else 1)
-        i + 1
+      case '"' => stringEnd(i)
       case 'n' => i + 4
       case _ =>
         while (i < e && b(i) != ',' && b(i) != '}') i += 1
         i
     }
+  }
+
+  /** Index just past the closing quote of the string opening at `q`. */
+  private def stringEnd(q: Int): Int = {
+    val b = buf
+    var i = q + 1
+    while (b(i) != '"') i += (if (b(i) == '\\') 2 else 1)
+    i + 1
   }
 
   /** Decodes the value at `i` into `key`'s slot; returns the index past it. */
@@ -1575,9 +1579,10 @@ class ManifestJsonReader(val file: String, tableSchema: StructType,
           i = j + 1
           s
         } else {
-          escaped.reset()
-          i = ManifestMeta.decodeEscapedUtf8(b, i + 1, escaped)
-          UTF8String.fromBytes(escaped.toByteArray)
+          val end = stringEnd(i)
+          val s = ManifestMeta.decodeEscaped(new String(b, i, end - i, UTF_8), 1)._1
+          i = end
+          UTF8String.fromString(s)
         }
       case 'n' =>
         i += 4
@@ -1588,8 +1593,8 @@ class ManifestJsonReader(val file: String, tableSchema: StructType,
         val s = i
         i = j
         key.dt match {
-          case LongType => java.lang.Long.valueOf(longAt(s, j))
-          case IntegerType => java.lang.Integer.valueOf(intAt(s, j))
+          case LongType => java.lang.Long.valueOf(text(s, j))
+          case IntegerType => java.lang.Integer.valueOf(text(s, j))
           case DoubleType => java.lang.Double.parseDouble(text(s, j))
           case StringType => // unquoted never written; defensive
             UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, s, j))
@@ -1602,38 +1607,11 @@ class ManifestJsonReader(val file: String, tableSchema: StructType,
   }
 
   private def text(s: Int, e: Int): String = new String(buf, s, e - s, UTF_8)
-
-  /** An optional '-' and 1 to `max` digits, else `NotSimple`. */
-  private def digits(s: Int, e: Int, max: Int): Long = {
-    val b = buf
-    val neg = s < e && b(s) == '-'
-    var i = if (neg) s + 1 else s
-    if (i == e || e - i > max) return NotSimple
-    var v = 0L
-    while (i < e) {
-      val d = b(i) - '0'
-      if (d < 0 || d > 9) return NotSimple
-      v = v * 10 + d
-      i += 1
-    }
-    if (neg) -v else v
-  }
-  // anything else goes through the JDK parser, which also raises its error
-  private def longAt(s: Int, e: Int): Long = {
-    val v = digits(s, e, 18)
-    if (v != NotSimple) v else java.lang.Long.parseLong(text(s, e))
-  }
-  private def intAt(s: Int, e: Int): Int = {
-    val v = digits(s, e, 9)
-    if (v != NotSimple) v.toInt else java.lang.Integer.parseInt(text(s, e))
-  }
 }
 
 private[sources] object ManifestJsonReader {
   /** The slot of a key no column reads. */
   val Skip: Int = Int.MinValue
-  /** Never the value of 18 digits or fewer. */
-  val NotSimple: Long = Long.MinValue
 
   /** A file key: its UTF-8 bytes, the slot its value decodes into (or
     * [[Skip]]) and that slot's type. */

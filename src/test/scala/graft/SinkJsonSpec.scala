@@ -11,8 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{LakeTestAccess, ManifestMeta}
 
 /** The lake's JSON payload bytes: `ManifestMeta.esc` and the JSON row
-  * writer against the per-char reference encoding they replace, and the
-  * byte-level unescape against the String one.
+  * writer against the per-char reference encoding they replace.
   */
 class SinkJsonSpec extends AnyFunSuite {
 
@@ -42,32 +41,6 @@ class SinkJsonSpec extends AnyFunSuite {
         if (r.nextBoolean()) r.nextInt(0x24).toChar else r.nextInt(0x10000).toChar).mkString
       assert(ManifestMeta.esc(s) == refEsc(s), s.map(_.toInt))
     }
-  }
-
-  test("the byte decoder agrees with decodeEscaped on every esc output") {
-    def both(q: String): Unit = {
-      val (v, end) = ManifestMeta.decodeEscaped(q, 1)
-      val bytes = q.getBytes(UTF_8)
-      val out = new java.io.ByteArrayOutputStream()
-      val endB = ManifestMeta.decodeEscapedUtf8(bytes, 1, out)
-      assert(UTF8String.fromBytes(out.toByteArray) == UTF8String.fromString(v), q)
-      assert(end == q.length && endB == bytes.length, q)
-    }
-    def viaEsc(s: String): String = "\"" + ManifestMeta.esc(s) + "\""
-    cases.foreach(s => both(viaEsc(s)))
-    val r = new scala.util.Random(11)
-    (0 until 2000).foreach { _ =>
-      both(viaEsc(Seq.fill(r.nextInt(40))(
-        if (r.nextBoolean()) r.nextInt(0x24).toChar else r.nextInt(0x10000).toChar).mkString))
-    }
-    // unit escapes esc never writes: a surrogate pair, lone halves, non-ASCII
-    Seq("\"\\ud83d\\ude00\"", "\"a\\ud800b\"", "\"\\udc00\\ud800\"", "\"\\u00e9\\u4e2d\"")
-      .foreach(both)
-    val bad = "\"a\\xb\""
-    val e1 = intercept[IllegalArgumentException](ManifestMeta.decodeEscaped(bad, 1))
-    val e2 = intercept[IllegalArgumentException](
-      ManifestMeta.decodeEscapedUtf8(bad.getBytes(UTF_8), 1, new java.io.ByteArrayOutputStream()))
-    assert(e1.getMessage == e2.getMessage && e1.getMessage == "unknown escape \\x")
   }
 
   test("esc returns its input when nothing needs escaping") {
