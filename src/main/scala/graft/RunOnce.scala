@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{StructField, StructType}
 
 /** The one place the registry runs a stream once, pins session conf,
   * materializes shared sub-plans, keeps its scratch directories and
-  * registers its catalog.
+  * registers its catalog and lake tables.
   *
   * STREAMS. A registry stream row replays a bounded landing: [[apply]]
   * runs the stream with `Trigger.AvailableNow` into a scratch directory
@@ -37,6 +37,15 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *
   * CATALOG. [[withCatalog]] wraps a query map so each query makes sure
   * `graft_cat` is registered on its session before it runs.
+  *
+  * LAKE TABLES. A registry row that needs a `graft_cat.lake` table gets
+  * it from [[lakeTable]]: drop any table of that name, create it over a
+  * fresh scratch directory (or a path the row already wrote), then
+  * append each given frame through the catalog, one commit per frame in
+  * order. The column list is the first frame's names and SQL types in
+  * frame order, every column nullable; with no frame it is the schema
+  * already committed at the path. A row's own SQL (DML, CALLs, ALTERs,
+  * later appends) comes after registration, in the row.
   */
 object RunOnce {
 
@@ -140,6 +149,26 @@ object RunOnce {
       case e @ (_: java.io.IOException | _: java.io.UncheckedIOException) =>
         System.err.println(s"[scratch] could not delete $p: $e")
     }
+
+  /** Register `graft_cat.lake.<name>` over `path` and commit `frames`
+    * to it (see LAKE TABLES above); returns the path. `partitionedBy` is
+    * the PARTITIONED BY list, `options` the OPTIONS besides `path`.
+    */
+  def lakeTable(s: SparkSession, name: String, partitionedBy: String = "",
+      options: Map[String, String] = Map.empty, path: String = dir("lake_"))(
+      frames: DataFrame*): String = {
+    val schema = frames.headOption.map(_.schema).getOrElse(
+      sources.ManifestState.need(path, s"lake table $name has no frame").schema)
+    val t = s"graft_cat.lake.$name"
+    val cols = schema.fields.map(f => s"`${f.name}` ${f.dataType.sql}")
+    val parts = if (partitionedBy.isEmpty) "" else s" PARTITIONED BY ($partitionedBy)"
+    val opts = (("path" -> path) +: options.toSeq).map { case (k, v) => s"$k '$v'" }
+    s.sql(s"DROP TABLE IF EXISTS $t")
+    s.sql(s"CREATE TABLE $t (${cols.mkString(", ")}) USING graft$parts " +
+      s"OPTIONS (${opts.mkString(", ")})")
+    frames.foreach(_.writeTo(t).append())
+    path
+  }
 
   private val CatalogKey = "spark.sql.catalog.graft_cat"
 

@@ -189,8 +189,10 @@ object WireKernel {
 
 /** `wire_decode(raw)`: the struct `from_json(raw, schema, options)` would
   * return, or null where [[WireKernel.decode]] declines. The generated
-  * code calls the kernel directly, so the ingest chain stays one
-  * whole-stage-codegen span.
+  * code calls the kernel directly. In `TxnPipeline` the expression runs
+  * interpreted (`nullSafeEval`, the same kernel call): it shares its
+  * `Generate` with the `from_json` fallback, a `CodegenFallback`, which
+  * keeps that node out of whole-stage codegen.
   */
 case class WireDecode(child: Expression, schema: StructType,
     options: Map[String, String], corruptColumn: String) extends UnaryExpression {

@@ -23,8 +23,12 @@ import graft.functions.{FpeFunctions, WireDecode}
   *
   * The whole chain is narrow — no shuffle, fully pipelined per input split,
   * so ingest throughput scales linearly with executors at any data size.
-  * Everything except the FPE call stays in whole-stage codegen; the FPE UDF
-  * touches only rows with a present, valid PAN.
+  * In each branch's executed plan, the parse `Generate` runs interpreted,
+  * `wire_decode` included: its `from_json` fallback (`JsonToStructs`) is a
+  * `CodegenFallback`, which keeps the node out of whole-stage codegen.
+  * Everything above it is one codegen stage: the variant `Generate`, the
+  * branch filter and the projections, the native FPE expression (which
+  * touches only rows with a present, valid PAN) included.
   */
 object TxnPipeline {
 
@@ -75,9 +79,9 @@ object TxnPipeline {
     */
   def process(spark: SparkSession, raw: DataFrame, key: Array[Byte]): (DataFrame, DataFrame) = {
     // U6/U7: native codegen'd FPE expression; the key ships once per task
-    // as a binary literal (the DoFn.setup-broadcast analogue) and the
-    // whole chain stays inside one whole-stage-codegen span — a UDF here
-    // would box every row across the closure boundary.
+    // as a binary literal (the DoFn.setup-broadcast analogue) and it runs
+    // in the codegen stage above the parse — a UDF here would box every
+    // row across the closure boundary.
     val fpeTokenize = (pan: Column) => FpeFunctions.fpeEncrypt(pan, key)
 
     // S3: one JSON parse per row and branch against the full wire

@@ -21,7 +21,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     consumer gets the full pushdown/partitioning surface of
   *     [[SynthTable]] with zero setup.
   *   - namespace `lake`: manifest tables created by SQL DDL
-  *     (`CREATE TABLE graft_cat.lake.t (...) OPTIONS (path '...')`),
+  *     (`CREATE TABLE <catalog>.lake.t (...) OPTIONS (path '...')`),
   *     then written by `INSERT INTO` (append) / `INSERT OVERWRITE`
   *     (truncate) and read by `SELECT` — the full catalog-resolved
   *     DDL+DML+query cycle over the two-phase-commit manifest table.
@@ -66,6 +66,47 @@ object GraftCatalog {
       (col("c_custkey").cast("long").as("c_custkey") +: mid :+
         expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal_cents")): _*)
   }
+
+  /** The registry's nation fixture: both keys as BIGINT. */
+  private[sources] def nationDim(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    graft.Tables.nation(s, dir).selectExpr("CAST(n_nationkey AS BIGINT) AS n_nationkey",
+      "n_name", "CAST(n_regionkey AS BIGINT) AS n_regionkey")
+
+  /** The registry's customer fixture for the maintenance rows: keys as
+    * BIGINT, the balance as DOUBLE.
+    */
+  private[sources] def custDim(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    graft.Tables.customer(s, dir).selectExpr("CAST(c_custkey AS BIGINT) AS c_custkey",
+      "c_name", "CAST(c_nationkey AS BIGINT) AS c_nationkey",
+      "CAST(c_acctbal AS DOUBLE) AS c_acctbal")
+
+  /** The 60000-row, 8-slice synthetic stream drained into a fresh lake
+    * path in three 20000-row epochs ([[graft.RunOnce.await]]); returns
+    * the path.
+    */
+  private[sources] def synthLakeStream(s: org.apache.spark.sql.SparkSession): String =
+    graft.RunOnce.await(s) { d =>
+      s.readStream.format("graft.sources.SynthDataSource")
+        .option("rows", "60000").option("slices", "8")
+        .option("rowsPerBatch", "20000").load()
+        .select("id", "channel", "amount_cents")
+        .writeStream.format("graft.sources.ManifestSink")
+        .option("path", d)
+        .option("checkpointLocation", s"$d/_checkpoint")
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+    }
+
+  /** `df` in three slices by `c_custkey % 3`, in slice order. */
+  private def thirds(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.DataFrame] =
+    Seq(0L, 1L, 2L).map(m => df.filter(org.apache.spark.sql.functions.col("c_custkey") % 3 === m))
+
+  /** OPTIONS of the parquet-payload registry tables. */
+  private val Parquet = Map("format" -> "parquet")
+  private val ParquetMor = Parquet + ("deleteMode" -> "mor")
 
   /** Every row runs with `graft_cat` registered ([[graft.RunOnce.withCatalog]]:
     * a plain session conf, since catalogs instantiate lazily); the SQL
@@ -118,16 +159,7 @@ object GraftCatalog {
     // complement exactly — a filter translated wrong deletes the wrong
     // rows and fails the hash.
     "q_sink_delete" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_delete_")
-      custCents(s, dir)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp).save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_del")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_del
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp')""".stripMargin)
+      graft.RunOnce.lakeTable(s, "cust_del")(custCents(s, dir))
       s.sql(
         """DELETE FROM graft_cat.lake.cust_del
           |WHERE bal_cents < 0 OR c_mktsegment = 'BUILDING'""".stripMargin)
@@ -142,17 +174,7 @@ object GraftCatalog {
     // carry pinned in RowLevelSqlSpec). The oracle is the algebraic
     // CASE-map of the update.
     "q_sink_update_sql" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_updsql_")
-      custCents(s, dir)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_upd")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_upd
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
+      graft.RunOnce.lakeTable(s, "cust_upd", options = Parquet)(custCents(s, dir))
       s.sql(
         """UPDATE graft_cat.lake.cust_upd
           |SET bal_cents = bal_cents + 100, c_mktsegment = 'ADJUSTED'
@@ -167,18 +189,8 @@ object GraftCatalog {
     // rewritten (pinned in RowLevelMorSpec). Same oracle as the CoW
     // twin: two materializations, one truth.
     "q_sink_update_sql_mor" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_updmor_")
-      custCents(s, dir)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_upd_mor")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_upd_mor
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet',
-           |  deleteMode 'mor')""".stripMargin)
+      graft.RunOnce.lakeTable(s, "cust_upd_mor", options = ParquetMor)(
+        custCents(s, dir))
       s.sql(
         """UPDATE graft_cat.lake.cust_upd_mor
           |SET bal_cents = bal_cents + 100, c_mktsegment = 'ADJUSTED'
@@ -191,22 +203,13 @@ object GraftCatalog {
     // same algebraic oracle as all its twins.
     "q_sink_merge_sql_mor" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_mrgmor_")
       def base = custCents(s, dir)
-      base.write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
+      graft.RunOnce.lakeTable(s, "cust_mrg_mor", options = ParquetMor)(base)
       base.filter(col("c_custkey") % 10 === 0L)
         .withColumn("bal_cents", col("bal_cents") + 7L)
         .unionByName(base.filter(col("c_custkey") % 997 === 0L)
           .withColumn("c_custkey", col("c_custkey") + 10000000L))
         .createOrReplaceTempView("merge_sql_mor_src")
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_mrg_mor")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_mrg_mor
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet',
-           |  deleteMode 'mor')""".stripMargin)
       s.sql(
         """MERGE INTO graft_cat.lake.cust_mrg_mor t USING merge_sql_mor_src s
           |ON t.c_custkey = s.c_custkey
@@ -231,22 +234,10 @@ object GraftCatalog {
     // and the data tier agree), composed in plain SQL over the
     // inspection table (zero data files opened for the metadata side).
     "q_lake_meta_files" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_metaf_")
-      def base = custCents(s, dir)
-      Seq(0L, 1L, 2L).foreach { m =>
-        // one file per slice, so the $files cardinality is part of the
-        // oracle contract too
-        base.filter(col("c_custkey") % 3 === m).coalesce(1)
-          .write.format("graft.sources.ManifestSink")
-          .mode(if (m == 0L) "overwrite" else "append")
-          .option("path", tmp).option("format", "parquet").save()
-      }
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_metaf")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_metaf
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
+      // one file per slice, so the $files cardinality is part of the
+      // oracle contract too
+      graft.RunOnce.lakeTable(s, "cust_metaf", options = Parquet)(
+        thirds(custCents(s, dir)).map(_.coalesce(1)): _*)
       s.sql(
         """SELECT CAST(sum(row_count) AS BIGINT) AS total_rows,
           |       CAST(count(*) AS BIGINT) AS data_files
@@ -260,21 +251,13 @@ object GraftCatalog {
     // idiom). The oracle is the source relation itself, algebraically.
     "q_sink_merge_nbs" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_nbs_")
       def base = custCents(s, dir)
-      base.write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
+      graft.RunOnce.lakeTable(s, "cust_nbs", options = Parquet)(base)
       base.filter(col("c_custkey") % 10 === 0L)
         .withColumn("bal_cents", col("bal_cents") + 7L)
         .unionByName(base.filter(col("c_custkey") % 997 === 0L)
           .withColumn("c_custkey", col("c_custkey") + 10000000L))
         .createOrReplaceTempView("merge_nbs_src")
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_nbs")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_nbs
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
       s.sql(
         """MERGE INTO graft_cat.lake.cust_nbs t USING merge_nbs_src s
           |ON t.c_custkey = s.c_custkey
@@ -295,21 +278,8 @@ object GraftCatalog {
     // complement exactly (the procedures run the same CAS-protected
     // helpers as the Scala surface).
     "q_lake_call_compact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_call_")
-      def base = custCents(s, dir)
-      Seq(0L, 1L, 2L).foreach { m =>
-        base.filter(col("c_custkey") % 3 === m)
-          .write.format("graft.sources.ManifestSink")
-          .mode(if (m == 0L) "overwrite" else "append")
-          .option("path", tmp).option("format", "parquet").save()
-      }
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_call")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_call
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet',
-           |  deleteMode 'mor')""".stripMargin)
+      graft.RunOnce.lakeTable(s, "cust_call", options = ParquetMor)(
+        thirds(custCents(s, dir)): _*)
       s.sql("DELETE FROM graft_cat.lake.cust_call WHERE bal_cents < 0")
       s.sql("CALL graft_cat.system.compact(table => 'cust_call')")
       s.sql("CALL graft_cat.system.vacuum(table => 'cust_call', " +
@@ -323,20 +293,8 @@ object GraftCatalog {
     // the selective range read back exercises the post-rewrite
     // envelope pruning, and the oracle pins content unchanged.
     "q_lake_rewrite_sorted" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_rwsort_")
-      def base = custCents(s, dir)
-      Seq(0L, 1L, 2L).foreach { m =>
-        base.filter(col("c_custkey") % 3 === m).coalesce(1)
-          .write.format("graft.sources.ManifestSink")
-          .mode(if (m == 0L) "overwrite" else "append")
-          .option("path", tmp).option("format", "parquet").save()
-      }
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_rwsort")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_rwsort
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
+      graft.RunOnce.lakeTable(s, "cust_rwsort", options = Parquet)(
+        thirds(custCents(s, dir)).map(_.coalesce(1)): _*)
       s.sql("CALL graft_cat.system.rewrite(table => 'cust_rwsort', " +
         "order_by => 'c_custkey', target_files => 4)")
       s.sql(
@@ -350,20 +308,8 @@ object GraftCatalog {
     // dimensions reads back — file envelopes bound both ranges at once,
     // which no single-key sort can.
     "q_lake_rewrite_zorder" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_rwz_")
-      def base = custCents(s, dir)
-      Seq(0L, 1L, 2L).foreach { m =>
-        base.filter(col("c_custkey") % 3 === m).coalesce(1)
-          .write.format("graft.sources.ManifestSink")
-          .mode(if (m == 0L) "overwrite" else "append")
-          .option("path", tmp).option("format", "parquet").save()
-      }
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_rwz")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_rwz
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
+      graft.RunOnce.lakeTable(s, "cust_rwz", options = Parquet)(
+        thirds(custCents(s, dir)).map(_.coalesce(1)): _*)
       s.sql("CALL graft_cat.system.rewrite(table => 'cust_rwz', " +
         "zorder => 'c_custkey,bal_cents', target_files => 4)")
       s.sql(
@@ -379,34 +325,25 @@ object GraftCatalog {
     // pins that the reordered plan still answers exactly.
     "q_lake_cbo_join" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      def mk(name: String, df: org.apache.spark.sql.DataFrame,
-          ddl: String): Unit = {
-        val tmp = graft.RunOnce.dir(s"lake_cbo_${name}_")
-        df.coalesce(1).write.format("graft.sources.ManifestSink")
-          .mode("overwrite").option("path", tmp)
-          .option("format", "parquet").save()
-        s.sql(s"DROP TABLE IF EXISTS graft_cat.lake.$name")
-        s.sql(s"CREATE TABLE graft_cat.lake.$name ($ddl) USING graft " +
-          s"OPTIONS (path '$tmp', format 'parquet')")
-      }
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("ck"),
           (col("c_custkey").cast("long") % 10L).as("seg"),
           expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("cents"))
-      mk("cbo_fact", base.select(col("seg").as("fa"), col("ck").as("fb"),
-        col("cents").as("payload")), "fa BIGINT, fb BIGINT, payload BIGINT")
+      graft.RunOnce.lakeTable(s, "cbo_fact", options = Parquet)(base
+        .select(col("seg").as("fa"), col("ck").as("fb"), col("cents").as("payload"))
+        .coalesce(1))
       // A's duplication is CONSTANT (first 200 keys -> ~20 rows per seg
       // value) so the row's output stays O(|B|) at every SF, while the
       // F><A estimate still dwarfs F><B by ~3 orders of magnitude
-      mk("cbo_dima", base.filter(col("ck") <= 200L)
-        .select(col("seg").as("aa"), col("ck").as("apay")),
-        "aa BIGINT, apay BIGINT")
+      graft.RunOnce.lakeTable(s, "cbo_dima", options = Parquet)(base
+        .filter(col("ck") <= 200L).select(col("seg").as("aa"), col("ck").as("apay"))
+        .coalesce(1))
       // B is SELECTIVE (1% of keys): joining it first keeps the
       // intermediate ~1% of the syntactic order's — the flip the CBO
       // must find, and what bounds this row's output
-      mk("cbo_dimb", base.filter(col("ck") % 97L === 0L)
-        .select(col("ck").as("bb"), col("cents").as("bpay")),
-        "bb BIGINT, bpay BIGINT")
+      graft.RunOnce.lakeTable(s, "cbo_dimb", options = Parquet)(base
+        .filter(col("ck") % 97L === 0L).select(col("ck").as("bb"), col("cents").as("bpay"))
+        .coalesce(1))
       graft.RunOnce.withConf(s, CboPins) {
         val df = s.sql(
           """SELECT f.fa, f.fb, a.apay, b.bpay
@@ -428,19 +365,12 @@ object GraftCatalog {
     // the whole cycle.
     "q_lake_part_days" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_pdays_")
       val day = PartitionTransforms.DayMillis
       def base = custCents(s, dir, Seq(
         expr(s"CAST((c_custkey % 5) * ${day}L + " +
           s"(CAST(c_custkey AS BIGINT) * 997) % ${day}L AS BIGINT)").as("ts")))
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_pdays")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_pdays
-           | (c_custkey BIGINT, ts BIGINT, bal_cents BIGINT)
-           | USING graft PARTITIONED BY (days(ts))
-           | OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
-      base.filter(col("c_custkey") % 2 === 0L)
-        .writeTo("graft_cat.lake.cust_pdays").append()
+      graft.RunOnce.lakeTable(s, "cust_pdays", "days(ts)", Parquet)(
+        base.filter(col("c_custkey") % 2 === 0L))
       s.sql("ALTER TABLE graft_cat.lake.cust_pdays " +
         s"SET TBLPROPERTIES ('partitionBy' = 'truncate(${2 * day},ts)')")
       base.filter(col("c_custkey") % 2 === 1L)
@@ -462,20 +392,13 @@ object GraftCatalog {
     // PartitionTransformSpec).
     "q_lake_part_hours" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_phours_")
       val day = PartitionTransforms.DayMillis
       val hour = PartitionTransforms.HourMillis
       def base = custCents(s, dir, Seq(
         expr(s"CAST((c_custkey % 5) * ${31L * day}L + " +
           s"(CAST(c_custkey AS BIGINT) * 997) % ${6L * hour}L AS BIGINT)").as("ts")))
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_phours")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_phours
-           | (c_custkey BIGINT, ts BIGINT, bal_cents BIGINT)
-           | USING graft PARTITIONED BY (months(ts))
-           | OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
-      base.filter(col("c_custkey") % 2 === 0L)
-        .writeTo("graft_cat.lake.cust_phours").append()
+      graft.RunOnce.lakeTable(s, "cust_phours", "months(ts)", Parquet)(
+        base.filter(col("c_custkey") % 2 === 0L))
       s.sql("ALTER TABLE graft_cat.lake.cust_phours " +
         "SET TBLPROPERTIES ('partitionBy' = 'hours(ts)')")
       base.filter(col("c_custkey") % 2 === 1L)
@@ -495,17 +418,9 @@ object GraftCatalog {
     // breaks the oracle.
     "q_lake_tag" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_tag_")
       def base = custCents(s, dir)
-      base.filter(col("c_custkey") % 2 === 0L)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_tag")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_tag
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
+      val tmp = graft.RunOnce.lakeTable(s, "cust_tag", options = Parquet)(
+        base.filter(col("c_custkey") % 2 === 0L))
       s.sql("CALL graft_cat.system.tag(table => 'cust_tag', name => 'cut')")
       base.filter(col("c_custkey") % 2 === 1L)
         .write.format("graft.sources.ManifestSink")
@@ -534,17 +449,9 @@ object GraftCatalog {
     // breaks the oracle.
     "q_lake_branch" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_branch_")
       def base = custCents(s, dir)
-      base.filter(col("c_custkey") % 2 === 0L)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_branch")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_branch
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
+      graft.RunOnce.lakeTable(s, "cust_branch", options = Parquet)(
+        base.filter(col("c_custkey") % 2 === 0L))
       s.sql("CALL graft_cat.system.branch(table => 'cust_branch', " +
         "name => 'audit')")
       base.filter(col("c_custkey") % 2 === 1L && col("bal_cents") >= 0L)
@@ -580,17 +487,9 @@ object GraftCatalog {
     // commit guard are spec-pinned in TagsSpec.
     "q_lake_rollback" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_rollback_")
       def base = custCents(s, dir)
-      base.filter(col("c_custkey") % 2 === 0L)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_rollback")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_rollback
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
+      val tmp = graft.RunOnce.lakeTable(s, "cust_rollback", options = Parquet)(
+        base.filter(col("c_custkey") % 2 === 0L))
       s.sql("CALL graft_cat.system.tag(table => 'cust_rollback', " +
         "name => 'stable')")
       base.filter(col("c_custkey") % 2 === 1L)
@@ -620,20 +519,11 @@ object GraftCatalog {
     // pins content unchanged through the whole cycle.
     "q_lake_rewrite_partial" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_rwpart_")
       def base = custCents(s, dir, Seq((col("c_custkey").cast("long") % 4L).as("band")))
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_rwpart")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_rwpart
-           | (c_custkey BIGINT, band BIGINT, bal_cents BIGINT)
-           | USING graft PARTITIONED BY (band)
-           | OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
       // both slices span all bands AND the full key range, so every
       // partition starts with two overlapping (un-reclustered) files
-      Seq(true, false).foreach { firstHalf =>
-        base.filter((col("c_custkey") % 8L < 4L) === lit(firstHalf))
-          .writeTo("graft_cat.lake.cust_rwpart").append()
-      }
+      graft.RunOnce.lakeTable(s, "cust_rwpart", "band", Parquet)(
+        base.filter(col("c_custkey") % 8L < 4L), base.filter(col("c_custkey") % 8L >= 4L))
       s.sql("CALL graft_cat.system.rewrite(table => 'cust_rwpart', " +
         "order_by => 'c_custkey', partitions_per_commit => 2)")
       s.sql(
@@ -652,31 +542,21 @@ object GraftCatalog {
     // exactly.
     "q_lake_hist_cbo" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      def mk(name: String, df: org.apache.spark.sql.DataFrame,
-          ddl: String): Unit = {
-        val tmp = graft.RunOnce.dir(s"lake_hist_${name}_")
-        df.coalesce(1).write.format("graft.sources.ManifestSink")
-          .mode("overwrite").option("path", tmp)
-          .option("format", "parquet").save()
-        s.sql(s"DROP TABLE IF EXISTS graft_cat.lake.$name")
-        s.sql(s"CREATE TABLE graft_cat.lake.$name ($ddl) USING graft " +
-          s"OPTIONS (path '$tmp', format 'parquet')")
-      }
       def base = graft.Tables.customer(s, dir)
         .select(col("c_custkey").cast("long").as("ck"),
           expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("cents"))
       // the F-B key is a STRING (no histogram) so the join cardinality
       // rides the NDV formula and the skew histogram on bx is the one
       // signal pricing the filter — see CboStatsSpec's flip pin
-      mk("hist_fact", base.select((col("ck") % 10L).as("fa"),
-        col("ck").cast("string").as("fb"), col("cents").as("payload")),
-        "fa BIGINT, fb STRING, payload BIGINT")
-      mk("hist_dima", base.select((col("ck") % 10L).as("aa")).distinct(),
-        "aa BIGINT")
-      mk("hist_dimb", base.select(col("ck").cast("string").as("bb"),
-        expr("CAST(CASE WHEN ck % 100 = 0 THEN 10000000 + ck " +
-          "ELSE ck % 10 END AS BIGINT)").as("bx")),
-        "bb STRING, bx BIGINT")
+      graft.RunOnce.lakeTable(s, "hist_fact", options = Parquet)(base
+        .select((col("ck") % 10L).as("fa"), col("ck").cast("string").as("fb"),
+          col("cents").as("payload")).coalesce(1))
+      graft.RunOnce.lakeTable(s, "hist_dima", options = Parquet)(
+        base.select((col("ck") % 10L).as("aa")).distinct().coalesce(1))
+      graft.RunOnce.lakeTable(s, "hist_dimb", options = Parquet)(base
+        .select(col("ck").cast("string").as("bb"),
+          expr("CAST(CASE WHEN ck % 100 = 0 THEN 10000000 + ck " +
+            "ELSE ck % 10 END AS BIGINT)").as("bx")).coalesce(1))
       graft.RunOnce.withConf(s, CboPins) {
         val df = s.sql(
           """SELECT f.fa, f.fb, f.payload, b.bx
@@ -696,18 +576,10 @@ object GraftCatalog {
     // identical throughout, which is exactly what the oracle pins.
     "q_lake_partition_evolve" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_psevo_")
       def base = custCents(s, dir, Seq(col("c_mktsegment"),
         (col("c_custkey").cast("long") % 10L).as("band")))
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_psevo")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_psevo
-           | (c_custkey BIGINT, c_mktsegment STRING, band BIGINT,
-           |  bal_cents BIGINT)
-           | USING graft PARTITIONED BY (c_mktsegment)
-           | OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
-      base.filter(col("c_custkey") % 2 === 0L)
-        .writeTo("graft_cat.lake.cust_psevo").append()
+      graft.RunOnce.lakeTable(s, "cust_psevo", "c_mktsegment", Parquet)(
+        base.filter(col("c_custkey") % 2 === 0L))
       s.sql("ALTER TABLE graft_cat.lake.cust_psevo " +
         "SET TBLPROPERTIES ('partitionBy' = 'band')")
       base.filter(col("c_custkey") % 2 === 1L)
@@ -725,19 +597,10 @@ object GraftCatalog {
     // filter on the renamed column.
     "q_lake_rename_col" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_rename_")
       def base = custCents(s, dir)
       // slice A committed first: the tombstone scopes to ITS files only
-      base.filter(col("c_custkey") % 2 === 0L)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_rename")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_rename
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet',
-           |  deleteMode 'mor')""".stripMargin)
+      val tmp = graft.RunOnce.lakeTable(s, "cust_rename", options = ParquetMor)(
+        base.filter(col("c_custkey") % 2 === 0L))
       s.sql("DELETE FROM graft_cat.lake.cust_rename WHERE bal_cents < 0")
       s.sql("ALTER TABLE graft_cat.lake.cust_rename " +
         "RENAME COLUMN bal_cents TO balance")
@@ -756,17 +619,9 @@ object GraftCatalog {
     // it, and post-drop appends omit it entirely.
     "q_lake_drop_col" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_dropcol_")
       def base = custCents(s, dir)
-      base.filter(col("c_custkey") % 2 === 0L)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_dropcol")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_dropcol
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
+      val tmp = graft.RunOnce.lakeTable(s, "cust_dropcol", options = Parquet)(
+        base.filter(col("c_custkey") % 2 === 0L))
       s.sql("ALTER TABLE graft_cat.lake.cust_dropcol DROP COLUMN c_mktsegment")
       base.filter(col("c_custkey") % 2 === 1L)
         .drop("c_mktsegment")
@@ -812,17 +667,8 @@ object GraftCatalog {
 
     "q_lake_cdf_stream" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_cdfs_")
-      custCents(s, dir)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_cdfs")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_cdfs
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet',
-           |  deleteMode 'mor')""".stripMargin)
+      val tmp = graft.RunOnce.lakeTable(s, "cust_cdfs", options = ParquetMor)(
+        custCents(s, dir))
       s.sql(
         """UPDATE graft_cat.lake.cust_cdfs
           |SET bal_cents = bal_cents + 100, c_mktsegment = 'ADJUSTED'
@@ -841,17 +687,8 @@ object GraftCatalog {
 
     "q_lake_cdf" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_cdf_")
-      custCents(s, dir)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_cdf")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_cdf
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet',
-           |  deleteMode 'mor')""".stripMargin)
+      val tmp = graft.RunOnce.lakeTable(s, "cust_cdf", options = ParquetMor)(
+        custCents(s, dir))
       s.sql(
         """UPDATE graft_cat.lake.cust_cdf
           |SET bal_cents = bal_cents + 100, c_mktsegment = 'ADJUSTED'
@@ -874,20 +711,13 @@ object GraftCatalog {
     // by Spark's RewriteMergeIntoTable over the row-level operation.
     "q_sink_merge_sql" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_mrgsql_")
       def base = custCents(s, dir)
-      base.write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp).save()
+      graft.RunOnce.lakeTable(s, "cust_mrg")(base)
       base.filter(col("c_custkey") % 10 === 0L)
         .withColumn("bal_cents", col("bal_cents") + 7L)
         .unionByName(base.filter(col("c_custkey") % 997 === 0L)
           .withColumn("c_custkey", col("c_custkey") + 10000000L))
         .createOrReplaceTempView("merge_sql_src")
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_mrg")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_mrg
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp')""".stripMargin)
       s.sql(
         """MERGE INTO graft_cat.lake.cust_mrg t USING merge_sql_src s
           |ON t.c_custkey = s.c_custkey
@@ -910,17 +740,7 @@ object GraftCatalog {
     // copy-on-write twin, proving the two delete materializations are
     // semantically identical.
     "q_sink_delete_mor" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_delmor_")
-      custCents(s, dir)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_del_mor")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_del_mor
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', deleteMode 'mor')""".stripMargin)
+      graft.RunOnce.lakeTable(s, "cust_del_mor", options = ParquetMor)(custCents(s, dir))
       s.sql(
         """DELETE FROM graft_cat.lake.cust_del_mor
           |WHERE bal_cents < 0 OR c_mktsegment = 'BUILDING'""".stripMargin)
@@ -931,12 +751,11 @@ object GraftCatalog {
     // committed before the ALTER lack the field and read back as null
     // (by-name resolution), files after carry it; no rewrite anywhere.
     "q_sink_evolution" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_evo_")
       graft.Tables.nation(s, dir).createOrReplaceTempView("nation_src_evo")
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.evo")
-      s.sql(s"CREATE TABLE graft_cat.lake.evo (k BIGINT, v STRING) " +
-        s"USING graft OPTIONS (path '$tmp')")
+      // the columns only: an empty first commit, so both INSERTs land
+      // around the ALTER
+      graft.RunOnce.lakeTable(s, "evo")(s.sql("SELECT CAST(n_nationkey AS BIGINT) AS k, " +
+        "n_name AS v FROM nation_src_evo").limit(0))
       s.sql("INSERT INTO graft_cat.lake.evo " +
         "SELECT CAST(n_nationkey AS BIGINT), n_name FROM nation_src_evo")
       s.sql("ALTER TABLE graft_cat.lake.evo ADD COLUMN r BIGINT")
@@ -992,20 +811,10 @@ object GraftCatalog {
     // pinned in CatalogTableSpec via the skip ledger; this row proves
     // the skip is LOSSLESS — the rollup must equal the full-scan oracle)
     "q_sink_skipping" -> ((s, dir) => {
-      val tmp = graft.RunOnce.dir("lake_skip_")
-      graft.Tables.orders(s, dir).createOrReplaceTempView("orders_src_skip")
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.ord_skip")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.ord_skip
-           | (b BIGINT, o_orderkey BIGINT, cents BIGINT)
-           | USING graft PARTITIONED BY (b)
-           | OPTIONS (path '$tmp', format 'parquet', orderBy 'o_orderkey')""".stripMargin)
-      s.sql(
-        """INSERT INTO graft_cat.lake.ord_skip
-          |SELECT CAST(o_orderkey AS BIGINT) DIV 8192,
-          | CAST(o_orderkey AS BIGINT),
-          | CAST(round(o_totalprice * 100) AS BIGINT)
-          |FROM orders_src_skip""".stripMargin)
+      graft.RunOnce.lakeTable(s, "ord_skip", "b", Parquet + ("orderBy" -> "o_orderkey"))(
+        graft.Tables.orders(s, dir).selectExpr("CAST(o_orderkey AS BIGINT) DIV 8192 AS b",
+          "CAST(o_orderkey AS BIGINT) AS o_orderkey",
+          "CAST(round(o_totalprice * 100) AS BIGINT) AS cents"))
       s.sql(
         """SELECT b, CAST(count(*) AS BIGINT) AS n,
           | CAST(sum(cents) AS BIGINT) AS cents,
@@ -1025,19 +834,8 @@ object GraftCatalog {
     // oracle proves bloom skipping is lossless: false positives cost
     // reads, never rows, and a missing key never drops a present one.
     "q_lake_bloom_skip" -> ((s, dir) => {
-      val tmp = graft.RunOnce.dir("lake_bloom_")
-      graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_bloom")
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_bloom")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_bloom
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft
-           | OPTIONS (path '$tmp', format 'parquet', bloomFor 'c_custkey')""".stripMargin)
-      s.sql(
-        """INSERT INTO graft_cat.lake.cust_bloom
-          |SELECT /*+ REPARTITION(8) */ CAST(c_custkey AS BIGINT),
-          | c_mktsegment, CAST(round(c_acctbal * 100) AS BIGINT)
-          |FROM cust_src_bloom""".stripMargin)
+      graft.RunOnce.lakeTable(s, "cust_bloom", options = Parquet + ("bloomFor" -> "c_custkey"))(
+        custCents(s, dir).repartition(8))
       s.sql(
         """SELECT c_custkey, c_mktsegment, bal_cents
           |FROM graft_cat.lake.cust_bloom
@@ -1049,19 +847,8 @@ object GraftCatalog {
     // partition-pure file holding that value — the zone-map special
     // case every partitioned lake read leans on
     "q_lake_part_prune" -> ((s, dir) => {
-      val tmp = graft.RunOnce.dir("lake_prune_")
-      graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_prune")
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_part")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_part
-           | (c_mktsegment STRING, c_custkey BIGINT, bal_cents BIGINT)
-           | USING graft PARTITIONED BY (c_mktsegment)
-           | OPTIONS (path '$tmp')""".stripMargin)
-      s.sql(
-        """INSERT INTO graft_cat.lake.cust_part
-          |SELECT c_mktsegment, CAST(c_custkey AS BIGINT),
-          | CAST(round(c_acctbal * 100) AS BIGINT)
-          |FROM cust_src_prune""".stripMargin)
+      graft.RunOnce.lakeTable(s, "cust_part", "c_mktsegment")(
+        custCents(s, dir).select("c_mktsegment", "c_custkey", "bal_cents"))
       s.sql(
         """SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n,
           | CAST(sum(bal_cents) AS BIGINT) AS cents
@@ -1078,35 +865,15 @@ object GraftCatalog {
     // either side (pinned in CatalogTableSpec). This is q_dsv2_spj
     // extended from the virtual table to STORED data.
     "q_lake_spj" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       SynthDataSource.withBucketingConfs(s, pushPartValues = true,
           disableBroadcast = true) {
-        val t1 = graft.RunOnce.dir("lake_spj_o_")
-        val t2 = graft.RunOnce.dir("lake_spj_c_")
-        graft.Tables.orders(s, dir).createOrReplaceTempView("orders_src_spj")
-        graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_spj")
-        s.sql("DROP TABLE IF EXISTS graft_cat.lake.spj_orders")
-        s.sql("DROP TABLE IF EXISTS graft_cat.lake.spj_cust")
-        s.sql(
-          s"""CREATE TABLE graft_cat.lake.spj_orders
-             | (ck_b BIGINT, o_custkey BIGINT, cents BIGINT)
-             | USING graft PARTITIONED BY (ck_b)
-             | OPTIONS (path '$t1', format 'parquet', orderBy 'o_custkey')""".stripMargin)
-        s.sql(
-          s"""CREATE TABLE graft_cat.lake.spj_cust
-             | (ck_b BIGINT, c_custkey BIGINT, c_mktsegment STRING)
-             | USING graft PARTITIONED BY (ck_b)
-             | OPTIONS (path '$t2', format 'parquet', orderBy 'c_custkey')""".stripMargin)
-        s.sql(
-          """INSERT INTO graft_cat.lake.spj_orders
-            |SELECT CAST(o_custkey AS BIGINT) DIV 500, CAST(o_custkey AS BIGINT),
-            | CAST(round(o_totalprice * 100) AS BIGINT)
-            |FROM orders_src_spj""".stripMargin)
-        s.sql(
-          """INSERT INTO graft_cat.lake.spj_cust
-            |SELECT CAST(c_custkey AS BIGINT) DIV 500, CAST(c_custkey AS BIGINT),
-            | c_mktsegment
-            |FROM cust_src_spj""".stripMargin)
+        graft.RunOnce.lakeTable(s, "spj_orders", "ck_b", Parquet + ("orderBy" -> "o_custkey"))(
+          graft.Tables.orders(s, dir).selectExpr("CAST(o_custkey AS BIGINT) DIV 500 AS ck_b",
+            "CAST(o_custkey AS BIGINT) AS o_custkey",
+            "CAST(round(o_totalprice * 100) AS BIGINT) AS cents"))
+        graft.RunOnce.lakeTable(s, "spj_cust", "ck_b", Parquet + ("orderBy" -> "c_custkey"))(
+          graft.Tables.customer(s, dir).selectExpr("CAST(c_custkey AS BIGINT) DIV 500 AS ck_b",
+            "CAST(c_custkey AS BIGINT) AS c_custkey", "c_mktsegment"))
         s.sql(
           """SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n,
             | CAST(sum(cents) AS BIGINT) AS cents
@@ -1125,17 +892,7 @@ object GraftCatalog {
     // committed table reads back byte-exact: the sweep may only ever
     // touch never-committed residue.
     "q_lake_orphans" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_orph_")
-      custCents(s, dir)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp)
-        .option("format", "parquet").save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_orph")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_orph
-           | (c_custkey BIGINT, c_mktsegment STRING, bal_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp', format 'parquet')""".stripMargin)
+      val tmp = graft.RunOnce.lakeTable(s, "cust_orph", options = Parquet)(custCents(s, dir))
       val staging = java.nio.file.Paths.get(tmp).resolve("_staging")
       java.nio.file.Files.createDirectories(staging)
       java.nio.file.Files.write(staging.resolve("dead-writer.parquet"),
@@ -1165,31 +922,11 @@ object GraftCatalog {
     "q_lake_spj_bucket" -> ((s, dir) => {
       SynthDataSource.withBucketingConfs(s, pushPartValues = true,
           disableBroadcast = true) {
-        val t1 = graft.RunOnce.dir("lake_spjb_o_")
-        val t2 = graft.RunOnce.dir("lake_spjb_c_")
-        graft.Tables.orders(s, dir).createOrReplaceTempView("orders_src_spjb")
-        graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_spjb")
-        s.sql("DROP TABLE IF EXISTS graft_cat.lake.spjb_orders")
-        s.sql("DROP TABLE IF EXISTS graft_cat.lake.spjb_cust")
-        s.sql(
-          s"""CREATE TABLE graft_cat.lake.spjb_orders
-             | (o_custkey BIGINT, cents BIGINT)
-             | USING graft PARTITIONED BY (bucket(16, o_custkey))
-             | OPTIONS (path '$t1', format 'parquet')""".stripMargin)
-        s.sql(
-          s"""CREATE TABLE graft_cat.lake.spjb_cust
-             | (c_custkey BIGINT, c_mktsegment STRING)
-             | USING graft PARTITIONED BY (bucket(16, c_custkey))
-             | OPTIONS (path '$t2', format 'parquet')""".stripMargin)
-        s.sql(
-          """INSERT INTO graft_cat.lake.spjb_orders
-            |SELECT CAST(o_custkey AS BIGINT),
-            | CAST(round(o_totalprice * 100) AS BIGINT)
-            |FROM orders_src_spjb""".stripMargin)
-        s.sql(
-          """INSERT INTO graft_cat.lake.spjb_cust
-            |SELECT CAST(c_custkey AS BIGINT), c_mktsegment
-            |FROM cust_src_spjb""".stripMargin)
+        graft.RunOnce.lakeTable(s, "spjb_orders", "bucket(16, o_custkey)", Parquet)(
+          graft.Tables.orders(s, dir).selectExpr("CAST(o_custkey AS BIGINT) AS o_custkey",
+            "CAST(round(o_totalprice * 100) AS BIGINT) AS cents"))
+        graft.RunOnce.lakeTable(s, "spjb_cust", "bucket(16, c_custkey)", Parquet)(
+          custCents(s, dir).select("c_custkey", "c_mktsegment"))
         s.sql(
           """SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n,
             | CAST(sum(cents) AS BIGINT) AS cents
@@ -1207,19 +944,11 @@ object GraftCatalog {
     // a manifest read, not a table scan; the oracle proves the
     // stats-fold is exact, not an estimate.
     "q_lake_meta_agg" -> ((s, dir) => {
-      val tmp = graft.RunOnce.dir("lake_meta_")
-      graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_meta")
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_meta")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_meta
-           | (c_mktsegment STRING, c_custkey BIGINT, c_name STRING, bal_cents BIGINT)
-           | USING graft PARTITIONED BY (c_mktsegment)
-           | OPTIONS (path '$tmp', format 'parquet', orderBy 'c_custkey')""".stripMargin)
-      s.sql(
-        """INSERT INTO graft_cat.lake.cust_meta
-          |SELECT c_mktsegment, CAST(c_custkey AS BIGINT), c_name,
-          | CAST(round(c_acctbal * 100) AS BIGINT)
-          |FROM cust_src_meta""".stripMargin)
+      import org.apache.spark.sql.functions.col
+      graft.RunOnce.lakeTable(s, "cust_meta", "c_mktsegment",
+          Parquet + ("orderBy" -> "c_custkey"))(
+        custCents(s, dir, Seq(col("c_mktsegment"), col("c_name")))
+          .select("c_mktsegment", "c_custkey", "c_name", "bal_cents"))
       s.sql(
         """SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n,
           | CAST(count(c_name) AS BIGINT) AS named,
@@ -1243,19 +972,9 @@ object GraftCatalog {
     // (plan pinned in LakeTableSpec). The oracle proves the
     // filtered fold is exact, not an estimate.
     "q_lake_agg_covering" -> ((s, dir) => {
-      val tmp = graft.RunOnce.dir("lake_cov_")
-      graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_cov")
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_cov")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_cov
-           | (c_mktsegment STRING, c_custkey BIGINT, bal_cents BIGINT)
-           | USING graft PARTITIONED BY (c_mktsegment)
-           | OPTIONS (path '$tmp', format 'parquet', orderBy 'c_custkey')""".stripMargin)
-      s.sql(
-        """INSERT INTO graft_cat.lake.cust_cov
-          |SELECT c_mktsegment, CAST(c_custkey AS BIGINT),
-          | CAST(round(c_acctbal * 100) AS BIGINT)
-          |FROM cust_src_cov""".stripMargin)
+      graft.RunOnce.lakeTable(s, "cust_cov", "c_mktsegment",
+          Parquet + ("orderBy" -> "c_custkey"))(
+        custCents(s, dir).select("c_mktsegment", "c_custkey", "bal_cents"))
       s.sql(
         """SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n,
           | CAST(min(c_custkey) AS BIGINT) AS lo,
@@ -1299,19 +1018,13 @@ object GraftCatalog {
     "q_sink_snapshot_sql" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
       val root = graft.streaming.StreamQueries.fixtureDir("sinksnapsql", dir, "nation")
-      def dim = graft.Tables.nation(s, dir)
-        .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
-          col("n_regionkey").cast("long").as("n_regionkey"))
+      def dim = nationDim(s, dir)
       dim.filter(col("n_regionkey") < 2L)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", root).save()
       dim.write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", root).save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.snap_sql")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.snap_sql
-           | (n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT)
-           | USING graft OPTIONS (path '$root')""".stripMargin)
+      graft.RunOnce.lakeTable(s, "snap_sql", path = root)()
       val Seq(gOld, gNew) = ManifestSink.snapshots(root).takeRight(2)
       val out = s.sql(
         s"""SELECT CAST(1 AS BIGINT) AS gen, n_nationkey, n_name, n_regionkey
@@ -1331,19 +1044,11 @@ object GraftCatalog {
     // delivers every committed row exactly once.
     "q_lake_packed_scan" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.dir("lake_pack_")
-      graft.Tables.orders(s, dir)
+      graft.RunOnce.lakeTable(s, "ord_pack")(graft.Tables.orders(s, dir)
         .select(col("o_orderkey").cast("long").as("o_orderkey"),
           col("o_orderpriority"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .repartition(24)
-        .write.format("graft.sources.ManifestSink")
-        .mode("overwrite").option("path", tmp).save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.ord_pack")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.ord_pack
-           | (o_orderkey BIGINT, o_orderpriority STRING, cents BIGINT)
-           | USING graft OPTIONS (path '$tmp')""".stripMargin)
+        .repartition(24))
       s.sql(
         """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
           | CAST(sum(cents) AS BIGINT) AS cents,
@@ -1360,19 +1065,13 @@ object GraftCatalog {
     "q_sink_snapshot_ts" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
       val root = graft.streaming.StreamQueries.fixtureDir("sinksnapts", dir, "nation")
-      def dim = graft.Tables.nation(s, dir)
-        .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
-          col("n_regionkey").cast("long").as("n_regionkey"))
+      def dim = nationDim(s, dir)
       dim.filter(col("n_regionkey") < 2L)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", root).save()
       dim.write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", root).save()
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.snap_ts")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.snap_ts
-           | (n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT)
-           | USING graft OPTIONS (path '$root')""".stripMargin)
+      graft.RunOnce.lakeTable(s, "snap_ts", path = root)()
       val ts = ManifestSink.snapshotTimestamps(root).toMap
       val Seq(gOld, gNew) = ManifestSink.snapshots(root).takeRight(2)
       val fmt = java.time.format.DateTimeFormatter
@@ -1396,19 +1095,8 @@ object GraftCatalog {
     // LakeTableSpec); Spark's own limit stays on top so the row COUNT —
     // the deterministic face of a LIMIT — is exact.
     "q_lake_limit" -> ((s, dir) => {
-      val tmp = graft.RunOnce.dir("lake_limit_")
-      graft.Tables.customer(s, dir).createOrReplaceTempView("cust_src_limit")
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.cust_limit")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.cust_limit
-           | (b BIGINT, c_custkey BIGINT, bal_cents BIGINT)
-           | USING graft PARTITIONED BY (b)
-           | OPTIONS (path '$tmp', format 'parquet', orderBy 'c_custkey')""".stripMargin)
-      s.sql(
-        """INSERT INTO graft_cat.lake.cust_limit
-          |SELECT CAST(c_custkey AS BIGINT) DIV 1000, CAST(c_custkey AS BIGINT),
-          | CAST(round(c_acctbal * 100) AS BIGINT)
-          |FROM cust_src_limit""".stripMargin)
+      graft.RunOnce.lakeTable(s, "cust_limit", "b", Parquet + ("orderBy" -> "c_custkey"))(
+        custCents(s, dir, Nil).selectExpr("c_custkey DIV 1000 AS b", "c_custkey", "bal_cents"))
       s.sql(
         """SELECT CAST(count(*) AS BIGINT) AS n FROM
           | (SELECT c_custkey FROM graft_cat.lake.cust_limit LIMIT 120)""".stripMargin)
@@ -1421,19 +1109,10 @@ object GraftCatalog {
     // layout shortcut returns exactly the sorted-window answer.
     "q_lake_order_window" -> ((s, dir) => {
       SynthDataSource.withBucketingConfs(s) {
-        val tmp = graft.RunOnce.dir("lake_ow_")
-        graft.Tables.part(s, dir).createOrReplaceTempView("part_src_ow")
-        s.sql("DROP TABLE IF EXISTS graft_cat.lake.part_win")
-        s.sql(
-          s"""CREATE TABLE graft_cat.lake.part_win
-             | (p_brand STRING, p_partkey BIGINT, cents BIGINT)
-             | USING graft PARTITIONED BY (p_brand)
-             | OPTIONS (path '$tmp', format 'parquet', orderBy 'p_partkey')""".stripMargin)
-        s.sql(
-          """INSERT INTO graft_cat.lake.part_win
-            |SELECT p_brand, CAST(p_partkey AS BIGINT),
-            | CAST(round(p_retailprice * 100) AS BIGINT)
-            |FROM part_src_ow""".stripMargin)
+        graft.RunOnce.lakeTable(s, "part_win", "p_brand", Parquet + ("orderBy" -> "p_partkey"))(
+          graft.Tables.part(s, dir).selectExpr("p_brand",
+            "CAST(p_partkey AS BIGINT) AS p_partkey",
+            "CAST(round(p_retailprice * 100) AS BIGINT) AS cents"))
         s.sql(
           """SELECT * FROM (
             |  SELECT p_brand, p_partkey, cents,
@@ -1451,24 +1130,7 @@ object GraftCatalog {
     // exactly, proving both the metadata surface and the epoch
     // attribution.
     "q_sink_lineage" -> ((s, _) => {
-      import org.apache.spark.sql.functions._
-      val tmp = graft.RunOnce.await(s) { d =>
-        s.readStream.format("graft.sources.SynthDataSource")
-          .option("rows", "60000").option("slices", "8")
-          .option("rowsPerBatch", "20000").load()
-          .select(col("id"), col("channel"), col("amount_cents"))
-          .writeStream.format("graft.sources.ManifestSink")
-          .option("path", d)
-          .option("checkpointLocation", s"$d/_checkpoint")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.sql("DROP TABLE IF EXISTS graft_cat.lake.lineage")
-      s.sql(
-        s"""CREATE TABLE graft_cat.lake.lineage
-           | (id BIGINT, channel STRING, amount_cents BIGINT)
-           | USING graft OPTIONS (path '$tmp')""".stripMargin)
+      graft.RunOnce.lakeTable(s, "lineage", path = synthLakeStream(s))()
       s.sql(
         """SELECT _epoch, CAST(count(*) AS BIGINT) AS n,
           | CAST(sum(amount_cents) AS BIGINT) AS cents
@@ -2292,16 +1954,11 @@ class GraftCatalog extends TableCatalog
         }
     }
     val partitionCols = PartitionTransforms.validate(partitionSpecs, schema)
+    // every layout property but partitionBy (the PARTITIONED BY
+    // clause's), plus the immutable payload format
     val props = Map("path" -> path) ++
-      opt("clusterBy").map("clusterBy" -> _) ++
-      opt("orderBy").map("orderBy" -> _) ++
-      opt("format").map("format" -> _) ++
-      opt("deleteMode").map("deleteMode" -> _) ++
-      opt("bloomFor").map("bloomFor" -> _) ++
-      opt("targetFileBytes").map("targetFileBytes" -> _) ++
-      opt("rowGroupBytes").map("rowGroupBytes" -> _) ++
-      opt("targetSplitBytes").map("targetSplitBytes" -> _) ++
-      opt("openCostBytes").map("openCostBytes" -> _) ++
+      (GraftCatalog.LayoutProps - "partitionBy" + "format")
+        .flatMap(k => opt(k).map(k -> _)) ++
       (if (partitionCols.nonEmpty)
          Map("partitionBy" -> partitionCols.mkString(","))
        else Map.empty)

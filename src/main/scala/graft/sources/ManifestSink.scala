@@ -1958,12 +1958,8 @@ object ManifestSink {
   def queries: Map[String, (org.apache.spark.sql.SparkSession, String) =>
       org.apache.spark.sql.DataFrame] = Map(
     "q_dsv2_sink" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       val root = graft.streaming.StreamQueries.fixtureDir("manifestsink", dir, "nation")
-      val src = graft.Tables.nation(s, dir)
-        .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
-          col("n_regionkey").cast("long").as("n_regionkey"))
-      src.write.format("graft.sources.ManifestSink")
+      GraftCatalog.nationDim(s, dir).write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", root).save()
       // snapshot read: one ManifestState serves schema and files
       readCommitted(s, root)
@@ -2026,9 +2022,7 @@ object ManifestSink {
     "q_sink_snapshot" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, lit}
       val root = graft.streaming.StreamQueries.fixtureDir("sinksnapshot", dir, "nation")
-      def dim = graft.Tables.nation(s, dir)
-        .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
-          col("n_regionkey").cast("long").as("n_regionkey"))
+      def dim = GraftCatalog.nationDim(s, dir)
       dim.filter(col("n_regionkey") < 2L)
         .write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", root).save()
@@ -2048,13 +2042,8 @@ object ManifestSink {
     // swap is invisible to semantics (row-exact vs the source); the
     // column-chunk-skipping read is pinned in ManifestSinkSpec.
     "q_sink_parquet" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       val root = graft.streaming.StreamQueries.fixtureDir("sinkparquet", dir, "customer")
-      graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"), col("c_name"),
-          col("c_nationkey").cast("long").as("c_nationkey"),
-          col("c_acctbal").cast("double").as("c_acctbal"))
-        .write.format("graft.sources.ManifestSink")
+      GraftCatalog.custDim(s, dir).write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", root)
         .option("format", "parquet")
         .option("clusterBy", "c_nationkey").option("orderBy", "c_custkey")
@@ -2067,14 +2056,9 @@ object ManifestSink {
     // row-exact (pre/post identity vs the parquet source) and the
     // readback must see ONLY the compacted generation
     "q_sink_compact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       val root = graft.streaming.StreamQueries.fixtureDir("sinkcompact", dir, "customer")
-      val src = graft.Tables.customer(s, dir)
-        .select(col("c_custkey").cast("long").as("c_custkey"), col("c_name"),
-          col("c_nationkey").cast("long").as("c_nationkey"),
-          col("c_acctbal").cast("double").as("c_acctbal"))
       // 4 partitions -> 4 committed files: real multi-file input
-      src.repartition(4).write.format("graft.sources.ManifestSink")
+      GraftCatalog.custDim(s, dir).repartition(4).write.format("graft.sources.ManifestSink")
         .mode("overwrite").option("path", root).save()
       compact(s, root)
       vacuum(root)
@@ -2116,19 +2100,7 @@ object ManifestSink {
     // any epoch lost, doubled, or partially published breaks the match.
     "q_stream_dsv2_sink" -> ((s, _) => {
       import org.apache.spark.sql.functions._
-      val root = graft.RunOnce.await(s) { d =>
-        s.readStream.format("graft.sources.SynthDataSource")
-          .option("rows", "60000").option("slices", "8")
-          .option("rowsPerBatch", "20000").load()
-          .select(col("id"), col("channel"), col("amount_cents"))
-          .writeStream.format("graft.sources.ManifestSink")
-          .option("path", d)
-          .option("checkpointLocation", s"$d/_checkpoint")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      readCommitted(s, root)
+      readCommitted(s, GraftCatalog.synthLakeStream(s))
         .groupBy(col("channel"))
         .agg(count(lit(1)).as("n"), sum(col("amount_cents")).as("cents"))
     })

@@ -44,11 +44,33 @@ class RunOnceSpec extends AnyFunSuite {
     "q_stream_window", // append file sink, stateful pins
     "q_stream_bitmap", // complete mode through foreachBatch
     "q_stream_tws", // RocksDB provider pin
-    "q_catalog_insert" // catalog registration and a scratch lake table
+    "q_catalog_insert", // catalog registration and a scratch lake table
+    "q_sink_update_sql_mor", // first commit, then DML on a 'mor' table
+    "q_lake_part_days", // PARTITIONED BY (days(ts)) plus an ALTER
+    "q_lake_spj_bucket" // two tables and the bucketing pins
   ).foreach { name =>
     test(s"$name hashes the same on a second run and leaves no residue") {
       assert(runOnce(name) == runOnce(name))
     }
+  }
+
+  test("lakeTable declares the first frame's columns and commits each frame") {
+    spark.conf.set("spark.sql.catalog.graft_cat", classOf[sources.GraftCatalog].getName)
+    val a = spark.range(0L, 10L).selectExpr("id % 3 AS k", "CAST(id AS STRING) AS v")
+    val b = spark.range(10L, 15L).selectExpr("id % 3 AS k", "CAST(id AS STRING) AS v")
+    val path = RunOnce.lakeTable(spark, "run_once_t", "k", Map("format" -> "parquet"))(a, b)
+    val t = spark.table("graft_cat.lake.run_once_t")
+    assert(t.schema.map(f => (f.name, f.dataType.sql, f.nullable)) ==
+      Seq(("k", "BIGINT", true), ("v", "STRING", true)))
+    assert(sources.ManifestSink.snapshots(path).size == 2, "one commit per frame")
+    assert(t.count() == 15L)
+    val props = spark.sql("SHOW TBLPROPERTIES graft_cat.lake.run_once_t").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(props.get("format").contains("parquet") && props.get("partitionBy").contains("k"))
+    // no frame: the columns come from what is committed at the path
+    RunOnce.lakeTable(spark, "run_once_t2", path = path)()
+    assert(spark.table("graft_cat.lake.run_once_t2").count() == 15L)
+    Harness.afterQuery(spark)
   }
 
   // a SQL conf with a default, the case a getOption-based restore gets
