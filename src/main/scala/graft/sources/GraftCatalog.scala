@@ -752,8 +752,8 @@ object GraftCatalog {
     // (by-name resolution), files after carry it; no rewrite anywhere.
     "q_sink_evolution" -> ((s, dir) => {
       graft.Tables.nation(s, dir).createOrReplaceTempView("nation_src_evo")
-      // the columns only: an empty first commit, so both INSERTs land
-      // around the ALTER
+      // a zero-row frame for the columns (an empty first commit): the
+      // INSERTs around the ALTER are what this row checks
       graft.RunOnce.lakeTable(s, "evo")(s.sql("SELECT CAST(n_nationkey AS BIGINT) AS k, " +
         "n_name AS v FROM nation_src_evo").limit(0))
       s.sql("INSERT INTO graft_cat.lake.evo " +
